@@ -1,19 +1,14 @@
 package graft.functions
 
-import graft.sources.AvroSchemaConverter
 import org.apache.avro.Schema
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericFixed, GenericRecord}
+import org.apache.avro.generic.{GenericDatumReader, GenericDatumWriter}
 import org.apache.avro.io.{BinaryDecoder, BinaryEncoder, DecoderFactory, EncoderFactory}
-import org.apache.avro.util.Utf8
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData}
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import scala.jdk.CollectionConverters._
 
 /** Native Avro binary decode/encode as Catalyst expressions (SURVEY.md §2
   * rows 2 and 10). The reference decodes per record with a cached
@@ -24,10 +19,12 @@ import scala.jdk.CollectionConverters._
   * This is the hand-built equivalent of spark-avro's `from_avro`/`to_avro`
   * (that module's jar isn't on this classpath): schema is a plan-time
   * literal (driver-resolved via SchemaRegistry, embedded per SURVEY §1.3),
-  * reader/decoder instances are reused per task (transient lazy), and the
-  * Avro→Catalyst conversion allocates only the target InternalRow. Decode
-  * cost is per-record CPU with zero shuffles — the scan parallelism of the
-  * source (e.g. one Spark partition per Kafka partition) carries through.
+  * and reader/decoder instances are reused per task (transient lazy). The
+  * Catalyst type and the per-value converters come from one walk of the
+  * schema (`AvroCatalyst`), built once per task, so a row pays only for
+  * the conversion, never for a type decision. Decode cost is per-record
+  * CPU with zero shuffles — the scan parallelism of the source (e.g. one
+  * Spark partition per Kafka partition) carries through.
   */
 object AvroFunctions {
 
@@ -62,196 +59,45 @@ case class AvroDecode(child: Expression, schemaJson: String)
     extends UnaryExpression with CodegenFallback {
 
   @transient private lazy val avroSchema = new Schema.Parser().parse(schemaJson)
-  @transient private lazy val reader = new GenericDatumReader[GenericRecord](avroSchema)
+  @transient private lazy val node = AvroCatalyst(avroSchema)
+  @transient private lazy val reader = new GenericDatumReader[Any](avroSchema)
   @transient private var decoder: BinaryDecoder = _
-  @transient private var reuse: GenericRecord = _
+  @transient private var reuse: Any = _
 
-  override lazy val dataType: DataType =
-    AvroSchemaConverter.toSqlType(new Schema.Parser().parse(schemaJson))
+  override def dataType: DataType = node.dataType
 
   override def nullSafeEval(input: Any): Any = {
     val bytes = input.asInstanceOf[Array[Byte]]
     decoder = DecoderFactory.get.binaryDecoder(bytes, 0, bytes.length, decoder)
     reuse = reader.read(reuse, decoder)
-    AvroCatalyst.toCatalyst(reuse, avroSchema)
+    node.read(reuse)
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
-/** Catalyst struct → binary Avro (inverse of AvroDecode). */
+/** Catalyst value → binary Avro (inverse of AvroDecode); the converters
+  * follow the Avro schema and read values in the child's actual type. */
 case class AvroEncode(child: Expression, schemaJson: String)
     extends UnaryExpression with CodegenFallback {
 
   @transient private lazy val avroSchema = new Schema.Parser().parse(schemaJson)
-  @transient private lazy val writer = new GenericDatumWriter[GenericRecord](avroSchema)
+  @transient private lazy val write = AvroCatalyst(avroSchema, Some(child.dataType)).write
+  @transient private lazy val writer = new GenericDatumWriter[Any](avroSchema)
   @transient private lazy val out = new java.io.ByteArrayOutputStream()
   @transient private var encoder: BinaryEncoder = _
-
-  @transient private lazy val childStruct = child.dataType.asInstanceOf[StructType]
 
   override def dataType: DataType = BinaryType
 
   override def nullSafeEval(input: Any): Any = {
-    val row = input.asInstanceOf[InternalRow]
-    val rec = AvroCatalyst.toAvro(row, avroSchema, childStruct).asInstanceOf[GenericRecord]
     out.reset()
     encoder = EncoderFactory.get.binaryEncoder(out, encoder)
-    writer.write(rec, encoder)
+    writer.write(write(input), encoder)
     encoder.flush()
     out.toByteArray
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-/** Recursive Avro GenericRecord ↔ Catalyst InternalRow converters. */
-private[functions] object AvroCatalyst {
-
-  /** Avro decimal wire form (big-endian two's-complement unscaled value)
-    * → Spark Decimal at the logical type's precision/scale. */
-  private def decimalFromBytes(bytes: Array[Byte], d: org.apache.avro.LogicalTypes.Decimal): Decimal =
-    Decimal(
-      new java.math.BigDecimal(new java.math.BigInteger(bytes), d.getScale),
-      d.getPrecision, d.getScale)
-
-  /** Spark Decimal → Avro decimal wire form (minimal-length two's-complement
-    * unscaled bytes; FIXED callers pad to width). */
-  private def decimalToBytes(dec: Decimal, dt: DecimalType): Array[Byte] =
-    dec.toJavaBigDecimal.setScale(dt.scale).unscaledValue().toByteArray
-
-  /** Avro runtime value → Catalyst value, guided by the Avro schema. */
-  def toCatalyst(value: Any, schema: Schema): Any = {
-    if (value == null) return null
-    AvroSchemaConverter.nonNull(schema).getType match {
-      case Schema.Type.NULL => null
-      case Schema.Type.BOOLEAN | Schema.Type.FLOAT | Schema.Type.DOUBLE => value
-      case Schema.Type.INT => value // DateType days are int-encoded too
-      case Schema.Type.LONG =>
-        val s = AvroSchemaConverter.nonNull(schema)
-        s.getLogicalType match {
-          case _: org.apache.avro.LogicalTypes.TimestampMillis =>
-            value.asInstanceOf[Long] * 1000L // → micros
-          case _ => value
-        }
-      case Schema.Type.STRING | Schema.Type.ENUM =>
-        UTF8String.fromString(value.toString)
-      case Schema.Type.BYTES =>
-        val bb = value.asInstanceOf[java.nio.ByteBuffer]
-        val arr = new Array[Byte](bb.remaining())
-        bb.duplicate().get(arr)
-        AvroSchemaConverter.nonNull(schema).getLogicalType match {
-          case d: org.apache.avro.LogicalTypes.Decimal => decimalFromBytes(arr, d)
-          case _ => arr
-        }
-      case Schema.Type.FIXED =>
-        val arr = value.asInstanceOf[GenericFixed].bytes().clone()
-        AvroSchemaConverter.nonNull(schema).getLogicalType match {
-          case d: org.apache.avro.LogicalTypes.Decimal => decimalFromBytes(arr, d)
-          case _ => arr
-        }
-      case Schema.Type.RECORD =>
-        val s = AvroSchemaConverter.nonNull(schema)
-        val rec = value.asInstanceOf[GenericRecord]
-        val fields = s.getFields
-        val out = new Array[Any](fields.size())
-        var i = 0
-        while (i < fields.size()) {
-          out(i) = toCatalyst(rec.get(i), fields.get(i).schema())
-          i += 1
-        }
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(out)
-      case Schema.Type.ARRAY =>
-        val s = AvroSchemaConverter.nonNull(schema)
-        val items = value.asInstanceOf[java.util.Collection[Any]].asScala
-        new GenericArrayData(items.map(toCatalyst(_, s.getElementType)).toArray)
-      case Schema.Type.MAP =>
-        val s = AvroSchemaConverter.nonNull(schema)
-        val m = value.asInstanceOf[java.util.Map[Any, Any]].asScala
-        val keys = m.keys.map(k => UTF8String.fromString(k.toString): Any).toArray
-        val vals = m.values.map(toCatalyst(_, s.getValueType)).toArray
-        ArrayBasedMapData(keys, vals)
-      case Schema.Type.UNION => throw new IllegalStateException("unreachable")
-    }
-  }
-
-  /** Catalyst value → Avro runtime value, guided by both schemas. */
-  def toAvro(value: Any, schema: Schema, sparkType: DataType): Any = {
-    if (value == null) return null
-    val s = AvroSchemaConverter.nonNull(schema)
-    (s.getType, sparkType) match {
-      case (Schema.Type.BOOLEAN | Schema.Type.INT | Schema.Type.FLOAT |
-            Schema.Type.DOUBLE, _) => value
-      case (Schema.Type.LONG, TimestampType) =>
-        s.getLogicalType match {
-          case _: org.apache.avro.LogicalTypes.TimestampMillis =>
-            value.asInstanceOf[Long] / 1000L
-          case _ => value
-        }
-      case (Schema.Type.LONG, _) => value
-      case (Schema.Type.STRING, _) => new Utf8(value.toString)
-      case (Schema.Type.ENUM, _) =>
-        new GenericData.EnumSymbol(s, value.toString)
-      case (Schema.Type.BYTES, dt: DecimalType) =>
-        java.nio.ByteBuffer.wrap(decimalToBytes(value.asInstanceOf[Decimal], dt))
-      case (Schema.Type.BYTES, _) =>
-        java.nio.ByteBuffer.wrap(value.asInstanceOf[Array[Byte]])
-      case (Schema.Type.FIXED, dt: DecimalType) =>
-        // Avro fixed decimals are exact-width: sign-extend the unscaled
-        // two's-complement bytes to the schema's fixed size.
-        val unscaled = decimalToBytes(value.asInstanceOf[Decimal], dt)
-        val size = s.getFixedSize
-        if (unscaled.length > size) throw new ArithmeticException(
-          s"decimal unscaled value needs ${unscaled.length} bytes, fixed(${size}) too small")
-        val padded = new Array[Byte](size)
-        val sign: Byte = if (unscaled(0) < 0) -1 else 0
-        java.util.Arrays.fill(padded, 0, size - unscaled.length, sign)
-        System.arraycopy(unscaled, 0, padded, size - unscaled.length, unscaled.length)
-        new GenericData.Fixed(s, padded)
-      case (Schema.Type.FIXED, _) =>
-        new GenericData.Fixed(s, value.asInstanceOf[Array[Byte]])
-      case (Schema.Type.RECORD, st: StructType) =>
-        val row = value.asInstanceOf[InternalRow]
-        val rec = new GenericData.Record(s)
-        val fields = s.getFields
-        var i = 0
-        while (i < fields.size()) {
-          val f = fields.get(i)
-          val v = if (row.isNullAt(i)) null
-                  else toAvro(row.get(i, st(i).dataType), f.schema(), st(i).dataType)
-          rec.put(i, v)
-          i += 1
-        }
-        rec
-      case (Schema.Type.ARRAY, at: ArrayType) =>
-        val arr = value.asInstanceOf[ArrayData]
-        val out = new java.util.ArrayList[Any](arr.numElements())
-        var i = 0
-        while (i < arr.numElements()) {
-          val v = if (arr.isNullAt(i)) null
-                  else toAvro(arr.get(i, at.elementType), s.getElementType, at.elementType)
-          out.add(v)
-          i += 1
-        }
-        out
-      case (Schema.Type.MAP, mt: MapType) =>
-        val m = value.asInstanceOf[org.apache.spark.sql.catalyst.util.MapData]
-        val out = new java.util.HashMap[Any, Any](m.numElements())
-        val keys = m.keyArray()
-        val vals = m.valueArray()
-        var i = 0
-        while (i < m.numElements()) {
-          val k = keys.get(i, StringType).toString
-          val v = if (vals.isNullAt(i)) null
-                  else toAvro(vals.get(i, mt.valueType), s.getValueType, mt.valueType)
-          out.put(k, v)
-          i += 1
-        }
-        out
-      case (t, st) => throw new UnsupportedOperationException(
-        s"cannot encode Spark $st as Avro $t")
-    }
-  }
 }

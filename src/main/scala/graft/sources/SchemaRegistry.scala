@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.functions.AvroCatalyst
 import org.apache.avro.Schema
 import org.apache.spark.sql.types.StructType
 
@@ -25,7 +26,7 @@ trait SchemaRegistry extends Serializable {
     new Schema.Parser().parse(schemaJson(topic))
 
   def sparkSchema(topic: String): StructType =
-    AvroSchemaConverter.toSqlType(avroSchema(topic)) match {
+    AvroCatalyst(avroSchema(topic)).dataType match {
       case s: StructType => s
       case other => throw new IllegalArgumentException(
         s"topic $topic: top-level Avro schema must be a record, got $other")
@@ -72,13 +73,20 @@ object ClasspathSchemaRegistry {
   * key is a hard failure, `:39-42`).
   *
   * Network-gated: exercised only in environments with a reachable Consul
-  * agent; construction is pure, fetch happens on first `schemaJson` call.
+  * agent; construction is pure, each topic is fetched on its first
+  * `schemaJson` call and kept (the reference's `init()` cache).
   *
   * @param mapping topic → KV key path (e.g. "schemas/item-view-event")
   */
 final class ConsulSchemaRegistry(host: String, port: Int,
                                  mapping: Map[String, String]) extends SchemaRegistry {
-  override def schemaJson(topic: String): String = {
+  // one fetch per topic: schemas are fixed at startup, so a validated
+  // schema is the one the pipeline later runs (a failed fetch is not kept)
+  private val fetched = new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  override def schemaJson(topic: String): String = fetched.computeIfAbsent(topic, fetch)
+
+  private def fetch(topic: String): String = {
     val key = mapping.getOrElse(topic, throw new NoSuchElementException(
       s"no Consul KV path mapped for topic '$topic'"))
     val url = new java.net.URI(s"http://$host:$port/v1/kv/$key?raw=false").toURL

@@ -5,6 +5,7 @@ import graft.sources.SchemaRegistry
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.TimestampType
 
 /** The reference's whole product, Spark-first: a streaming Avro→Parquet
   * ETL pipeline (SURVEY.md §3 "Spark mapping of the lifecycle").
@@ -98,6 +99,8 @@ final class KafkaEtlPipeline(
       .select(AvroFunctions.from_avro_bytes(col("value"), json).as("event"))
       .select("event.*")
     val ts = config.eventTimeColumn match {
+      case Some(c) if flat.select(c).schema.head.dataType == TimestampType =>
+        col(c)                                      // Avro timestamp logical type
       case Some(c) => to_timestamp(col(c) / 1000.0) // epoch-millis payload field
       case None    => current_timestamp()           // reference parity: processing time
     }
@@ -215,8 +218,9 @@ object EtlSource {
   final case class Stream(df: DataFrame) extends EtlSource
 }
 
-/** @param eventTimeColumn payload field holding epoch millis; None =
-  *   processing-time bucketing (exact reference parity, `ETLTask.java:164-167`).
+/** @param eventTimeColumn payload field holding epoch millis (long) or an
+  *   Avro timestamp logical type; None = processing-time bucketing (exact
+  *   reference parity, `ETLTask.java:164-167`).
   * @param dateFormat slash-separated time-bucket path pattern (reference
   *   `date.format`; segments become dt/hour/minute partition columns —
   *   `"yyyy-MM-dd/HH/mm"` gives the reference's minute-grain layout).

@@ -1,12 +1,14 @@
 package graft
 
-import graft.functions.AvroFunctions
-import graft.sources.{AvroSchemaConverter, ClasspathSchemaRegistry, InMemorySchemaRegistry}
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
+import graft.functions.{AvroCatalyst, AvroFunctions}
+import graft.sources.{ClasspathSchemaRegistry, InMemorySchemaRegistry}
+import org.apache.avro.Schema
+import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericFixed, GenericRecord}
 import org.apache.avro.io.{DecoderFactory, EncoderFactory}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Round-trip tests for the hand-built Avro decode/encode path — the
   * reference's rows 2/3/10 (binary Avro, no magic byte, schema from a
@@ -124,7 +126,7 @@ class AvroSpec extends SparkTestBase {
         |{"name":"fixedAmt","type":{"type":"fixed","name":"Amt","size":8,
         |  "logicalType":"decimal","precision":12,"scale":3}}]}""".stripMargin
     val decSchema = new org.apache.avro.Schema.Parser().parse(decSchemaJson)
-    val st = AvroSchemaConverter.toSqlType(decSchema).asInstanceOf[StructType]
+    val st = AvroCatalyst(decSchema).dataType.asInstanceOf[StructType]
     assert(st("amount").dataType == DecimalType(10, 2))
     assert(st("fixedAmt").dataType == DecimalType(12, 3))
 
@@ -226,5 +228,114 @@ class AvroSpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
     assert(rows == (0 until 3).map(i => (i.toLong, s"n$i", 1.5)).toSet,
       "Avro resolution must fill the defaulted field and handle reordering")
+  }
+
+  /** One Avro field type under test: the Catalyst field it maps to, sample
+    * values as Avro runtime objects (built from the field's schema), and
+    * the projections that make the decoded Catalyst value and Avro's own
+    * reader value comparable (e.g. timestamps as epoch micros). */
+  private case class TypeCase(name: String, avroType: String, sparkType: DataType,
+                              nullable: Boolean, values: Schema => Seq[Any],
+                              project: Column => Column = identity,
+                              fromAvro: Any => Any = identity)
+
+  private val typeCases = Seq(
+    TypeCase("boolean", "\"boolean\"", BooleanType, false, _ => Seq(true, false)),
+    TypeCase("int", "\"int\"", IntegerType, false, _ => Seq(0, -7, Int.MaxValue)),
+    TypeCase("float", "\"float\"", FloatType, false, _ => Seq(1.5f, -0.25f, Float.MaxValue)),
+    TypeCase("double", "\"double\"", DoubleType, false, _ => Seq(3.25, -1e300, 0.1)),
+    TypeCase("enum", """{"type":"enum","name":"Color","symbols":["RED","GREEN"]}""",
+      StringType, false, s => Seq("RED", "GREEN").map(new GenericData.EnumSymbol(s, _))),
+    TypeCase("date", """{"type":"int","logicalType":"date"}""", DateType, false,
+      _ => Seq(0, 17013, -1), project = c => unix_date(c)),
+    TypeCase("timestamp-millis", """{"type":"long","logicalType":"timestamp-millis"}""",
+      TimestampType, false, _ => Seq(1470000000123L, 0L, -1L),
+      project = c => unix_micros(c), fromAvro = v => v.asInstanceOf[Long] * 1000L),
+    TypeCase("timestamp-micros", """{"type":"long","logicalType":"timestamp-micros"}""",
+      TimestampType, false, _ => Seq(1470000000123456L, 0L, -1L),
+      project = c => unix_micros(c)),
+    TypeCase("fixed", """{"type":"fixed","name":"Md4","size":4}""", BinaryType, false,
+      s => Seq(Array[Byte](1, 2, 3, -4), Array[Byte](0, 0, 0, 0))
+        .map(b => new GenericData.Fixed(s, b))),
+    TypeCase("array of nullable items", """{"type":"array","items":["null","string"]}""",
+      ArrayType(StringType, containsNull = true), false,
+      _ => Seq(java.util.Arrays.asList("a", null, "b"), java.util.List.of(),
+               java.util.Collections.singletonList(null))),
+    // one entry per map: Avro's map encoding follows hash-map iteration
+    // order, so a byte-exact round trip is only defined for ≤ 1 entry
+    TypeCase("map of nullable values", """{"type":"map","values":["null","long"]}""",
+      MapType(StringType, LongType, valueContainsNull = true), false,
+      _ => Seq(java.util.Map.of("k", 5L), java.util.Collections.singletonMap("n", null),
+               java.util.Map.of())),
+    TypeCase("null", "\"null\"", NullType, true, _ => Seq(null)))
+
+  private def recordJson(avroType: String): String =
+    s"""{"type":"record","name":"typed","fields":[
+       |{"name":"id","type":"int"},{"name":"v","type":$avroType}]}""".stripMargin
+
+  /** Avro reader values and collected Spark values in one comparable form. */
+  private def norm(v: Any): Any = v match {
+    case null => null
+    case b: Array[Byte] => b.toList
+    case f: GenericFixed => f.bytes().toList
+    case s: scala.collection.Seq[_] => s.map(norm).toList
+    case l: java.util.List[_] => l.asScala.map(norm).toList
+    case m: scala.collection.Map[_, _] => m.map { case (k, x) => norm(k) -> norm(x) }.toMap
+    case m: java.util.Map[_, _] => m.asScala.map { case (k, x) => norm(k) -> norm(x) }.toMap
+    case s: CharSequence => s.toString
+    case e: GenericData.EnumSymbol => e.toString
+    case other => other
+  }
+
+  typeCases.foreach { tc =>
+    test(s"type coverage: ${tc.name} maps, decodes like GenericDatumReader, re-encodes byte-exact") {
+      import spark.implicits._
+      val json = recordJson(tc.avroType)
+      val schema = new Schema.Parser().parse(json)
+      val expected = StructType(Seq(StructField("id", IntegerType, nullable = false),
+                                    StructField("v", tc.sparkType, tc.nullable)))
+      assert(new InMemorySchemaRegistry(Map("t" -> json)).sparkSchema("t") == expected)
+
+      val wire = tc.values(schema.getField("v").schema()).zipWithIndex.map { case (v, i) =>
+        val rec = new GenericData.Record(schema)
+        rec.put("id", i)
+        rec.put("v", v)
+        val out = new java.io.ByteArrayOutputStream()
+        val enc = EncoderFactory.get.binaryEncoder(out, null)
+        new GenericDatumWriter[GenericRecord](schema).write(rec, enc)
+        enc.flush()
+        out.toByteArray
+      }
+      val decoded = wire.zipWithIndex.map(_.swap).toDF("key", "value")
+        .select(col("key"), AvroFunctions.from_avro_bytes(col("value"), json).as("e"))
+      assert(decoded.schema("e").dataType == expected)
+      val got = decoded
+        .select(col("key"), tc.project(col("e.v")).as("v"),
+                AvroFunctions.to_avro_bytes(col("e"), json).as("re"))
+        .orderBy("key").collect()
+      assert(got.length == wire.length)
+      wire.zip(got).foreach { case (bytes, row) =>
+        val reference = new GenericDatumReader[GenericRecord](schema)
+          .read(null, DecoderFactory.get.binaryDecoder(bytes, null)).get("v")
+        assert(norm(row.get(1)) == norm(Option(reference).map(tc.fromAvro).orNull),
+          s"${tc.name}: decoded value differs from Avro's reader")
+        assert(row.getAs[Array[Byte]]("re").toSeq == bytes.toSeq,
+          s"${tc.name}: to_avro_bytes must reproduce the original bytes")
+      }
+    }
+  }
+
+  test("multi-branch and non-null unions are rejected at plan time") {
+    import spark.implicits._
+    Seq("""["null","int","string"]""", """["int","string"]""").foreach { union =>
+      val json = recordJson(union)
+      intercept[UnsupportedOperationException](
+        new InMemorySchemaRegistry(Map("t" -> json)).sparkSchema("t"))
+      val wire = Seq(Array[Byte]()).toDF("value")
+      val e = intercept[Exception](
+        wire.select(AvroFunctions.from_avro_bytes(col("value"), json)).schema)
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[UnsupportedOperationException]), s"$union: $e")
+    }
   }
 }

@@ -3,6 +3,7 @@ package graft
 import graft.sources.ConsulSchemaRegistry
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.charset.StandardCharsets.UTF_8
+import scala.jdk.CollectionConverters._
 
 /** Consul KV registry: real JSON parse of the KV response (reference:
   * `ConsulAvroDeserializeService.java:63-96`), exercised against an
@@ -30,25 +31,51 @@ class RegistrySpec extends AnyFunSuite {
     assert(ConsulSchemaRegistry.parseKvValue("""[]""").isEmpty)
   }
 
-  test("end-to-end fetch against a local HTTP stub decodes the schema") {
+  /** Runs `f` against an in-process Consul KV stub that answers every
+    * `/v1/kv/<key>` with the schema above; `f` gets the stub's port and a
+    * view of the requests served so far, counted per path. */
+  private def withConsulStub[A](f: (Int, () => Map[String, Int]) => A): A = {
+    val hits = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
     val server = com.sun.net.httpserver.HttpServer.create(
       new java.net.InetSocketAddress("127.0.0.1", 0), 0)
     try {
-      server.createContext("/v1/kv/schemas/t", (ex: com.sun.net.httpserver.HttpExchange) => {
+      server.createContext("/v1/kv/", (ex: com.sun.net.httpserver.HttpExchange) => {
+        val path = ex.getRequestURI.getPath
+        hits.merge(path, 1, (a: Integer, b: Integer) => a + b)
         val body =
-          s"""[{"Key":"schemas/t","Notes":"has \\"escapes\\"","Value":"$b64"}]"""
+          s"""[{"Key":"${path.stripPrefix("/v1/kv/")}","Notes":"has \\"escapes\\"","Value":"$b64"}]"""
             .getBytes(UTF_8)
         ex.sendResponseHeaders(200, body.length)
         ex.getResponseBody.write(body)
         ex.close()
       })
       server.start()
+      f(server.getAddress.getPort, () => hits.asScala.map { case (k, v) => k -> v.intValue }.toMap)
+    } finally server.stop(0)
+  }
+
+  test("end-to-end fetch against a local HTTP stub decodes the schema") {
+    withConsulStub { (port, _) =>
       val reg = new graft.sources.ConsulSchemaRegistry(
-        "127.0.0.1", server.getAddress.getPort, Map("t" -> "schemas/t"))
+        "127.0.0.1", port, Map("t" -> "schemas/t"))
       assert(reg.schemaJson("t") == avsc)
       // the fetched JSON is a valid Avro schema (quotes survived)
       assert(reg.avroSchema("t").getField("id") != null)
       intercept[NoSuchElementException] { reg.schemaJson("unmapped") }
-    } finally server.stop(0)
+    }
+  }
+
+  test("each topic's schema is fetched from Consul once, however often it is read") {
+    withConsulStub { (port, hits) =>
+      val reg = new graft.sources.ConsulSchemaRegistry(
+        "127.0.0.1", port, Map("t" -> "schemas/t", "u" -> "schemas/u"))
+      // validate, then start: every read a pipeline makes per topic
+      for (_ <- 1 to 2; topic <- Seq("t", "u")) {
+        reg.schemaJson(topic)
+        reg.avroSchema(topic)
+        reg.sparkSchema(topic)
+      }
+      assert(hits() == Map("/v1/kv/schemas/t" -> 1, "/v1/kv/schemas/u" -> 1))
+    }
   }
 }

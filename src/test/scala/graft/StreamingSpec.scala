@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.ClasspathSchemaRegistry
+import graft.sources.{ClasspathSchemaRegistry, InMemorySchemaRegistry}
 import graft.streaming.{EtlConfig, EtlSource, KafkaEtlPipeline, StreamOps}
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.avro.io.EncoderFactory
@@ -25,7 +25,7 @@ class StreamingSpec extends SparkTestBase {
   private def serialize(rec: GenericRecord): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     val enc = EncoderFactory.get.binaryEncoder(out, null)
-    new GenericDatumWriter[GenericRecord](avroSchema).write(rec, enc)
+    new GenericDatumWriter[GenericRecord](rec.getSchema).write(rec, enc)
     enc.flush()
     out.toByteArray
   }
@@ -104,6 +104,32 @@ class StreamingSpec extends SparkTestBase {
     // 1470000000000 ms = 2016-07-31 21:20:00 UTC
     assert(r.get(0).toString == "2016-07-31")
     assert(r.get(1).toString.toInt == 21)
+  }
+
+  test("event-time bucketing uses an Avro timestamp-millis field as decoded") {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val t = "ts-event"
+    val json =
+      """{"type":"record","name":"ts_event","fields":[
+         {"name":"id","type":"long"},
+         {"name":"ts","type":{"type":"long","logicalType":"timestamp-millis"}}]}"""
+    val rec = new GenericData.Record(new org.apache.avro.Schema.Parser().parse(json))
+    rec.put("id", 1L)
+    rec.put("ts", 1470000000000L) // 2016-07-31 21:20:00 UTC
+    val out = Files.createTempDirectory("graft-tsm-out").toString
+    val ckpt = Files.createTempDirectory("graft-tsm-ckpt").toString
+    val mem = MemoryStream[(String, Array[Byte])]
+    val pipe = new KafkaEtlPipeline(spark, new InMemorySchemaRegistry(Map(t -> json)),
+      EtlConfig(Seq(t), EtlSource.Stream(mem.toDF().toDF("topic", "value")), out, ckpt,
+        eventTimeColumn = Some("ts")))
+    val Seq(q) = pipe.start()
+    mem.addData(Seq((t, serialize(rec))))
+    q.processAllAvailable()
+    pipe.stop()
+    val dirs = Files.walk(java.nio.file.Paths.get(out)).toArray.map(_.toString)
+    assert(dirs.exists(_.endsWith(s"$t/dt=2016-07-31/hour=21")),
+      s"expected the payload's event-time layout, got ${dirs.filter(_.contains("dt=")).toSeq}")
   }
 
   test("minute-grain date.format writes dt/hour/minute layout with tuned sink") {

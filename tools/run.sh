@@ -11,12 +11,12 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-# 16g default: the 203-query bench in one JVM accumulates codegen/plan
-# state, and at 8g the tail of the run pays measurably more GC (A/B at
-# round 9: 154.5 s at 8g vs 141.5 s at 16g, same host window); the host
-# has 128 GiB.
+# Default heap, the same rule as build.sbt: half of MemTotal clamped to
+# 2-16 GiB (2g where /proc/meminfo is unreadable); SPARK_DRIVER_MEM overrides.
+HEAP="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)}
+  END {print (g < 2 ? 2 : g > 16 ? 16 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}"
 exec java $OPENS \
-  -Xmx"${SPARK_DRIVER_MEM:-16g}" \
+  -Xmx"$HEAP" \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
   -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
