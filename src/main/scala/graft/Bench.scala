@@ -128,16 +128,9 @@ object Bench {
       runs.headOption.filter(_._2).map(_._1)
         .getOrElse(results.toMap.getOrElse(name, -1.0).max(0.0))
     }.sum
-    // streaming-pipeline throughput side channel (decode → bucket →
-    // partitioned parquet; see StreamBench). Untimed vs `value`: the batch
-    // query total and the ingest rate are separate headline numbers.
-    val (sRows, sSec) =
-      try StreamBench.measure(spark, sys.env.getOrElse("SPARK_GRAFT_STREAM_ROWS", "200000").toLong)
-      catch { case _: Throwable => (0L, 0.0) }
-    val sRate = if (sSec > 0) sRows / sSec else 0.0
     val demotedJson = SparkEntry.benchDemoted.toSeq.sorted
       .filterNot(names.contains).map(n => s"\"$n\"").mkString("[", ",", "]")
-    val fullLine = s"""{"metric":"total","value":${f3(total)},"unit":"sec","n_queries":${results.size},"reps":$reps,"warmup_sec":${f3(warmupSec)},"rep1_total_sec":${f3(rep1Total)},"stream_rows_per_sec":${f3(sRate)},"stream_rows":$sRows,"stream_sec":${f3(sSec)},"failed":$failed,"demoted":$demotedJson,"queries":$qs,"sf":"$sfDir"}"""
+    val fullLine = s"""{"metric":"total","value":${f3(total)},"unit":"sec","n_queries":${results.size},"reps":$reps,"warmup_sec":${f3(warmupSec)},"rep1_total_sec":${f3(rep1Total)},"failed":$failed,"demoted":$demotedJson,"queries":$qs,"sf":"$sfDir"}"""
     // Sidecar with EVERYTHING (full per-query map + raw reps): the stdout
     // channel is capture-limited, this file is not.
     // default the sidecar INTO the repo checkout (user.dir = the repo root
@@ -164,7 +157,7 @@ object Bench {
     // window (~2000 chars, and the window can start mid-line): round 8's
     // compact line still carried a slowest-queries map and the captured
     // tail began mid-"failed" — parsed: null again. So the LAST line is
-    // minimal — total, counts, stream rate, failure names (bounded: first
+    // minimal — total, counts, failure names (bounded: first
     // 15 + n_failed, a 195-name failure list would blow the window too).
     // Per-query numbers live in the full line above and the sidecar.
     val failedNames = results.collect { case (k, v) if v < 0 => k }
@@ -173,7 +166,7 @@ object Bench {
     // "truncated":true marks this line as the compact tail-window form so
     // a line-scanning parser cannot conflate it with (or double-count)
     // the full record above
-    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","truncated":true,"n_queries":${results.size},"reps":$reps,"warmup_sec":${f3(warmupSec)},"rep1_total_sec":${f3(rep1Total)},"stream_rows_per_sec":${f3(sRate)},"n_failed":${failedNames.size},"failed":$failedCompact,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","truncated":true,"n_queries":${results.size},"reps":$reps,"warmup_sec":${f3(warmupSec)},"rep1_total_sec":${f3(rep1Total)},"n_failed":${failedNames.size},"failed":$failedCompact,"sf":"$sfDir"}""")
     spark.stop()
     // a non-empty failed list is a red run, and the exit code must say so:
     // round 6 exited 0 over 13 crashed queries and five commits shipped on

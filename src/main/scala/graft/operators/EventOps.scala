@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryPack, Tables}
+import graft.streaming.KafkaEtlPipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -228,10 +229,10 @@ object EventOps extends QueryPack {
     * partitioned output tree) as a batch-equivalent gate, mirroring
     * [[graft.streaming.KafkaEtlPipeline]]'s fan-out exactly: one
     * partitioned Snappy parquet write per topic under `$out/<topic>/`
-    * with event-time `dt`/`hour` Hive partitions (the pipeline's
-    * per-topic sink layout). The gate then reads the WRITTEN dataset
-    * back — `dt`/`hour` come from the DIRECTORY NAMES (partition-type
-    * inference off, the compactor's byte-preserving convention), `topic`
+    * with event-time `dt`/`hour` Hive partitions stamped by the
+    * pipeline's own `withPartitions` at its default `date.format`. The
+    * gate then reads the WRITTEN dataset back — `dt`/`hour` come from the
+    * DIRECTORY NAMES (`Ingest.readLanded`: raw strings), `topic`
     * from the per-topic root — so a row misbucketed to the wrong topic
     * dir or time partition surfaces as a value mismatch, and a lost or
     * duplicated row as a hash/row-count mismatch. Oracle: the q20
@@ -242,26 +243,20 @@ object EventOps extends QueryPack {
   private def q173MultiTopicIngest(s: SparkSession, d: String): DataFrame = {
     val out = graft.SessionMemo.getOrElseUpdate[String](s, "events.multiTopic", d)( {
       val root = graft.WorkDirs.artifactDir(s, "multitopic", d)
+      val fmt = KafkaEtlPipeline.DefaultDateFormat
       q173Topics.foreach { t =>
-        Ingest.withBucketColumns(
-            Tables.events(s, d).filter(col("event_type") === t))
-          .select(col("event_id"), col("user_id"), col("ts"), col("value"),
-                  col("dt"), col("hour"))
-          .write.mode("overwrite").partitionBy("dt", "hour")
+        KafkaEtlPipeline.withPartitions(
+            Tables.events(s, d).filter(col("event_type") === t)
+              .select(col("event_id"), col("user_id"), col("ts"), col("value")),
+            col("ts"), fmt)
+          .write.mode("overwrite")
+          .partitionBy(KafkaEtlPipeline.partitionSpec(fmt).map(_._1): _*)
           .option("compression", "snappy").parquet(s"$root/$t")
       }
       root
     })
-    // read partition values as raw strings (hour=05 must stay "05", not
-    // int 5) — the same inference-off read compactTo documents; schema
-    // resolves eagerly inside the try, so restoring after is safe
-    val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val prev = s.conf.get(inferKey)
-    s.conf.set(inferKey, "false")
-    val perTopic =
-      try q173Topics.map(t => s.read.parquet(s"$out/$t").withColumn("topic", lit(t)))
-      finally s.conf.set(inferKey, prev)
-    perTopic.reduce(_.unionByName(_))
+    q173Topics.map(t => Ingest.readLanded(s, s"$out/$t").withColumn("topic", lit(t)))
+      .reduce(_.unionByName(_))
       .select(col("event_id"), col("topic"), col("dt"), col("hour"),
               col("user_id"), round(col("value"), 2).as("value"))
       .orderBy("event_id")

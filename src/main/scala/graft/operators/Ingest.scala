@@ -1,56 +1,33 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The reference's physical sink, Spark-first (SURVEY.md §2 rows 4-6).
+/** Upkeep of the landed output: compaction and retention of what
+  * [[graft.streaming.KafkaEtlPipeline]] writes (SURVEY.md §2 row 6).
   *
-  * Reference behavior (`ETLTask.java:144-219`): one `AvroParquetWriter`
-  * per (topic, partition), Snappy, path
-  * `<out>/<topic>/<yyyy-MM-dd/HH/mm>/part-<partition>-<seq>.parquet`,
-  * hand-rolled exists-probing for uniqueness.
-  *
-  * Here the same layout is a declarative partitioned write:
-  * `partitionBy(topic, dt, hour)` + `compression=snappy`. Spark's commit
-  * protocol replaces the exists-loop (task-attempt files + atomic job
-  * commit), and at cluster scale every executor writes its own partition
-  * files in parallel instead of the reference's single-threaded loop.
-  * Bucketing is by EVENT time (the payload's `ts`), not processing time —
-  * the semantic upgrade noted in SURVEY.md §1.1.
+  * The pipeline alone decides the layout, `<out>/<topic>/dt=…/hour=…`
+  * (the reference's `<out>/<topic>/<date.format>/`, `ETLTask.java:144-219`),
+  * and its file sink's `_spark_metadata` commit log replaces the
+  * reference's exists-probing loop. A streaming sink writes one file set
+  * per micro-batch, so a long-running topic piles up small files and old
+  * days: `compactTo` rewrites one topic's tree into a fresh, log-free copy
+  * with one file per partition dir, and `expirePartitions` drops old `dt`
+  * dirs from such a copy.
   */
 object Ingest {
 
-  /** Add the reference's path-layout columns derived from event time. */
-  def withBucketColumns(df: DataFrame, tsCol: String = "ts"): DataFrame =
-    df.withColumn("dt", date_format(col(tsCol), "yyyy-MM-dd"))
-      .withColumn("hour", date_format(col(tsCol), "HH"))
-
-  /** Batch form of the reference's whole pipeline: bucket + partitioned
-    * Snappy parquet append. `topicCol` plays the reference's topic role.
-    *
-    * Parquet physical knobs mirror the reference's writer config
-    * (`ETLTask.java:146-148`, `:197`): 256 MiB row groups
-    * (`CONF_BLOCK_SIZE` default), 64 KiB pages (`CONF_PAGE_SIZE`),
-    * dictionary encoding on. Exposed the Spark way — per-write options
-    * picked up by the parquet output format.
-    */
-  def writePartitioned(df: DataFrame, out: String,
-                       topicCol: String = "event_type",
-                       tsCol: String = "ts",
-                       mode: SaveMode = SaveMode.Append,
-                       blockSize: Long = 256L * 1024 * 1024,
-                       pageSize: Int = 64 * 1024,
-                       dictionary: Boolean = true): Unit =
-    withBucketColumns(df, tsCol)
-      .withColumn("topic", col(topicCol))
-      .write
-      .mode(mode)
-      .partitionBy("topic", "dt", "hour")
-      .option("compression", "snappy")
-      .option("parquet.block.size", blockSize.toString)
-      .option("parquet.page.size", pageSize.toString)
-      .option("parquet.enable.dictionary", dictionary.toString)
-      .parquet(out)
+  /** Read a Hive-partitioned parquet tree with partition values as raw
+    * strings: type inference would turn `hour=05` into int 5, so a rewrite
+    * would rename directories and a value check would see `5`. The schema
+    * resolves eagerly, so restoring the conf afterwards is safe. */
+  def readLanded(spark: SparkSession, path: String): DataFrame = {
+    val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    val prev = spark.conf.get(inferKey)
+    spark.conf.set(inferKey, "false")
+    try spark.read.parquet(path)
+    finally spark.conf.set(inferKey, prev)
+  }
 
   /** Small-file compaction for a partitioned parquet dataset — the
     * operational companion of any per-trigger streaming sink (the
@@ -63,9 +40,10 @@ object Ingest {
     * split with a salt column if single dirs outgrow row-group targets).
     * Destination is a NEW path: readers cut over by path swap (Spark
     * refuses overwrite-while-reading, and a swap is the atomic op HDFS/
-    * object stores actually give you).
+    * object stores actually give you). Partition values are read as raw
+    * strings, so the layout is preserved byte-for-byte.
     */
-  def compactTo(spark: org.apache.spark.sql.SparkSession,
+  def compactTo(spark: SparkSession,
                 src: String, dest: String,
                 partitionCols: Seq[String],
                 targetBytes: Long = 256L * 1024 * 1024): Unit = {
@@ -73,16 +51,7 @@ object Ingest {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val totalBytes = fs.getContentSummary(new org.apache.hadoop.fs.Path(src)).getLength
     val nTasks = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    // read partition values as raw strings: type inference would turn
-    // hour=05 into int 5 and the rewrite would RENAME directories —
-    // a compactor must preserve the layout byte-for-byte
-    val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val prev = spark.conf.get(inferKey)
-    spark.conf.set(inferKey, "false")
-    val source = // schema resolves eagerly here, so restoring the conf after is safe
-      try spark.read.parquet(src)
-      finally spark.conf.set(inferKey, prev)
-    source
+    readLanded(spark, src)
       .repartition(nTasks, partitionCols.map(col): _*)
       .write
       .mode(SaveMode.Overwrite)
@@ -94,15 +63,23 @@ object Ingest {
   /** Time-partition retention: drop `dt=<date>` partition directories
     * strictly older than `cutoff` (ISO dates compare lexicographically,
     * so this is a pure string comparison on directory names — no data is
-    * read). Walks through any non-date partition levels above `dateCol`
-    * (e.g. topic dirs over dt dirs). Returns the deleted paths. Driver-side
-    * filesystem metadata work only — the same shape at any data volume.
+    * read). `root` is one topic's compacted copy (`compactTo`'s `dest`);
+    * the walk descends only through `k=v` dirs, so from the pipeline's
+    * `<out>` root, whose topic dirs have no `=`, it finds nothing. Returns
+    * the deleted paths. Driver-side filesystem metadata work only — the
+    * same shape at any data volume.
+    *
+    * A streaming sink's own output is refused: its `_spark_metadata` log
+    * would still list the deleted files and every later read would fail.
     */
-  def expirePartitions(spark: org.apache.spark.sql.SparkSession,
+  def expirePartitions(spark: SparkSession,
                        root: String, cutoff: String,
                        dateCol: String = "dt"): Seq[String] = {
     import org.apache.hadoop.fs.Path
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(!fs.exists(new Path(root, "_spark_metadata")),
+      s"$root is a streaming sink's output (it has a _spark_metadata log); " +
+        "expire partitions on a compactTo copy instead")
     val prefix = s"$dateCol="
     def walk(p: Path): Seq[Path] = {
       val entries = fs.listStatus(p).toSeq.filter(_.isDirectory)

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.functions.AvroFunctions
 import graft.sources.SchemaRegistry
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.TimestampType
@@ -27,8 +27,9 @@ import org.apache.spark.sql.types.TimestampType
   *  - path layout `<out>/<topic>/<date>/...` + Snappy + block/page sizes
   *    (`ETLTask.java:144-219`) → per-topic output dir + partition columns
   *    derived from `date.format` (day/hour default, minute grain as in the
-  *    reference's README) + parquet compression/block.size/page.size
-  *    options on the sink;
+  *    reference's README) + fixed Snappy and block.size/page.size options
+  *    on the sink. The companion's `withPartitions` is the one place the
+  *    landed layout is decided;
   *  - hand-rolled close-then-commitSync offset transactionality
   *    (`ETLTask.java:332-382`, at-least-once with the off-by-one noted in
   *    SURVEY §2 row 7) → `checkpointLocation`: Structured Streaming's
@@ -51,28 +52,17 @@ final class KafkaEtlPipeline(
 
   @volatile private var queries: Seq[StreamingQuery] = Nil
 
-  /** Partition columns derived from the reference's `date.format` path
-    * pattern (`ETLTask.java:160`, `:213-219` — slash-separated segments,
-    * default day/hour, minute-grain supported): each segment becomes one
-    * Hive-style partition column (`dt=…/hour=…[/minute=…]`), the Spark
-    * idiom for the reference's formatted directory tree. */
-  private[graft] val partitionSpec: Seq[(String, String)] = {
-    val segs = config.dateFormat.split("/").toSeq
-    require(segs.nonEmpty && segs.forall(_.nonEmpty),
-      s"bad date format '${config.dateFormat}'")
-    val names = Seq("dt", "hour", "minute").take(segs.length) ++
-      (3 until segs.length).map(i => s"p$i")
-    names.zip(segs)
-  }
+  private[graft] val partitionSpec: Seq[(String, String)] =
+    KafkaEtlPipeline.partitionSpec(config.dateFormat)
 
   /** Exactly the option map handed to the streaming writer — the
-    * reference's parquet tuning keys (`ETLTask.java:144-148`: compression,
-    * block.size, page.size) ride the same per-write options channel Spark
-    * copies into the sink's Hadoop conf. */
+    * reference's parquet tuning keys (`ETLTask.java:144-148`: Snappy,
+    * hard-coded there and here; block.size, page.size) ride the same
+    * per-write options channel Spark copies into the sink's Hadoop conf. */
   private[graft] def sinkOptions(topic: String): Map[String, String] =
     Map("path" -> s"${config.outputPath}/$topic",
         "checkpointLocation" -> s"${config.checkpointLocation}/$topic",
-        "compression" -> config.compression) ++
+        "compression" -> "snappy") ++
       config.blockSize.map(v => "parquet.block.size" -> v.toString) ++
       config.pageSize.map(v => "parquet.page.size" -> v.toString)
 
@@ -104,9 +94,7 @@ final class KafkaEtlPipeline(
       case Some(c) => to_timestamp(col(c) / 1000.0) // epoch-millis payload field
       case None    => current_timestamp()           // reference parity: processing time
     }
-    partitionSpec.foldLeft(flat) { case (df, (name, fmt)) =>
-      df.withColumn(name, date_format(ts, fmt))
-    }
+    KafkaEtlPipeline.withPartitions(flat, ts, config.dateFormat)
   }
 
   /** Start one query per topic; returns the running queries. */
@@ -152,6 +140,33 @@ object KafkaEtlPipeline {
   val ConfPageSize = "page.size"
   val ConfDateFormat = "date.format"
   val ConfHadoopConfDir = "hadoop.conf.dir" // `KafkaETLParquetConsumer.java:16`
+
+  /** Day/hour: the layout `EtlConfig` lands unless `date.format` says otherwise. */
+  private[graft] val DefaultDateFormat = "yyyy-MM-dd/HH"
+
+  /** Partition columns derived from the reference's `date.format` path
+    * pattern (`ETLTask.java:160`, `:213-219` — slash-separated segments,
+    * default day/hour, minute-grain supported): each segment becomes one
+    * Hive-style partition column (`dt=…/hour=…[/minute=…]`), the Spark
+    * idiom for the reference's formatted directory tree. */
+  private[graft] def partitionSpec(dateFormat: String): Seq[(String, String)] = {
+    val segs = dateFormat.split("/").toSeq
+    require(segs.nonEmpty && segs.forall(_.nonEmpty), s"bad date format '$dateFormat'")
+    val names = Seq("dt", "hour", "minute").take(segs.length) ++
+      (3 until segs.length).map(i => s"p$i")
+    names.zip(segs)
+  }
+
+  /** Stamp `df` with one string partition column per `date.format`
+    * segment, formatted from the timestamp `ts` — the landed layout's
+    * single owner: the streaming sink and q173's batch gate both write
+    * what this returns, partitioned by `partitionSpec(dateFormat)`'s
+    * names. */
+  private[graft] def withPartitions(df: DataFrame, ts: Column,
+                                    dateFormat: String): DataFrame =
+    partitionSpec(dateFormat).foldLeft(df) { case (d, (name, fmt)) =>
+      d.withColumn(name, date_format(ts, fmt))
+    }
 
   /** Drop-in adapter for the reference's constructor shape
     * (`KafkaETLParquetConsumer.java:44-56`): Kafka consumer properties +
@@ -233,8 +248,7 @@ final case class EtlConfig(
     outputPath: String,
     checkpointLocation: String,
     trigger: Trigger = Trigger.ProcessingTime("1 minute"),
-    compression: String = "snappy",
     eventTimeColumn: Option[String] = None,
-    dateFormat: String = "yyyy-MM-dd/HH",
+    dateFormat: String = KafkaEtlPipeline.DefaultDateFormat,
     blockSize: Option[Long] = None,
     pageSize: Option[Long] = None)

@@ -1,5 +1,6 @@
 #!/bin/bash
-# Fast runner: java against compiled classes + /opt/spark/jars, skipping sbt.
+# Fast runner: java against this checkout's compiled classes + the Spark jars,
+# skipping sbt.
 # Usage: tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/verify_out
 set -e
 CLASS="$1"; shift
@@ -19,5 +20,5 @@ exec java $OPENS \
   -Xmx"$HEAP" \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$(cd "$(dirname "$0")/.." && pwd)/target/scala-2.13/classes:/opt/spark/jars/*" \
   "$CLASS" "$@"
