@@ -20,8 +20,8 @@ import scala.collection.concurrent.TrieMap
   * Lifetime: most memoized values are DataFrames, which reference
   * their session — such entries keep the key strongly reachable and
   * therefore live exactly as long as the JVM or an explicit
-  * [[clear]], the same lifetime the per-pack TrieMaps had (the long-
-  * lived Bench/Verify session is the intended consumer). Entries whose
+  * [[clear]], the same lifetime the per-pack TrieMaps had (a long-
+  * lived Verify session is the intended consumer). Entries whose
   * values do NOT reference the session (artifact path strings) are
   * collected with their session. [[clear]] exists for tests and for a
   * host that cycles sessions deliberately.

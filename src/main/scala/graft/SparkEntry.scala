@@ -46,20 +46,6 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     packs.flatMap(_.queries).toMap
 
-  /** The three declared BRUTE-EXACT baselines — each quadratic /
-    * corpus-cross BY DESIGN, existing to certify its gated scale twin:
-    * q44's all-pairs cosine (twin: q41/q42's bucketed LSH family),
-    * q78's brute document cosine (twin: the df-pruned index path),
-    * q126's exact margin mining (twins: q286 probed / q289
-    * persisted-index). The recorded bench TIMES them like every other
-    * registry query (the driver contract: bench entries are never
-    * removed — the round-16 default-skip was reverted in the
-    * optimization round); this set only names them so local iteration
-    * can skip them via SPARK_GRAFT_BENCH_SKIP_DEMOTED=1 and so docs /
-    * tools can refer to the block by one definition. */
-  val benchDemoted: Set[String] =
-    Set("q44_cosine_neardup", "q78_doc_cosine", "q126_margin_mine")
-
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

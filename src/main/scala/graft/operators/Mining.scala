@@ -722,16 +722,7 @@ object Mining extends QueryPack {
     * probe/score/margin semantics), so the gate shares q286's oracle —
     * a pass certifies append ≡ rebuild AT THE MINING GRAIN, cross-
     * engine (the q157 pattern, two-sided). */
-  /** q289's steady-state legs, exposed for `tools/MineProbe` (VERDICT
-    * r15 task 4 — attribute the probed run's wall-clock): `_1` = the
-    * per-side INDEX-SLICE READS (the persisted (vec_id, centroid)
-    * columns joined with corpus vectors by id), `_2` = the PROBED CORES
-    * over them (codebook crossJoin + per-query probe TopK + candidate
-    * scoring TopK); the declared gate is [[minedTail]] over `_2` (the
-    * margin join + densities + argmax). Legs nest (core executes its
-    * slice read), so the probe attributes by differences. */
-  private[graft] def q289Legs(s: SparkSession, d: String)
-      : ((DataFrame, DataFrame), (DataFrame, DataFrame)) = {
+  private def q289MiningIndexLifecycle(s: SparkSession, d: String): DataFrame = {
     val (aSide, bSide) = mineSides(s, d)
     val (centsB, centsA) = mineCodebooksFor(s, d, aSide, bSide)
     val (dirB, dirA) = graft.SessionMemo.getOrElseUpdate[(String, String)](
@@ -753,15 +744,8 @@ object Mining extends QueryPack {
         .join(corpus.select(col("vec_id").as("cand_id"),
                             col("embedding").as("cev")), "cand_id")
     }
-    val (asgB, asgA) = (assignedOf(dirB, bSide), assignedOf(dirA, aSide))
-    ((asgB, asgA),
-     (minedCoreOver(s, aSide, asgB, centsB, "a_id"),
-      minedCoreOver(s, bSide, asgA, centsA, "b_id")))
-  }
-
-  private def q289MiningIndexLifecycle(s: SparkSession, d: String): DataFrame = {
-    val (_, (fwd, bwd)) = q289Legs(s, d)
-    minedTail(fwd, bwd)
+    minedTail(minedCoreOver(s, aSide, assignedOf(dirB, bSide), centsB, "a_id"),
+              minedCoreOver(s, bSide, assignedOf(dirA, aSide), centsA, "b_id"))
   }
 
   /** Two-sided STALENESS MONITOR for the persisted mining indexes

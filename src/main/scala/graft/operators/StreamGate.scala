@@ -36,14 +36,12 @@ object StreamGate extends QueryPack {
 
   private val sinkId = new java.util.concurrent.atomic.AtomicInteger()
 
-  /** Shuffle/state partition count for the bounded gate passes —
-    * overridable for A/B profiling (GRAFT_GATE_PARTS). Default 8: a
+  /** Shuffle/state partition count for the bounded gate passes: a
     * bounded single-table pass instantiates one state store per
     * partition per stateful operator, and the r16 sweep (4/8/16/32 on
     * the RocksDB near-dup gates) re-confirmed 8 as the knee on this
     * corpus; production sizes this to throughput. */
-  private def gateParts: String =
-    sys.env.getOrElse("GRAFT_GATE_PARTS", "8")
+  private val gateParts = "8"
 
   /** Run a bounded streaming query to completion and return the sink
     * contents as a batch DataFrame. Memory sink + AvailableNow: every
@@ -219,22 +217,6 @@ object StreamGate extends QueryPack {
       .parquet(dir)
   }
 
-  /** Dev-probe hooks for graft.tools.StreamFloor: the staged sources
-    * and the bounded runner exposed so the per-gate fixed cost (query
-    * start + state-store instantiation + AvailableNow scheduling) can
-    * be measured over the IDENTICAL staging + sink machinery the
-    * declared gates use — an external reimplementation would measure a
-    * different floor. Not part of any declared query. */
-  private[graft] def probeDocStream(s: SparkSession, d: String): DataFrame =
-    docStream(s, d)
-  private[graft] def probeEventStream(s: SparkSession, d: String): DataFrame =
-    eventStream(s, d)
-  private[graft] def probeRunToBatch(s: SparkSession, out: DataFrame,
-                                     outputMode: String = "append"): DataFrame =
-    runToBatch(s, out, outputMode)
-  private[graft] def probeRunToBatchRocks(s: SparkSession, out: DataFrame): DataFrame =
-    runToBatchRocks(s, out)
-
   // ---- consolidated STATELESS ingest feed (one stream, all per-row /
   // stream-static branches over the documents + embeddings feeds) ----
   //
@@ -373,10 +355,9 @@ object StreamGate extends QueryPack {
     * with EXPLICIT ascending modification times so the file source
     * replays the slices in event-time order under
     * `maxFilesPerTrigger = 1` — one micro-batch per hour, which is what
-    * makes the watermark ADVANCE between batches (the
-    * tools/StateTtlProbe staging, promoted into the gated suite; mtimes
-    * are set with setLastModifiedTime rather than the probe's 1.1 s
-    * sleeps). Staged once per (session, dataset). */
+    * makes the watermark ADVANCE between batches (mtimes are set with
+    * setLastModifiedTime, not by sleeping between writes). Staged once
+    * per (session, dataset). */
   private def evictStaged(s: SparkSession, d: String): String =
     graft.SessionMemo.getOrElseUpdate[String](s, "stream.evictStage", d)( {
       import scala.jdk.CollectionConverters._
@@ -406,11 +387,11 @@ object StreamGate extends QueryPack {
   /** q293: WATERMARK EVICTION under ADVANCING event time — the piece the
     * q107 gate cannot exercise: q107 pins constant event time (so its
     * output equals batch q42's, the oracle contract), which means the
-    * suite never runs the eviction the real operator performs and the
-    * 100 TB state story lived in a tool (tools/StateTtlProbe), not a
-    * test. This gate replays the corpus as six hourly micro-batches
-    * through the SAME [[StreamOps.nearDupPairsStream]] operator (RocksDB
-    * state, 1-hour delay): between batches the watermark advances and
+    * suite never runs the eviction the real operator performs, and the
+    * 100 TB state story would go untested. This gate replays the corpus
+    * as six hourly micro-batches through the SAME
+    * [[StreamOps.nearDupPairsStream]] operator (RocksDB state, 1-hour
+    * delay): between batches the watermark advances and
     * the bucket processor PRUNES residents older than the horizon, so
     * pairs more than three hour-slices apart are structurally
     * unfindable — the earlier doc is evicted before the later arrives.

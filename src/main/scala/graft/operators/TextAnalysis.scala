@@ -389,7 +389,7 @@ object TextAnalysis extends QueryPack {
     * q127/q79 df-cut composed into this direction, ready to tighten at
     * corpus scales where one boilerplate shingle's posting list
     * dominates the probe. The declared gate runs UNCAPPED: the r15
-    * CapProbe sweep measured every cap (16–128) value-neutral at sf0.1
+    * cap sweep measured every cap (16–128) value-neutral at sf0.1
     * AND slower (2.49 s → 4.8–5.3 s — the cap's semi-join costs more
     * than the candidate volume it trims at this corpus), so the cap is
     * a 100 TB knob, not a test-scale win; ScaleSpec pins the

@@ -97,12 +97,16 @@ final class KafkaEtlPipeline(
     KafkaEtlPipeline.withPartitions(flat, ts, config.dateFormat)
   }
 
-  /** Start one query per topic; returns the running queries. */
+  /** Start one query per topic; returns the running queries. Every
+    * topic's plan (and so its registry lookup) is built before any query
+    * starts; if a later start throws, the queries already started are
+    * stopped and the pipeline stays unstarted. */
   def start(): Seq[StreamingQuery] = synchronized {
     require(queries.isEmpty, "pipeline already started")
-    queries = config.topics.map { topic =>
-      decoded(wireStream(topic), topic)
-        .writeStream
+    val plans = config.topics.map(topic => topic -> decoded(wireStream(topic), topic))
+    val started = Seq.newBuilder[StreamingQuery]
+    try plans.foreach { case (topic, df) =>
+      started += df.writeStream
         .format("parquet")
         .outputMode("append")
         .options(sinkOptions(topic))
@@ -110,7 +114,12 @@ final class KafkaEtlPipeline(
         .trigger(config.trigger)
         .queryName(s"graft-etl-$topic")
         .start()
+    } catch {
+      case e: Throwable =>
+        started.result().foreach(q => scala.util.Try(q.stop()))
+        throw e
     }
+    queries = started.result()
     queries
   }
 

@@ -188,7 +188,7 @@ class ScaleSpec extends SparkTestBase {
     // pairs whose every shared prefix shingle is hotter than it; at this
     // corpus a rarest-first prefix always shares a sub-cap shingle, so
     // the capped run is value-identical (measured at sf0.1 too — the r15
-    // CapProbe sweep: 0 diff at caps 16/32/64/128, and SLOWER, which is
+    // cap sweep: 0 diff at caps 16/32/64/128, and SLOWER, which is
     // why the declared gate stays uncapped)
     val prefCapped = pairs(TextAnalysis.prefixContainmentJoin(spark, sfDir,
                                                               fullMaxDf = 16L))

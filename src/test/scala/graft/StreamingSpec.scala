@@ -225,6 +225,35 @@ class StreamingSpec extends SparkTestBase {
     assert(clicks.select("itemId").collect()(0).getString(0) == "item-3")
   }
 
+  test("a failed start leaves no topic's query running") {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    def etlActive = spark.streams.active.filter(_.name.startsWith("graft-etl-"))
+    val reg = new InMemorySchemaRegistry(Map("a" -> registry.schemaJson(topic)))
+    def pipeline(topics: Seq[String]) = new KafkaEtlPipeline(spark, reg,
+      EtlConfig(topics, EtlSource.Stream(MemoryStream[(String, Array[Byte])]
+                  .toDF().toDF("topic", "value")),
+                Files.createTempDirectory("graft-fail-out").toString,
+                Files.createTempDirectory("graft-fail-ckpt").toString))
+    try {
+      // 'b' is unregistered: the lookup fails before 'a' starts
+      val missing = pipeline(Seq("a", "b"))
+      val e = intercept[NoSuchElementException](missing.start())
+      assert(e.getMessage.contains("'b'"))
+      missing.stop()
+      assert(etlActive.isEmpty)
+      // the second 'a' query's start throws (duplicate query name) after
+      // the first one started: the first is stopped again
+      val dup = pipeline(Seq("a", "a"))
+      intercept[IllegalArgumentException](dup.start())
+      assert(etlActive.isEmpty)
+      // with nothing left running, a fresh start on 'a' succeeds
+      val ok = pipeline(Seq("a"))
+      assert(ok.start().map(_.name) == Seq("graft-etl-a"))
+      ok.stop()
+    } finally etlActive.foreach(_.stop())
+  }
+
   test("streaming dedup runs on the RocksDB state store provider") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
@@ -936,7 +965,7 @@ class StreamingSpec extends SparkTestBase {
        "mid-run, and out-of-horizon true pairs are absent") {
     // the oracle certifies the emitted set; this pins the MECHANISM —
     // per-batch StateOperatorProgress must report numRowsRemoved > 0
-    // (the StateTtlProbe observation, now a suite invariant). Fresh
+    // (the eviction observation, now a suite invariant). Fresh
     // memo so the stream runs under the listener.
     import org.apache.spark.sql.streaming.StreamingQueryListener
     val removed = new java.util.concurrent.atomic.AtomicLong()
@@ -1131,13 +1160,13 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("q104's bloom-split plan carries NO state store; q177's keyed " +
-       "state does (the StateMetrics instrumentation finding, pinned)") {
+       "state does (the state-operator instrumentation finding, pinned)") {
     // q104's scale story is that dedup state lives in the broadcast
     // bloom + the static side, NOT a streaming state store — a plan
     // change that reintroduces one (e.g. dropDuplicates on the stream)
     // would silently change the gate's 100 TB cost model. Observed via
-    // the same listener StateMetrics uses, but keyed BY RUN ID: the
-    // old shared-accumulator form raced q177's async progress events
+    // a StreamingQueryListener keyed BY RUN ID: the old
+    // shared-accumulator form raced q177's async progress events
     // against the q104 emptiness assert (ADVICE r13). Attributing
     // state ops to the runId each event carries, and asserting on the
     // runIds each gate's build actually started, is race-free by
