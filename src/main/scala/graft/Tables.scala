@@ -88,5 +88,5 @@ trait QueryPack {
     * (q45 embeds the codebook trained on it). Defaults to the static map;
     * Verify always dumps through this so several datasets in one JVM each
     * get the oracle matching their own run. */
-  def oraclesFor(dir: String): Map[String, String] = oracles
+  def oraclesFor(@annotation.unused dir: String): Map[String, String] = oracles
 }

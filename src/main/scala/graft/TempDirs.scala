@@ -4,10 +4,9 @@ package graft
   * stream inputs, persisted test indexes): the memo maps keep one
   * artifact per (session, dataset) for the process lifetime — correct
   * while running, but a long-lived process would otherwise leave every
-  * artifact behind on disk after exit. Registration is idempotent and
-  * deletion is recursive, best-effort (exit-time cleanup must never
-  * throw). Production index paths are NOT registered — only dirs this
-  * process created as scratch. */
+  * artifact behind on disk after exit. Deletion is recursive,
+  * best-effort (exit-time cleanup must never throw). Only dirs created
+  * here as scratch are registered, never production index paths. */
 object TempDirs {
   private val dirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
@@ -30,9 +29,12 @@ object TempDirs {
     } catch { case _: Throwable => () }
   }
 
-  /** Register `path` for recursive deletion at JVM exit; returns it. */
-  def register(path: String): String = {
+  /** Create a fresh directory under `java.io.tmpdir` named after
+    * `prefix`, registered for recursive deletion at JVM exit; returns
+    * its path. */
+  def create(prefix: String): String = {
     hookInstalled
+    val path = java.nio.file.Files.createTempDirectory(prefix).toString
     dirs.add(path)
     path
   }

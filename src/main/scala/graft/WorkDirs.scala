@@ -29,23 +29,12 @@ import org.apache.spark.sql.SparkSession
   * that filesystem end-to-end.
   */
 object WorkDirs {
-  private val procDefault =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
+  private lazy val procDefault = TempDirs.create("graft-work")
 
   private def root(s: SparkSession): String =
     s.conf.getOption("spark.graft.workDir")
       .orElse(sys.env.get("GRAFT_WORK_DIR"))
-      .getOrElse {
-        if (procDefault.get == null) {
-          val cand =
-            java.nio.file.Files.createTempDirectory("graft-work").toString
-          // lost CAS race → another thread's dir won; ours is empty and
-          // registered nowhere, so remove it instead of leaking it
-          if (procDefault.compareAndSet(null, cand)) TempDirs.register(cand)
-          else java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(cand))
-        }
-        procDefault.get
-      }
+      .getOrElse(procDefault)
 
   /** Allocate (and mkdir) the artifact directory for `kind` over the
     * dataset at `datasetDir`, unique per live SparkSession. Writers that

@@ -526,14 +526,9 @@ object Curation extends QueryPack {
         .option("compression", "snappy").parquet(root)
       root
     })
-    val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val prev = s.conf.get(inferKey)
-    s.conf.set(inferKey, "false")
-    val back =
-      try { val b = s.read.parquet(out); b.schema; b }
-      finally s.conf.set(inferKey, prev)
-    back.select(col("doc_id"), col("split"), col("source"), col("ntok"),
-                col("text_md5"))
+    Ingest.readLanded(s, out)
+      .select(col("doc_id"), col("split"), col("source"), col("ntok"),
+              col("text_md5"))
       .orderBy("doc_id")
   }
 

@@ -34,7 +34,6 @@ object Dedup extends QueryPack {
 
   private val nHashes = 64
   private val nBands = 16
-  private val rowsPerBand = 4
 
   /** doc_id + distinct shingle set (native one-pass expression). */
   private def shingled(s: SparkSession, d: String): DataFrame =
@@ -1468,7 +1467,6 @@ object Dedup extends QueryPack {
     import org.apache.spark.rdd.RDD
     ccInvocations.incrementAndGet()
     val spark = nodes.sparkSession
-    val t0 = System.nanoTime()
     // Partition count inherits the edge relation's own partitioning
     // (data-proportional, AQE-coalesced — see the scaladoc). A r16
     // experiment derived it from an up-front edges.count() instead
@@ -1480,9 +1478,6 @@ object Dedup extends QueryPack {
     // OPTIMIZATION_r16.md; re-attack only with evidence of a consumer
     // whose inherited width is far off its edge volume.
     val parts = edges.rdd.getNumPartitions.max(1)
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] parts=$parts " +
-        s"setup=${(System.nanoTime() - t0) / 1000000} ms")
     val part = new HashPartitioner(parts)
     val edgesR: RDD[(Long, Long)] = edges.rdd
       .map(r => (r.getLong(0), r.getLong(1))).partitionBy(part)
@@ -1503,13 +1498,6 @@ object Dedup extends QueryPack {
         .reduceByKey(part, math.min(_: Long, _: Long))
       val hop = labels.leftOuterJoin(nbrMin, part)
         .mapValues { case (l, o) => math.min(l, o.getOrElse(l)) }
-      // pointer doubling: my label is a doc_id — adopt THAT doc's label
-      // if smaller (label(label(x))), composing previously propagated
-      // hops; rekey-by-label is the iteration's second shuffle.
-      // (r16 negative: a SECOND jump per iteration — reach 4r+2 —
-      // did NOT reduce q80's measured 10 iterations (its convergence
-      // tail is not chain-reach-bound) and added ~30% per-iteration
-      // cost; reverted, see OPTIMIZATION_r16.md.)
       // pointer doubling: my label is a doc_id — adopt THAT doc's label
       // if smaller (label(label(x))), composing previously propagated
       // hops; rekey-by-label is the iteration's second shuffle.
@@ -1538,8 +1526,6 @@ object Dedup extends QueryPack {
       prevSum = s2
       labels = next
       iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] iter=$iter cum=${(System.nanoTime() - t0) / 1000000} ms")
     }
     import spark.implicits._
     val labDf = labels.toDF("doc_id", "cluster_id")

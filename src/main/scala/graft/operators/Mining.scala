@@ -598,8 +598,7 @@ object Mining extends QueryPack {
     * global vec_id cutoff would undershoot by the side's id density
     * and could even miss k vectors on a side sparse in low ids; the
     * rank sample is exact regardless of how ids interleave). */
-  private def mineCodebooksFor(s: SparkSession, d: String, aSide: DataFrame,
-                               bSide: DataFrame)
+  private def mineCodebooksFor(d: String, aSide: DataFrame, bSide: DataFrame)
       : (Array[Array[Double]], Array[Array[Double]]) =
     mineCodebooks.computeIfAbsent(d, _ => {
       val (kB, kA) = (mineK(bSide.count()), mineK(aSide.count()))
@@ -685,7 +684,7 @@ object Mining extends QueryPack {
 
   private def q286MarginMineProbed(s: SparkSession, d: String): DataFrame = {
     val (aSide, bSide) = mineSides(s, d)
-    val (centsB, centsA) = mineCodebooksFor(s, d, aSide, bSide)
+    val (centsB, centsA) = mineCodebooksFor(d, aSide, bSide)
     def assignedOf(corpus: DataFrame, cents: Array[Array[Double]]): DataFrame =
       Similarity.ivfAssignCodebook(s, corpus, cents)
         .select(col("vec_id").as("cand_id"), col("centroid"),
@@ -724,7 +723,7 @@ object Mining extends QueryPack {
     * engine (the q157 pattern, two-sided). */
   private def q289MiningIndexLifecycle(s: SparkSession, d: String): DataFrame = {
     val (aSide, bSide) = mineSides(s, d)
-    val (centsB, centsA) = mineCodebooksFor(s, d, aSide, bSide)
+    val (centsB, centsA) = mineCodebooksFor(d, aSide, bSide)
     val (dirB, dirA) = graft.SessionMemo.getOrElseUpdate[(String, String)](
       s, "mine.sideIndexes", d)( {
       def build(side: DataFrame, cents: Array[Array[Double]],

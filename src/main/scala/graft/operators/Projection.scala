@@ -226,7 +226,7 @@ object Projection extends QueryPack {
   private def q125PcaSweep(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val p = pcaCache.computeIfAbsent(d, dir => trainPca(e, kSweep.max))
+    val p = pcaCache.computeIfAbsent(d, _ => trainPca(e, kSweep.max))
     val proj = e.select(col("vec_id"), projectExpr(p, col("embedding")).as("y"))
     val qp = proj.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("y").as("qy"))

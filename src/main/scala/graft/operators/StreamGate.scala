@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryPack, Tables}
 import graft.streaming.StreamOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -26,11 +27,11 @@ import org.apache.spark.sql.streaming.Trigger
   *  - q106 = [[StreamOps.simhashNearDupStream]] (transformWithState
   *    bucket processor) vs batch q81's banded-signature SQL.
   *
-  * Scale notes: the gate harness is test scaffolding (a memory sink and
-  * an AvailableNow pass); the OPERATORS under it are the production
-  * paths whose scale arguments live at their definitions — stateless
-  * stream-static joins for q104/q105, watermark-bounded ListState per
-  * band bucket for q106.
+  * Scale notes: the gate harness ([[runToBatch]]: an AvailableNow pass
+  * into a memory or parquet sink) is test scaffolding; the OPERATORS
+  * under it are the production paths whose scale arguments live at
+  * their definitions — stateless stream-static joins for q104/q105,
+  * watermark-bounded ListState per band bucket for q106.
   */
 object StreamGate extends QueryPack {
 
@@ -43,115 +44,75 @@ object StreamGate extends QueryPack {
     * corpus; production sizes this to throughput. */
   private val gateParts = "8"
 
-  /** Run a bounded streaming query to completion and return the sink
-    * contents as a batch DataFrame. Memory sink + AvailableNow: every
-    * available file is processed, then the query stops.
+  /** The one bounded-stream runner behind every gate: run `out` to
+    * completion under an AvailableNow trigger (every available file is
+    * processed, then the query stops) and return what it wrote as a
+    * batch DataFrame.
     *
-    * The gate pass runs with a small shuffle-partition count: streaming
-    * state instantiates one state store per shuffle partition per
-    * stateful operator, and a bounded single-table pass gains nothing
-    * from 32 of them — sizing partitions to the pass is exactly what an
-    * operator would do (the streaming ops themselves are
-    * partition-count-agnostic; production sizes this to throughput). */
+    * It sets the pass's session confs and restores them after:
+    *  - `spark.sql.shuffle.partitions` = [[gateParts]]: streaming state
+    *    instantiates one state store per shuffle partition per stateful
+    *    operator, and a bounded single-table pass gains nothing from 32
+    *    of them (the operators are partition-count-agnostic; production
+    *    sizes this to throughput);
+    *  - the RocksDB state-store provider, only when the plan holds a
+    *    `transformWithState` operator: it needs multiple column
+    *    families, which the default HDFS-backed provider lacks
+    *    (`STATE_STORE_MULTIPLE_COLUMN_FAMILIES`). Every other stateful
+    *    gate runs on the default provider. Changelog checkpointing was
+    *    TRIED on top of RocksDB in r16 (delta upload instead of a full
+    *    snapshot zip per store per commit — the production setting for
+    *    long-lived streams) and measured a NEGATIVE on the bounded
+    *    two-batch gate runs: paired isolated A/B read neutral-to-noise,
+    *    and the in-suite draw regressed q169 +0.64 s / q107 +0.28 s
+    *    while untouched neighbors held — for a 2-micro-batch ephemeral
+    *    checkpoint the changelog writes are pure extra work (there is no
+    *    third batch to amortize them) and the snapshot upload they defer
+    *    still happens at query stop. Recorded in OPTIMIZATION_r16.md;
+    *    revisit only for a long-lived multi-batch gate.
+    *
+    * The sink is the memory sink unless `fileSink` names a parquet sink
+    * directory. Both are needed: a file sink cannot take `complete`
+    * output mode, which the register aggregations use, and the memory
+    * sink collects every row into the driver, which the corpus-sized
+    * consolidated feeds cannot afford (the ×100 feed study OOM'd the
+    * 16 GiB bench driver exactly there — `maxResultSize` on ~50 M q118
+    * window rows). The file sink streams through the executors,
+    * partitions by `tag` when the column is present (each gate's slice
+    * reads back with partition pruning), and reads back under the KNOWN
+    * schema: a feed that produced zero rows leaves no files, and schema
+    * inference would throw where an empty relation is the correct
+    * answer. */
   private def runToBatch(s: SparkSession, out: DataFrame,
-                         outputMode: String = "append"): DataFrame = {
+                         outputMode: String = "append",
+                         fileSink: Option[String] = None): DataFrame = {
+    val tws = out.queryExecution.logical.exists(_.isInstanceOf[TransformWithState])
+    val confs = Seq("spark.sql.shuffle.partitions" -> gateParts) ++
+      (if (tws) Seq("spark.sql.streaming.stateStore.providerClass" ->
+         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+       else Nil)
+    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    val dir = fileSink.map(n => graft.TempDirs.create(s"graft_sink_$n"))
     val name = s"graft_stream_gate_${sinkId.incrementAndGet()}"
-    val pKey = "spark.sql.shuffle.partitions"
-    val prevP = s.conf.get(pKey)
-    s.conf.set(pKey, gateParts)
     try {
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode(outputMode)
+      val w = out.writeStream.outputMode(outputMode)
         .trigger(Trigger.AvailableNow())
-        .start()
+      val q = dir match {
+        case Some(p) =>
+          val fw = w.format("parquet")
+            .option("path", s"$p/data")
+            .option("checkpointLocation", s"$p/ckpt")
+          (if (out.columns.contains("tag")) fw.partitionBy("tag") else fw).start()
+        case None => w.format("memory").queryName(name).start()
+      }
       q.awaitTermination()
-      if (sys.env.contains("GRAFT_GATE_DEBUG"))
-        q.recentProgress.foreach { p =>
-          System.err.println(
-            s"[gate] batch=${p.batchId} rows=${p.numInputRows} " +
-            s"durationMs=${p.durationMs} stateOps=${p.stateOperators.length}")
-          // per-state-operator split (r17): update vs commit vs removal
-          // time and the state row/byte volume — the numbers that decide
-          // whether a gate's floor is state I/O or per-row compute
-          p.stateOperators.foreach(so => System.err.println(
-            s"[gate]   state op=${so.operatorName} rows=${so.numRowsTotal} " +
-            s"updated=${so.numRowsUpdated} updMs=${so.allUpdatesTimeMs} " +
-            s"rmMs=${so.allRemovalsTimeMs} commitMs=${so.commitTimeMs} " +
-            s"memBytes=${so.memoryUsedBytes} " +
-            s"custom=${so.customMetrics}"))
-        }
-    } finally s.conf.set(pKey, prevP)
-    s.table(name)
-  }
-
-  /** Run a bounded streaming query to a PARQUET sink (partitioned by
-    * `tag` when present) and return the read-back relation — the sink
-    * for the CONSOLIDATED feed streams, whose unioned output is
-    * corpus-sized: a memory sink collects every row into the driver
-    * (the ×100 feed study OOM'd the 16 GiB bench driver exactly there —
-    * `maxResultSize` on ~50 M q118 window rows), while the file sink
-    * streams through the executors and the per-gate tag slice reads
-    * back with partition pruning. Also the production shape: a feed
-    * pass lands in the lake, per-metric consumers read their slice. */
-  private def runToBatchParquet(s: SparkSession, out: DataFrame,
-                                name: String): DataFrame = {
-    val dir = graft.TempDirs.register(
-      java.nio.file.Files.createTempDirectory(s"graft_sink_$name").toString)
-    val pKey = "spark.sql.shuffle.partitions"
-    val prevP = s.conf.get(pKey)
-    s.conf.set(pKey, gateParts)
-    try {
-      val w = out.writeStream.format("parquet")
-        .option("path", s"$dir/data")
-        .option("checkpointLocation", s"$dir/ckpt")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-      val q = (if (out.columns.contains("tag")) w.partitionBy("tag") else w)
-        .start()
-      q.awaitTermination()
-    } finally s.conf.set(pKey, prevP)
-    // read back under the KNOWN schema: a feed that produced zero rows
-    // (tiny/empty dataset) leaves no files, and schema inference would
-    // throw where an empty relation is the correct answer (ADVICE r14)
-    s.read.schema(out.schema).parquet(s"$dir/data")
-  }
-
-  /** RocksDB provider confs for a bounded gate pass. Changelog
-    * checkpointing was TRIED here in r16 (delta upload instead of a
-    * full snapshot zip per store per commit — the production setting
-    * for long-lived streams) and measured a NEGATIVE on the bounded
-    * two-batch gate runs: paired isolated A/B read neutral-to-noise,
-    * and the in-suite draw regressed q169 +0.64 s / q107 +0.28 s while
-    * untouched neighbors held — for a 2-micro-batch ephemeral
-    * checkpoint the changelog writes are pure extra work (there is no
-    * third batch to amortize them) and the snapshot upload they defer
-    * still happens at query stop. Recorded in OPTIMIZATION_r16.md;
-    * revisit only for a long-lived multi-batch gate. */
-  private val rocksConfs = Seq(
-    "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
-  private def withRocks[T](s: SparkSession)(body: => T): T = {
-    val prev = rocksConfs.map { case (k, _) => k -> s.conf.getOption(k) }
-    rocksConfs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally prev.foreach {
+    } finally prev.foreach {
       case (k, Some(v)) => s.conf.set(k, v)
       case (k, None) => s.conf.unset(k)
     }
+    dir.fold(s.table(name))(p => s.read.schema(out.schema).parquet(s"$p/data"))
   }
-
-  /** [[runToBatchParquet]] with the RocksDB provider (the
-    * [[runToBatchRocks]] wrapper at the file sink). */
-  private def runToBatchParquetRocks(s: SparkSession, out: DataFrame,
-                                     name: String): DataFrame =
-    withRocks(s)(runToBatchParquet(s, out, name))
-
-  /** [[runToBatch]] with the RocksDB state-store provider set for the
-    * pass (transformWithState requires multiple column families, which
-    * the default HDFS-backed provider lacks), restored after. */
-  private def runToBatchRocks(s: SparkSession, out: DataFrame): DataFrame =
-    withRocks(s)(runToBatch(s, out))
 
   private val stageMemo =
     scala.collection.concurrent.TrieMap.empty[String, String]
@@ -161,8 +122,7 @@ object StreamGate extends QueryPack {
     * temp dir, once per (dataset, table). */
   private def stagedDir(d: String, table: String): String =
     stageMemo.getOrElseUpdate(s"$d/$table", {
-      val dir = java.nio.file.Paths.get(graft.TempDirs.register(
-        java.nio.file.Files.createTempDirectory(s"graft_stream_$table").toString))
+      val dir = java.nio.file.Paths.get(graft.TempDirs.create(s"graft_stream_$table"))
       java.nio.file.Files.createSymbolicLink(
         dir.resolve(s"$table.parquet"),
         java.nio.file.Paths.get(s"$d/$table.parquet"))
@@ -202,8 +162,7 @@ object StreamGate extends QueryPack {
       val sentinelTs = new java.sql.Timestamp(maxTs.getTime + 35L * 24 * 3600 * 1000)
       val sentinel = Seq((-1L, "zzz_sentinel", -1L, sentinelTs, 0.0))
         .toDF("event_id", "event_type", "user_id", "ts", "value")
-      val dir = graft.TempDirs.register(
-        java.nio.file.Files.createTempDirectory("graft_stream_events").toString)
+      val dir = graft.TempDirs.create("graft_stream_events")
       ev.unionByName(sentinel).coalesce(1).write.mode("overwrite").parquet(dir)
       (dir, ev.schema)
     })
@@ -294,7 +253,7 @@ object StreamGate extends QueryPack {
                     col("rep_ratio")))
         .unionByName(shape("q182", b182, col("vec_id"), nullS,
                     col("n_extreme"), col("z4max"), nullL, nullD))
-      runToBatchParquet(s, u, "docFeed")
+      runToBatch(s, u, fileSink = Some("docFeed"))
     })
 
   /** Streaming incremental exact dedup vs the static existing corpus,
@@ -328,7 +287,7 @@ object StreamGate extends QueryPack {
     val out = StreamOps.simhashNearDupStream(stream, "ts", "1 hour",
       delayMs = 3600000L, maxHamming = 3, nBands = 4, bitsPerBand = 15,
       maxResidents = 1000000)
-    runToBatchRocks(s, out)
+    runToBatch(s, out)
       .select(col("a_id"), col("b_id"), col("hamming"))
       .orderBy("a_id", "b_id")
   }
@@ -344,7 +303,7 @@ object StreamGate extends QueryPack {
       .withColumn("ts", timestamp_seconds(lit(1704067200L))) // 2024-01-01
     val out = StreamOps.nearDupPairsStream(stream, "ts", "1 hour",
       delayMs = 3600000L, threshold = 0.8, maxResidents = 1000000)
-    runToBatchRocks(s, out)
+    runToBatch(s, out)
       .select(col("a_id"), col("b_id"), col("jaccard"))
       .orderBy("a_id", "b_id")
   }
@@ -362,8 +321,7 @@ object StreamGate extends QueryPack {
     graft.SessionMemo.getOrElseUpdate[String](s, "stream.evictStage", d)( {
       import scala.jdk.CollectionConverters._
       val H = 6
-      val dir = graft.TempDirs.register(
-        java.nio.file.Files.createTempDirectory("graft_stream_evict").toString)
+      val dir = graft.TempDirs.create("graft_stream_evict")
       val docs = Tables.documents(s, d).select("doc_id", "text")
       for (h <- 0 until H) {
         val tmp = java.nio.file.Files.createTempDirectory("graft_evict_slice")
@@ -439,7 +397,7 @@ object StreamGate extends QueryPack {
       .parquet(staged)
     val out = StreamOps.nearDupPairsStream(stream, "ts", "1 hour",
       delayMs = 3600000L, threshold = 0.8, maxResidents = maxResidents)
-    runToBatchParquetRocks(s, out, "evict")
+    runToBatch(s, out, fileSink = Some("evict"))
       .select(col("a_id"), col("b_id"), col("jaccard"))
   }
 
@@ -621,8 +579,8 @@ object StreamGate extends QueryPack {
         stages = Seq("view", "signup", "purchase"), gapMs = 3600000L,
         horizonMs = 30L * 24 * 3600 * 1000, watermarkDelay = "1 minute")
       // file sink: the tagged output is corpus-sized (the path branch
-      // emits ~one trigram fact per event) — see runToBatchParquet
-      runToBatchParquet(s, out.toDF(), "userTimeline")
+      // emits ~one trigram fact per event) — see runToBatch
+      runToBatch(s, out.toDF(), fileSink = Some("userTimeline"))
     })
 
   private def q167SessionizeStream(s: SparkSession, d: String): DataFrame =
@@ -667,7 +625,7 @@ object StreamGate extends QueryPack {
     val out = graft.streaming.StreamOps.quotaPerKeyStream(
       eventStream(s, d), "ts", delay = "1 minute", delayMs = 60000L,
       windowMs = 3600000L, keyCol = "event_type", idCol = "event_id", cap = 5)
-    runToBatchRocks(s, out)
+    runToBatch(s, out)
       .filter(col("doc_id") >= 0)
       .select(col("key").as("event_type"), col("doc_id").as("event_id"))
       .orderBy("event_type", "event_id")

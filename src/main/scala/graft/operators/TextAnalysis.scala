@@ -24,7 +24,6 @@ import org.apache.spark.sql.functions._
 object TextAnalysis extends QueryPack {
 
   private val toksExpr = graft.functions.TextExprs.toks
-  private val shinglesExpr = graft.functions.TextExprs.shingles
 
   // Token counting: whitespace tokens + a BPE-ish regex tokenization
   // (letter runs | digit runs | single punctuation), plus avg word length.

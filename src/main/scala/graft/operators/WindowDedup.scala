@@ -55,10 +55,8 @@ object WindowDedup extends QueryPack {
 
   /** (doc_id, n_windows) for every document, and the exploded
     * (doc_id, wh) window-hash postings for documents long enough to
-    * have any. Hash = md5 of the space-joined window tokens (the
-    * cross-engine-replicable form). */
-  private def windows(s: SparkSession, d: String,
-                      hash: String => String = w => s"md5($w)")
+    * have any. Hash = `hash` of the space-joined window tokens. */
+  private def windows(s: SparkSession, d: String, hash: String => String)
       : (DataFrame, DataFrame) = {
     val t = Tables.documents(s, d)
       .select(col("doc_id"), expr(toks).as("w"))

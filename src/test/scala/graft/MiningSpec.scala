@@ -612,10 +612,8 @@ class MiningSpec extends SparkTestBase {
       .select(col("vec_id"), col("embedding"), col("label"))
     val aSide = e.filter(col("label") < 5).select("vec_id", "embedding")
     val bSide = e.filter(col("label") >= 5).select("vec_id", "embedding")
-    val dirA = TempDirs.register(
-      java.nio.file.Files.createTempDirectory("mine_stale_a").toString)
-    val dirB = TempDirs.register(
-      java.nio.file.Files.createTempDirectory("mine_stale_b").toString)
+    val dirA = TempDirs.create("mine_stale_a")
+    val dirB = TempDirs.create("mine_stale_b")
     // build on the initial slice, then the q289-shaped id-interleaved
     // BALANCED append (same distribution, frozen codebooks)
     val isAppend = col("vec_id") % 5 === 2

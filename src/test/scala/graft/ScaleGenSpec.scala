@@ -14,11 +14,10 @@ import org.apache.spark.sql.functions._
 class ScaleGenSpec extends SparkTestBase {
 
   private lazy val outDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_scalegen_spec")
-    TempDirs.register(dir.toString)
+    val dir = TempDirs.create("graft_scalegen_spec")
     // factor 1 over the tiny sf0.001 base — seconds, not minutes
-    graft.tools.ScaleGen.generate(spark, sfDir, dir.toString, 1)
-    dir.toString
+    graft.tools.ScaleGen.generate(spark, sfDir, dir, 1)
+    dir
   }
 
   test("every generated table is a single parquet FILE (stream-stageable)") {
@@ -59,9 +58,8 @@ class ScaleGenSpec extends SparkTestBase {
   }
 
   test("zipf mode grows a Heaps-law vocabulary and keeps the twin structure") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_scalegen_zipf")
-    TempDirs.register(dir.toString)
-    graft.tools.ScaleGen.generate(spark, sfDir, dir.toString, 1, zipf = true)
+    val dir = TempDirs.create("graft_scalegen_zipf")
+    graft.tools.ScaleGen.generate(spark, sfDir, dir, 1, zipf = true)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val vocab = docs.select(explode(split(trim(col("text")), "\\s+")).as("t"))
       .select(countDistinct("t")).head().getLong(0)
@@ -113,9 +111,8 @@ class ScaleGenSpec extends SparkTestBase {
   }
 
   test("generation is deterministic (same seed hashing, bit-identical)") {
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_scalegen_spec2")
-    TempDirs.register(dir2.toString)
-    graft.tools.ScaleGen.generate(spark, sfDir, dir2.toString, 1)
+    val dir2 = TempDirs.create("graft_scalegen_spec2")
+    graft.tools.ScaleGen.generate(spark, sfDir, dir2, 1)
     val a = spark.read.parquet(s"$outDir/documents.parquet")
       .orderBy("doc_id").collect().toSeq
     val b = spark.read.parquet(s"$dir2/documents.parquet")

@@ -1233,4 +1233,62 @@ class StreamingSpec extends SparkTestBase {
       // leave them memoized for later consumers (keyed discipline)
     }
   }
+
+  test("the gate runner picks RocksDB exactly for transformWithState " +
+       "plans and restores the confs it sets") {
+    // q169 runs a transformWithState processor, which needs RocksDB's
+    // column families; q170's dropDuplicatesWithinWatermark stays on the
+    // default provider. Custom metrics are attributed by run id, and
+    // QueryStartedEvent is delivered synchronously, so the runs each
+    // gate started are exactly the new ids after it returns.
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import scala.jdk.CollectionConverters._
+    val keys = Seq("spark.sql.shuffle.partitions",
+                   "spark.sql.streaming.stateStore.providerClass")
+    val before = keys.map(spark.conf.getOption)
+    val started = scala.collection.concurrent.TrieMap.empty[java.util.UUID, Unit]
+    val terminated = scala.collection.concurrent.TrieMap.empty[java.util.UUID, Unit]
+    val metricsByRun =
+      scala.collection.concurrent.TrieMap.empty[java.util.UUID, Set[String]]
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(
+          e: StreamingQueryListener.QueryStartedEvent): Unit =
+        started.put(e.runId, ())
+      override def onQueryTerminated(
+          e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        terminated.put(e.runId, ())
+      override def onQueryProgress(
+          e: StreamingQueryListener.QueryProgressEvent): Unit =
+        e.progress.stateOperators.foreach(so =>
+          metricsByRun.updateWith(e.progress.runId)(
+            v => Some(v.getOrElse(Set.empty) ++ so.customMetrics.keySet.asScala)))
+    }
+    def awaitOrTimeout(cond: => Boolean, ms: Long = 30000): Boolean = {
+      val deadline = System.nanoTime() + ms * 1000000L
+      while (!cond && System.nanoTime() < deadline) Thread.sleep(200)
+      cond
+    }
+    // the custom-metric names every state operator of a gate's runs reported
+    def stateMetricsOf(q: String): Set[String] = {
+      val prior = started.keySet.toSet
+      graft.operators.StreamGate.queries(q)(spark, sfDir).count()
+      val runs = started.keySet.toSet -- prior
+      assert(runs.nonEmpty, s"$q must start a streaming query")
+      // FIFO delivery: a run's progress events precede its termination
+      assert(awaitOrTimeout(runs.forall(terminated.contains)),
+        s"$q's streaming run must terminate")
+      runs.flatMap(r => metricsByRun.getOrElse(r, Set.empty))
+    }
+    spark.streams.addListener(listener)
+    try {
+      val q169 = stateMetricsOf("q169_quota_stream")
+      val q170 = stateMetricsOf("q170_dedup_stream")
+      assert(q169.exists(_.startsWith("rocksdb")),
+        s"q169 (transformWithState) must run on RocksDB, got $q169")
+      assert(q170.nonEmpty, "q170 must report its dedup state operator")
+      assert(!q170.exists(_.startsWith("rocksdb")),
+        s"q170 must stay on the default provider, got $q170")
+    } finally spark.streams.removeListener(listener)
+    assert(keys.map(spark.conf.getOption) == before)
+  }
 }
