@@ -531,27 +531,12 @@ object StreamGate extends QueryPack {
 
   private val tsFmt = "yyyy-MM-dd HH:mm:ss"
 
-  /** Streaming GAP-BASED SESSIONIZATION — [[StreamOps.sessionizeStream]]
-    * (flatMapGroupsWithState, event-time timeout) under the oracle gate:
-    * the event-time upgrade of the reference's processing-time file roll
-    * (`ETLTask.java:285-296`), certified batch-equivalent against q24's
-    * lag/running-sum session SQL extended with the per-session value sum.
-    * Two cross-engine parity choices make the equivalence exact: gap
-    * arithmetic runs on epoch MILLIS on both sides (`Timestamp.getTime`
-    * is ms; the oracle compares `epoch_ms` diffs), and the value sum is
-    * integer-cent arithmetic (`floor(value·100 + 0.5)` is one IEEE
-    * multiply+floor on the same double both sides; integer-valued double
-    * sums are order-independent) — no float-sum-order hazard.
-    * Mid-stream sessions emit when their successor opens; each user's
-    * LAST session emits via the event-time timeout once the sentinel
-    * advances the watermark past session_end + gap. */
   /** The events-feed per-user KEYED-STATE stream (q167 sessionization,
     * q177 funnel attribution, q223 path assembly), run once per
     * (session, dataset): all three are flatMapGroupsWithState machines
     * keyed by user under the same 1-minute watermark, so they ride ONE
     * consolidated pass keyed by (tag, user_id) — each key runs exactly
-    * one branch's state machine via the SHARED transition/finalize
-    * functions the standalone operators use
+    * one branch's state machine
     * ([[graft.streaming.StreamOps.userTimelineStream]]), with its own
     * per-key event-time timer. One shuffle by user, one state store,
     * three machines — the production shape for per-user feed analytics,
@@ -583,6 +568,21 @@ object StreamGate extends QueryPack {
       runToBatch(s, out.toDF(), fileSink = Some("userTimeline"))
     })
 
+  /** Streaming GAP-BASED SESSIONIZATION — the `sess` branch of
+    * [[graft.streaming.StreamOps.userTimelineStream]]
+    * (flatMapGroupsWithState, event-time timeout) under the oracle gate:
+    * the event-time upgrade of the reference's processing-time file roll
+    * (`ETLTask.java:285-296`), certified batch-equivalent against q24's
+    * lag/running-sum session SQL extended with the per-session value sum.
+    * Two cross-engine parity choices make the equivalence exact: gap
+    * arithmetic runs on epoch MILLIS on both sides (`Timestamp.getTime`
+    * is ms; the oracle compares `epoch_ms` diffs), and the value sum is
+    * integer-cent arithmetic (`floor(value·100 + 0.5)` is one IEEE
+    * multiply+floor on the same double both sides; integer-valued double
+    * sums are order-independent) — no float-sum-order hazard.
+    * Mid-stream sessions emit when their successor opens; each user's
+    * LAST session emits via the event-time timeout once the sentinel
+    * advances the watermark past session_end + gap. */
   private def q167SessionizeStream(s: SparkSession, d: String): DataFrame =
     userTimeline(s, d)
       .filter(col("tag") === "sess" && col("user_id") >= 0)
@@ -752,12 +752,13 @@ object StreamGate extends QueryPack {
       .orderBy("user_id", "event_type")
   }
 
-  /** Streaming CONVERSION FUNNEL — [[graft.streaming.StreamOps
-    * .funnelStageStream]] (per-user buffered attribution finalized by
-    * event-time timer) under the oracle gate: each user emits a final
-    * reached-stage row once the watermark passes last activity + the
-    * 30-day attribution horizon (the sentinel's +35-day jump fires
-    * every timer), then the per-user rows aggregate through the SAME
+  /** Streaming CONVERSION FUNNEL — the `funl` branch of
+    * [[graft.streaming.StreamOps.userTimelineStream]] (per-user buffered
+    * attribution finalized by event-time timer) under the oracle gate:
+    * each user emits a final reached-stage row once the watermark
+    * passes last activity + the 30-day attribution horizon (the
+    * sentinel's +35-day jump fires every timer), then the per-user rows
+    * aggregate through the SAME
     * `EventOps.funnelRows` formatter batch q176 uses, so the stream
     * serves q176's oracle verbatim — finalized attribution ≡ the batch
     * strict-order min-chain, certified cross-engine. */
@@ -830,10 +831,11 @@ object StreamGate extends QueryPack {
       .filter(col("user_id") >= 0 && col("purchase_id").isNotNull)
       .orderBy("user_id", "click_id", "purchase_id")
 
-  /** q223: STREAMING PATH MINING — [[graft.streaming.StreamOps
-    * .eventPathsStream]] (per-user event-time timeline assembly
-    * finalized by timer — ordering under out-of-order arrival is the
-    * part a stream must earn; see the operator doc) under the oracle
+  /** q223: STREAMING PATH MINING — the `path` branch of
+    * [[graft.streaming.StreamOps.userTimelineStream]] (per-user
+    * event-time timeline assembly finalized by timer — ordering under
+    * out-of-order arrival is the part a stream must earn; see the
+    * operator doc) under the oracle
     * gate: the emitted per-user trigram facts aggregate through the
     * same top-20 count batch q213 runs (the q118 in-stream/
     * in-warehouse split), and the sentinel's +35-day jump fires every

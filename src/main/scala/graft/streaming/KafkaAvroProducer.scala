@@ -4,7 +4,6 @@ import graft.functions.AvroFunctions
 import graft.sources.SchemaRegistry
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The producer path — the reference's test producer re-expressed
   * Spark-first (`GenericRecordKafkaProducer.java:58-96` drives a
@@ -13,14 +12,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * Here the per-record serializer is the native `to_avro_bytes`
   * expression over a struct projected in the topic's registered field
-  * order (what GenericDatumWriter does), and the transport is Spark's
-  * Kafka sink. The wire frame `(topic, value binary)` is exactly what
-  * `KafkaEtlPipeline` consumes, so produce→consume round-trips
-  * in-process (StreamingSpec) with no brokers — and against a real
-  * cluster the same frame goes through `format("kafka")`.
+  * order (what GenericDatumWriter does). The wire frame
+  * `(topic, value binary)` is exactly what `KafkaEtlPipeline` consumes,
+  * so produce→consume round-trips in-process (StreamingSpec) with no
+  * brokers; against a real cluster the caller writes the same frame
+  * with Spark's Kafka sink (`format("kafka")` plus its broker options).
   *
-  * Scale: encode is stateless per-record map work; the Kafka sink writes
-  * from every executor in parallel — no shuffle anywhere.
+  * Scale: encode is stateless per-record map work — no shuffle.
   */
 object KafkaAvroProducer {
 
@@ -34,29 +32,4 @@ object KafkaAvroProducer {
     df.select(lit(topic).as("topic"),
               AvroFunctions.to_avro_bytes(struct(fields: _*), schema.toString).as("value"))
   }
-
-  /** Streaming producer: encode + `writeStream.format("kafka")`
-    * (`kafka.bootstrap.servers` etc. pass through `kafkaOptions`;
-    * delivery state lives in the checkpoint). */
-  def startStream(df: DataFrame, topic: String, registry: SchemaRegistry,
-                  kafkaOptions: Map[String, String],
-                  checkpointLocation: String): StreamingQuery =
-    wireFrame(df, topic, registry)
-      .writeStream
-      .format("kafka")
-      .options(kafkaOptions)
-      .option("topic", topic)
-      .option("checkpointLocation", checkpointLocation)
-      .start()
-
-  /** Batch producer (backfills / test fixtures): same frame, one-shot
-    * Kafka write. */
-  def writeBatch(df: DataFrame, topic: String, registry: SchemaRegistry,
-                 kafkaOptions: Map[String, String]): Unit =
-    wireFrame(df, topic, registry)
-      .write
-      .format("kafka")
-      .options(kafkaOptions)
-      .option("topic", topic)
-      .save()
 }

@@ -469,21 +469,15 @@ object StreamOps extends Serializable {
       .toDF()
   }
 
-  final case class SessionEvent(user_id: Long, ts: java.sql.Timestamp, value: Double)
-  final case class SessionOut(user_id: Long, session_start: java.sql.Timestamp,
-                              session_end: java.sql.Timestamp,
-                              n_events: Long, total_value: Double)
   final case class SessionAgg(start: Long, end: Long, n: Long, total: Double)
 
-  // ---- shared per-user state machines ----
+  // ---- per-user state machines ----
   //
-  // The transition/finalize logic of the three keyed-state operators
-  // below (sessionize, funnel, path assembly) factored out so the
-  // STANDALONE operators and the consolidated per-feed timeline stream
-  // ([[userTimelineStream]] — the gate-side register-consolidation
-  // discipline applied at the keyed-state tier) run the IDENTICAL state
-  // machines: one shuffle + one state store per feed in the gate suite,
-  // per-operator wiring in the specs, same math everywhere.
+  // The transition/finalize logic of the three per-user keyed-state
+  // machines (gap sessionization, funnel attribution, path assembly)
+  // that [[userTimelineStream]] runs, kept as pure functions so the
+  // specs can also check the settled-prefix folds against buffer-all
+  // semantics without running a stream.
 
   /** Fold a batch of (epochMs, value) events into an open session.
     * Events are absorbed in event-time order; a gap > `gapMs` closes the
@@ -573,6 +567,18 @@ object StreamOps extends Serializable {
 
   final case class TlEvent(tag: String, user_id: Long, ts: java.sql.Timestamp,
                            event_id: Long, event_type: String, value: Double)
+  /** One key's state in [[userTimelineStream]]; a key uses only its
+    * branch's fields.
+    *
+    * CHECKPOINT COMPATIBILITY (ADVICE r15): the round-15 settled-prefix
+    * compaction ADDED the `fReached`/`fPrevUs`/`boundary` registers,
+    * which changes the flatMapGroupsWithState state encoding — a
+    * long-lived deployment restarting a pre-r15 streaming checkpoint
+    * against this code fails Spark's state schema check and must
+    * discard the checkpoint (re-ingest from the source's retained
+    * offsets). The repo's gate runs use ephemeral checkpoints, so the
+    * break is latent here; it is stated so an upgrade across this
+    * change is planned as a state reset, not a rolling restart. */
   final case class TlState(evs: List[(Long, Long, String)],
                            sStart: Long, sEnd: Long, sN: Long, sTotal: Double,
                            lastUs: Long,
@@ -590,21 +596,37 @@ object StreamOps extends Serializable {
     * analytics of the events feed (gap sessionization, funnel
     * attribution, path assembly) maintained by ONE flatMapGroupsWithState
     * pass keyed by (tag, user_id). Each key runs exactly one branch's
-    * state machine (the SHARED [[sessionAbsorb]]/[[funnelReached]]/
-    * [[pathTrigrams]] logic the standalone operators run), with its own
-    * event-time timeout — timers are per key, so the three finalization
-    * disciplines coexist without interference. A production events feed
-    * runs its per-user analytics exactly this way: one shuffle by user,
-    * one state store, N state machines — not N streaming queries each
-    * re-paying query start + source + state-store floor (PERF.md's
-    * per-gate ledger; the register streams' consolidation argument at
-    * the keyed tier).
+    * state machine ([[sessionAbsorb]], [[funnelChainFold]],
+    * [[pathTrigramsFrom]]), with its own event-time timeout — timers
+    * are per key, so the three finalization disciplines coexist without
+    * interference. A production events feed runs its per-user
+    * analytics exactly this way: one shuffle by user, one state store,
+    * N state machines — not N streaming queries each re-paying query
+    * start + source + state-store floor (PERF.md's per-gate ledger; the
+    * register streams' consolidation argument at the keyed tier).
     *
     * Output is the tagged union of the branch outputs (`sess`: session
     * rows in l1/l2=start/end ms, l3=n, d1=value sum; `funl`: reached
     * stage in l1; `path`: trigram in s1..s3). State per key is one
-    * branch's buffer — identical bytes to the standalone forms; the
-    * consolidation changes query COUNT, not state shape. */
+    * branch's buffer.
+    *
+    * Why the `funl` and `path` branches buffer events instead of
+    * folding each arrival: the strict funnel min-chain (t_k = min ts of
+    * stage k with ts > t_{k−1}) is NOT incrementally foldable under
+    * out-of-order arrival — a late early-ts stage-0 event lowers t_1
+    * and can re-qualify earlier stage-1 events, so keeping only
+    * (t1..tk) is wrong; and trigrams depend on the (ts, event_id) TOTAL
+    * ORDER of the timeline — a late event can land BETWEEN two
+    * already-seen neighbors and change every trigram spanning the gap.
+    * Both branches therefore buffer only the REORDERABLE events: each
+    * batch, events below the watermark are settled (late rows are
+    * dropped, so no later arrival sorts before them), the funnel folds
+    * them into the compact (reached, prev) pair and the path emits
+    * their trigrams keeping a 2-type boundary (proofs on
+    * [[funnelChainFold]] and [[pathTrigramsFrom]]). State per user is
+    * the watermark-delay window's events plus two registers — bounded
+    * for an always-active whale key too — and the event-time timer
+    * finalizes the key once it goes quiet past `horizonMs`. */
   def userTimelineStream(ds: Dataset[TlEvent], stages: Seq[String],
                          gapMs: Long, horizonMs: Long, watermarkDelay: String)
                         (implicit spark: SparkSession): Dataset[TlOut] = {
@@ -657,7 +679,7 @@ object StreamOps extends Serializable {
             stageIdx.get(e.event_type).foreach(c => evs = (us, c.toLong, "") :: evs)
             last = math.max(last, us)
           }
-          // settled-prefix compaction (the funnelStageStream discipline)
+          // fold the settled prefix into (reached, prev); buffer the tail
           val wmUs = state.getCurrentWatermarkMs() * 1000
           val (settled, tail) = evs.partition(_._1 < wmUs)
           val (r2, p2) =
@@ -678,7 +700,7 @@ object StreamOps extends Serializable {
             evs = (us, e.event_id, e.event_type) :: evs
             last = math.max(last, us)
           }
-          // settled-prefix emission (the eventPathsStream discipline)
+          // emit the settled prefix's trigrams now; buffer the tail
           val wmUs = state.getCurrentWatermarkMs() * 1000
           val (settled, tail) = evs.partition(_._1 < wmUs)
           val (out, boundary) =
@@ -701,212 +723,6 @@ object StreamOps extends Serializable {
 
     ds.withWatermark("ts", watermarkDelay)
       .groupByKey(e => (e.tag, e.user_id))
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout())(update)
-  }
-
-  /** Gap-based streaming sessionization via custom keyed state
-    * (`flatMapGroupsWithState`, event-time timeout) — the streaming twin
-    * of EventOps.q24. A session closes when no event arrives within
-    * `gapMs` of its last event; the close is detected by the state
-    * timeout once the watermark passes session_end + gap.
-    *
-    * State per key is one open session (4 longs) — at 100 TB/day the
-    * state store scales with ACTIVE users only, and event-time timeout
-    * guarantees eviction.
-    */
-  def sessionizeStream(ds: Dataset[SessionEvent], gapMs: Long,
-                       watermarkDelay: String)
-                      (implicit spark: SparkSession): Dataset[SessionOut] = {
-    import spark.implicits._
-
-    def toOut(uid: Long, s: SessionAgg): SessionOut =
-      SessionOut(uid, new java.sql.Timestamp(s.start), new java.sql.Timestamp(s.end),
-                 s.n, s.total)
-
-    def update(uid: Long, events: Iterator[SessionEvent],
-               state: GroupState[SessionAgg]): Iterator[SessionOut] = {
-      if (state.hasTimedOut) {
-        val out = toOut(uid, state.get)
-        state.remove()
-        Iterator.single(out)
-      } else {
-        val (closed, open) = sessionAbsorb(state.getOption,
-          events.map(e => (e.ts.getTime, e.value)).toSeq, gapMs)
-        open.foreach { s =>
-          state.update(s)
-          state.setTimeoutTimestamp(s.end + gapMs)
-        }
-        closed.iterator.map(toOut(uid, _))
-      }
-    }
-
-    ds.withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout())(update)
-  }
-
-  final case class FunnelEvent(user_id: Long, ts: java.sql.Timestamp,
-                               event_type: String)
-  /** `reached`/`prevUs` carry the settled prefix's folded min-chain
-    * ([[funnelChainFold]]); `events` holds only the unsettled tail.
-    *
-    * CHECKPOINT COMPATIBILITY (ADVICE r15): the round-15 settled-prefix
-    * compaction ADDED fields to [[FunnelBuf]]/[[PathBuf]]/[[TlState]],
-    * which changes the flatMapGroupsWithState state encoding — a
-    * long-lived deployment restarting a pre-r15 streaming checkpoint
-    * against this code fails Spark's state schema check and must
-    * discard the checkpoint (re-ingest from the source's retained
-    * offsets). The repo's gate runs use ephemeral checkpoints, so the
-    * break is latent here; it is stated so an upgrade across this
-    * change is planned as a state reset, not a rolling restart. */
-  final case class FunnelBuf(events: List[(Long, Int)], lastUs: Long,
-                             reached: Long, prevUs: Long)
-  final case class FunnelUserStage(user_id: Long, stage: Long)
-
-  /** Streaming CONVERSION-FUNNEL attribution — the event-time twin of
-    * EventOps.q176: per user, how far down the ordered stage chain
-    * (stage k strictly AFTER stage k−1) the journey got. Emits ONE
-    * final (user_id, reached_stage) row per user once the watermark
-    * passes the user's last activity + `horizonMs` (the attribution
-    * window — after it, no in-watermark arrival can change the answer).
-    *
-    * The strict min-chain (t_k = min ts of stage k with ts > t_{k−1})
-    * is NOT incrementally foldable under out-of-order arrival: a late
-    * early-ts stage-0 event lowers t_1 and can re-qualify earlier
-    * stage-1 events, so keeping only (t1..tk) is wrong. The correct
-    * streaming design — what attribution systems do — buffers the
-    * user's STAGE events inside the attribution horizon, COMPACTING the
-    * settled prefix on every batch: events with ts below the current
-    * watermark can never be reordered by a future arrival (late rows
-    * are dropped), so their chain contribution folds into the compact
-    * (reached, prev) pair ([[funnelChainFold]] — the proof there) and
-    * only the unsettled tail stays buffered. State per user is the
-    * WATERMARK-DELAY window's stage events plus two longs — bounded for
-    * an always-active whale key too, not just for users who go quiet
-    * (the r14 unbounded-buffer caveat, closed); GC'd by the timer once
-    * the user goes quiet past the horizon. */
-  def funnelStageStream(ds: Dataset[FunnelEvent], stages: Seq[String],
-                        horizonMs: Long, watermarkDelay: String)
-                       (implicit spark: SparkSession): Dataset[FunnelUserStage] = {
-    import spark.implicits._
-    val stageIdx = stages.zipWithIndex.toMap
-    def micros(t: java.sql.Timestamp): Long =
-      t.getTime * 1000 + (t.getNanos / 1000) % 1000
-
-    def update(uid: Long, events: Iterator[FunnelEvent],
-               state: GroupState[FunnelBuf]): Iterator[FunnelUserStage] = {
-      if (state.hasTimedOut) {
-        val st = state.get
-        state.remove()
-        Iterator.single(FunnelUserStage(uid,
-          funnelChainFold(st.events, stages.length, st.reached, st.prevUs)._1))
-      } else {
-        val prevBuf = state.getOption.getOrElse(
-          FunnelBuf(Nil, Long.MinValue, 0L, Long.MinValue))
-        var evs = prevBuf.events
-        var last = prevBuf.lastUs
-        events.foreach { e =>
-          val us = micros(e.ts)
-          stageIdx.get(e.event_type).foreach(c => evs = (us, c) :: evs)
-          last = math.max(last, us)
-        }
-        // compact the settled prefix: fold events below the watermark
-        // into (reached, prev), keep only the unsettled tail
-        val wmUs = state.getCurrentWatermarkMs() * 1000
-        val (settled, tail) = evs.partition(_._1 < wmUs)
-        val (r2, p2) =
-          if (settled.isEmpty) (prevBuf.reached, prevBuf.prevUs)
-          else funnelChainFold(settled, stages.length,
-                               prevBuf.reached, prevBuf.prevUs)
-        state.update(FunnelBuf(tail, last, r2, p2))
-        state.setTimeoutTimestamp(last / 1000 + horizonMs)
-        Iterator.empty
-      }
-    }
-
-    ds.withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout())(update)
-  }
-
-  final case class PathEvent(user_id: Long, ts: java.sql.Timestamp,
-                             event_id: Long, event_type: String)
-  /** `boundary` is the ≤ 2-element type suffix of the settled (already
-    * emitted) timeline prefix ([[pathTrigramsFrom]]); `events` holds
-    * only the unsettled tail. */
-  final case class PathBuf(events: List[(Long, Long, String)], lastUs: Long,
-                           boundary: List[String])
-  final case class PathTrigram(user_id: Long, t1: String, t2: String,
-                               t3: String)
-
-  /** Streaming TIMELINE ASSEMBLY — the event-time twin of the q213 path
-    * miner's sequence step: per user, the ordered event-type trigrams of
-    * the timeline, emitted once the watermark passes the user's last
-    * activity + `horizonMs`. Ordering is the problem a stream must
-    * solve that batch gets free from its sort: trigrams depend on the
-    * (ts, event_id) TOTAL ORDER of the timeline, and out-of-order
-    * arrival can insert an event BETWEEN two already-seen neighbors,
-    * changing every trigram that spanned the gap — so the buffer holds
-    * the user's REORDERABLE events only: events below the watermark are
-    * SETTLED (no in-watermark arrival can sort before them), so each
-    * batch emits the settled prefix's trigrams immediately and keeps
-    * just a 2-element type boundary to span the next window
-    * ([[pathTrigramsFrom]] — the proof there). State per user is the
-    * watermark-delay window's events plus two strings — bounded for an
-    * always-active whale key too (the r14 unbounded-buffer caveat,
-    * closed). The emitted SET is identical to finalize-at-timeout
-    * assembly, rows just appear as their windows settle — the correct
-    * production behavior for a timeline feed (downstream sees facts
-    * earlier); the downstream trigram COUNT stays on the warehouse side
-    * (the q118 split). */
-  def eventPathsStream(ds: Dataset[PathEvent], horizonMs: Long,
-                       watermarkDelay: String)
-                      (implicit spark: SparkSession): Dataset[PathTrigram] = {
-    import spark.implicits._
-    def micros(t: java.sql.Timestamp): Long =
-      t.getTime * 1000 + (t.getNanos / 1000) % 1000
-
-    def update(uid: Long, events: Iterator[PathEvent],
-               state: GroupState[PathBuf]): Iterator[PathTrigram] = {
-      if (state.hasTimedOut) {
-        val st = state.get
-        state.remove()
-        pathTrigramsFrom(st.boundary, st.events)
-          .map { case (a, b, c) => PathTrigram(uid, a, b, c) }
-      } else {
-        val prev = state.getOption.getOrElse(
-          PathBuf(Nil, Long.MinValue, Nil))
-        var evs = prev.events
-        var last = prev.lastUs
-        events.foreach { e =>
-          val us = micros(e.ts)
-          evs = (us, e.event_id, e.event_type) :: evs
-          last = math.max(last, us)
-        }
-        // emit the settled prefix's trigrams now; buffer only the tail
-        val wmUs = state.getCurrentWatermarkMs() * 1000
-        val (settled, tail) = evs.partition(_._1 < wmUs)
-        val (out, boundary) =
-          if (settled.isEmpty) (Iterator.empty[PathTrigram], prev.boundary)
-          else {
-            val seq = prev.boundary ++
-              settled.sortBy(e => (e._1, e._2)).map(_._3)
-            val trigs =
-              if (seq.lengthCompare(3) < 0) Iterator.empty[PathTrigram]
-              else seq.sliding(3).map(s => PathTrigram(uid, s(0), s(1), s(2)))
-            (trigs, seq.takeRight(2))
-          }
-        state.update(PathBuf(tail, last, boundary))
-        state.setTimeoutTimestamp(last / 1000 + horizonMs)
-        out
-      }
-    }
-
-    ds.withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append(),
         GroupStateTimeout.EventTimeTimeout())(update)
   }

@@ -5,7 +5,7 @@ import graft.sources.{ClasspathSchemaRegistry, InMemorySchemaRegistry}
 import org.apache.avro.Schema
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericFixed, GenericRecord}
 import org.apache.avro.io.{DecoderFactory, EncoderFactory}
-import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
@@ -172,10 +172,15 @@ class AvroSpec extends SparkTestBase {
 
   test("registry failure modes: unknown topic fails fast") {
     intercept[NoSuchElementException](registry.schemaJson("nope"))
-    intercept[IllegalArgumentException](
+    val missing = intercept[IllegalArgumentException](
       new ClasspathSchemaRegistry(Map("t" -> "missing/path.avsc")).schemaJson("t"))
+    assert(missing.getMessage.contains("missing/path.avsc"), missing.getMessage)
     val inMem = new InMemorySchemaRegistry(Map("t" -> schemaJson))
     assert(inMem.sparkSchema("t").fieldNames.contains("itemId"))
+    // a top-level schema that is not a record has no row type
+    val notRecord = intercept[IllegalArgumentException](
+      new InMemorySchemaRegistry(Map("plain" -> "\"string\"")).sparkSchema("plain"))
+    assert(notRecord.getMessage.contains("topic plain"), notRecord.getMessage)
   }
 
   test("Avro container files read back through the shared decode path") {

@@ -145,7 +145,6 @@ class MultimodalSpec extends SparkTestBase {
 
   test("q232 recall core: perfect retrieval on identical sides; decoy demotes R@1") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val vecs = (0L until 8L).map { i =>
       (i, Array.tabulate(8)(j => if (j == i % 8) 1.0f else 0.0f)) }
     val media = vecs.toDF("asset_id", "features")

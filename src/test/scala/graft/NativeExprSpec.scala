@@ -9,7 +9,6 @@ class NativeExprSpec extends SparkTestBase {
   test("md5_minhashes: component independence — a 64-signature's first " +
        "32 components ARE the 32-signature (the q79/q242 shared-store " +
        "contract)") {
-    import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"),
@@ -154,7 +153,6 @@ class NativeExprSpec extends SparkTestBase {
   test("top_k_by_score: ties, k > group, nulls, partitioning-independent") {
     import graft.functions.TopKAgg
     import spark.implicits._
-    val rnd = new scala.util.Random(3)
     // many duplicate scores (forced ties) + some null scores
     val rows = (0 until 2000).map { i =>
       (s"g${i % 7}", if (i % 97 == 0) null else java.lang.Double.valueOf((i % 13).toDouble), i.toLong)

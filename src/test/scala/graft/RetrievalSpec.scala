@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Retrieval
-import org.apache.spark.sql.functions._
 
 /** q102 hybrid fusion + q103 semantic dedup behavior. */
 class RetrievalSpec extends SparkTestBase {

@@ -536,7 +536,6 @@ class SimilaritySpec extends SparkTestBase {
   }
 
   test("q43 SimHash: identical texts collide, near-dups are Hamming-close") {
-    import spark.implicits._
     val sim = Dedup.queries("q43_simhash")(spark, sfDir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // near-dup doc pairs (exact jaccard >= 0.8) → small Hamming distance
@@ -554,7 +553,6 @@ class SimilaritySpec extends SparkTestBase {
   }
 
   test("q242 recall sweep: bimodal corpus saturates; planted mid-similarity pairs decay") {
-    import org.apache.spark.sql.functions._
     val rows = SparkEntry.queries("q242_lsh_recall")(spark, sfDir).collect()
       .map(r => (r.getDouble(0), r.getLong(1), r.getLong(2), r.getDouble(3),
                  r.getDouble(4)))

@@ -610,7 +610,6 @@ class StatsSpec extends SparkTestBase {
   }
 
   test("q215 scale path: binned KS never exceeds exact; width 1 is the declared form") {
-    import org.apache.spark.sql.functions.col
     val docs = Tables.documents(spark, sfDir)
     def ks(bin: Long): Map[(String, String), Double] =
       graft.operators.Stats.lengthKsCore(docs, bin).collect()

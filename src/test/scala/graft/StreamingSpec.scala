@@ -608,12 +608,12 @@ class StreamingSpec extends SparkTestBase {
     import spark.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val mem = MemoryStream[StreamOps.SessionEvent]
-    val q = StreamOps.sessionizeStream(mem.toDS(), gapMs = 30 * 60 * 1000,
-        watermarkDelay = "10 minutes")
+    val mem = MemoryStream[StreamOps.TlEvent]
+    val q = StreamOps.userTimelineStream(mem.toDS(), stages = Nil,
+        gapMs = 30 * 60 * 1000, horizonMs = 0L, watermarkDelay = "10 minutes")
       .writeStream.format("memory").queryName("sess_out").outputMode("append").start()
     def ev(t: String, v: Double) =
-      StreamOps.SessionEvent(1L, Timestamp.valueOf(t), v)
+      StreamOps.TlEvent("sess", 1L, Timestamp.valueOf(t), 0L, "", v)
     mem.addData(Seq(ev("2024-01-01 00:00:00", 1.0), ev("2024-01-01 00:10:00", 2.0)))
     q.processAllAvailable()
     // 2h later: watermark passes session_end+gap → session times out + emits
@@ -622,27 +622,28 @@ class StreamingSpec extends SparkTestBase {
     mem.addData(Seq(ev("2024-01-01 06:00:00", 7.0)))
     q.processAllAvailable()
     q.stop()
-    val rows = spark.table("sess_out").orderBy("session_start").collect()
+    // sess rows: l1/l2 = session start/end (epoch ms), l3 = n, d1 = sum
+    val rows = spark.table("sess_out").orderBy("l1").collect()
     assert(rows.length >= 1, s"first session must have closed, got ${rows.toSeq}")
     val first = rows(0)
-    assert(first.getAs[Long]("n_events") == 2)
-    assert(first.getAs[Double]("total_value") == 3.0)
-    assert(first.getAs[Timestamp]("session_start") == Timestamp.valueOf("2024-01-01 00:00:00"))
-    assert(first.getAs[Timestamp]("session_end") == Timestamp.valueOf("2024-01-01 00:10:00"))
+    assert(first.getAs[Long]("l3") == 2)
+    assert(first.getAs[Double]("d1") == 3.0)
+    assert(first.getAs[Long]("l1") == Timestamp.valueOf("2024-01-01 00:00:00").getTime)
+    assert(first.getAs[Long]("l2") == Timestamp.valueOf("2024-01-01 00:10:00").getTime)
   }
 
   test("streaming funnel: a late early view re-qualifies an earlier signup") {
     import spark.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val mem = MemoryStream[StreamOps.FunnelEvent]
-    val q = StreamOps.funnelStageStream(mem.toDS(),
+    val mem = MemoryStream[StreamOps.TlEvent]
+    val q = StreamOps.userTimelineStream(mem.toDS(),
         stages = Seq("view", "signup", "purchase"),
-        horizonMs = 60000L, watermarkDelay = "30 minutes")
+        gapMs = 0L, horizonMs = 60000L, watermarkDelay = "30 minutes")
       .writeStream.format("memory").queryName("funnel_out")
       .outputMode("append").start()
     def ev(u: Long, t: String, ty: String) =
-      StreamOps.FunnelEvent(u, Timestamp.valueOf(t), ty)
+      StreamOps.TlEvent("funl", u, Timestamp.valueOf(t), 0L, ty, 0.0)
     // user 1 batch 1: signup BEFORE the only view → chain stalls at stage 1
     mem.addData(Seq(ev(1L, "2024-01-01 00:10:00", "signup"),
                     ev(1L, "2024-01-01 00:20:00", "purchase"),
@@ -662,8 +663,9 @@ class StreamingSpec extends SparkTestBase {
     mem.addData(Seq(ev(99L, "2024-01-01 03:00:00", "click")))
     q.processAllAvailable()
     q.stop()
+    // funl rows: the reached stage is l1
     val got = spark.table("funnel_out").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      .map(r => r.getAs[Long]("user_id") -> r.getAs[Long]("l1")).toMap
     assert(got.get(1L).contains(3L),
       s"late view must complete user 1's chain, got $got")
     assert(got.get(2L).contains(1L), s"view-only user is stage 1, got $got")
@@ -671,76 +673,13 @@ class StreamingSpec extends SparkTestBase {
       s"no-stage-event user finalizes at stage 0, got $got")
   }
 
-  test("whale-key compaction: an always-active user's settled prefix " +
-       "folds each batch, and the answers match buffer-all semantics") {
-    import spark.implicits._
-    implicit val s = spark
-    implicit val sq = spark.sqlContext
-    // FUNNEL: user 1 stays active every batch with a SHORT watermark
-    // (10 s), so earlier stage events settle and fold mid-stream —
-    // the compaction path runs, not just the timeout path.
-    val fm = MemoryStream[StreamOps.FunnelEvent]
-    val fq = StreamOps.funnelStageStream(fm.toDS(),
-        stages = Seq("view", "cart", "buy"),
-        horizonMs = 60000L, watermarkDelay = "10 seconds")
-      .writeStream.format("memory").queryName("whale_funnel")
-      .outputMode("append").start()
-    def fe(u: Long, t: String, ty: String) =
-      StreamOps.FunnelEvent(u, Timestamp.valueOf(t), ty)
-    fm.addData(Seq(fe(1L, "2024-01-01 10:00:00", "view"),
-                   fe(9L, "2024-01-01 10:00:30", "tick")))
-    fq.processAllAvailable() // wm → 10:00:20: the view is now settled
-    fm.addData(Seq(fe(1L, "2024-01-01 10:00:25", "cart"),
-                   fe(9L, "2024-01-01 10:01:00", "tick")))
-    fq.processAllAvailable() // user 1 folds {view} into (reached=1, t1)
-    fm.addData(Seq(fe(1L, "2024-01-01 10:00:55", "buy"),
-                   fe(9L, "2024-01-01 10:05:00", "tick")))
-    fq.processAllAvailable() // folds {cart}; buy stays in the tail
-    fm.addData(Seq(fe(9L, "2024-01-01 10:30:00", "tick")))
-    fq.processAllAvailable() // timeout finalizes from the compact prefix
-    fq.stop()
-    val fgot = spark.table("whale_funnel").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(fgot.get(1L).contains(3L),
-      s"compacted chain must equal the buffer-all chain (3), got $fgot")
-
-    // PATHS: trigrams emitted AS their windows settle across three
-    // compaction rounds (boundary carry) must equal batch sliding(3).
-    val pm = MemoryStream[StreamOps.PathEvent]
-    val pq = StreamOps.eventPathsStream(pm.toDS(),
-        horizonMs = 60000L, watermarkDelay = "10 seconds")
-      .writeStream.format("memory").queryName("whale_paths")
-      .outputMode("append").start()
-    def pe(u: Long, t: String, id: Long, ty: String) =
-      StreamOps.PathEvent(u, Timestamp.valueOf(t), id, ty)
-    pm.addData(Seq(pe(1L, "2024-01-01 10:00:00", 1L, "a"),
-                   pe(1L, "2024-01-01 10:00:02", 2L, "b"),
-                   pe(1L, "2024-01-01 10:00:04", 3L, "c"),
-                   pe(9L, "2024-01-01 10:00:30", 90L, "z")))
-    pq.processAllAvailable() // wm → 10:00:20
-    pm.addData(Seq(pe(1L, "2024-01-01 10:00:25", 4L, "d"),
-                   pe(9L, "2024-01-01 10:01:00", 91L, "z")))
-    pq.processAllAvailable() // a,b,c settle → emit (a,b,c); boundary [b,c]
-    pm.addData(Seq(pe(1L, "2024-01-01 10:00:55", 5L, "e"),
-                   pe(9L, "2024-01-01 10:05:00", 92L, "z")))
-    pq.processAllAvailable() // d settles → emit (b,c,d); boundary [c,d]
-    pm.addData(Seq(pe(9L, "2024-01-01 10:30:00", 93L, "z")))
-    pq.processAllAvailable() // timeout: (c,d,e) from boundary + tail
-    pq.stop()
-    val pgot = spark.table("whale_paths").collect()
-      .filter(_.getLong(0) == 1L)
-      .map(r => (r.getString(1), r.getString(2), r.getString(3))).toSet
-    assert(pgot == Set(("a", "b", "c"), ("b", "c", "d"), ("c", "d", "e")),
-      s"compacted emission must equal batch sliding(3), got $pgot")
-  }
-
   test("consolidated timeline whale key: the userTimelineStream branch " +
        "compactions trigger mid-stream and answers match batch semantics") {
     // the gate fixtures replay one data micro-batch (wm = 0 while keys
-    // have data), so the CONSOLIDATED stream's inline compaction blocks
-    // never run there — this drives multi-batch activity per key with
-    // an advancing watermark so they do, and pins the three branch
-    // answers (standalone-op equivalence is pinned separately)
+    // have data), so the funl/path compaction blocks never run there —
+    // this drives multi-batch activity per key with an advancing
+    // watermark (10 s) so earlier events settle and fold mid-stream,
+    // and pins the three branch answers to buffer-all semantics
     import spark.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
@@ -752,7 +691,8 @@ class StreamingSpec extends SparkTestBase {
       .outputMode("append").start()
     def ev(tag: String, u: Long, t: String, id: Long, ty: String, v: Double) =
       StreamOps.TlEvent(tag, u, Timestamp.valueOf(t), id, ty, v)
-    // same schedule as the standalone whale test, all three tags live
+    // user 1 stays active every batch on all three tags; user 9's
+    // ticks advance the watermark
     mem.addData(Seq(
       ev("funl", 1L, "2024-01-01 10:00:00", 1L, "view", 0.0),
       ev("path", 1L, "2024-01-01 10:00:00", 1L, "a", 0.0),
@@ -1081,13 +1021,13 @@ class StreamingSpec extends SparkTestBase {
     import spark.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val mem = MemoryStream[StreamOps.PathEvent]
-    val q = StreamOps.eventPathsStream(mem.toDS(),
-        horizonMs = 60000L, watermarkDelay = "30 minutes")
+    val mem = MemoryStream[StreamOps.TlEvent]
+    val q = StreamOps.userTimelineStream(mem.toDS(), stages = Nil,
+        gapMs = 0L, horizonMs = 60000L, watermarkDelay = "30 minutes")
       .writeStream.format("memory").queryName("paths_out")
       .outputMode("append").start()
     def ev(u: Long, t: String, id: Long, ty: String) =
-      StreamOps.PathEvent(u, Timestamp.valueOf(t), id, ty)
+      StreamOps.TlEvent("path", u, Timestamp.valueOf(t), id, ty, 0.0)
     // batch 1 arrives a > c > d (by ts); the in-between b comes later
     mem.addData(Seq(ev(1L, "2024-01-01 00:01:00", 1L, "a"),
                     ev(1L, "2024-01-01 00:03:00", 3L, "c"),
@@ -1102,9 +1042,11 @@ class StreamingSpec extends SparkTestBase {
     mem.addData(Seq(ev(99L, "2024-01-01 03:00:00", 91L, "z")))
     q.processAllAvailable()
     q.stop()
+    // path rows: the trigram is s1..s3
     val got = spark.table("paths_out").collect()
-      .filter(_.getLong(0) == 1L)
-      .map(r => (r.getString(1), r.getString(2), r.getString(3))).toSet
+      .filter(_.getAs[Long]("user_id") == 1L)
+      .map(r => (r.getAs[String]("s1"), r.getAs[String]("s2"),
+                 r.getAs[String]("s3"))).toSet
     assert(got == Set(("a", "b", "c"), ("b", "c", "d")),
       s"late insertion must rebuild the trigram chain, got $got")
   }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.TextAnalysis
-import org.apache.spark.sql.functions._
 
 class TextAnalysisSpec extends SparkTestBase {
 
@@ -143,7 +142,6 @@ class TextAnalysisSpec extends SparkTestBase {
     import spark.implicits._
     val planted = Seq((1L, "a b a b a"), (2L, "x y z"), (3L, "w"))
       .toDF("doc_id", "text")
-    val fn = TextAnalysis.queries("q161_repetition")
     val got = graft.operators.TextAnalysis.repetitionOn(planted)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
