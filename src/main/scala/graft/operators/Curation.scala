@@ -215,21 +215,6 @@ object Curation extends QueryPack {
       .orderBy("n", "doc_id")
   }
 
-  /** q130: PIPELINE FUNNEL — the sequential survival table every
-    * dataset release publishes (docs and tokens remaining after each
-    * pipeline stage), as opposed to q99's PARALLEL per-doc gate audit:
-    * raw → exact-dedup (first copy per md5 digest survives) → quality
-    * (q93's keep — the SAME [[Curation2.qualityScoreCore]] definition)
-    * → decontamination (q48's flagged set AND the benchmark docs
-    * themselves leave the training pool). Per-doc flags are computed
-    * once (digest group-min join — no window, partial-aggregatable;
-    * quality is map work; the contamination flag reuses q48's broadcast
-    * shape), then ONE explode fans each doc into its 4 stage rows and
-    * one count/sum aggregate produces the funnel — integer arithmetic
-    * throughout except the single retained-fraction division per output
-    * row. At 100 TB: shuffles carry (digest|doc_id, ntok, 3 booleans);
-    * the 4-row result joins its own raw row broadcast. */
-
   /** Per-doc pipeline-stage flags shared by q130 (funnel), q132
     * (per-source scorecard), q188 (release export) and q204 (opt-out):
     * (doc_id, source, dig, ntok, s1 = first copy of its digest, kq =
@@ -310,6 +295,20 @@ object Curation extends QueryPack {
                 col("doc_id") >= 20).as("s3"))
   }
 
+  /** q130: PIPELINE FUNNEL — the sequential survival table every
+    * dataset release publishes (docs and tokens remaining after each
+    * pipeline stage), as opposed to q99's PARALLEL per-doc gate audit:
+    * raw → exact-dedup (first copy per md5 digest survives) → quality
+    * (q93's keep — the SAME [[Curation2.qualityScoreCore]] definition)
+    * → decontamination (q48's flagged set AND the benchmark docs
+    * themselves leave the training pool). Per-doc flags are computed
+    * once (digest group-min join — no window, partial-aggregatable;
+    * quality is map work; the contamination flag reuses q48's broadcast
+    * shape), then ONE explode fans each doc into its 4 stage rows and
+    * one count/sum aggregate produces the funnel — integer arithmetic
+    * throughout except the single retained-fraction division per output
+    * row. At 100 TB: shuffles carry (digest|doc_id, ntok, 3 booleans);
+    * the 4-row result joins its own raw row broadcast. */
   private def q130PipelineFunnel(s: SparkSession, d: String): DataFrame = {
     val flags = pipelineFlags(s, d)
     val staged = flags.select(explode(array(
@@ -457,18 +456,6 @@ object Curation extends QueryPack {
       .orderBy("max_len")
 
 
-  /** RELEASE EXPORT — the step every curation pipeline actually ends
-    * with: materialize the surviving corpus (q130's full funnel — exact
-    * dedup ∧ quality ∧ decontamination) partitioned by the q120
-    * deterministic split, then read the artifact back with split values
-    * taken from the DIRECTORY NAMES. The oracle recomputes survivors +
-    * split + content hash from the raw table, so a misbucketed, lost,
-    * duplicated or content-corrupted row in the written dataset all
-    * surface as a hash mismatch — the q173 write+read-back parity
-    * pattern applied to the release artifact. Write-once per
-    * (session, dataset), the production shape; scale: the write is one
-    * partitioned append executed by the survivors' own partitions, the
-    * read-back is the gate's verification scan. */
   /** The opt-out registry: CONTENT DIGESTS of opted-out documents (the
     * shape takedown / do-not-train lists actually ship in — hashes, not
     * text, leave the requester). Deterministic membership so the oracle
@@ -508,6 +495,18 @@ object Curation extends QueryPack {
       .orderBy("source")
   }
 
+  /** RELEASE EXPORT — the step every curation pipeline actually ends
+    * with: materialize the surviving corpus (q130's full funnel — exact
+    * dedup ∧ quality ∧ decontamination) partitioned by the q120
+    * deterministic split, then read the artifact back with split values
+    * taken from the DIRECTORY NAMES. The oracle recomputes survivors +
+    * split + content hash from the raw table, so a misbucketed, lost,
+    * duplicated or content-corrupted row in the written dataset all
+    * surface as a hash mismatch — the q173 write+read-back parity
+    * pattern applied to the release artifact. Write-once per
+    * (session, dataset), the production shape; scale: the write is one
+    * partitioned append executed by the survivors' own partitions, the
+    * read-back is the gate's verification scan. */
   private def q188ReleaseExport(s: SparkSession, d: String): DataFrame = {
     val out = graft.SessionMemo.getOrElseUpdate[String](s, "curation.release", d)( {
       val root = graft.WorkDirs.artifactDir(s, "release", d)

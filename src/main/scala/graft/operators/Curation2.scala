@@ -122,16 +122,6 @@ object Curation2 extends QueryPack {
               col("t.id").as("doc_id"), col("t.score").as("score"))
       .orderBy("source", "rnk")
 
-  /** Broadcast LINEAR QUALITY MODEL scoring — the "tiny classifier over
-    * cheap features" stage (fastText-style quality filters): per-doc
-    * features (token count, stopword share, mean token length) dotted
-    * with a literal weight vector; keep = score > 0. Weights are plan
-    * constants (constant-folded, effectively broadcast); scoring is pure
-    * per-row map work — embarrassingly parallel at any corpus size. All
-    * feature arithmetic is IEEE double in the same operation order as
-    * the DuckDB oracle, so scores are bit-reproducible cross-engine
-    * (floor-truncation only bounds the printed precision).
-    */
   /** The scoring transform itself, factored so the STREAMING gate (q112)
     * runs the IDENTICAL code path over an unbounded DataFrame — stateless
     * projection only, so it lifts to Structured Streaming unchanged (the
@@ -156,6 +146,16 @@ object Curation2 extends QueryPack {
              when(score > 0, 1L).otherwise(0L).as("keep"))
   }
 
+  /** Broadcast LINEAR QUALITY MODEL scoring — the "tiny classifier over
+    * cheap features" stage (fastText-style quality filters): per-doc
+    * features (token count, stopword share, mean token length) dotted
+    * with a literal weight vector; keep = score > 0. Weights are plan
+    * constants (constant-folded, effectively broadcast); scoring is pure
+    * per-row map work — embarrassingly parallel at any corpus size. All
+    * feature arithmetic is IEEE double in the same operation order as
+    * the DuckDB oracle, so scores are bit-reproducible cross-engine
+    * (floor-truncation only bounds the printed precision).
+    */
   private def q93QualityModel(s: SparkSession, d: String): DataFrame =
     qualityScoreCore(Tables.documents(s, d)).orderBy("doc_id")
 
@@ -260,23 +260,6 @@ object Curation2 extends QueryPack {
       .orderBy("q_id")
   }
 
-  /** BM25 KEYWORD SEARCH — top-10 docs for a fixed 3-term query. The
-    * lexical-retrieval half of a hybrid search stack (beside q96/q98's
-    * vector half): per-(doc, term) tf over the QUERY'S terms only (the
-    * `isin` filter rides the explode, so non-query tokens never leave
-    * the scan), document frequency and corpus stats as tiny broadcast
-    * aggregates, and a global bounded-heap top-10 (shuffle ≤ 10 rows per
-    * partition). The per-term scores combine in a FIXED left-to-right
-    * order (one conditional-max column per term), so the double
-    * summation is order-deterministic and the DuckDB oracle reproduces
-    * it bit-exactly. Deliberate deviation from textbook BM25: idf is
-    * the rational (N − df + 0.5)/(df + 0.5) WITHOUT the log — every
-    * operation stays IEEE-exact cross-engine (no libm); the log is a
-    * per-term monotone transform, so single-term ranking is identical
-    * and multi-term mixing is mildly re-weighted. A production deploy
-    * would re-enable the log (determinism across ENGINES is a test
-    * concern, not a cluster concern).
-    */
   /** BM25 scoring tail over a (doc_id, len, term, tf) relation plus a
     * one-row (n, sl) corpus-stats relation — shared by q97 (scoring
     * straight off the scan) and q260 (scoring off the persisted,
@@ -305,6 +288,23 @@ object Curation2 extends QueryPack {
       .orderBy("rnk")
   }
 
+  /** BM25 KEYWORD SEARCH — top-10 docs for a fixed 3-term query. The
+    * lexical-retrieval half of a hybrid search stack (beside q96/q98's
+    * vector half): per-(doc, term) tf over the QUERY'S terms only (the
+    * `isin` filter rides the explode, so non-query tokens never leave
+    * the scan), document frequency and corpus stats as tiny broadcast
+    * aggregates, and a global bounded-heap top-10 (shuffle ≤ 10 rows per
+    * partition). The per-term scores combine in a FIXED left-to-right
+    * order (one conditional-max column per term), so the double
+    * summation is order-deterministic and the DuckDB oracle reproduces
+    * it bit-exactly. Deliberate deviation from textbook BM25: idf is
+    * the rational (N − df + 0.5)/(df + 0.5) WITHOUT the log — every
+    * operation stays IEEE-exact cross-engine (no libm); the log is a
+    * per-term monotone transform, so single-term ranking is identical
+    * and multi-term mixing is mildly re-weighted. A production deploy
+    * would re-enable the log (determinism across ENGINES is a test
+    * concern, not a cluster concern).
+    */
   private def q97Bm25(s: SparkSession, d: String): DataFrame = {
     val terms = Seq("spark", "join", "window")
     // one tokenize pass (r16): corpus stats and the query-term postings

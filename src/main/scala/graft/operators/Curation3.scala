@@ -41,21 +41,19 @@ object Curation3 extends QueryPack {
   private def q119LmScore(s: SparkSession, d: String): DataFrame =
     lmScoreMemo(s, d).orderBy("doc_id")
 
-  /** The q119 chain over any (doc_id, text) relation, pre-sort —
-    * injectable for the q241 ensemble (which re-partitions by source
-    * anyway and must not inherit a wasted global sort). */
-
   /** Session-scoped memo of the corpus LM score relation
     * (doc_id, n_bigrams, nll) — the statistical-filter artifact a
     * curation pipeline scores ONCE and every consumer reads (q119
     * reports it, q241 fuses it into the ensemble); the bigram
     * count/join/aggregate chain is the most expensive of the three
-    * quality signals. Split-trained variants (q236) call
-    * [[lmScoreCore]] directly and bypass the memo. */
+    * quality signals. */
   private[graft] def lmScoreMemo(s: SparkSession, d: String): DataFrame =
     graft.SessionMemo.getOrElseUpdate[DataFrame](s, "lm.scores", d)(
       lmScoreCore(Tables.documents(s, d)).localCheckpoint(eager = false))
 
+  /** The q119 chain over any (doc_id, text) relation, pre-sort — the
+    * q241 ensemble re-partitions by source anyway and must not inherit
+    * a wasted global sort. */
   private[graft] def lmScoreCore(docs: DataFrame): DataFrame = {
     val t = docs.select(col("doc_id"), expr(toks).as("w"))
     val bg = t.filter(size(col("w")) >= 2)

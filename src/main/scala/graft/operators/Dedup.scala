@@ -292,8 +292,9 @@ object Dedup extends QueryPack {
     * detection = candidate ∧ verified, so precision is 1 by
     * construction and recall is the one number swept. Thresholds are
     * Scala doubles end-to-end (a bare SQL decimal would parse as
-    * DECIMAL — the ADVICE trap), floored exact-count divisions. */
-  /** The declared q242 rides a SESSION-MEMOIZED flagged relation (each
+    * DECIMAL — the ADVICE trap), floored exact-count divisions.
+    *
+    * The declared q242 rides a SESSION-MEMOIZED flagged relation (each
     * τ ≥ 0.5 ground-truth pair tagged with its detection bit): ground
     * truth is a write-once certification artifact — a production recall
     * certification computes it once per corpus version and reads it for
@@ -658,20 +659,6 @@ object Dedup extends QueryPack {
       .orderBy("a_id", "b_id")
   }
 
-  /** MinHash Jaccard ESTIMATION — the sketch-side answer q42 only uses
-    * implicitly: per doc a 32-component md5-family minhash signature
-    * (native [[graft.functions.Md5MinHashes]] kernel), and for every doc
-    * pair in the slice the estimate = fraction of matching components,
-    * reported alongside the exact Jaccard so the estimator's quality is
-    * part of the checked output. est is k/32 (dyadic — exact in both
-    * engines); the md5 family makes the signature itself cross-engine
-    * verifiable, which XXH64 (the production kernel in MinHashBandKeys)
-    * is not. The pair set is the inverted-index candidates: docs sharing
-    * >= 1 NON-BOILERPLATE shingle (df <= [[q79DfCap]] — the declared df
-    * cut, mirrored in the oracle) — the SQL-replicable stand-in for LSH
-    * band collisions — so the checked output covers the estimator on
-    * true near-dups AND on weakly-overlapping negatives.
-    */
   /** q79's declared posting-list df cut: shingles held by more than this
     * many docs generate NO candidate pairs — part of the gate's declared
     * statistic, mirrored verbatim in the oracle SQL. Why a BOUND cap and
@@ -708,6 +695,20 @@ object Dedup extends QueryPack {
                 expr("slice(mh, 1, 32)").as("sig"))
         .localCheckpoint(eager = false))
 
+  /** MinHash Jaccard ESTIMATION — the sketch-side answer q42 only uses
+    * implicitly: per doc a 32-component md5-family minhash signature
+    * (native [[graft.functions.Md5MinHashes]] kernel), and for every doc
+    * pair in the slice the estimate = fraction of matching components,
+    * reported alongside the exact Jaccard so the estimator's quality is
+    * part of the checked output. est is k/32 (dyadic — exact in both
+    * engines); the md5 family makes the signature itself cross-engine
+    * verifiable, which XXH64 (the production kernel in MinHashBandKeys)
+    * is not. The pair set is the inverted-index candidates: docs sharing
+    * >= 1 NON-BOILERPLATE shingle (df <= [[q79DfCap]] — the declared df
+    * cut, mirrored in the oracle) — the SQL-replicable stand-in for LSH
+    * band collisions — so the checked output covers the estimator on
+    * true near-dups AND on weakly-overlapping negatives.
+    */
   private def q79MinhashEstimate(s: SparkSession, d: String): DataFrame = {
     val sh = shingledCore(s, d)
     // posting-list df cut via capBuckets keyed by the shingle, bound at
@@ -775,7 +776,9 @@ object Dedup extends QueryPack {
                                     maxBucket: Long = -1L): DataFrame =
     fuzzyJoinPairsCore(s, d, maxBucket).orderBy("a_id", "b_id")
 
-  /** Session-scoped memo of the DEFAULT-parameter fuzzy pair relation —
+  /** [[fuzzyJoinPairs]] without the output sort (edge-builder form).
+    *
+    * Session-scoped memo of the DEFAULT-parameter fuzzy pair relation —
     * the [[minhashLshPairsCore]] discipline applied to the fuzzy-key
     * family: q88 (the declared pair report) and q89 (the CC closure over
     * the same pairs) consume one deterministic relation, and a
@@ -786,8 +789,6 @@ object Dedup extends QueryPack {
     * whichever consumer acts first materializes; the other reads cached
     * blocks. Non-default caps (the spec's planted-hot-bucket runs)
     * bypass the memo. */
-
-  /** [[fuzzyJoinPairs]] without the output sort (edge-builder form). */
   private[graft] def fuzzyJoinPairsCore(s: SparkSession, d: String,
                                         maxBucket: Long = -1L): DataFrame =
     if (maxBucket == -1L)
@@ -850,20 +851,6 @@ object Dedup extends QueryPack {
       .orderBy("c_custkey")
   }
 
-  /** Dedup CLUSTER assignment — the step after pair detection: group
-    * near-dup pairs into connected components and elect one canonical doc
-    * per component (smallest id), so a curation pipeline can drop
-    * all-but-one of every duplicate family rather than reasoning about
-    * raw pairs.
-    *
-    * Implementation is iterative min-label propagation WITH pointer
-    * doubling over the (tiny, already-verified) LSH pair set — see
-    * [[connectedComponents]]: each iteration gathers one hop of neighbor
-    * minima and then jumps label := label(label), so even adversarial
-    * chain-shaped dup families converge in O(log diameter) iterations
-    * (ScaleSpec asserts <= ceil(log2 N) + 2 on a planted chain); shallow
-    * families (the realistic case) converge as fast as plain propagation.
-    */
   /** Session-scoped memo of the q73 cluster assignment (pre-sort), keyed
     * by (session identity, dataset dir): the assignment is the shared
     * upstream of q73 (per-doc view) AND q101 (family-size report), and in
@@ -891,6 +878,20 @@ object Dedup extends QueryPack {
     assign
   }
 
+  /** Dedup CLUSTER assignment — the step after pair detection: group
+    * near-dup pairs into connected components and elect one canonical doc
+    * per component (smallest id), so a curation pipeline can drop
+    * all-but-one of every duplicate family rather than reasoning about
+    * raw pairs.
+    *
+    * Implementation is iterative min-label propagation WITH pointer
+    * doubling over the (tiny, already-verified) LSH pair set — see
+    * [[connectedComponents]]: each iteration gathers one hop of neighbor
+    * minima and then jumps label := label(label), so even adversarial
+    * chain-shaped dup families converge in O(log diameter) iterations
+    * (ScaleSpec asserts <= ceil(log2 N) + 2 on a planted chain); shallow
+    * families (the realistic case) converge as fast as plain propagation.
+    */
   private def q73DedupClusters(s: SparkSession, d: String): DataFrame =
     dedupClusterAssignment(s, d).orderBy("doc_id")
 
@@ -917,8 +918,9 @@ object Dedup extends QueryPack {
     * in the subgraph (min recomputed over full membership), so the
     * composed assignment equals a from-scratch clustering — which is
     * exactly what the oracle certifies: q73's recursive-CTE closure
-    * over the WHOLE corpus, verbatim. */
-  /** The persisted previous-night cluster assignment, written ONCE per
+    * over the WHOLE corpus, verbatim.
+    *
+    * The persisted previous-night cluster assignment, written ONCE per
     * (session, dataset) as a versioned WorkDirs artifact — the
     * q157/q172/q260 lifecycle discipline applied to the cluster tier:
     * `<root>/assign_v1` holds (doc_id, cluster_id) for the pre-batch
@@ -1209,26 +1211,6 @@ object Dedup extends QueryPack {
   private val negBucketTarget = 300L
   private val negBucketFloor = 16L
 
-  /** q221: CONTRASTIVE NEGATIVE SAMPLING — the deterministic
-    * random-negatives step of contrastive/embedding training data prep
-    * (in-batch negatives' offline twin): for each anchor document, k
-    * pseudo-random negatives that are NOT near-duplicates of the
-    * anchor — sampling uniformly and filtering dups is the standard
-    * recipe, since a near-dup "negative" is a false negative that
-    * poisons the loss. Pseudo-randomness is the repo's deterministic
-    * Knuth-hash idiom (q92/q120/q137): candidates rank by an integer
-    * hash of the (anchor, candidate) pair, so the sample is
-    * rerun-stable and oracle-checkable. The near-dup exclusion is
-    * FAMILY-grain (q73 cluster ids — transitive closure, stronger than
-    * the raw pair set: a copy-of-a-copy is excluded even when q42
-    * never compared the two directly). Scale shape: each anchor probes
-    * exactly ONE of B = max([[negBucketFloor]], N div
-    * [[negBucketTarget]]) hash buckets, so the join fans out
-    * ≈ [[negBucketTarget]] candidates per anchor AT ANY corpus size
-    * (the bucket count scales with the corpus; the per-bucket
-    * population stays ~constant) and carries (id, cluster, hash) rows
-    * only; selection is the bounded-heap TopKAgg (no window sort);
-    * the family anti-condition rides the join predicate. */
   /** The q221 per-anchor negative top-k table (anchor_id, top), memoized
     * per (session, dataset) behind a lazy localCheckpoint — the q73
     * clusterAssignment discipline applied to the negative-sample tier:
@@ -1267,6 +1249,26 @@ object Dedup extends QueryPack {
     graft.SessionMemo.getOrElse[DataFrame](s, "dedup.negTopK", d)(
       negativeTopK(s, d))
 
+  /** q221: CONTRASTIVE NEGATIVE SAMPLING — the deterministic
+    * random-negatives step of contrastive/embedding training data prep
+    * (in-batch negatives' offline twin): for each anchor document, k
+    * pseudo-random negatives that are NOT near-duplicates of the
+    * anchor — sampling uniformly and filtering dups is the standard
+    * recipe, since a near-dup "negative" is a false negative that
+    * poisons the loss. Pseudo-randomness is the repo's deterministic
+    * Knuth-hash idiom (q92/q120/q137): candidates rank by an integer
+    * hash of the (anchor, candidate) pair, so the sample is
+    * rerun-stable and oracle-checkable. The near-dup exclusion is
+    * FAMILY-grain (q73 cluster ids — transitive closure, stronger than
+    * the raw pair set: a copy-of-a-copy is excluded even when q42
+    * never compared the two directly). Scale shape: each anchor probes
+    * exactly ONE of B = max([[negBucketFloor]], N div
+    * [[negBucketTarget]]) hash buckets, so the join fans out
+    * ≈ [[negBucketTarget]] candidates per anchor AT ANY corpus size
+    * (the bucket count scales with the corpus; the per-bucket
+    * population stays ~constant) and carries (id, cluster, hash) rows
+    * only; selection is the bounded-heap TopKAgg (no window sort);
+    * the family anti-condition rides the join predicate. */
   private def q221NegativeSample(s: SparkSession, d: String): DataFrame =
     negativeTopK(s, d)
       .select(col("anchor_id"), posexplode(col("top")).as(Seq("i", "e")))
@@ -1370,15 +1372,6 @@ object Dedup extends QueryPack {
       .orderBy("epoch", "batch_id", "slot")
   }
 
-  /** DEDUP REPORT — the aggregate view of q73 every curation run logs:
-    * the histogram of duplicate-family sizes (how many clusters of each
-    * size, how many docs they hold, how many would be dropped keeping
-    * one canonical doc per family). Reads the session-memoized q73
-    * cluster assignment when one is warm (the materialized-table shape a
-    * production report runs against — two tiny aggregations over cached
-    * (doc_id, cluster_id) blocks, one row per CLUSTER shuffled); only a
-    * cold standalone invocation recomputes the assignment.
-    */
   /** PRIORITY SURVIVORSHIP — dedup with a SOURCE-PREFERENCE policy
     * instead of q73's neutral min-id election: within every near-dup
     * family the kept copy is the one from the most-trusted source tier
@@ -1406,6 +1399,15 @@ object Dedup extends QueryPack {
       .orderBy("cluster_id")
   }
 
+  /** DEDUP REPORT — the aggregate view of q73 every curation run logs:
+    * the histogram of duplicate-family sizes (how many clusters of each
+    * size, how many docs they hold, how many would be dropped keeping
+    * one canonical doc per family). Reads the session-memoized q73
+    * cluster assignment when one is warm (the materialized-table shape a
+    * production report runs against — two tiny aggregations over cached
+    * (doc_id, cluster_id) blocks, one row per CLUSTER shuffled); only a
+    * cold standalone invocation recomputes the assignment.
+    */
   private def q101ClusterSizes(s: SparkSession, d: String): DataFrame =
     graft.SessionMemo.getOrElse[DataFrame](s, "dedup.clusterAssign", d)(
                                 dedupClusterAssignment(s, d))
@@ -1416,6 +1418,10 @@ object Dedup extends QueryPack {
            ((col("cluster_size") - 1) * count(lit(1))).cast("long").as("n_dropped"))
       .select("cluster_size", "n_clusters", "n_docs", "n_dropped")
       .orderBy("cluster_size")
+
+  /** CC-invocation counter — test pin only (ScaleSpec asserts q261's
+    * warm path runs the subgraph pass and nothing else). */
+  private[graft] val ccInvocations = new java.util.concurrent.atomic.AtomicInteger()
 
   /** Min-label connected components over a bidirectional edge list.
     * Each iteration does one neighbor-min propagation (co-partitioned
@@ -1457,10 +1463,6 @@ object Dedup extends QueryPack {
     * proportional to DUPLICATE-FAMILY MEMBERSHIP (typically a few
     * percent of a deduped corpus), not corpus size. Returns
     * (labels, iterations-used). */
-  /** CC-invocation counter — test pin only (ScaleSpec asserts q261's
-    * warm path runs the subgraph pass and nothing else). */
-  private[graft] val ccInvocations = new java.util.concurrent.atomic.AtomicInteger()
-
   private[graft] def connectedComponents(nodes: DataFrame, edges: DataFrame,
                                          maxIters: Int = 50): (DataFrame, Int) = {
     import org.apache.spark.HashPartitioner

@@ -530,23 +530,6 @@ object EventOps extends QueryPack {
       .orderBy("event_type", "bin")
   }
 
-  /** MERGEABLE QUANTILE REGISTERS — approximate percentiles from the
-    * q198 log-bin registers, certified against the exact order
-    * statistic. The register relation is (event_type, bin) →
-    * (cnt, vmin, vmax): mergeable by (sum, min, max) in any partition
-    * or shard order, the HLL/KS register discipline — so at 100 TB the
-    * quantile dashboard is a constant-size relation combinable across
-    * days/sources/streams, where exact percentiles would re-sort the
-    * world. A quantile lands by walking the cumulative bin counts to
-    * the first bin covering rank k = ⌈p·n⌉ (integer ceiling — no float
-    * rank); the answer is that bin's OBSERVED [vmin, vmax] envelope
-    * (tighter than the 2^b bin bounds, and no power arithmetic). The
-    * certificate: the true k-th smallest value — computed by explicit
-    * row_number in BOTH engines, no engine quantile function with its
-    * own interpolation opinions — must fall inside the envelope, which
-    * holds by construction because binning is monotone in the value.
-    * The exact side is a certification rider (the q195 discipline): a
-    * production plan ships registers alone. */
   /** The q247 tail over a value-grain count relation (event_type,
     * cents, c) — shared with the streaming twin q248, whose complete-
     * mode sum registers ARE that relation. The exact k-th value falls
@@ -923,6 +906,23 @@ object EventOps extends QueryPack {
       .orderBy("event_type")
   }
 
+  /** MERGEABLE QUANTILE REGISTERS — approximate percentiles from the
+    * q198 log-bin registers, certified against the exact order
+    * statistic. The register relation is (event_type, bin) →
+    * (cnt, vmin, vmax): mergeable by (sum, min, max) in any partition
+    * or shard order, the HLL/KS register discipline — so at 100 TB the
+    * quantile dashboard is a constant-size relation combinable across
+    * days/sources/streams, where exact percentiles would re-sort the
+    * world. A quantile lands by walking the cumulative bin counts to
+    * the first bin covering rank k = ⌈p·n⌉ (integer ceiling — no float
+    * rank); the answer is that bin's OBSERVED [vmin, vmax] envelope
+    * (tighter than the 2^b bin bounds, and no power arithmetic). The
+    * certificate: the true k-th smallest value — computed by explicit
+    * row_number in BOTH engines, no engine quantile function with its
+    * own interpolation opinions — must fall inside the envelope, which
+    * holds by construction because binning is monotone in the value.
+    * The exact side is a certification rider (the q195 discipline): a
+    * production plan ships registers alone. */
   private def q247QuantileSketch(s: SparkSession, d: String): DataFrame =
     quantileFromCounts(Tables.events(s, d)
       .select(col("event_type"),

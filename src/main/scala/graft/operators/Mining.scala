@@ -546,28 +546,6 @@ object Mining extends QueryPack {
   private[graft] val mineCodebooks = new java.util.concurrent.ConcurrentHashMap[
     String, (Array[Array[Double]], Array[Array[Double]])]()
 
-  /** q286: PROBED MARGIN MINING — q126's doc comment promised "at
-    * 100 TB the mining stack replaces the A×B relation with the IVF
-    * probed candidate set and the SAME margin scoring runs over it";
-    * this gate IS that stack, first-class and oracle-gated (the r12 z10
-    * run measured q126's declared brute baseline at 133 s ×10 — the
-    * swap needed to exist as code, not as a comment). Exactly the
-    * CCMatrix shape: each side gets its own trained coarse quantizer
-    * (two collections = two indexes, the bitext deployment); forward
-    * candidates are each A-item's top-[[mineCandK]] cosine neighbors
-    * among the B-items in its [[mineProbes]] best B-cells (q224's probe
-    * shape), backward symmetrically; the mined candidate set is the
-    * UNION of both directions; the ratio-margin denominator densities
-    * d_A/d_B are the mean of each item's top-[[marginK]] PROBED
-    * cosines — the probe results price the hubness correction for
-    * free, no extra pass. Margin scoring, per-A-item argmax and the
-    * [[marginThreshold]] cut are q126's verbatim. Scale shape:
-    * candidate work is N·nprobe·E[cell] per direction (measured flat
-    * family — q156/q224); vectors never shuffle past the cell join;
-    * densities are side-sized aggregates computed as rank-ordered
-    * folds over the bounded TopKAgg arrays (the proven cross-engine
-    * float-sum pattern). Oracle: BOTH trained codebooks as literals,
-    * assignment/probe/top-k/density/margin replicated end-to-end. */
   /** The two mining collections: the embedding labels split in half —
     * q126's bitext stand-in (two languages / two snapshots). */
   private def mineSides(s: SparkSession, d: String): (DataFrame, DataFrame) = {
@@ -682,6 +660,28 @@ object Mining extends QueryPack {
       .orderBy("a_id")
   }
 
+  /** q286: PROBED MARGIN MINING — q126's doc comment promised "at
+    * 100 TB the mining stack replaces the A×B relation with the IVF
+    * probed candidate set and the SAME margin scoring runs over it";
+    * this gate IS that stack, first-class and oracle-gated (the r12 z10
+    * run measured q126's declared brute baseline at 133 s ×10 — the
+    * swap needed to exist as code, not as a comment). Exactly the
+    * CCMatrix shape: each side gets its own trained coarse quantizer
+    * (two collections = two indexes, the bitext deployment); forward
+    * candidates are each A-item's top-[[mineCandK]] cosine neighbors
+    * among the B-items in its [[mineProbes]] best B-cells (q224's probe
+    * shape), backward symmetrically; the mined candidate set is the
+    * UNION of both directions; the ratio-margin denominator densities
+    * d_A/d_B are the mean of each item's top-[[marginK]] PROBED
+    * cosines — the probe results price the hubness correction for
+    * free, no extra pass. Margin scoring, per-A-item argmax and the
+    * [[marginThreshold]] cut are q126's verbatim. Scale shape:
+    * candidate work is N·nprobe·E[cell] per direction (measured flat
+    * family — q156/q224); vectors never shuffle past the cell join;
+    * densities are side-sized aggregates computed as rank-ordered
+    * folds over the bounded TopKAgg arrays (the proven cross-engine
+    * float-sum pattern). Oracle: BOTH trained codebooks as literals,
+    * assignment/probe/top-k/density/margin replicated end-to-end. */
   private def q286MarginMineProbed(s: SparkSession, d: String): DataFrame = {
     val (aSide, bSide) = mineSides(s, d)
     val (centsB, centsA) = mineCodebooksFor(d, aSide, bSide)

@@ -411,25 +411,6 @@ object Multimodal extends QueryPack {
   /** Bottom-tail fraction flagged by q203. */
   private val xmodalTail = 0.05
 
-  /** q203: CROSS-MODAL PAIR AUDIT — the CLIP-style mismatched-caption
-    * filter every image-text pipeline runs before training: each media
-    * asset's embedding (the stub codec standing in for the media tower,
-    * emitting into the SAME [[xmodalDim]]-dim space as the text-side
-    * `embeddings` table — the shared-space contract that makes
-    * cross-modal cosine meaningful) is paired with its caption's text
-    * embedding by id, scored by exact cosine, and the bottom
-    * [[xmodalTail]] tail against the corpus's own percentile threshold
-    * is flagged — the pairs whose caption most disagrees with the media,
-    * the ones a curation run drops or re-captions. Cosines are floored
-    * to 1e-6 BEFORE the percentile so the threshold and the comparison
-    * run on values both engines agree on bit-for-bit (the established
-    * cosine parity granularity); the threshold is a broadcast one-row
-    * aggregate (q74's quantile-gate pattern). Plan shape: the pairing is
-    * one id-keyed equi-join (co-partitioned at scale, both sides large),
-    * the cosine a map, the threshold one scalar agg broadcast back, the
-    * flag a map filter — media payloads never shuffle (only the
-    * extracted [[xmodalDim]]-float vectors move), and nothing is
-    * driver-side. */
   /** The q203 core over arbitrary sides — `media` is (asset_id,
     * features), `text` is (vec_id, embedding); returns the flagged
     * bottom-`tail` pairs as (pair_id, cos, thr). Factored so the spec
@@ -449,6 +430,25 @@ object Multimodal extends QueryPack {
       .select(col("pair_id"), col("cos"), col("thr"))
   }
 
+  /** q203: CROSS-MODAL PAIR AUDIT — the CLIP-style mismatched-caption
+    * filter every image-text pipeline runs before training: each media
+    * asset's embedding (the stub codec standing in for the media tower,
+    * emitting into the SAME [[xmodalDim]]-dim space as the text-side
+    * `embeddings` table — the shared-space contract that makes
+    * cross-modal cosine meaningful) is paired with its caption's text
+    * embedding by id, scored by exact cosine, and the bottom
+    * [[xmodalTail]] tail against the corpus's own percentile threshold
+    * is flagged — the pairs whose caption most disagrees with the media,
+    * the ones a curation run drops or re-captions. Cosines are floored
+    * to 1e-6 BEFORE the percentile so the threshold and the comparison
+    * run on values both engines agree on bit-for-bit (the established
+    * cosine parity granularity); the threshold is a broadcast one-row
+    * aggregate (q74's quantile-gate pattern). Plan shape: the pairing is
+    * one id-keyed equi-join (co-partitioned at scale, both sides large),
+    * the cosine a map, the threshold one scalar agg broadcast back, the
+    * flag a map filter — media payloads never shuffle (only the
+    * extracted [[xmodalDim]]-float vectors move), and nothing is
+    * driver-side. */
   private def q203CrossModalAudit(s: SparkSession, d: String): DataFrame = {
     val media = mediaVecs(s, d, xmodalDim)
       .select(col("asset_id"), col("features"))

@@ -658,8 +658,9 @@ object Similarity extends QueryPack {
     * budget reconstructs measurably tighter (SimilaritySpec asserts the
     * mean squared reconstruction error strictly improves). The residual
     * subtraction is a `zip_with` against the (broadcast) cell centroid —
-    * map-side, no extra shuffle. */
-  /** `coarse`: optional PRE-TRAINED coarse codebook (q289's mining
+    * map-side, no extra shuffle.
+    *
+    * `coarse`: optional PRE-TRAINED coarse codebook (q289's mining
     * deployment trains its versioned quantizers up front and builds the
     * index under them frozen — the day-0-codebook production shape);
     * `k` is ignored when it is supplied. */
@@ -718,14 +719,6 @@ object Similarity extends QueryPack {
       .write.mode("append").partitionBy("centroid").parquet(h.cur)
   }
 
-  /** Search a materialized IVF-PQ index: rank the k coarse centroids per
-    * query (broadcast, heap-ranked), scan only the top-`nprobe` cells'
-    * partitions, score candidates by ADC over their code bytes (smallest
-    * approximate distance first; `adc` in the output). Raw corpus
-    * vectors are never read. For a residual index the query side is
-    * re-expressed per probed cell as qv − centroid (the standard IVF-PQ
-    * ADC: one table per (query, cell)); the probe join is an equi-join
-    * on the cell id over exploded (q_id, centroid) probe rows. */
   /** [[ivfPqSearch]] + EXACT RERANK — the standard two-stage retrieval:
     * ADC over code bytes selects `rerankK` candidates per query (cheap,
     * reads ~8 B/vector), then ONLY those candidates' raw vectors are
@@ -765,7 +758,16 @@ object Similarity extends QueryPack {
       topK)
   }
 
-  /** `deleted`: optional tombstone set (vec_id rows) masked out of the
+  /** Search a materialized IVF-PQ index: rank the k coarse centroids per
+    * query (broadcast, heap-ranked), scan only the top-`nprobe` cells'
+    * partitions, score candidates by ADC over their code bytes (smallest
+    * approximate distance first; `adc` in the output). Raw corpus
+    * vectors are never read. For a residual index the query side is
+    * re-expressed per probed cell as qv − centroid (the standard IVF-PQ
+    * ADC: one table per (query, cell)); the probe join is an equi-join
+    * on the cell id over exploded (q_id, centroid) probe rows.
+    *
+    * `deleted`: optional tombstone set (vec_id rows) masked out of the
     * candidate stream BEFORE ADC ranking — deleted ids neither surface
     * nor consume top-k slots. Broadcast anti-join on the pruned scan;
     * a tombstone set outgrowing broadcast swaps in the sharded-bloom
@@ -964,31 +966,12 @@ object Similarity extends QueryPack {
   private val rerankNprobe = 2
   private val rerankPoolK = 20
 
-  /** Persisted IVF-PQ index dirs built by q156, one per (session, dataset)
-    * — the write-once side of a production ANN deployment (q108's memo
-    * pattern on the vector side). */
   /** Codebooks matching q156's persisted index, keyed by dataset dir
     * (training is deterministic, so re-training here reproduces exactly
     * what [[ivfPqIndex]] wrote to `_codebook`/`_pq_codebook`). */
   private val rerankCodebooks = new java.util.concurrent.ConcurrentHashMap[
     String, (Array[Array[Double]], Array[Array[Array[Double]]])]()
 
-  /** TWO-STAGE ANN: PERSISTED-INDEX RETRIEVE + EXACT RERANK — the
-    * production read path every IVF-PQ deployment actually serves
-    * (q86 checks the encode/ADC arithmetic; THIS checks the deployed
-    * composition): build the partitionBy(centroid) index once per
-    * (session, dataset) via [[ivfPqIndex]], probe the top-`rerankNprobe`
-    * cells per query with static partition pruning, take the ADC
-    * top-`rerankPoolK` candidate pool (reads code bytes only), then
-    * fetch ONLY those candidates' raw vectors (broadcast semi-join) and
-    * re-score by exact cosine — [[ivfPqSearchRerank]] end-to-end.
-    * Oracle: both trained codebooks as literals, the q115-style
-    * multi-probe ADC ranking truncated at the pool size, closed with the
-    * exact-cosine rerank — the full two-stage semantics replicated in
-    * DuckDB, so a probe-pruning or pool-truncation bug cannot hide
-    * behind "recall looks fine". Scale shape: the corpus shuffles only
-    * at index build; a search reads nprobe/k of the codes + |Q|·poolK
-    * raw vectors. */
   /** The q156 persisted index, built once per (session, dataset). */
   private def rerankIndexFor(s: SparkSession, e: DataFrame, d: String): String =
     graft.SessionMemo.getOrElseUpdate[String](s, "ann.rerankIndex", d)( {
@@ -1011,6 +994,22 @@ object Similarity extends QueryPack {
     e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), VectorExprs.asDouble("embedding").as("qv"))
 
+  /** TWO-STAGE ANN: PERSISTED-INDEX RETRIEVE + EXACT RERANK — the
+    * production read path every IVF-PQ deployment actually serves
+    * (q86 checks the encode/ADC arithmetic; THIS checks the deployed
+    * composition): build the partitionBy(centroid) index once per
+    * (session, dataset) via [[ivfPqIndex]], probe the top-`rerankNprobe`
+    * cells per query with static partition pruning, take the ADC
+    * top-`rerankPoolK` candidate pool (reads code bytes only), then
+    * fetch ONLY those candidates' raw vectors (broadcast semi-join) and
+    * re-score by exact cosine — [[ivfPqSearchRerank]] end-to-end.
+    * Oracle: both trained codebooks as literals, the q115-style
+    * multi-probe ADC ranking truncated at the pool size, closed with the
+    * exact-cosine rerank — the full two-stage semantics replicated in
+    * DuckDB, so a probe-pruning or pool-truncation bug cannot hide
+    * behind "recall looks fine". Scale shape: the corpus shuffles only
+    * at index build; a search reads nprobe/k of the codes + |Q|·poolK
+    * raw vectors. */
   private def q156AnnRerank(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val path = rerankIndexFor(s, e, d)
@@ -1155,6 +1154,24 @@ object Similarity extends QueryPack {
                       probeKey = Some(d))
   }
 
+  /** The size-invariant STALENESS STATISTIC of a persisted IVF index:
+    * max/median occupied-cell occupancy of the CURRENT version. A
+    * balanced index reads ~1.2–1.5 tightening toward 1 as N grows; a
+    * drifted append batch (a mode the frozen quantizer has no centroid
+    * for) piles into one cell and pushes the ratio past
+    * [[retrainSkew]] regardless of corpus size (the q172 derivation
+    * below). Shared by [[ivfPqRetrain]] (search index) and the
+    * per-side mining-index monitor ([[Mining.mineIndexStale]] — either
+    * side's drift shifts mined candidates, so both sides watch). One
+    * column-pruned scan of the index's centroid column, one 2-row agg. */
+  private[graft] def indexSkew(s: SparkSession, path: String): Double = {
+    val occ = s.read.parquet(resolveIndex(s, path)).select("centroid")
+      .groupBy("centroid").agg(count(lit(1)).as("n"))
+      .agg(max("n").as("mx"),
+           expr("percentile(n, 0.5D)").as("med")).head()
+    occ.getLong(0).toDouble / occ.getDouble(1)
+  }
+
   /** RETRAIN DECISION + REBUILD — the FAISS re-train-when-unbalanced
     * step composed from the lifecycle pieces: read the SERVING index's
     * per-cell occupancy (q159's stats shape — a partition-column-only
@@ -1178,24 +1195,6 @@ object Similarity extends QueryPack {
     * decision costs one footer-level count per cell; the rebuild is
     * the one-off full-corpus pass retraining implies (that's the point
     * of gating it on a threshold). */
-  /** The size-invariant STALENESS STATISTIC of a persisted IVF index:
-    * max/median occupied-cell occupancy of the CURRENT version. A
-    * balanced index reads ~1.2–1.5 tightening toward 1 as N grows; a
-    * drifted append batch (a mode the frozen quantizer has no centroid
-    * for) piles into one cell and pushes the ratio past
-    * [[retrainSkew]] regardless of corpus size (the q172 derivation
-    * below). Shared by [[ivfPqRetrain]] (search index) and the
-    * per-side mining-index monitor ([[Mining.mineIndexStale]] — either
-    * side's drift shifts mined candidates, so both sides watch). One
-    * column-pruned scan of the index's centroid column, one 2-row agg. */
-  private[graft] def indexSkew(s: SparkSession, path: String): Double = {
-    val occ = s.read.parquet(resolveIndex(s, path)).select("centroid")
-      .groupBy("centroid").agg(count(lit(1)).as("n"))
-      .agg(max("n").as("mx"),
-           expr("percentile(n, 0.5D)").as("med")).head()
-    occ.getLong(0).toDouble / occ.getDouble(1)
-  }
-
   def ivfPqRetrain(s: SparkSession, path: String, corpus: DataFrame, k: Int,
                    skewRatio: Double): Boolean = {
     if (indexSkew(s, path) <= skewRatio) false
@@ -1229,7 +1228,7 @@ object Similarity extends QueryPack {
     * oracle states the identical batch as a UNION ALL list
     * comprehension — no literals, no new tables. Batch ids offset by
     * [[driftIdOffset]] keeps them disjoint from corpus ids at any
-    * ScaleGen factor and outside every training sample (vec_id < 256),
+    * corpus size and outside every training sample (vec_id < 256),
     * so the retrained codebooks still equal the full-corpus-trained
     * ones the oracle embeds. */
   private[graft] val driftIdOffset = 10000000L
@@ -1378,8 +1377,9 @@ object Similarity extends QueryPack {
     * ranking at nprobe = [[rerankNprobe]], the ADC candidate pool
     * truncated at [[rerankPoolK]] (adist asc, id asc — TopKAgg's order),
     * then the exact-cosine rerank (cos desc, id asc — rankTopK's order)
-    * down to the final top-5. */
-  /** `candPred`: extra SQL predicate on the candidate stream (`recon`
+    * down to the final top-5.
+    *
+    * `candPred`: extra SQL predicate on the candidate stream (`recon`
     * alias) — q158 injects its tombstone mask here, at the same
     * pre-pool stage the Spark path applies it. `corpusCte`: the SQL
     * body of the corpus relation `e` — q172 swaps in the original ∪

@@ -181,6 +181,12 @@ object Skew extends QueryPack {
     else
       s"CAST(('0x' || substr(md5('$salt' || CAST($key AS VARCHAR)), 1, 15)) AS BIGINT) % $bloomM"
 
+  /** The two bloom positions of `key` as an array expression — shared
+    * with the streaming maintenance twin (q263). */
+  private[operators] def bloomPositionsExpr(key: String): String =
+    s"""array(${bloomH("a-", key, divStyle = true)},
+              ${bloomH("b-", key, divStyle = true)})"""
+
   /** SEMI-JOIN REDUCTION VIA A RELATIONAL BLOOM FILTER — the shuffle
     * killer for selective joins at 100 TB: instead of shuffling the full
     * fact table to discover that most rows have no dimension partner,
@@ -199,12 +205,6 @@ object Skew extends QueryPack {
     * cohort (the experiment-membership shape); the exact semi-join
     * rides as the certification side (q195 discipline — production
     * ships the bloom probe alone). */
-  /** The two bloom positions of `key` as an array expression — shared
-    * with the streaming maintenance twin (q263). */
-  private[operators] def bloomPositionsExpr(key: String): String =
-    s"""array(${bloomH("a-", key, divStyle = true)},
-              ${bloomH("b-", key, divStyle = true)})"""
-
   private def q252BloomSemijoin(s: SparkSession, d: String): DataFrame = {
     val dim = Tables.events(s, d).select(col("user_id")).distinct()
       .filter(pmod(col("user_id"), lit(10)) === 3)

@@ -629,30 +629,6 @@ object Stats extends QueryPack {
       .limit(bpeK)
   }
 
-  /** q186: BPE MERGE TRAINING, three rounds — q147 gives the FIRST
-    * merge; this runs the actual training loop distributed: count
-    * weighted symbol pairs over the vocabulary → elect the top pair →
-    * apply the merge → recount, three times, emitting the learned merge
-    * table (the artifact a tokenizer ships). Representation: each
-    * vocabulary entry is a space-delimited SYMBOL STRING (' c a t '),
-    * so applying a merge is plain string `replace` of ' a b ' with
-    * ' ab ' — nested to depth 4: a deterministic replace-based
-    * approximation of greedy BPE application, identical on both engines
-    * (`replace` is left-to-right non-overlapping in each). For runs of
-    * the merged SYMBOL the two can differ — an odd run of ≥5 merged
-    * symbols replaces as 'aa a aa' where strict greedy BPE scans to
-    * 'aa aa a' — so later rounds' pair counts are the replace
-    * semantics' counts, not necessarily textbook BPE's; cross-engine
-    * parity is unaffected because the oracle applies the identical
-    * replace chain. Election
-    * is one lazy broadcast `min(struct(-n, w1, w2))` row (n DESC, then
-    * lexicographic — fully deterministic); each round's recount is the
-    * q147/q180 bigram shape over the Zipf-bounded vocabulary, so the
-    * whole 3-round chain is ONE lazy plan: three vocabulary-grain
-    * map+agg passes with broadcast merge rows, no driver-side loop, no
-    * job at construction. At corpus scale this is exactly how BPE
-    * training distributes — the corpus contributes only token counts
-    * once, and every iteration is vocabulary-sized. */
   /** The corpus vocabulary as space-delimited symbol strings (' c a t ')
     * with occurrence counts — round 0 of BPE training. */
   private def bpeVocab0(s: SparkSession, d: String): DataFrame =
@@ -727,6 +703,30 @@ object Stats extends QueryPack {
     (t1, t2, t3)
   }
 
+  /** q186: BPE MERGE TRAINING, three rounds — q147 gives the FIRST
+    * merge; this runs the actual training loop distributed: count
+    * weighted symbol pairs over the vocabulary → elect the top pair →
+    * apply the merge → recount, three times, emitting the learned merge
+    * table (the artifact a tokenizer ships). Representation: each
+    * vocabulary entry is a space-delimited SYMBOL STRING (' c a t '),
+    * so applying a merge is plain string `replace` of ' a b ' with
+    * ' ab ' — nested to depth 4: a deterministic replace-based
+    * approximation of greedy BPE application, identical on both engines
+    * (`replace` is left-to-right non-overlapping in each). For runs of
+    * the merged SYMBOL the two can differ — an odd run of ≥5 merged
+    * symbols replaces as 'aa a aa' where strict greedy BPE scans to
+    * 'aa aa a' — so later rounds' pair counts are the replace
+    * semantics' counts, not necessarily textbook BPE's; cross-engine
+    * parity is unaffected because the oracle applies the identical
+    * replace chain. Election
+    * is one lazy broadcast `min(struct(-n, w1, w2))` row (n DESC, then
+    * lexicographic — fully deterministic); each round's recount is the
+    * q147/q180 bigram shape over the Zipf-bounded vocabulary, so the
+    * whole 3-round chain is ONE lazy plan: three vocabulary-grain
+    * map+agg passes with broadcast merge rows, no driver-side loop, no
+    * job at construction. At corpus scale this is exactly how BPE
+    * training distributes — the corpus contributes only token counts
+    * once, and every iteration is vocabulary-sized. */
   private def q186BpeMerges(s: SparkSession, d: String): DataFrame = {
     val (t1, t2, t3) = bpeMergeChain(s, d)
     // filter the all-NULL election row: min(struct(...)) over an EMPTY
@@ -790,10 +790,6 @@ object Stats extends QueryPack {
   /** alpha_m for m = 64 (Flajolet et al.'s bias constant). */
   private val hllAlpha = 0.709
 
-  /** Deterministic HLL registers from the distinct (source, 60-bit h)
-    * relation: bucket = h mod m, rho = leading-zero count of the
-    * remaining 54 bits + 1 via the q198 binary-string-length kernel
-    * (no log2, no libm). */
   /** The map-side half of [[hllRegisters]] — (source, b, rho) rows
     * before the max-aggregation, factored so the combined streaming
     * register gate (StreamGate.docRegisters) can union this branch into
@@ -803,6 +799,10 @@ object Stats extends QueryPack {
         expr(s"""CASE WHEN h div $hllM = 0 THEN 55
                  ELSE 55 - length(bin(h div $hllM)) END""").as("rho"))
 
+  /** Deterministic HLL registers from the distinct (source, 60-bit h)
+    * relation: bucket = h mod m, rho = leading-zero count of the
+    * remaining 54 bits + 1 via the q198 binary-string-length kernel
+    * (no log2, no libm). */
   private[graft] def hllRegisters(sh: DataFrame): DataFrame =
     hllRegisterRows(sh).groupBy("source", "b").agg(max("rho").as("m"))
 
@@ -910,31 +910,6 @@ object Stats extends QueryPack {
     hllEstimate(merged).orderBy("source")
   }
 
-  /** SOURCE-LEVEL SKETCH SIMILARITY — dataset-to-dataset resemblance at
-    * sketch cost: each source's distinct-shingle set collapses to its
-    * bottom-[[srcSketchK]] MinHash (smallest 60-bit md5 hashes, the
-    * Broder bottom-k sketch), and every source pair's Jaccard is
-    * estimated as |S_k(A∪B) ∩ S(A) ∩ S(B)| / k — the two-crawls-overlap
-    * question q116 answers exactly, answered from S × k longs instead
-    * of the full window-hash matrix (at 100 TB the sketches are the
-    * only thing that leaves the corpus scan). The exact distinct-
-    * shingle Jaccard rides along per pair, so the gate certifies the
-    * ESTIMATOR against its ground truth, not just its plumbing.
-    * Parity: bottom-k via the bounded-heap TopKAgg ranked by −h —
-    * double rounding of a 60-bit score is monotone non-strict and ties
-    * break by the exact integer id, so the selected set is exactly
-    * ORDER BY h LIMIT k; everything after is integer list arithmetic.
-    * Plan: one distinct (source, h) relation feeds the per-source heap
-    * (≤ k rows per map partition into the shuffle), the pair grid is
-    * S² rows of sketches, and the exact side is [[srcOverlapExact]] —
-    * CERTIFICATION-ONLY (see its doc): the 100 TB production plan
-    * ships the sketches alone. Not shared with q116: that operator's
-    * overlap universe is 8-token window hashes (the exact-substring
-    * span diagnostic), this one's is 3-word shingles (the resemblance
-    * estimator's own universe) — one relation cannot serve both
-    * without changing an operator's semantics. */
-  /** The distinct (source, 60-bit shingle hash) relation both sides of
-    * q195 derive from — the per-source shingle universe. */
   /** Columns q255 profiles — integer/char lineitem columns whose string
     * casts are engine-identical (doubles/dates are excluded: their
     * string renderings differ across engines). */
@@ -976,6 +951,8 @@ object Stats extends QueryPack {
       .orderBy("col_name")
   }
 
+  /** The distinct (source, 60-bit shingle hash) relation both sides of
+    * q195 derive from — the per-source shingle universe. */
   private def srcShingles(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(col("source"),
@@ -1001,6 +978,29 @@ object Stats extends QueryPack {
       .filter(col("src_a") < col("src_b"))
       .groupBy("src_a", "src_b").agg(count(lit(1)).as("nab"))
 
+  /** SOURCE-LEVEL SKETCH SIMILARITY — dataset-to-dataset resemblance at
+    * sketch cost: each source's distinct-shingle set collapses to its
+    * bottom-[[srcSketchK]] MinHash (smallest 60-bit md5 hashes, the
+    * Broder bottom-k sketch), and every source pair's Jaccard is
+    * estimated as |S_k(A∪B) ∩ S(A) ∩ S(B)| / k — the two-crawls-overlap
+    * question q116 answers exactly, answered from S × k longs instead
+    * of the full window-hash matrix (at 100 TB the sketches are the
+    * only thing that leaves the corpus scan). The exact distinct-
+    * shingle Jaccard rides along per pair, so the gate certifies the
+    * ESTIMATOR against its ground truth, not just its plumbing.
+    * Parity: bottom-k via the bounded-heap TopKAgg ranked by −h —
+    * double rounding of a 60-bit score is monotone non-strict and ties
+    * break by the exact integer id, so the selected set is exactly
+    * ORDER BY h LIMIT k; everything after is integer list arithmetic.
+    * Plan: one distinct (source, h) relation feeds the per-source heap
+    * (≤ k rows per map partition into the shuffle), the pair grid is
+    * S² rows of sketches, and the exact side is [[srcOverlapExact]] —
+    * CERTIFICATION-ONLY (see its doc): the 100 TB production plan
+    * ships the sketches alone. Not shared with q116: that operator's
+    * overlap universe is 8-token window hashes (the exact-substring
+    * span diagnostic), this one's is 3-word shingles (the resemblance
+    * estimator's own universe) — one relation cannot serve both
+    * without changing an operator's semantics. */
   private def q195SourceSketch(s: SparkSession, d: String): DataFrame = {
     val sh = srcShingles(s, d)
     val sk = sh.groupBy("source")
@@ -1287,21 +1287,6 @@ object Stats extends QueryPack {
   /** Context window radius for q233 (±2, the word2vec default grain). */
   private val sgWindow = 2
 
-  /** q233: SKIP-GRAM CO-OCCURRENCE COUNTS — the (center, context)
-    * count table word-embedding training (word2vec SGNS, GloVe's
-    * X_ij) is built from: every directed token pair within a ±2
-    * window, counted corpus-wide, top-50 by count. The WINDOW grain
-    * distinguishes it from q180's strict-adjacency collocations — a
-    * context two tokens away still counts here, which is what makes
-    * the table an embedding-training input rather than a phrase
-    * detector. Plan shape is the part that matters at 100 TB: the
-    * pair fan-out is MAP-SIDE (one nested `transform` over each
-    * document's token array — no positional self-join, no (doc, pos)
-    * shuffle; the naive join form shuffles the whole token stream
-    * with positions), counts partial-fold, and the output is
-    * TakeOrderedAndProject; the oracle computes the same multiset
-    * through DuckDB's positional self-join, so the gate also proves
-    * the map-side fan-out ≡ the relational definition. */
   /** The map-side (center, context) pair fan-out of q233: every
     * directed token pair within the ± [[sgWindow]] window, one nested
     * transform per document — no positional self-join, no (doc, pos)
@@ -1330,6 +1315,21 @@ object Stats extends QueryPack {
       .filter(col("p").isNotNull)
       .select(col("p.t").as("t"), col("p.ctx").as("ctx"))
 
+  /** q233: SKIP-GRAM CO-OCCURRENCE COUNTS — the (center, context)
+    * count table word-embedding training (word2vec SGNS, GloVe's
+    * X_ij) is built from: every directed token pair within a ±2
+    * window, counted corpus-wide, top-50 by count. The WINDOW grain
+    * distinguishes it from q180's strict-adjacency collocations — a
+    * context two tokens away still counts here, which is what makes
+    * the table an embedding-training input rather than a phrase
+    * detector. Plan shape is the part that matters at 100 TB: the
+    * pair fan-out is MAP-SIDE (one nested `transform` over each
+    * document's token array — no positional self-join, no (doc, pos)
+    * shuffle; the naive join form shuffles the whole token stream
+    * with positions), counts partial-fold, and the output is
+    * TakeOrderedAndProject; the oracle computes the same multiset
+    * through DuckDB's positional self-join, so the gate also proves
+    * the map-side fan-out ≡ the relational definition. */
   private def q233SkipgramCounts(s: SparkSession, d: String): DataFrame =
     sgPairs(Tables.documents(s, d))
       .groupBy("t", "ctx").agg(count(lit(1)).as("n"))

@@ -453,18 +453,6 @@ object StreamGate extends QueryPack {
               col("l2").as("z4max"))
       .orderBy("vec_id")
 
-  /** Streaming EVENT-RATE ANOMALY — q191's volume monitor as the live
-    * alarm it exists to be: arriving events aggregate into append-mode
-    * 1-hour tumbling windows (a real watermarked streaming aggregation;
-    * each hour emits once the watermark passes its end — the sentinel
-    * closes the tail), and the closed hours score against the
-    * per-type baseline broadcast from the static corpus (the
-    * trained-on-history shape; [[EventOps.hourlyStats]] is the SAME
-    * derivation batch q191 uses, and [[EventOps.scoreHourly]] the same
-    * 2σ scorer, so streaming the full table against its own baseline
-    * serves q191's oracle verbatim). Epoch-aligned windows make the
-    * streaming hour bucket ≡ the batch `unix_micros div 3600000000`
-    * bucket by construction. */
   /** The events-feed WINDOWED-AGGREGATION stream (q168 per-window top-k
     * heaps, q194 per-(type, window) counts), run once per (session,
     * dataset): both gates are append-mode 1-hour tumbling-window
@@ -496,6 +484,18 @@ object StreamGate extends QueryPack {
       runToBatch(s, agg).localCheckpoint()
     })
 
+  /** Streaming EVENT-RATE ANOMALY — q191's volume monitor as the live
+    * alarm it exists to be: arriving events aggregate into append-mode
+    * 1-hour tumbling windows (a real watermarked streaming aggregation;
+    * each hour emits once the watermark passes its end — the sentinel
+    * closes the tail), and the closed hours score against the
+    * per-type baseline broadcast from the static corpus (the
+    * trained-on-history shape; [[EventOps.hourlyStats]] is the SAME
+    * derivation batch q191 uses, and [[EventOps.scoreHourly]] the same
+    * 2σ scorer, so streaming the full table against its own baseline
+    * serves q191's oracle verbatim). Epoch-aligned windows make the
+    * streaming hour bucket ≡ the batch `unix_micros div 3600000000`
+    * bucket by construction. */
   private def q194AnomalyStream(s: SparkSession, d: String): DataFrame = {
     val closed = eventWindowAggs(s, d).filter(col("tag") === "q194")
       .select(col("k1").as("event_type"),
@@ -593,14 +593,15 @@ object StreamGate extends QueryPack {
               (col("d1") / 100).as("total_value"))
       .orderBy("user_id", "session_start")
 
-  /** Streaming PER-WINDOW TOP-K — [[StreamOps.windowTopK]] (the
-    * bounded-heap [[graft.functions.TopKAgg]] inside an append-mode
-    * windowed aggregation — possible precisely because top-k is an
-    * AGGREGATE here; rank windows don't run on streams) under the oracle
-    * gate. Each closed 1-hour window emits its value-ranked top-3 events
-    * once the watermark passes the window end (the sentinel closes the
-    * tail windows); the oracle is the window-function formulation (score
-    * desc, id asc — TopKAgg's total order, q77's precedent). */
+  /** Streaming PER-WINDOW TOP-K — the `q168` slice of
+    * [[eventWindowAggs]] (the bounded-heap [[graft.functions.TopKAgg]]
+    * inside an append-mode windowed aggregation — possible precisely
+    * because top-k is an AGGREGATE here; rank windows don't run on
+    * streams) under the oracle gate. Each closed 1-hour window emits its
+    * value-ranked top-3 events once the watermark passes the window end
+    * (the sentinel closes the tail windows); the oracle is the
+    * window-function formulation (score desc, id asc — TopKAgg's total
+    * order, q77's precedent). */
   private def q168WindowTopkStream(s: SparkSession, d: String): DataFrame =
     eventWindowAggs(s, d).filter(col("tag") === "q168")
       .select(col("ws").as("window_start"),

@@ -248,8 +248,14 @@ object EtlSource {
   * @param dateFormat slash-separated time-bucket path pattern (reference
   *   `date.format`; segments become dt/hour/minute partition columns —
   *   `"yyyy-MM-dd/HH/mm"` gives the reference's minute-grain layout).
-  * @param blockSize parquet row-group size in bytes (reference `block.size`)
-  * @param pageSize parquet page size in bytes (reference `page.size`)
+  * @param blockSize parquet row-group size in bytes (reference `block.size`);
+  *   None leaves the Parquet writer default (128 MiB) in force.
+  *   [[KafkaEtlPipeline.fromProperties]] always sets it, to the
+  *   reference's 256 MiB when `block.size` is absent, so the two entry
+  *   points land different row-group sizes by default.
+  * @param pageSize parquet page size in bytes (reference `page.size`);
+  *   None leaves the Parquet writer default (1 MiB) in force, while
+  *   `fromProperties` always sets it (reference default 64 KiB).
   */
 final case class EtlConfig(
     topics: Seq[String],

@@ -25,57 +25,6 @@ object StreamOps extends Serializable {
     df.withWatermark(tsCol, delay)
       .dropDuplicatesWithinWatermark(keys)
 
-  /** Tumbling event-time window aggregation with late-data handling — the
-    * semantic upgrade over the reference's wall-clock file roll (which
-    * writes late data into whatever file is open, `ETLTask.java:261-283`).
-    */
-  def eventTimeCounts(df: DataFrame, tsCol: String, delay: String,
-                      window_ : String, keyCol: String): DataFrame =
-    df.withWatermark(tsCol, delay)
-      .groupBy(window(col(tsCol), window_), col(keyCol))
-      .agg(count(lit(1)).as("n_events"), sum("value").as("total_value"))
-      .select(col("window.start").as("window_start"), col(keyCol),
-              col("n_events"), col("total_value"))
-
-  /** Streaming top-k per event-time window via the bounded-heap aggregate
-    * (`TopKAgg`) — possible precisely BECAUSE top-k is an aggregate here,
-    * not a window function (rank windows don't run on streams). State per
-    * open window is the k-element heap buffer, watermark-evicted; each
-    * closed window emits its ranked top-k once (append mode).
-    */
-  def windowTopK(df: DataFrame, tsCol: String, delay: String, window_ : String,
-                 scoreCol: String, idCol: String, k: Int): DataFrame =
-    df.withWatermark(tsCol, delay)
-      .groupBy(window(col(tsCol), window_))
-      .agg(graft.functions.TopKAgg
-        .top_k_by_score(col(scoreCol), col(idCol), k).as("top"))
-      .select(col("window.start").as("window_start"),
-              posexplode(col("top")).as(Seq("rnk0", "t")))
-      .select(col("window_start"), (col("rnk0") + 1).cast("long").as("rnk"),
-              col("t.id").as(idCol), col("t.score").as(scoreCol))
-
-  /** Watermarked stream-stream inner join: enrich an event stream with a
-    * second stream keyed the same way, matching only within a bounded
-    * event-time band. Both sides carry watermarks and the join condition
-    * bounds their time difference, so Spark can size and evict the join
-    * state on both sides — without the band, stream-stream state grows
-    * forever. At 100 TB/day state is `2 × band × per-key rate`, and the
-    * shuffle is keyed by the join key exactly like the batch plan.
-    */
-  def enrichStream(events: DataFrame, enrich: DataFrame,
-                   key: String, tsCol: String, delay: String,
-                   band: String): DataFrame = {
-    val l = events.withWatermark(tsCol, delay)
-    val r = enrich
-      .withColumnRenamed(key, s"r_$key")
-      .withColumnRenamed(tsCol, s"r_$tsCol")
-      .withWatermark(s"r_$tsCol", delay)
-    l.join(r,
-      col(key) === col(s"r_$key") &&
-      col(s"r_$tsCol") >= col(tsCol) - expr(s"INTERVAL $band") &&
-      col(s"r_$tsCol") <= col(tsCol) + expr(s"INTERVAL $band"))
-  }
-
   /** Streaming incremental exact dedup against a STATIC existing corpus —
     * the streaming twin of the batch q76 (today's crawl stream checked
     * against yesterday's indexed corpus). A stream-static left_anti join
@@ -546,23 +495,27 @@ object StreamOps extends Serializable {
     * width-3 window over the type sequence. */
   private[graft] def pathTrigrams(buf: List[(Long, Long, String)])
       : Iterator[(String, String, String)] =
-    pathTrigramsFrom(Nil, buf)
+    pathSettle(Nil, buf)._1
 
-  /** Trigram assembly CONTINUATION — `boundary` is the ≤ 2-element type
-    * suffix of the already-emitted (settled) timeline prefix, `buf` the
-    * remaining events. Sound because settled events (ts below the
-    * watermark) sort strictly before every event absorbed later (late
-    * rows are dropped, so later ts ≥ watermark > settled ts): the
-    * timeline is frozen-prefix ++ sorted(buf), and every width-3 window
-    * not yet emitted contains ≥ 1 element beyond the prefix — i.e. it
-    * starts within the last 2 prefix elements or later, exactly what
+  /** One SETTLE step of the path state machine: the trigrams of
+    * `boundary ++ sorted(buf)` and the new boundary (its last ≤ 2
+    * types). `boundary` is the ≤ 2-element type suffix of the
+    * already-emitted (settled) timeline prefix, `buf` the events settled
+    * now. Sound because settled events (ts below the watermark) sort
+    * strictly before every event absorbed later (late rows are dropped,
+    * so later ts ≥ watermark > settled ts): the timeline is
+    * frozen-prefix ++ sorted(buf), and every width-3 window not yet
+    * emitted contains ≥ 1 element beyond the prefix — i.e. it starts
+    * within the last 2 prefix elements or later, exactly what
     * `boundary` preserves. */
-  private[graft] def pathTrigramsFrom(boundary: List[String],
-                                      buf: List[(Long, Long, String)])
-      : Iterator[(String, String, String)] = {
+  private[graft] def pathSettle(boundary: List[String],
+                                buf: List[(Long, Long, String)])
+      : (Iterator[(String, String, String)], List[String]) = {
     val seq = boundary ++ buf.sortBy(e => (e._1, e._2)).map(_._3)
-    if (seq.lengthCompare(3) < 0) Iterator.empty
-    else seq.sliding(3).map(s => (s(0), s(1), s(2)))
+    val trigrams =
+      if (seq.lengthCompare(3) < 0) Iterator.empty
+      else seq.sliding(3).map(s => (s(0), s(1), s(2)))
+    (trigrams, seq.takeRight(2))
   }
 
   final case class TlEvent(tag: String, user_id: Long, ts: java.sql.Timestamp,
@@ -597,7 +550,7 @@ object StreamOps extends Serializable {
     * attribution, path assembly) maintained by ONE flatMapGroupsWithState
     * pass keyed by (tag, user_id). Each key runs exactly one branch's
     * state machine ([[sessionAbsorb]], [[funnelChainFold]],
-    * [[pathTrigramsFrom]]), with its own event-time timeout — timers
+    * [[pathSettle]]), with its own event-time timeout — timers
     * are per key, so the three finalization disciplines coexist without
     * interference. A production events feed runs its per-user
     * analytics exactly this way: one shuffle by user, one state store,
@@ -623,7 +576,7 @@ object StreamOps extends Serializable {
     * dropped, so no later arrival sorts before them), the funnel folds
     * them into the compact (reached, prev) pair and the path emits
     * their trigrams keeping a 2-type boundary (proofs on
-    * [[funnelChainFold]] and [[pathTrigramsFrom]]). State per user is
+    * [[funnelChainFold]] and [[pathSettle]]). State per user is
     * the watermark-delay window's events plus two registers — bounded
     * for an always-active whale key too — and the event-time timer
     * finalizes the key once it goes quiet past `horizonMs`. */
@@ -653,7 +606,7 @@ object StreamOps extends Serializable {
                 stages.length, st.fReached, st.fPrevUs)._1,
               0L, 0L, 0.0, null, null, null))
           case _ =>
-            pathTrigramsFrom(st.boundary, st.evs).map { case (a, b, c) =>
+            pathSettle(st.boundary, st.evs)._1.map { case (a, b, c) =>
               TlOut("path", uid, 0L, 0L, 0L, 0.0, a, b, c) }
         }
       } else tag match {
@@ -703,21 +656,12 @@ object StreamOps extends Serializable {
           // emit the settled prefix's trigrams now; buffer the tail
           val wmUs = state.getCurrentWatermarkMs() * 1000
           val (settled, tail) = evs.partition(_._1 < wmUs)
-          val (out, boundary) =
-            if (settled.isEmpty) (Iterator.empty[TlOut], prev.boundary)
-            else {
-              val seq = prev.boundary ++
-                settled.sortBy(e => (e._1, e._2)).map(_._3)
-              val trigs =
-                if (seq.lengthCompare(3) < 0) Iterator.empty[TlOut]
-                else seq.sliding(3).map(s =>
-                  TlOut("path", uid, 0L, 0L, 0L, 0.0, s(0), s(1), s(2)))
-              (trigs, seq.takeRight(2))
-            }
+          val (trigrams, boundary) = pathSettle(prev.boundary, settled)
           state.update(TlState(tail, 0L, 0L, 0L, 0.0, last,
                                0L, Long.MinValue, boundary))
           state.setTimeoutTimestamp(last / 1000 + horizonMs)
-          out
+          trigrams.map { case (a, b, c) =>
+            TlOut("path", uid, 0L, 0L, 0L, 0.0, a, b, c) }
       }
     }
 

@@ -1,6 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Pins the README operator index to the LIVE registry: the table is
   * generated (tools/gen_opindex.py over [[OpIndexGen.rows]]), but until
@@ -8,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * the registry content — (query key, owning pack, oracle kind) and the
   * declared row count — not the `registered at` file:line column, which
   * legitimately shifts with any edit above a registration site and is
-  * refreshed by re-running the generator at round close.
+  * refreshed by re-running the generator at round close. It also holds
+  * the one source-against-docs check scalac lacks: no doc comment in
+  * `src/main` is stacked on another.
   */
 class OpIndexSpec extends AnyFunSuite {
 
@@ -56,5 +60,27 @@ class OpIndexSpec extends AnyFunSuite {
     val keys = OpIndexGen.rows.map(_._1)
     val dups = keys.groupBy(identity).collect { case (k, v) if v.size > 1 => k }
     assert(dups.isEmpty, s"duplicate query keys across packs: $dups")
+  }
+
+  test("no src/main doc comment is directly followed by another doc comment") {
+    // scaladoc attaches only the LAST of two stacked /** */ blocks to the
+    // definition below them; the first documents nothing, and scalac has
+    // no warning for it
+    val files = {
+      val w = Files.walk(Paths.get("src/main"))
+      try w.iterator.asScala.filter(_.toString.endsWith(".scala")).toVector.sorted
+      finally w.close()
+    }
+    val stacked = for {
+      f <- files
+      lines = Files.readAllLines(f).asScala.toVector
+      (line, i) <- lines.zipWithIndex if line.trim.startsWith("/**")
+      next = lines.indexWhere(_.trim.nonEmpty, lines.indexWhere(_.contains("*/"), i) + 1)
+      if next >= 0 && lines(next).trim.startsWith("/**")
+    } yield s"$f:${i + 1}"
+    assert(files.nonEmpty, "no sources found under src/main")
+    assert(stacked.isEmpty,
+      s"doc comments that document nothing (${stacked.size}): " +
+        stacked.mkString(", "))
   }
 }

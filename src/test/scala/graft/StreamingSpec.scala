@@ -5,6 +5,7 @@ import graft.streaming.{EtlConfig, EtlSource, KafkaEtlPipeline, StreamOps}
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.avro.io.EncoderFactory
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.Files
@@ -784,93 +785,17 @@ class StreamingSpec extends SparkTestBase {
       for (b <- 0 until nBatches) {
         pBuf = evs.filter(_._5 == b).map(e => (e._1, e._2, e._3)).toList ::: pBuf
         val (settled, tail) = pBuf.partition(_._1 < wms(b))
-        if (settled.nonEmpty) {
-          val seq = boundary ++ settled.sortBy(e => (e._1, e._2)).map(_._3)
-          if (seq.lengthCompare(3) >= 0)
-            seq.sliding(3).foreach(s => emitted += ((s(0), s(1), s(2))))
-          boundary = seq.takeRight(2)
-        }
+        val (trigrams, next) = StreamOps.pathSettle(boundary, settled)
+        emitted ++= trigrams
+        boundary = next
         pBuf = tail
       }
-      StreamOps.pathTrigramsFrom(boundary, pBuf).foreach(emitted += _)
+      emitted ++= StreamOps.pathSettle(boundary, pBuf)._1
       val expP = StreamOps.pathTrigrams(
         evs.map(e => (e._1, e._2, e._3)).toList).toList
       assert(emitted.result() == expP,
         s"iter $iter: path emission order/content diverged (wms=$wms)")
     }
-  }
-
-  test("stream-stream banded join matches in-band rows and evicts state") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    val evMem = MemoryStream[(Long, Timestamp, Double)]
-    val enMem = MemoryStream[(Long, Timestamp, String)]
-    val events = evMem.toDF().toDF("user_id", "ts", "value")
-    val enrich = enMem.toDF().toDF("user_id", "ts", "label")
-    val q = StreamOps.enrichStream(events, enrich, "user_id", "ts",
-        delay = "5 minutes", band = "10 minutes")
-      .select(col("user_id"), col("value"), col("label"))
-      .writeStream.format("memory").queryName("enrich_out").outputMode("append").start()
-    val t = (s: String) => Timestamp.valueOf(s)
-    evMem.addData(Seq((1L, t("2024-01-01 00:00:00"), 1.0),
-                      (2L, t("2024-01-01 00:00:00"), 2.0)))
-    enMem.addData(Seq((1L, t("2024-01-01 00:05:00"), "in-band"),      // +5m: match
-                      (2L, t("2024-01-01 00:30:00"), "out-of-band"))) // +30m: no match
-    q.processAllAvailable()
-    // advance both watermarks so in-band results finalize
-    evMem.addData(Seq((9L, t("2024-01-01 02:00:00"), 0.0)))
-    enMem.addData(Seq((9L, t("2024-01-01 02:00:00"), "tick")))
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("enrich_out").collect()
-      .map(r => (r.getLong(0), r.getString(2))).toSet
-    assert(rows.contains((1L, "in-band")), s"expected the banded match, got $rows")
-    assert(!rows.exists(_._2 == "out-of-band"), "out-of-band row must not join")
-  }
-
-  test("streaming windowed top-k ranks via the heap aggregate on close") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[(Timestamp, Double, Long)]
-    val df = mem.toDF().toDF("ts", "score", "item_id")
-    val q = StreamOps.windowTopK(df, "ts", delay = "10 minutes",
-        window_ = "5 minutes", scoreCol = "score", idCol = "item_id", k = 2)
-      .writeStream.format("memory").queryName("topk_out").outputMode("append").start()
-    val t = (s: String) => Timestamp.valueOf(s)
-    mem.addData(Seq(
-      (t("2024-01-01 00:01:00"), 5.0, 101L),
-      (t("2024-01-01 00:02:00"), 9.0, 102L),
-      (t("2024-01-01 00:03:00"), 7.0, 103L),
-      (t("2024-01-01 00:03:30"), 9.0, 104L))) // score tie → smaller id wins
-    q.processAllAvailable()
-    mem.addData(Seq((t("2024-01-01 01:00:00"), 1.0, 999L))) // advance watermark
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("topk_out").orderBy("rnk").collect()
-      .map(r => (r.getLong(1), r.getLong(2), r.getDouble(3)))
-    assert(rows.toSeq == Seq((1L, 102L, 9.0), (2L, 104L, 9.0)),
-      s"expected ranked top-2 of the closed window, got ${rows.toSeq}")
-  }
-
-  test("streaming event-time window agg emits closed windows only") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[(Timestamp, String, Double)]
-    val df = mem.toDF().toDF("ts", "event_type", "value")
-    val q = StreamOps.eventTimeCounts(df, "ts", "5 minutes", "10 minutes", "event_type")
-      .writeStream.format("memory").queryName("win_out").outputMode("append").start()
-    mem.addData(Seq(
-      (Timestamp.valueOf("2024-01-01 00:01:00"), "click", 1.0),
-      (Timestamp.valueOf("2024-01-01 00:03:00"), "click", 2.0)))
-    q.processAllAvailable()
-    // advance watermark far past the first window → it closes and emits
-    mem.addData(Seq((Timestamp.valueOf("2024-01-01 01:00:00"), "click", 9.0)))
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("win_out").collect()
-    assert(rows.length == 1, s"exactly the closed window, got ${rows.toSeq}")
-    assert(rows(0).getAs[Long]("n_events") == 2)
-    assert(rows(0).getAs[Double]("total_value") == 3.0)
   }
 
   test("q218 stream decay equals batch q214 row-for-row") {
@@ -879,6 +804,37 @@ class StreamingSpec extends SparkTestBase {
     val batch = SparkEntry.queries("q214_decayed_counts")(spark, sfDir)
       .collect().toSeq
     assert(stream == batch)
+  }
+
+  test("q194 stream anomaly equals batch q191 row-for-row") {
+    // the closed 1-hour windows of the watermarked stream aggregation,
+    // scored by the same EventOps.scoreHourly as the batch hour buckets
+    val stream = SparkEntry.queries("q194_anomaly_stream")(spark, sfDir)
+      .collect().toSeq
+    val batch = SparkEntry.queries("q191_rate_anomaly")(spark, sfDir)
+      .collect().toSeq
+    assert(batch.nonEmpty)
+    assert(stream == batch)
+  }
+
+  test("q168 gate equals the batch window-function top-3") {
+    // each closed 1-hour window's bounded-heap top-3 vs row_number over
+    // the batch hour (value desc, event_id asc: TopKAgg's total order)
+    val got = SparkEntry.queries("q168_window_topk_stream")(spark, sfDir)
+      .collect().toSeq
+    val hour = expr("date_trunc('hour', ts)")
+    val want = Tables.events(spark, sfDir)
+      .select(hour.as("ws"), col("event_id"), col("value"),
+              row_number().over(Window.partitionBy(hour)
+                .orderBy(col("value").desc, col("event_id"))).as("rnk"))
+      .filter(col("rnk") <= 3)
+      .select(date_format(col("ws"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
+              col("rnk").cast("long").as("rnk"), col("event_id"),
+              col("value"))
+      .orderBy("window_start", "rnk")
+      .collect().toSeq
+    assert(want.nonEmpty)
+    assert(got == want)
   }
 
   test("q219 stream-stream interval join matches a timeline replay") {
