@@ -81,7 +81,18 @@ object Tables {
 trait QueryPack {
   def queries: Map[String, (SparkSession, String) => DataFrame]
   /** Subset of `queries` keys → equivalent ANSI SQL for DuckDB on the same
-    * parquet tables. Queries absent here get a weaker rows-only check. */
+    * parquet tables. Queries absent here get a weaker rows-only check.
+    *
+    * An oracle composes the shared fragments instead of re-inlining them:
+    * the 3-shingle set `TextExprs.duckShingleSet`, the q130 flag block
+    * `Curation.flagBlockCtes`, the IVF-PQ encode CTEs
+    * `Similarity.ivfPqEncodeCtes` and the q73 clusters
+    * `Dedup.q73ClustersOracleSql`; OpIndexSpec fails on a second copy.
+    * The DuckDB regex `\s+` is written `'\s+'` in a raw `"""` string and
+    * `'\\s+'` in an `s"""` string (both give the same runtime SQL; `\s`
+    * does not compile inside `s`). After an oracle edit,
+    * `tools/oracle_diff.py` compares the old and new oracle_sql.json
+    * dumps key by key. */
   def oracles: Map[String, String]
   /** Oracles for a SPECIFIC dataset dir — the hook for generated oracles
     * whose literals depend on what the query computed over that dataset

@@ -37,4 +37,16 @@ object TextExprs {
 
   /** Distinct shingle set per document. */
   val shingleSet = s"array_distinct($shingles)"
+
+  /** DuckDB twin of [[shingleSet]], the one copy every oracle composes:
+    * `key` (`doc_id` or `source`) and its distinct word 3-gram list
+    * `shingles` per `documents` row (1-based indexing, empty if < 3
+    * tokens), as the body of a CTE. */
+  private[graft] def duckShingleSet(key: String): String =
+    s"""SELECT $key,
+             list_distinct(CASE WHEN len(t) >= 3 THEN
+               [t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]
+             ELSE [] END) AS shingles
+           FROM (SELECT $key, string_split_regex(trim(text), '\\s+') AS t
+                 FROM documents)"""
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryPack, Tables}
+import graft.functions.TextExprs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -512,12 +513,7 @@ object Curation extends QueryPack {
       val root = graft.WorkDirs.artifactDir(s, "release", d)
       pipelineFlags(s, d).filter(col("s3"))
         .select(col("doc_id"), col("source"), col("ntok"))
-        .withColumn("split", expr(
-          """CASE WHEN cast(conv(substr(md5(cast(doc_id as string)), 1, 15),
-                               16, 10) as bigint) % 100 < 80 THEN 'train'
-                  WHEN cast(conv(substr(md5(cast(doc_id as string)), 1, 15),
-                               16, 10) as bigint) % 100 < 90 THEN 'val'
-                  ELSE 'test' END"""))
+        .withColumn("split", expr(Curation3.splitExpr("doc_id")))
         .join(Tables.documents(s, d)
                 .select(col("doc_id"), md5(col("text")).as("text_md5")),
               "doc_id")
@@ -710,6 +706,63 @@ object Curation extends QueryPack {
     "q75_global_pack"    -> q75GlobalPack _,
   )
 
+  /** The q130 pipeline's flag block, the one copy of the CTE list every
+    * oracle that recomputes the pipeline's verdict starts from: `base`
+    * (doc_id, source, content digest `dig` = md5(text), token count
+    * `ntok`); `fc`, the first doc_id per digest (exact dedup); `t`/`f`/`q`,
+    * q93's quality `keep` flag and `score`; `sh`/`bench`/`corpus`, q48's
+    * shingle overlap with the doc_id < 20 benchmark; `flagged`, the
+    * contaminated docs. Each oracle appends its own tail. */
+  private[operators] val flagBlockCtes: String =
+    s"""base AS (SELECT doc_id, source, md5(text) AS dig,
+                         len(string_split_regex(trim(text), '\\s+')) AS ntok
+                  FROM documents),
+         fc AS (SELECT dig, min(doc_id) AS first_id FROM base GROUP BY dig),
+         ${Curation2.q93TokenCtes},
+         q AS (SELECT doc_id,
+                      CASE WHEN (0.1 + 0.015 * n + 3.0 * (ns / CAST(n AS DOUBLE))
+                                 - 0.25 * (sl / CAST(n AS DOUBLE))) > 0
+                           THEN 1 ELSE 0 END AS keep,
+                      floor((0.1 + 0.015 * n + 3.0 * (ns / CAST(n AS DOUBLE))
+                             - 0.25 * (sl / CAST(n AS DOUBLE))) * 1e6) / 1e6
+                        AS score
+               FROM f),
+         sh AS (${TextExprs.duckShingleSet("doc_id")}),
+         bench AS (SELECT DISTINCT unnest(shingles) AS s FROM sh
+                   WHERE doc_id < 20),
+         corpus AS (SELECT doc_id, len(shingles) AS nsh, unnest(shingles) AS s
+                    FROM sh WHERE doc_id >= 20),
+         flagged AS (SELECT doc_id, 1 AS fl
+                     FROM corpus JOIN bench USING (s)
+                     GROUP BY doc_id
+                     HAVING floor(count(*) / any_value(nsh) * 1000) / 1000
+                            >= 0.2)"""
+
+  /** Stage s3's survivors over [[flagBlockCtes]]: digest-first,
+    * quality-kept, uncontaminated, non-benchmark docs. */
+  private val survCte: String =
+    """surv AS (SELECT b.doc_id, b.source, b.dig, b.ntok
+                  FROM base b JOIN fc USING (dig) JOIN q USING (doc_id)
+                  LEFT JOIN flagged fg USING (doc_id)
+                  WHERE b.doc_id = fc.first_id AND q.keep = 1
+                    AND coalesce(fg.fl, 0) = 0 AND b.doc_id >= 20)"""
+
+  /** q243's takedown closure over [[flagBlockCtes]]' `base` and the q73
+    * clusters `cl`: every doc whose near-dup family holds a doc whose
+    * digest is in the opt-out registry `reg`. */
+  private val takedownCtes: String =
+    """reg AS (SELECT DISTINCT md5(text) AS oo_dig FROM documents
+                 WHERE doc_id % 37 = 3),
+         dd AS (SELECT base.doc_id,
+                       CASE WHEN reg.oo_dig IS NOT NULL THEN 1 ELSE 0 END
+                         AS direct
+                FROM base LEFT JOIN reg ON reg.oo_dig = base.dig),
+         fam AS (SELECT dd.doc_id, dd.direct, cl.cluster_id
+                 FROM dd JOIN cl ON cl.doc_id = dd.doc_id),
+         fh AS (SELECT cluster_id, max(direct) AS hit FROM fam GROUP BY 1),
+         takedown AS (SELECT fam.doc_id FROM fam JOIN fh USING (cluster_id)
+                      WHERE fh.hit = 1)"""
+
   override val oracles: Map[String, String] = Map(
     // q254: both md5 shard assignments, the full shard x source grid
     // with absent sources at c0 = 0, exact-integer L1 numerator
@@ -746,60 +799,14 @@ object Curation extends QueryPack {
                 floor(CAST(l1_num AS DOUBLE) * 1000 / (n_total * n_docs))
                   / 1000 AS mix_l1
          FROM agg ORDER BY layout, shard""",
-    // q259: the q251 CTE block closed with scalar-subquery metrics —
-    // every value an exact integer over the same relations the other
-    // gates use
+    // q259: the q251 CTEs (the flag block + survivors + takedown
+    // closure) closed with scalar-subquery metrics — every value an
+    // exact integer over the same relations the other gates use
     "q259_dataset_card" ->
       s"""WITH cl AS (${Dedup.q73ClustersOracleSql}),
-         base AS (SELECT doc_id, source, md5(text) AS dig,
-                         len(string_split_regex(trim(text), '\\s+')) AS ntok
-                  FROM documents),
-         t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
-               FROM documents),
-         f AS (SELECT doc_id, len(w) AS n,
-                      len(list_filter(w, x -> x IN ('a', 'the'))) AS ns,
-                      list_aggregate(list_transform(w, x -> length(x)), 'sum')
-                        AS sl
-               FROM t),
-         q AS (SELECT doc_id,
-                      CASE WHEN (0.1 + 0.015 * n + 3.0 * (ns / CAST(n AS DOUBLE))
-                                 - 0.25 * (sl / CAST(n AS DOUBLE))) > 0
-                           THEN 1 ELSE 0 END AS keep
-               FROM f),
-         fc AS (SELECT dig, min(doc_id) AS first_id FROM base GROUP BY dig),
-         sh AS (SELECT doc_id,
-                  list_distinct(CASE WHEN len(t) >= 3 THEN
-                    [t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                     for i in range(1, len(t) - 1)]
-                  ELSE [] END) AS shingles
-                FROM (SELECT doc_id,
-                             string_split_regex(trim(text), '\\s+') AS t
-                      FROM documents)),
-         bench AS (SELECT DISTINCT unnest(shingles) AS s FROM sh
-                   WHERE doc_id < 20),
-         corpus AS (SELECT doc_id, len(shingles) AS nsh, unnest(shingles) AS s
-                    FROM sh WHERE doc_id >= 20),
-         flagged AS (SELECT doc_id, 1 AS fl
-                     FROM corpus JOIN bench USING (s)
-                     GROUP BY doc_id
-                     HAVING floor(count(*) / any_value(nsh) * 1000) / 1000
-                            >= 0.2),
-         surv AS (SELECT b.doc_id, b.ntok
-                  FROM base b JOIN fc USING (dig) JOIN q USING (doc_id)
-                  LEFT JOIN flagged fg USING (doc_id)
-                  WHERE b.doc_id = fc.first_id AND q.keep = 1
-                    AND coalesce(fg.fl, 0) = 0 AND b.doc_id >= 20),
-         reg AS (SELECT DISTINCT md5(text) AS oo_dig FROM documents
-                 WHERE doc_id % 37 = 3),
-         dd AS (SELECT base.doc_id,
-                       CASE WHEN reg.oo_dig IS NOT NULL THEN 1 ELSE 0 END
-                         AS direct
-                FROM base LEFT JOIN reg ON reg.oo_dig = base.dig),
-         fam AS (SELECT dd.doc_id, dd.direct, cl.cluster_id
-                 FROM dd JOIN cl ON cl.doc_id = dd.doc_id),
-         fh AS (SELECT cluster_id, max(direct) AS hit FROM fam GROUP BY 1),
-         takedown AS (SELECT fam.doc_id FROM fam JOIN fh USING (cluster_id)
-                      WHERE fh.hit = 1),
+         $flagBlockCtes,
+         $survCte,
+         $takedownCtes,
          rel AS (SELECT * FROM surv WHERE doc_id NOT IN
                    (SELECT doc_id FROM takedown)),
          card AS (
@@ -832,63 +839,16 @@ object Curation extends QueryPack {
     // integer counts and token masses per source
     "q251_release_diff" ->
       s"""WITH cl AS (${Dedup.q73ClustersOracleSql}),
-         base AS (SELECT doc_id, source, md5(text) AS dig,
-                         md5(text) AS text_md5,
-                         len(string_split_regex(trim(text), '\\s+')) AS ntok
-                  FROM documents),
-         fc AS (SELECT dig, min(doc_id) AS first_id FROM base GROUP BY dig),
-         t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
-               FROM documents),
-         f AS (SELECT doc_id, len(w) AS n,
-                      len(list_filter(w, x -> x IN ('a', 'the'))) AS ns,
-                      list_aggregate(list_transform(w, x -> length(x)), 'sum')
-                        AS sl
-               FROM t),
-         q AS (SELECT doc_id,
-                      CASE WHEN (0.1 + 0.015 * n + 3.0 * (ns / CAST(n AS DOUBLE))
-                                 - 0.25 * (sl / CAST(n AS DOUBLE))) > 0
-                           THEN 1 ELSE 0 END AS keep
-               FROM f),
-         sh AS (SELECT doc_id,
-                  list_distinct(CASE WHEN len(t) >= 3 THEN
-                    [t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                     for i in range(1, len(t) - 1)]
-                  ELSE [] END) AS shingles
-                FROM (SELECT doc_id,
-                             string_split_regex(trim(text), '\\s+') AS t
-                      FROM documents)),
-         bench AS (SELECT DISTINCT unnest(shingles) AS s FROM sh
-                   WHERE doc_id < 20),
-         corpus AS (SELECT doc_id, len(shingles) AS nsh, unnest(shingles) AS s
-                    FROM sh WHERE doc_id >= 20),
-         flagged AS (SELECT doc_id, 1 AS fl
-                     FROM corpus JOIN bench USING (s)
-                     GROUP BY doc_id
-                     HAVING floor(count(*) / any_value(nsh) * 1000) / 1000
-                            >= 0.2),
-         surv AS (SELECT b.doc_id, b.source, b.ntok, b.text_md5
-                  FROM base b JOIN fc USING (dig) JOIN q USING (doc_id)
-                  LEFT JOIN flagged fg USING (doc_id)
-                  WHERE b.doc_id = fc.first_id AND q.keep = 1
-                    AND coalesce(fg.fl, 0) = 0 AND b.doc_id >= 20),
-         reg AS (SELECT DISTINCT md5(text) AS oo_dig FROM documents
-                 WHERE doc_id % 37 = 3),
-         dd AS (SELECT base.doc_id,
-                       CASE WHEN reg.oo_dig IS NOT NULL THEN 1 ELSE 0 END
-                         AS direct
-                FROM base LEFT JOIN reg ON reg.oo_dig = base.dig),
-         fam AS (SELECT dd.doc_id, dd.direct, cl.cluster_id
-                 FROM dd JOIN cl ON cl.doc_id = dd.doc_id),
-         fh AS (SELECT cluster_id, max(direct) AS hit FROM fam GROUP BY 1),
-         takedown AS (SELECT fam.doc_id FROM fam JOIN fh USING (cluster_id)
-                      WHERE fh.hit = 1),
+         $flagBlockCtes,
+         $survCte,
+         $takedownCtes,
          v1 AS (SELECT * FROM surv WHERE doc_id < 250),
          v2 AS (SELECT * FROM surv
                 WHERE doc_id NOT IN (SELECT doc_id FROM takedown)),
          dj AS (SELECT coalesce(v1.source, v2.source) AS source,
                        v1.doc_id AS id1, v2.doc_id AS id2,
                        v1.ntok AS ntok1, v2.ntok AS ntok2,
-                       v1.text_md5 AS md51, v2.text_md5 AS md52
+                       v1.dig AS md51, v2.dig AS md52
                 FROM v1 FULL OUTER JOIN v2 ON v1.doc_id = v2.doc_id)
          SELECT source,
                 CAST(sum(CASE WHEN id1 IS NOT NULL THEN 1 ELSE 0 END)
@@ -937,14 +897,7 @@ object Curation extends QueryPack {
     // threshold, propagated by one family-grain aggregate
     "q238_family_contamination" ->
       s"""WITH cl AS (${Dedup.q73ClustersOracleSql}),
-         sh3 AS (
-           SELECT doc_id,
-             list_distinct(CASE WHEN len(t) >= 3 THEN
-               [t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                for i in range(1, len(t) - 1)]
-             ELSE [] END) AS shingles
-           FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
-                 FROM documents)),
+         sh3 AS (${TextExprs.duckShingleSet("doc_id")}),
          bench3 AS (SELECT DISTINCT unnest(shingles) AS s FROM sh3
                     WHERE doc_id < 20),
          corpus3 AS (SELECT doc_id, len(shingles) AS nsh,
@@ -982,13 +935,7 @@ object Curation extends QueryPack {
            'https?://[^\s]+', '<URL>', 'g')) AS scrubbed_len
          FROM documents ORDER BY doc_id""",
     "q48_contamination" ->
-      """WITH sh AS (
-           SELECT doc_id,
-             list_distinct(CASE WHEN len(t) >= 3 THEN
-               [t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]
-             ELSE [] END) AS shingles
-           FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-                 FROM documents)),
+      s"""WITH sh AS (${TextExprs.duckShingleSet("doc_id")}),
          bench AS (SELECT DISTINCT unnest(shingles) AS s FROM sh WHERE doc_id < 20),
          corpus AS (SELECT doc_id, len(shingles) AS nsh, unnest(shingles) AS s
                     FROM sh WHERE doc_id >= 20)
@@ -1040,48 +987,13 @@ object Curation extends QueryPack {
                                 / sum((ntok + max_len - 1) // max_len
                                       * max_len)) / 1000 END AS waste_ratio
          FROM x GROUP BY max_len ORDER BY max_len""",
-    // q204: the q130 survivor CTEs + a digest registry; removal stated
+    // q204: the flag block's survivors + a digest registry; removal stated
     // as NOT EXISTS (content-level, so a duplicate of an opted-out doc
     // is removed too — though by stage s3 only digest-first copies
     // survive, the match is still by content, not id)
     "q204_optout_filter" ->
-      """WITH base AS (SELECT doc_id, source, md5(text) AS dig,
-                              len(string_split_regex(trim(text), '\s+')) AS ntok
-                       FROM documents),
-         fc AS (SELECT dig, min(doc_id) AS first_id FROM base GROUP BY dig),
-         t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
-               FROM documents),
-         f AS (SELECT doc_id, len(w) AS n,
-                      len(list_filter(w, x -> x IN ('a', 'the'))) AS ns,
-                      list_aggregate(list_transform(w, x -> length(x)), 'sum')
-                        AS sl
-               FROM t),
-         q AS (SELECT doc_id,
-                      CASE WHEN (0.1 + 0.015 * n + 3.0 * (ns / CAST(n AS DOUBLE))
-                                 - 0.25 * (sl / CAST(n AS DOUBLE))) > 0
-                           THEN 1 ELSE 0 END AS keep
-               FROM f),
-         sh AS (SELECT doc_id,
-                  list_distinct(CASE WHEN len(t) >= 3 THEN
-                    [t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                     for i in range(1, len(t) - 1)]
-                  ELSE [] END) AS shingles
-                FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-                      FROM documents)),
-         bench AS (SELECT DISTINCT unnest(shingles) AS s FROM sh
-                   WHERE doc_id < 20),
-         corpus AS (SELECT doc_id, len(shingles) AS nsh, unnest(shingles) AS s
-                    FROM sh WHERE doc_id >= 20),
-         flagged AS (SELECT doc_id, 1 AS fl
-                     FROM corpus JOIN bench USING (s)
-                     GROUP BY doc_id
-                     HAVING floor(count(*) / any_value(nsh) * 1000) / 1000
-                            >= 0.2),
-         surv AS (SELECT b.doc_id, b.source, b.dig, b.ntok
-                  FROM base b JOIN fc USING (dig) JOIN q USING (doc_id)
-                  LEFT JOIN flagged fg USING (doc_id)
-                  WHERE b.doc_id = fc.first_id AND q.keep = 1
-                    AND coalesce(fg.fl, 0) = 0 AND b.doc_id >= 20),
+      s"""WITH $flagBlockCtes,
+         $survCte,
          reg AS (SELECT DISTINCT md5(text) AS oo_dig FROM documents
                  WHERE doc_id % 37 = 3),
          mk AS (SELECT source, ntok,
@@ -1095,92 +1007,20 @@ object Curation extends QueryPack {
                 CAST(sum(ok) AS BIGINT) AS released_docs,
                 CAST(sum(ok * ntok) AS BIGINT) AS released_tokens
          FROM mk GROUP BY source ORDER BY source""",
-    // q188: q130's flag CTEs (with source carried) + the q120 split
-    // bucket + a content md5 — the full release recomputed from the raw
+    // q188: the flag block's survivors + the q120 split bucket + the
+    // content md5 (`dig`) — the full release recomputed from the raw
     // table against the written artifact's read-back
     "q188_release_export" ->
-      """WITH base AS (SELECT doc_id, source, md5(text) AS dig,
-                              md5(text) AS text_md5,
-                              len(string_split_regex(trim(text), '\s+')) AS ntok
-                       FROM documents),
-         fc AS (SELECT dig, min(doc_id) AS first_id FROM base GROUP BY dig),
-         t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
-               FROM documents),
-         f AS (SELECT doc_id, len(w) AS n,
-                      len(list_filter(w, x -> x IN ('a', 'the'))) AS ns,
-                      list_aggregate(list_transform(w, x -> length(x)), 'sum')
-                        AS sl
-               FROM t),
-         q AS (SELECT doc_id,
-                      CASE WHEN (0.1 + 0.015 * n + 3.0 * (ns / CAST(n AS DOUBLE))
-                                 - 0.25 * (sl / CAST(n AS DOUBLE))) > 0
-                           THEN 1 ELSE 0 END AS keep
-               FROM f),
-         sh AS (SELECT doc_id,
-                  list_distinct(CASE WHEN len(t) >= 3 THEN
-                    [t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                     for i in range(1, len(t) - 1)]
-                  ELSE [] END) AS shingles
-                FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-                      FROM documents)),
-         bench AS (SELECT DISTINCT unnest(shingles) AS s FROM sh
-                   WHERE doc_id < 20),
-         corpus AS (SELECT doc_id, len(shingles) AS nsh, unnest(shingles) AS s
-                    FROM sh WHERE doc_id >= 20),
-         flagged AS (SELECT doc_id, 1 AS fl
-                     FROM corpus JOIN bench USING (s)
-                     GROUP BY doc_id
-                     HAVING floor(count(*) / any_value(nsh) * 1000) / 1000
-                            >= 0.2),
-         surv AS (SELECT b.doc_id, b.source, b.ntok, b.text_md5
-                  FROM base b JOIN fc USING (dig) JOIN q USING (doc_id)
-                  LEFT JOIN flagged fg USING (doc_id)
-                  WHERE b.doc_id = fc.first_id AND q.keep = 1
-                    AND coalesce(fg.fl, 0) = 0 AND b.doc_id >= 20)
+      s"""WITH $flagBlockCtes,
+         $survCte
          SELECT doc_id,
-                CASE WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-                          AS BIGINT) % 100 < 80 THEN 'train'
-                     WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-                          AS BIGINT) % 100 < 90 THEN 'val'
-                     ELSE 'test' END AS split,
-                source, CAST(ntok AS BIGINT) AS ntok, text_md5
+                ${Curation3.splitSql("doc_id")} AS split,
+                source, CAST(ntok AS BIGINT) AS ntok, dig AS text_md5
          FROM surv ORDER BY doc_id""",
-    // all-integer funnel; q93's keep CTE and q48's flag CTE verbatim;
-    // the single division per output row is long/long → double in both
-    // engines
+    // all-integer funnel over the flag block; the single division per
+    // output row is long/long → double in both engines
     "q130_pipeline_funnel" ->
-      """WITH base AS (SELECT doc_id, md5(text) AS dig,
-                              len(string_split_regex(trim(text), '\s+')) AS ntok
-                       FROM documents),
-         fc AS (SELECT dig, min(doc_id) AS first_id FROM base GROUP BY dig),
-         t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
-               FROM documents),
-         f AS (SELECT doc_id, len(w) AS n,
-                      len(list_filter(w, x -> x IN ('a', 'the'))) AS ns,
-                      list_aggregate(list_transform(w, x -> length(x)), 'sum')
-                        AS sl
-               FROM t),
-         q AS (SELECT doc_id,
-                      CASE WHEN (0.1 + 0.015 * n + 3.0 * (ns / CAST(n AS DOUBLE))
-                                 - 0.25 * (sl / CAST(n AS DOUBLE))) > 0
-                           THEN 1 ELSE 0 END AS keep
-               FROM f),
-         sh AS (SELECT doc_id,
-                  list_distinct(CASE WHEN len(t) >= 3 THEN
-                    [t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                     for i in range(1, len(t) - 1)]
-                  ELSE [] END) AS shingles
-                FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-                      FROM documents)),
-         bench AS (SELECT DISTINCT unnest(shingles) AS s FROM sh
-                   WHERE doc_id < 20),
-         corpus AS (SELECT doc_id, len(shingles) AS nsh, unnest(shingles) AS s
-                    FROM sh WHERE doc_id >= 20),
-         flagged AS (SELECT doc_id, 1 AS fl
-                     FROM corpus JOIN bench USING (s)
-                     GROUP BY doc_id
-                     HAVING floor(count(*) / any_value(nsh) * 1000) / 1000
-                            >= 0.2),
+      s"""WITH $flagBlockCtes,
          flags AS (SELECT b.doc_id, b.ntok,
                           (b.doc_id = fc.first_id) AS s1,
                           (q.keep = 1) AS kq,
@@ -1204,40 +1044,9 @@ object Curation extends QueryPack {
                          WHERE stage_ord = 1) * 10000) / 10000
                   AS retained_frac
          FROM staged ORDER BY stage_ord""",
-    // the q130 flags CTEs aggregated by source instead of by stage
+    // the q130 flags aggregated by source instead of by stage
     "q132_source_scorecard" ->
-      """WITH base AS (SELECT doc_id, source, md5(text) AS dig,
-                              len(string_split_regex(trim(text), '\s+')) AS ntok
-                       FROM documents),
-         fc AS (SELECT dig, min(doc_id) AS first_id FROM base GROUP BY dig),
-         t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
-               FROM documents),
-         f AS (SELECT doc_id, len(w) AS n,
-                      len(list_filter(w, x -> x IN ('a', 'the'))) AS ns,
-                      list_aggregate(list_transform(w, x -> length(x)), 'sum')
-                        AS sl
-               FROM t),
-         q AS (SELECT doc_id,
-                      CASE WHEN (0.1 + 0.015 * n + 3.0 * (ns / CAST(n AS DOUBLE))
-                                 - 0.25 * (sl / CAST(n AS DOUBLE))) > 0
-                           THEN 1 ELSE 0 END AS keep
-               FROM f),
-         sh AS (SELECT doc_id,
-                  list_distinct(CASE WHEN len(t) >= 3 THEN
-                    [t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                     for i in range(1, len(t) - 1)]
-                  ELSE [] END) AS shingles
-                FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-                      FROM documents)),
-         bench AS (SELECT DISTINCT unnest(shingles) AS s FROM sh
-                   WHERE doc_id < 20),
-         corpus AS (SELECT doc_id, len(shingles) AS nsh, unnest(shingles) AS s
-                    FROM sh WHERE doc_id >= 20),
-         flagged AS (SELECT doc_id, 1 AS fl
-                     FROM corpus JOIN bench USING (s)
-                     GROUP BY doc_id
-                     HAVING floor(count(*) / any_value(nsh) * 1000) / 1000
-                            >= 0.2),
+      s"""WITH $flagBlockCtes,
          flags AS (SELECT b.doc_id, b.source,
                           (b.doc_id = fc.first_id) AS s1,
                           (q.keep = 1) AS kq,

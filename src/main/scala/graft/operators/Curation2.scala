@@ -687,12 +687,32 @@ object Curation2 extends QueryPack {
          SELECT rnk, doc_id, floor(score * 1000000) / 1000000 AS score
          FROM r WHERE rnk <= 10 ORDER BY rnk"""
 
-  override val oracles: Map[String, String] = Map(
-    // q241: the three signal CTEs (q93 / q119 / q142 verbatim chains),
-    // three per-source row_numbers in the heap-identical tie orders,
-    // exact-integer quantiles and fused sum
-    "q241_quality_ensemble" ->
-      """WITH ft AS (SELECT doc_id, source,
+  /** q93's token features: `t`, each doc's token list `w`, and `f`, its
+    * length `n`, stop-word count `ns` and summed token length `sl`. */
+  private[operators] val q93TokenCtes: String =
+    """t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
+                    FROM documents),
+         f AS (SELECT doc_id, len(w) AS n,
+                 len(list_filter(w, x -> x IN ('a', 'the'))) AS ns,
+                 list_aggregate(list_transform(w, x -> length(x)), 'sum') AS sl
+               FROM t)"""
+
+  /** q93's score over `fx` as the select columns `score` (floored to
+    * 1e-6) and `isc` (the same floor as an integer in 1e-6 units). */
+  private val q93ScoreCols: String =
+    """floor((0.1 + 0.015 * n + 3.0 * (ns / CAST(n AS DOUBLE))
+                              - 0.25 * (sl / CAST(n AS DOUBLE))) * 1000000)
+                         / 1000000 AS score,
+                       CAST(floor((0.1 + 0.015 * n
+                                   + 3.0 * (ns / CAST(n AS DOUBLE))
+                                   - 0.25 * (sl / CAST(n AS DOUBLE)))
+                                  * 1000000) AS BIGINT) AS isc"""
+
+  /** q93's per-doc quality features (token list `w`, length `n`,
+    * stop-word count `ns`, summed token length `sl`) keyed by doc_id and
+    * source — the shared head of the q237/q239/q241 oracles. */
+  private val q93FeatureCtes: String =
+    """ft AS (SELECT doc_id, source,
                             string_split_regex(trim(text), '\s+') AS w,
                             len(string_split_regex(trim(text), '\s+')) AS n
                   FROM documents),
@@ -700,7 +720,14 @@ object Curation2 extends QueryPack {
                        len(list_filter(w, x -> x IN ('a', 'the'))) AS ns,
                        list_aggregate(list_transform(w, x -> length(x)), 'sum')
                          AS sl
-                FROM ft),
+                FROM ft)"""
+
+  override val oracles: Map[String, String] = Map(
+    // q241: the three signal CTEs (q93 / q119 / q142 verbatim chains),
+    // three per-source row_numbers in the heap-identical tie orders,
+    // exact-integer quantiles and fused sum
+    "q241_quality_ensemble" ->
+      s"""WITH $q93FeatureCtes,
          s93 AS (SELECT doc_id, source,
                         CAST(floor((0.1 + 0.015 * n
                                     + 3.0 * (ns / CAST(n AS DOUBLE))
@@ -762,24 +789,8 @@ object Curation2 extends QueryPack {
     // q237: q93's score CTE + per-source rank in (isc, doc_id) order,
     // one floored quantile division
     "q237_score_normalize" ->
-      """WITH ft AS (SELECT doc_id, source,
-                            string_split_regex(trim(text), '\s+') AS w,
-                            len(string_split_regex(trim(text), '\s+')) AS n
-                  FROM documents),
-         fx AS (SELECT doc_id, source, n,
-                       len(list_filter(w, x -> x IN ('a', 'the'))) AS ns,
-                       list_aggregate(list_transform(w, x -> length(x)), 'sum')
-                         AS sl
-                FROM ft),
-         sc AS (SELECT doc_id, source,
-                       floor((0.1 + 0.015 * n + 3.0 * (ns / CAST(n AS DOUBLE))
-                              - 0.25 * (sl / CAST(n AS DOUBLE))) * 1000000)
-                         / 1000000 AS score,
-                       CAST(floor((0.1 + 0.015 * n
-                                   + 3.0 * (ns / CAST(n AS DOUBLE))
-                                   - 0.25 * (sl / CAST(n AS DOUBLE)))
-                                  * 1000000) AS BIGINT) AS isc
-                FROM fx),
+      s"""WITH $q93FeatureCtes,
+         sc AS (SELECT doc_id, source, $q93ScoreCols FROM fx),
          r AS (SELECT doc_id, source, score,
                       row_number() OVER (PARTITION BY source
                         ORDER BY isc, doc_id) AS src_rank
@@ -794,15 +805,7 @@ object Curation2 extends QueryPack {
     // q239: q69's integral-correlation sums over (length, score);
     // per-source rows + the pooled '__ALL' row, identical float shape
     "q239_length_bias" ->
-      """WITH ft AS (SELECT doc_id, source,
-                            string_split_regex(trim(text), '\s+') AS w,
-                            len(string_split_regex(trim(text), '\s+')) AS n
-                  FROM documents),
-         fx AS (SELECT doc_id, source, n,
-                       len(list_filter(w, x -> x IN ('a', 'the'))) AS ns,
-                       list_aggregate(list_transform(w, x -> length(x)), 'sum')
-                         AS sl
-                FROM ft),
+      s"""WITH $q93FeatureCtes,
          t AS (SELECT source, CAST(n AS BIGINT) AS x,
                       CAST(floor((0.1 + 0.015 * n
                                   + 3.0 * (ns / CAST(n AS DOUBLE))
@@ -828,24 +831,16 @@ object Curation2 extends QueryPack {
     // IEEE-lerp precedent); bins from the same floored scores, means
     // from exact integer sums (DuckDB lists are 1-indexed)
     "q210_curriculum_bins" ->
-      """WITH ft AS (SELECT doc_id,
-                            string_split_regex(trim(text), '\s+') AS w,
-                            len(string_split_regex(trim(text), '\s+')) AS n
+      s"""WITH ft AS (SELECT doc_id,
+                            string_split_regex(trim(text), '\\s+') AS w,
+                            len(string_split_regex(trim(text), '\\s+')) AS n
                   FROM documents),
          fx AS (SELECT doc_id, n,
                        len(list_filter(w, x -> x IN ('a', 'the'))) AS ns,
                        list_aggregate(list_transform(w, x -> length(x)), 'sum')
                          AS sl
                 FROM ft),
-         sc AS (SELECT doc_id, n,
-                       floor((0.1 + 0.015 * n + 3.0 * (ns / CAST(n AS DOUBLE))
-                              - 0.25 * (sl / CAST(n AS DOUBLE))) * 1000000)
-                         / 1000000 AS score,
-                       CAST(floor((0.1 + 0.015 * n
-                                   + 3.0 * (ns / CAST(n AS DOUBLE))
-                                   - 0.25 * (sl / CAST(n AS DOUBLE)))
-                                  * 1000000) AS BIGINT) AS isc
-                FROM fx),
+         sc AS (SELECT doc_id, n, $q93ScoreCols FROM fx),
          th AS (SELECT quantile_cont(score, [0.25, 0.5, 0.75]) AS t FROM sc),
          b AS (SELECT n, isc,
                       1 + (score > t[1])::INT + (score > t[2])::INT
@@ -860,25 +855,12 @@ object Curation2 extends QueryPack {
     // q42's argument) + q93's score integerized; neighbor means are
     // exact-integer sums closed with one single-rounded division
     "q207_quality_disagree" ->
-      """WITH sh AS (
-           SELECT doc_id,
-             list_distinct(CASE WHEN len(t) >= 3 THEN
-               [t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]
-             ELSE [] END) AS shingles
-           FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-                 FROM documents)),
-         ex AS (SELECT doc_id, len(shingles) AS sz, unnest(shingles) AS s
-                FROM sh),
-         pairs AS (
-           SELECT a.doc_id AS a_id, b.doc_id AS b_id, a.sz AS asz, b.sz AS bsz,
-                  count(*) AS common
-           FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-           GROUP BY 1, 2, 3, 4),
+      s"""WITH ${TextAnalysis.shinglePairCtes("pairs")},
          pr AS (SELECT a_id, b_id FROM pairs
                 WHERE common / (asz + bsz - common) >= 0.8),
          ed AS (SELECT a_id AS doc_id, b_id AS nbr FROM pr
                 UNION ALL SELECT b_id, a_id FROM pr),
-         ft AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
+         ft AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
                 FROM documents),
          fx AS (SELECT doc_id, len(w) AS n,
                        len(list_filter(w, x -> x IN ('a', 'the'))) AS ns,
@@ -942,12 +924,7 @@ object Curation2 extends QueryPack {
          SELECT source, rnk, doc_id, score FROM r WHERE rnk <= 3
          ORDER BY source, rnk""",
     "q93_quality_model" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
-                    FROM documents),
-         f AS (SELECT doc_id, len(w) AS n,
-                 len(list_filter(w, x -> x IN ('a', 'the'))) AS ns,
-                 list_aggregate(list_transform(w, x -> length(x)), 'sum') AS sl
-               FROM t)
+      s"""WITH $q93TokenCtes
          SELECT doc_id, CAST(n AS BIGINT) AS n_tokens,
                 floor((0.1 + 0.015 * n + 3.0 * (ns / CAST(n AS DOUBLE))
                        - 0.25 * (sl / CAST(n AS DOUBLE))) * 1000000) / 1000000 AS score,

@@ -133,6 +133,24 @@ object Curation3 extends QueryPack {
       .orderBy("doc_id")
   }
 
+  /** q120's split of the id column `c` as a Spark SQL expression: md5
+    * bucket (first 15 hex digits mod 100) < 80 train, < 90 val, else
+    * test. */
+  private[operators] def splitExpr(c: String): String =
+    s"""CASE WHEN cast(conv(substr(md5(cast($c as string)), 1, 15), 16, 10)
+                    as bigint) % 100 < 80 THEN 'train'
+              WHEN cast(conv(substr(md5(cast($c as string)), 1, 15), 16, 10)
+                    as bigint) % 100 < 90 THEN 'val'
+              ELSE 'test' END"""
+
+  /** [[splitExpr]] in DuckDB. */
+  private[operators] def splitSql(c: String): String =
+    s"""CASE WHEN CAST(('0x' || substr(md5(CAST($c AS VARCHAR)), 1, 15))
+                      AS BIGINT) % 100 < 80 THEN 'train'
+                WHEN CAST(('0x' || substr(md5(CAST($c AS VARCHAR)), 1, 15))
+                      AS BIGINT) % 100 < 90 THEN 'val'
+                ELSE 'test' END"""
+
   private def q120SplitAssign(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(col("doc_id"), col("source"))
@@ -155,15 +173,10 @@ object Curation3 extends QueryPack {
     * (recomputed, not joined — the split is a pure function of doc_id).
     * leaky = the pair crosses any split boundary. */
   private def q122SplitLeakage(s: SparkSession, d: String): DataFrame = {
-    def splitOf(c: String) = expr(
-      s"""CASE WHEN cast(conv(substr(md5(cast($c as string)), 1, 15), 16, 10)
-                    as bigint) % 100 < 80 THEN 'train'
-              WHEN cast(conv(substr(md5(cast($c as string)), 1, 15), 16, 10)
-                    as bigint) % 100 < 90 THEN 'val'
-              ELSE 'test' END""")
     Dedup.minhashLshPairsCore(s, d)
       .select(col("a_id"), col("b_id"),
-              splitOf("a_id").as("split_a"), splitOf("b_id").as("split_b"))
+              expr(splitExpr("a_id")).as("split_a"),
+              expr(splitExpr("b_id")).as("split_b"))
       .withColumn("leaky",
         when(col("split_a") =!= col("split_b"), 1L).otherwise(0L))
       .orderBy("a_id", "b_id")
@@ -244,27 +257,10 @@ object Curation3 extends QueryPack {
     * assignment argmax (ties: highest cosine, then highest c_id —
     * max(struct) order) + q93's score CTE verbatim + per-cell
     * row_number over the floored score. */
-  private def cbsOracleSql(cents: Array[Array[Double]]): String = {
-    val rows = cents.zipWithIndex.map { case (v, i) =>
-      s"($i, [${v.map(_.toString).mkString(", ")}]::DOUBLE[])"
-    }.mkString(",\n             ")
+  private def cbsOracleSql(cents: Array[Array[Double]]): String =
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        c AS (SELECT * FROM (VALUES
-             $rows) AS t(c_id, cv)),
-        sc AS (SELECT e.vec_id, c.c_id,
-                      list_cosine_similarity(e.v, c.cv) AS cc FROM e, c),
-        asg AS (SELECT vec_id, c_id AS centroid FROM (
-                  SELECT vec_id, c_id,
-                         row_number() OVER (PARTITION BY vec_id
-                           ORDER BY cc DESC, c_id DESC) AS rn FROM sc)
-                WHERE rn = 1),
-        t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
-              FROM documents),
-        f AS (SELECT doc_id, len(w) AS n,
-                     len(list_filter(w, x -> x IN ('a', 'the'))) AS ns,
-                     list_aggregate(list_transform(w, x -> length(x)), 'sum')
-                       AS sl
-              FROM t),
+        ${Similarity.literalAssignCtes(cents)},
+        ${Curation2.q93TokenCtes},
         q AS (SELECT doc_id,
                      floor((0.1 + 0.015 * n + 3.0 * (ns / CAST(n AS DOUBLE))
                             - 0.25 * (sl / CAST(n AS DOUBLE))) * 1000000)
@@ -278,7 +274,6 @@ object Curation3 extends QueryPack {
         SELECT CAST(centroid AS BIGINT) AS centroid,
                CAST(rnk AS BIGINT) AS cell_rank, doc_id, score
         FROM r WHERE rnk <= $cbsM ORDER BY centroid, cell_rank"""
-  }
 
   override val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q119_lm_score" -> q119LmScore _,
@@ -356,29 +351,19 @@ object Curation3 extends QueryPack {
                       * 1000000) / 1000000 AS nll
          FROM folded ORDER BY doc_id""",
     "q120_split_assign" ->
-      """SELECT doc_id, source,
+      s"""SELECT doc_id, source,
                 CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
                      AS BIGINT) % 100 AS bucket,
-                CASE WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-                          AS BIGINT) % 100 < 80 THEN 'train'
-                     WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-                          AS BIGINT) % 100 < 90 THEN 'val'
-                     ELSE 'test' END AS split
+                ${splitSql("doc_id")} AS split
          FROM documents ORDER BY doc_id""",
     // q42's exact pair SQL (recall 1) closed with the same per-id split
     // bucket function on both pair members
     "q122_split_leakage" -> {
-      def splitOf(c: String) =
-        s"""CASE WHEN CAST(('0x' || substr(md5(CAST($c AS VARCHAR)), 1, 15))
-                      AS BIGINT) % 100 < 80 THEN 'train'
-                WHEN CAST(('0x' || substr(md5(CAST($c AS VARCHAR)), 1, 15))
-                      AS BIGINT) % 100 < 90 THEN 'val'
-                ELSE 'test' END"""
       s"""WITH pairs AS (SELECT a_id, b_id
                          FROM (${Dedup.oracles("q42_minhash_lsh")})),
           sp AS (SELECT a_id, b_id,
-                        ${splitOf("a_id")} AS split_a,
-                        ${splitOf("b_id")} AS split_b
+                        ${splitSql("a_id")} AS split_a,
+                        ${splitSql("b_id")} AS split_b
                  FROM pairs)
           SELECT a_id, b_id, split_a, split_b,
                  CAST(CASE WHEN split_a <> split_b THEN 1 ELSE 0 END

@@ -975,30 +975,31 @@ object Dedup extends QueryPack {
       .orderBy("doc_id")
   }
 
+  /** The recursive closure over the exact near-dup pairs (q35's pair SQL
+    * at Jaccard >= 0.8): `reach` holds (id, r) for every doc r reaches,
+    * so min(r) per id is its cluster id. Needs `WITH RECURSIVE`. */
+  private val reachCtes: String =
+    s"""${TextAnalysis.shinglePairCtes("p")},
+         pairs AS (SELECT a_id, b_id FROM p
+                   WHERE common / (asz + bsz - common) >= 0.8),
+         ${closureCtes("SELECT doc_id AS id, doc_id AS r FROM documents")}"""
+
+  /** The transitive closure over an undirected pair relation `pairs`
+    * (a_id, b_id): `edges` both ways, and `reach` (id, r) holding every
+    * seed row of `nodes` (id, r = id) and every id its node reaches —
+    * min(r) per id is the component minimum. Needs `WITH RECURSIVE`. */
+  private[operators] def closureCtes(nodes: String): String =
+    s"""edges AS (SELECT a_id AS src, b_id AS dst FROM pairs
+                   UNION ALL SELECT b_id, a_id FROM pairs),
+         reach AS (
+           $nodes
+           UNION
+           SELECT e.dst AS id, reach.r FROM reach JOIN edges e ON e.src = reach.id)"""
+
   /** q73's oracle — the exact-Jaccard pair set closed with the recursive
     * CTE; hoisted so q181's accounting oracle composes it verbatim. */
   private[operators] val q73ClustersOracleSql: String =
-    """WITH RECURSIVE sh AS (
-           SELECT doc_id,
-             list_distinct(CASE WHEN len(t) >= 3 THEN
-               [t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]
-             ELSE [] END) AS shingles
-           FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-                 FROM documents)),
-         ex AS (SELECT doc_id, len(shingles) AS sz, unnest(shingles) AS s FROM sh),
-         p AS (
-           SELECT a.doc_id AS a_id, b.doc_id AS b_id, a.sz AS asz, b.sz AS bsz,
-                  count(*) AS common
-           FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-           GROUP BY 1, 2, 3, 4),
-         pairs AS (SELECT a_id, b_id FROM p
-                   WHERE common / (asz + bsz - common) >= 0.8),
-         edges AS (SELECT a_id AS src, b_id AS dst FROM pairs
-                   UNION ALL SELECT b_id, a_id FROM pairs),
-         reach AS (
-           SELECT doc_id AS id, doc_id AS r FROM documents
-           UNION
-           SELECT e.dst AS id, reach.r FROM reach JOIN edges e ON e.src = reach.id)
+    s"""WITH RECURSIVE $reachCtes
          SELECT id AS doc_id, min(r) AS cluster_id,
                 CAST(CASE WHEN min(r) = id THEN 1 ELSE 0 END AS BIGINT) AS keep
          FROM reach GROUP BY id ORDER BY doc_id"""
@@ -1707,52 +1708,46 @@ object Dedup extends QueryPack {
   // q42's oracle is the EXACT pair set (LSH + exact verification ≡ exact
   // join at recall 1; see scaladoc). q43's oracle recomputes the identical
   // md5-based signature in DuckDB (bit-exact integer arithmetic).
+  /** q100's oracle: q35's exact pair SQL restricted to cross-side
+    * pairs a_id < 250 <= b_id (corpus x batch). */
+  private val crossSideJaccardOracleSql: String =
+    s"""WITH sh AS (${TextExprs.duckShingleSet("doc_id")}),
+         ex AS (SELECT doc_id, len(shingles) AS sz, unnest(shingles) AS s FROM sh),
+         pairs AS (
+           SELECT a.doc_id AS a_id, b.doc_id AS b_id, a.sz AS asz, b.sz AS bsz,
+                  count(*) AS common
+           FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < 250 AND b.doc_id >= 250
+           GROUP BY 1, 2, 3, 4)
+         SELECT a_id, b_id,
+                floor(common / (asz + bsz - common) * 1000) / 1000 AS jaccard
+         FROM pairs
+         WHERE common / (asz + bsz - common) >= 0.8
+         ORDER BY a_id, b_id"""
+
+  /** q88's candidate pairs: customers sharing a one-deletion name
+    * variant `v`, as `cand` (a_id < b_id, both names). */
+  private val fuzzyCandCtes: String =
+    """v AS (
+           SELECT c_custkey AS id, c_name AS name,
+                  unnest(list_append(
+                    [substr(c_name, 1, i - 1) || substr(c_name, i + 1)
+                     for i in range(1, len(c_name) + 1)],
+                    c_name)) AS variant
+           FROM customer),
+         cand AS (SELECT DISTINCT a.id AS a_id, b.id AS b_id,
+                         a.name AS a_name, b.name AS b_name
+                  FROM v a JOIN v b ON a.variant = b.variant AND a.id < b.id)"""
+
   override val oracles: Map[String, String] = Map(
     "q42_minhash_lsh" -> TextAnalysis.oracles("q35_ngram_jaccard"),
     // q100: exact cross-side (corpus x batch) inverted-index closure —
     // q35's shape restricted to a_id < 250 <= b_id; LSH recall at the
     // 0.8 verify threshold makes the answers identical (q42's argument).
-    "q100_incremental_neardup" ->
-      """WITH sh AS (
-           SELECT doc_id,
-             list_distinct(CASE WHEN len(t) >= 3 THEN
-               [t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]
-             ELSE [] END) AS shingles
-           FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-                 FROM documents)),
-         ex AS (SELECT doc_id, len(shingles) AS sz, unnest(shingles) AS s FROM sh),
-         pairs AS (
-           SELECT a.doc_id AS a_id, b.doc_id AS b_id, a.sz AS asz, b.sz AS bsz,
-                  count(*) AS common
-           FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < 250 AND b.doc_id >= 250
-           GROUP BY 1, 2, 3, 4)
-         SELECT a_id, b_id,
-                floor(common / (asz + bsz - common) * 1000) / 1000 AS jaccard
-         FROM pairs
-         WHERE common / (asz + bsz - common) >= 0.8
-         ORDER BY a_id, b_id""",
+    "q100_incremental_neardup" -> crossSideJaccardOracleSql,
     // q108: the persisted-index probe is value-identical to the direct
     // cross-side join (same postings, same exact verification), so q100's
     // exact SQL certifies the index layout + probe path too
-    "q108_neardup_indexed" ->
-      """WITH sh AS (
-           SELECT doc_id,
-             list_distinct(CASE WHEN len(t) >= 3 THEN
-               [t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]
-             ELSE [] END) AS shingles
-           FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-                 FROM documents)),
-         ex AS (SELECT doc_id, len(shingles) AS sz, unnest(shingles) AS s FROM sh),
-         pairs AS (
-           SELECT a.doc_id AS a_id, b.doc_id AS b_id, a.sz AS asz, b.sz AS bsz,
-                  count(*) AS common
-           FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < 250 AND b.doc_id >= 250
-           GROUP BY 1, 2, 3, 4)
-         SELECT a_id, b_id,
-                floor(common / (asz + bsz - common) * 1000) / 1000 AS jaccard
-         FROM pairs
-         WHERE common / (asz + bsz - common) >= 0.8
-         ORDER BY a_id, b_id""",
+    "q108_neardup_indexed" -> crossSideJaccardOracleSql,
     "q43_simhash" ->
       """WITH t AS (SELECT doc_id,
              [CAST(('0x' || substr(md5(tok), 1, 15)) AS BIGINT)
@@ -1789,40 +1784,17 @@ object Dedup extends QueryPack {
     // q88: identical deletion-variant candidate generation + levenshtein
     // verify (same edit-distance definition both engines; names ASCII).
     "q88_fuzzy_join" ->
-      """WITH v AS (
-           SELECT c_custkey AS id, c_name AS name,
-                  unnest(list_append(
-                    [substr(c_name, 1, i - 1) || substr(c_name, i + 1)
-                     for i in range(1, len(c_name) + 1)],
-                    c_name)) AS variant
-           FROM customer),
-         cand AS (SELECT DISTINCT a.id AS a_id, b.id AS b_id,
-                         a.name AS a_name, b.name AS b_name
-                  FROM v a JOIN v b ON a.variant = b.variant AND a.id < b.id)
+      s"""WITH $fuzzyCandCtes
          SELECT a_id, b_id, CAST(levenshtein(a_name, b_name) AS BIGINT) AS dist
          FROM cand WHERE levenshtein(a_name, b_name) <= 1
          ORDER BY a_id, b_id""",
     // q89: q88's pair SQL closed transitively with the q73 recursive CTE;
     // entity id = component minimum (what min-label propagation converges to).
     "q89_entity_resolution" ->
-      """WITH RECURSIVE v AS (
-           SELECT c_custkey AS id, c_name AS name,
-                  unnest(list_append(
-                    [substr(c_name, 1, i - 1) || substr(c_name, i + 1)
-                     for i in range(1, len(c_name) + 1)],
-                    c_name)) AS variant
-           FROM customer),
-         cand AS (SELECT DISTINCT a.id AS a_id, b.id AS b_id,
-                         a.name AS a_name, b.name AS b_name
-                  FROM v a JOIN v b ON a.variant = b.variant AND a.id < b.id),
+      s"""WITH RECURSIVE $fuzzyCandCtes,
          pairs AS (SELECT a_id, b_id FROM cand
                    WHERE levenshtein(a_name, b_name) <= 1),
-         edges AS (SELECT a_id AS src, b_id AS dst FROM pairs
-                   UNION ALL SELECT b_id, a_id FROM pairs),
-         reach AS (
-           SELECT c_custkey AS id, c_custkey AS r FROM customer
-           UNION
-           SELECT e.dst AS id, reach.r FROM reach JOIN edges e ON e.src = reach.id)
+         ${closureCtes("SELECT c_custkey AS id, c_custkey AS r FROM customer")}
          SELECT id AS c_custkey, min(r) AS entity_id,
                 CAST(CASE WHEN min(r) = id THEN 1 ELSE 0 END AS BIGINT) AS canonical
          FROM reach GROUP BY id ORDER BY c_custkey""",
@@ -1834,15 +1806,7 @@ object Dedup extends QueryPack {
     // 0.5, threshold doubles (never bare decimals), and the SAME
     // repeated-squaring S-curve expression tree
     "q242_lsh_recall" -> {
-      s"""WITH t0 AS (SELECT doc_id, string_split_regex(trim(text), '\\s+')
-                        AS tk
-                      FROM documents),
-         sh AS (SELECT doc_id,
-             list_distinct(CASE WHEN len(tk) >= 3 THEN
-               [tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]
-                for i in range(1, len(tk) - 1)]
-             ELSE [] END) AS shingles
-           FROM t0),
+      s"""WITH sh AS (${TextExprs.duckShingleSet("doc_id")}),
          s2 AS (SELECT doc_id, shingles FROM sh WHERE len(shingles) > 0),
          ex AS (SELECT doc_id, len(shingles) AS sz, unnest(shingles) AS s
                 FROM s2),
@@ -1885,13 +1849,7 @@ object Dedup extends QueryPack {
          ORDER BY threshold"""
     },
     "q79_minhash_est" ->
-      s"""WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS tk
-                    FROM documents),
-         sh AS (SELECT doc_id,
-             list_distinct(CASE WHEN len(tk) >= 3 THEN
-               [tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] for i in range(1, len(tk) - 1)]
-             ELSE [] END) AS shingles
-           FROM t),
+      s"""WITH sh AS (${TextExprs.duckShingleSet("doc_id")}),
          s2 AS (SELECT doc_id, shingles FROM sh WHERE len(shingles) > 0),
          ex0 AS (SELECT doc_id, unnest(shingles) AS s FROM s2),
          -- the declared df cut (q79DfCap): boilerplate shingles (df > cap)
@@ -1918,31 +1876,12 @@ object Dedup extends QueryPack {
          JOIN sig b ON b.doc_id = cand.b_id
          ORDER BY a_id, b_id""",
     // q73: connected components via a recursive transitive closure over
-    // the exact near-dup pair set (q35's pair SQL inlined) — cluster id is
-    // the component minimum, exactly what min-label propagation converges to.
+    // the exact near-dup pair set (q35's pair SQL, `reachCtes`) — cluster
+    // id is the component minimum, exactly what min-label propagation
+    // converges to.
     // q101: q73's closure aggregated to the family-size histogram.
     "q101_cluster_sizes" ->
-      """WITH RECURSIVE sh AS (
-           SELECT doc_id,
-             list_distinct(CASE WHEN len(t) >= 3 THEN
-               [t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]
-             ELSE [] END) AS shingles
-           FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-                 FROM documents)),
-         ex AS (SELECT doc_id, len(shingles) AS sz, unnest(shingles) AS s FROM sh),
-         p AS (
-           SELECT a.doc_id AS a_id, b.doc_id AS b_id, a.sz AS asz, b.sz AS bsz,
-                  count(*) AS common
-           FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-           GROUP BY 1, 2, 3, 4),
-         pairs AS (SELECT a_id, b_id FROM p
-                   WHERE common / (asz + bsz - common) >= 0.8),
-         edges AS (SELECT a_id AS src, b_id AS dst FROM pairs
-                   UNION ALL SELECT b_id, a_id FROM pairs),
-         reach AS (
-           SELECT doc_id AS id, doc_id AS r FROM documents
-           UNION
-           SELECT e.dst AS id, reach.r FROM reach JOIN edges e ON e.src = reach.id),
+      s"""WITH RECURSIVE $reachCtes,
          lbl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
          cs AS (SELECT cluster_id, count(*) AS cluster_size FROM lbl GROUP BY cluster_id)
          SELECT cluster_size, count(*) AS n_clusters,
@@ -1952,27 +1891,7 @@ object Dedup extends QueryPack {
     // q164: q73's closure joined to source tiers; the lexicographic
     // (tier, id) minimum replicated as a window rank
     "q164_priority_survivor" ->
-      """WITH RECURSIVE sh AS (
-           SELECT doc_id,
-             list_distinct(CASE WHEN len(t) >= 3 THEN
-               [t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]
-             ELSE [] END) AS shingles
-           FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-                 FROM documents)),
-         ex AS (SELECT doc_id, len(shingles) AS sz, unnest(shingles) AS s FROM sh),
-         p AS (
-           SELECT a.doc_id AS a_id, b.doc_id AS b_id, a.sz AS asz, b.sz AS bsz,
-                  count(*) AS common
-           FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-           GROUP BY 1, 2, 3, 4),
-         pairs AS (SELECT a_id, b_id FROM p
-                   WHERE common / (asz + bsz - common) >= 0.8),
-         edges AS (SELECT a_id AS src, b_id AS dst FROM pairs
-                   UNION ALL SELECT b_id, a_id FROM pairs),
-         reach AS (
-           SELECT doc_id AS id, doc_id AS r FROM documents
-           UNION
-           SELECT e.dst AS id, reach.r FROM reach JOIN edges e ON e.src = reach.id),
+      s"""WITH RECURSIVE $reachCtes,
          lbl AS (SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id),
          t AS (SELECT doc_id,
                       CAST(CAST(source[4:] AS INT) // 7 AS BIGINT) AS tier
@@ -2065,14 +1984,7 @@ object Dedup extends QueryPack {
     // rank-1 negative under the cluster closure — the composed table
     "q235_triplets" ->
       s"""WITH cl AS ($q73ClustersOracleSql),
-         sh2 AS (
-           SELECT doc_id,
-             list_distinct(CASE WHEN len(t) >= 3 THEN
-               [t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                for i in range(1, len(t) - 1)]
-             ELSE [] END) AS shingles
-           FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
-                 FROM documents)),
+         sh2 AS (${TextExprs.duckShingleSet("doc_id")}),
          ex2 AS (SELECT doc_id, len(shingles) AS sz, unnest(shingles) AS s
                  FROM sh2),
          pairs2 AS (

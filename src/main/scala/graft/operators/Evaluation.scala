@@ -484,12 +484,7 @@ object Evaluation extends QueryPack {
     * cross-engine rather than asserting it. Scale shape: id-only probes
     * of two memoized relations plus per-row hash buckets. */
   private def q282PreferenceLeakage(s: SparkSession, d: String): DataFrame = {
-    def splitOf(c: String) = expr(
-      s"""CASE WHEN cast(conv(substr(md5(cast($c as string)), 1, 15), 16, 10)
-                    as bigint) % 100 < 80 THEN 'train'
-              WHEN cast(conv(substr(md5(cast($c as string)), 1, 15), 16, 10)
-                    as bigint) % 100 < 90 THEN 'val'
-              ELSE 'test' END""")
+    def splitOf(c: String) = expr(Curation3.splitExpr(c))
     val asg = Dedup.clusterAssignmentOf(s, d).select(col("doc_id"), col("cluster_id"))
     val pairs = Dedup.minhashLshPairsCore(s, d)
       .filter(col("a_id") % 3 === 0 && col("b_id") % 3 === 0)
@@ -907,16 +902,22 @@ object Evaluation extends QueryPack {
                     ELSE 'T' END AS r2
              FROM pa JOIN pb USING (r))"""
 
-  /** The record-grain margin CTE chain shared by the q283/q284 oracles —
-    * mirrors [[prefMargins]] expression for expression. */
-  private val prefMarginSql: String =
-    """WITH t AS (SELECT doc_id, source,
+  /** The per-doc preference features (token list `w`, length `n`,
+    * stop-word count `ns`, summed token length `sl`) with source — the
+    * head of the q283/q284/q288 oracles. */
+  private val prefFeatureCtes: String =
+    """t AS (SELECT doc_id, source,
                          string_split_regex(trim(text), '\s+') AS w
                   FROM documents),
        f AS (SELECT doc_id, source, len(w) AS n,
                     len(list_filter(w, x -> x IN ('a', 'the'))) AS ns,
                     list_sum(list_transform(w, x -> length(x))) AS sl
-             FROM t),
+             FROM t)"""
+
+  /** The record-grain margin CTE chain shared by the q283/q284 oracles —
+    * mirrors [[prefMargins]] expression for expression. */
+  private val prefMarginSql: String =
+    s"""WITH $prefFeatureCtes,
        pa AS (SELECT (doc_id - 1) // 3 AS r,
                      0.015 * n + 3.0 * (ns / CAST(n AS DOUBLE))
                      - 0.25 * (sl / CAST(n AS DOUBLE)) AS ma,
@@ -942,12 +943,24 @@ object Evaluation extends QueryPack {
   private val benfordValuesSql: String =
     benfordPpm.map { case (d, p) => s"($d, $p)" }.mkString(", ")
 
-  override val oracles: Map[String, String] = Map(
-    // q294: the q287 feature/group CTEs, the exact integer disagreement
-    // band, a per-group first-rejection min, and the survival rollup as
-    // conditional sums over the first-rejection histogram
-    "q294_specdecode_accept" ->
-      s"""WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
+  /** q268/q277's label CTE over Curation's flag block: per doc the
+    * score column `score` (an expression over `q.score`) and y = 1 iff
+    * the doc survives the pipeline (digest-first, quality-kept,
+    * uncontaminated, non-benchmark). */
+  private def labCte(score: String): String =
+    s"""lab AS (SELECT b.doc_id,
+                        $score,
+                        CASE WHEN b.doc_id = fc.first_id AND q.keep = 1
+                                  AND coalesce(fg.fl, 0) = 0
+                                  AND b.doc_id >= 20
+                             THEN 1 ELSE 0 END AS y
+                 FROM base b JOIN fc USING (dig) JOIN q USING (doc_id)
+                 LEFT JOIN flagged fg USING (doc_id))"""
+
+  /** q287's feature CTEs: the integerized score `ip` of each doc in
+    * [[bonN]]-wide groups `g` at position `pos`. */
+  private val bonScoreCtes: String =
+    s"""t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
                      FROM documents WHERE source IS NOT NULL),
          f AS (SELECT doc_id, len(w) AS n,
                       len(list_filter(w, x -> x IN ('a', 'the'))) AS ns,
@@ -957,7 +970,14 @@ object Evaluation extends QueryPack {
                        CAST(round((0.015 * n + 3.0 * (ns / CAST(n AS DOUBLE))
                                    - 0.25 * (sl / CAST(n AS DOUBLE))) * 1000000)
                          AS BIGINT) AS ip
-                FROM f),
+                FROM f)"""
+
+  override val oracles: Map[String, String] = Map(
+    // q294: the q287 feature/group CTEs, the exact integer disagreement
+    // band, a per-group first-rejection min, and the survival rollup as
+    // conditional sums over the first-rejection histogram
+    "q294_specdecode_accept" ->
+      s"""WITH $bonScoreCtes,
          a AS (SELECT g, pos,
                       NOT (ip > -100000 AND ip <= 0) AS acc
                FROM sc),
@@ -983,17 +1003,7 @@ object Evaluation extends QueryPack {
     // as a per-group rank (ip DESC, pos ASC — the k=2 heap's total
     // order), exact integer margins and integer-division closers
     "q287_bestofn_audit" ->
-      s"""WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
-                     FROM documents WHERE source IS NOT NULL),
-         f AS (SELECT doc_id, len(w) AS n,
-                      len(list_filter(w, x -> x IN ('a', 'the'))) AS ns,
-                      list_sum(list_transform(w, x -> length(x))) AS sl
-               FROM t),
-         sc AS (SELECT doc_id // $bonN AS g, doc_id % $bonN AS pos,
-                       CAST(round((0.015 * n + 3.0 * (ns / CAST(n AS DOUBLE))
-                                   - 0.25 * (sl / CAST(n AS DOUBLE))) * 1000000)
-                         AS BIGINT) AS ip
-                FROM f),
+      s"""WITH $bonScoreCtes,
          fg AS (SELECT g FROM sc GROUP BY g HAVING count(*) = $bonN),
          r AS (SELECT g, pos, ip,
                       row_number() OVER (PARTITION BY g
@@ -1014,13 +1024,7 @@ object Evaluation extends QueryPack {
     // the bounded squashing map stated verbatim, then q268's exact-
     // integer bin/acc/conf/ECE arithmetic per source
     "q288_reward_calibration" ->
-      """WITH t AS (SELECT doc_id, source,
-                           string_split_regex(trim(text), '\s+') AS w
-                    FROM documents),
-         f AS (SELECT doc_id, source, len(w) AS n,
-                      len(list_filter(w, x -> x IN ('a', 'the'))) AS ns,
-                      list_sum(list_transform(w, x -> length(x))) AS sl
-               FROM t),
+      s"""WITH $prefFeatureCtes,
          pa AS (SELECT (doc_id - 1) // 3 AS r, n AS na, ns AS nsa,
                        0.015 * n + 3.0 * (ns / CAST(n AS DOUBLE))
                        - 0.25 * (sl / CAST(n AS DOUBLE)) AS ma,
@@ -1259,12 +1263,6 @@ object Evaluation extends QueryPack {
     // recursive cluster closure (the q124 composition), both split
     // hashes spelled with the shared md5 bucket function
     "q282_preference_leakage" -> {
-      def splitOf(c: String) =
-        s"""CASE WHEN CAST(('0x' || substr(md5(CAST($c AS VARCHAR)), 1, 15))
-                      AS BIGINT) % 100 < 80 THEN 'train'
-                WHEN CAST(('0x' || substr(md5(CAST($c AS VARCHAR)), 1, 15))
-                      AS BIGINT) % 100 < 90 THEN 'val'
-                ELSE 'test' END"""
       s"""WITH prs AS (SELECT a_id, b_id
                        FROM (${Dedup.oracles("q42_minhash_lsh")})
                        WHERE a_id % 3 = 0 AND b_id % 3 = 0),
@@ -1275,11 +1273,11 @@ object Evaluation extends QueryPack {
                FROM prs p JOIN asg ca ON p.a_id = ca.doc_id
                           JOIN asg cb ON p.b_id = cb.doc_id),
          pagg AS (SELECT count(*) AS n_neardup_prompt_pairs,
-                    COALESCE(CAST(sum(CASE WHEN ${splitOf("ra")}
-                             <> ${splitOf("rb")} THEN 1 ELSE 0 END)
+                    COALESCE(CAST(sum(CASE WHEN ${Curation3.splitSql("ra")}
+                             <> ${Curation3.splitSql("rb")} THEN 1 ELSE 0 END)
                       AS BIGINT), 0) AS leak_naive,
-                    COALESCE(CAST(sum(CASE WHEN ${splitOf("ca")}
-                             <> ${splitOf("cb")} THEN 1 ELSE 0 END)
+                    COALESCE(CAST(sum(CASE WHEN ${Curation3.splitSql("ca")}
+                             <> ${Curation3.splitSql("cb")} THEN 1 ELSE 0 END)
                       AS BIGINT), 0) AS leak_cluster
                   FROM j),
          rec AS (SELECT count(*) AS n_records
@@ -1325,55 +1323,12 @@ object Evaluation extends QueryPack {
                      ELSE (1000000 // frel) / CAST(1000000 AS DOUBLE)
                 END AS mrr
          FROM ag ORDER BY query_id""",
-    // label CTEs (base/fc/t/f/q/sh/bench/corpus/flagged) are the
-    // q204/q130-family flag block VERBATIM — the oracle recomputes the
-    // same pipeline verdict those gates certify
+    // label CTEs: Curation's q130 flag block — the oracle recomputes
+    // the same pipeline verdict those gates certify
     "q268_calibration" ->
-      """WITH base AS (SELECT doc_id, source, md5(text) AS dig,
-                              len(string_split_regex(trim(text), '\s+')) AS ntok
-                       FROM documents),
-         fc AS (SELECT dig, min(doc_id) AS first_id FROM base GROUP BY dig),
-         t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
-               FROM documents),
-         f AS (SELECT doc_id, len(w) AS n,
-                      len(list_filter(w, x -> x IN ('a', 'the'))) AS ns,
-                      list_aggregate(list_transform(w, x -> length(x)), 'sum')
-                        AS sl
-               FROM t),
-         q AS (SELECT doc_id,
-                      CASE WHEN (0.1 + 0.015 * n + 3.0 * (ns / CAST(n AS DOUBLE))
-                                 - 0.25 * (sl / CAST(n AS DOUBLE))) > 0
-                           THEN 1 ELSE 0 END AS keep,
-                      floor((0.1 + 0.015 * n + 3.0 * (ns / CAST(n AS DOUBLE))
-                             - 0.25 * (sl / CAST(n AS DOUBLE))) * 1e6) / 1e6
-                        AS score
-               FROM f),
-         sh AS (SELECT doc_id,
-                  list_distinct(CASE WHEN len(t) >= 3 THEN
-                    [t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                     for i in range(1, len(t) - 1)]
-                  ELSE [] END) AS shingles
-                FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-                      FROM documents)),
-         bench AS (SELECT DISTINCT unnest(shingles) AS s FROM sh
-                   WHERE doc_id < 20),
-         corpus AS (SELECT doc_id, len(shingles) AS nsh, unnest(shingles) AS s
-                    FROM sh WHERE doc_id >= 20),
-         flagged AS (SELECT doc_id, 1 AS fl
-                     FROM corpus JOIN bench USING (s)
-                     GROUP BY doc_id
-                     HAVING floor(count(*) / any_value(nsh) * 1000) / 1000
-                            >= 0.2),
-         lab AS (SELECT b.doc_id,
-                        least(1000000, greatest(0,
-                          CAST(round((q.score + 1) / 2 * 1000000) AS BIGINT)))
-                          AS ip,
-                        CASE WHEN b.doc_id = fc.first_id AND q.keep = 1
-                                  AND coalesce(fg.fl, 0) = 0
-                                  AND b.doc_id >= 20
-                             THEN 1 ELSE 0 END AS y
-                 FROM base b JOIN fc USING (dig) JOIN q USING (doc_id)
-                 LEFT JOIN flagged fg USING (doc_id)),
+      s"""WITH ${Curation.flagBlockCtes},
+         ${labCte("least(1000000, greatest(0, CAST(round((q.score + 1) / 2 " +
+                  "* 1000000) AS BIGINT))) AS ip")},
          bins AS (SELECT least(9, ip // 100000) AS bin,
                          count(*) AS n_docs,
                          CAST(sum(y) AS BIGINT) AS n_pos,
@@ -1391,53 +1346,12 @@ object Evaluation extends QueryPack {
                 floor(CAST(ab.sconf AS DOUBLE) / ab.n_docs) / 1000000 AS conf,
                 (tot.sdiff // tot.nn) / CAST(1000000 AS DOUBLE) AS ece
          FROM ab, tot ORDER BY ab.bin""",
-    // q277: the q268 flag/score CTE chain verbatim through `lab` (raw
+    // q277: the q268 flag/score CTE chain through `lab` (raw
     // integerized score instead of the clamped confidence), then the
     // tie-aware rank-sum sweep over the distinct-score grain
     "q277_auc" ->
-      """WITH base AS (SELECT doc_id, source, md5(text) AS dig,
-                              len(string_split_regex(trim(text), '\s+')) AS ntok
-                       FROM documents),
-         fc AS (SELECT dig, min(doc_id) AS first_id FROM base GROUP BY dig),
-         t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
-               FROM documents),
-         f AS (SELECT doc_id, len(w) AS n,
-                      len(list_filter(w, x -> x IN ('a', 'the'))) AS ns,
-                      list_aggregate(list_transform(w, x -> length(x)), 'sum')
-                        AS sl
-               FROM t),
-         q AS (SELECT doc_id,
-                      CASE WHEN (0.1 + 0.015 * n + 3.0 * (ns / CAST(n AS DOUBLE))
-                                 - 0.25 * (sl / CAST(n AS DOUBLE))) > 0
-                           THEN 1 ELSE 0 END AS keep,
-                      floor((0.1 + 0.015 * n + 3.0 * (ns / CAST(n AS DOUBLE))
-                             - 0.25 * (sl / CAST(n AS DOUBLE))) * 1e6) / 1e6
-                        AS score
-               FROM f),
-         sh AS (SELECT doc_id,
-                  list_distinct(CASE WHEN len(t) >= 3 THEN
-                    [t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                     for i in range(1, len(t) - 1)]
-                  ELSE [] END) AS shingles
-                FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-                      FROM documents)),
-         bench AS (SELECT DISTINCT unnest(shingles) AS s FROM sh
-                   WHERE doc_id < 20),
-         corpus AS (SELECT doc_id, len(shingles) AS nsh, unnest(shingles) AS s
-                    FROM sh WHERE doc_id >= 20),
-         flagged AS (SELECT doc_id, 1 AS fl
-                     FROM corpus JOIN bench USING (s)
-                     GROUP BY doc_id
-                     HAVING floor(count(*) / any_value(nsh) * 1000) / 1000
-                            >= 0.2),
-         lab AS (SELECT b.doc_id,
-                        CAST(round(q.score * 1000000) AS BIGINT) AS v,
-                        CASE WHEN b.doc_id = fc.first_id AND q.keep = 1
-                                  AND coalesce(fg.fl, 0) = 0
-                                  AND b.doc_id >= 20
-                             THEN 1 ELSE 0 END AS y
-                 FROM base b JOIN fc USING (dig) JOIN q USING (doc_id)
-                 LEFT JOIN flagged fg USING (doc_id)),
+      s"""WITH ${Curation.flagBlockCtes},
+         ${labCte("CAST(round(q.score * 1000000) AS BIGINT) AS v")},
          g AS (SELECT v, count(*) AS cnt, CAST(sum(y) AS BIGINT) AS pos
                FROM lab GROUP BY 1),
          sw AS (SELECT v, cnt, pos,

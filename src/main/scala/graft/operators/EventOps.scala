@@ -1047,6 +1047,59 @@ object EventOps extends QueryPack {
     "q72_latest_per_key" -> q72LatestPerKey _,
   )
 
+  /** q176's per-user min-chain: the first view `t1`, the first signup
+    * after it `t2`, the first purchase after that `t3` (strict > at
+    * every hop). */
+  private val funnelCtes: String =
+    """t1 AS (SELECT user_id, min(ts) AS t FROM events
+                     WHERE event_type = 'view' GROUP BY 1),
+         t2 AS (SELECT e.user_id, min(e.ts) AS t
+                FROM events e JOIN t1 ON e.user_id = t1.user_id
+                WHERE e.event_type = 'signup' AND e.ts > t1.t GROUP BY 1),
+         t3 AS (SELECT e.user_id, min(e.ts) AS t
+                FROM events e JOIN t2 ON e.user_id = t2.user_id
+                WHERE e.event_type = 'purchase' AND e.ts > t2.t GROUP BY 1)"""
+
+  /** q247's oracle, over the event key expression `key` (q262 passes a
+    * constant 'all' key). */
+  private def quantileOracleSql(key: String): String =
+    s"""WITH v AS (SELECT $key,
+                  CAST(floor("value" * 100 + 0.5) AS BIGINT) AS cents
+               FROM events
+               WHERE CAST(floor("value" * 100 + 0.5) AS BIGINT) >= 1),
+         r AS (SELECT event_type, CAST(len(bin(cents)) AS BIGINT) AS bin,
+                      count(*) AS cnt, min(cents) AS vmin, max(cents) AS vmax
+               FROM v GROUP BY 1, 2),
+         t AS (SELECT event_type, CAST(sum(cnt) AS BIGINT) AS n
+               FROM r GROUP BY 1),
+         ks AS (SELECT event_type, n,
+                       CAST(unnest([500, 950, 990]) AS BIGINT) AS p_mille
+                FROM t),
+         kk AS (SELECT event_type, n, p_mille,
+                       (p_mille * n + 999) // 1000 AS k
+                FROM ks),
+         c AS (SELECT event_type, bin, vmin, vmax,
+                      CAST(sum(cnt) OVER (PARTITION BY event_type
+                                          ORDER BY bin) AS BIGINT) AS cum
+               FROM r),
+         est AS (SELECT kk.event_type, kk.p_mille, kk.n, kk.k,
+                        min(c.bin) AS bin
+                 FROM kk JOIN c ON c.event_type = kk.event_type
+                               AND c.cum >= kk.k
+                 GROUP BY 1, 2, 3, 4),
+         ex AS (SELECT event_type, cents,
+                       row_number() OVER (PARTITION BY event_type
+                                          ORDER BY cents) AS rn
+                FROM v)
+         SELECT est.event_type, est.p_mille, est.n, est.k, est.bin,
+                c.vmin AS v_lo, c.vmax AS v_hi, ex.cents AS exact_v,
+                CAST(CASE WHEN ex.cents BETWEEN c.vmin AND c.vmax
+                     THEN 1 ELSE 0 END AS BIGINT) AS in_bound
+         FROM est
+         JOIN c ON c.event_type = est.event_type AND c.bin = est.bin
+         JOIN ex ON ex.event_type = est.event_type AND ex.rn = est.k
+         ORDER BY est.event_type, est.p_mille"""
+
   override val oracles: Map[String, String] = Map(
     // q200: left-join coverage against the partial dim snapshot; integer
     // counts/cents, one floored ratio per row
@@ -1336,84 +1389,12 @@ object EventOps extends QueryPack {
     // q262: the q247 chain under a constant 'all' key — the oracle
     // recomputes GLOBAL quantiles from raw, certifying register merge
     // across types == from-raw rollup
-    "q262_quantile_rollup" ->
-      """WITH v AS (SELECT 'all' AS event_type,
-                  CAST(floor("value" * 100 + 0.5) AS BIGINT) AS cents
-               FROM events
-               WHERE CAST(floor("value" * 100 + 0.5) AS BIGINT) >= 1),
-         r AS (SELECT event_type, CAST(len(bin(cents)) AS BIGINT) AS bin,
-                      count(*) AS cnt, min(cents) AS vmin, max(cents) AS vmax
-               FROM v GROUP BY 1, 2),
-         t AS (SELECT event_type, CAST(sum(cnt) AS BIGINT) AS n
-               FROM r GROUP BY 1),
-         ks AS (SELECT event_type, n,
-                       CAST(unnest([500, 950, 990]) AS BIGINT) AS p_mille
-                FROM t),
-         kk AS (SELECT event_type, n, p_mille,
-                       (p_mille * n + 999) // 1000 AS k
-                FROM ks),
-         c AS (SELECT event_type, bin, vmin, vmax,
-                      CAST(sum(cnt) OVER (PARTITION BY event_type
-                                          ORDER BY bin) AS BIGINT) AS cum
-               FROM r),
-         est AS (SELECT kk.event_type, kk.p_mille, kk.n, kk.k,
-                        min(c.bin) AS bin
-                 FROM kk JOIN c ON c.event_type = kk.event_type
-                               AND c.cum >= kk.k
-                 GROUP BY 1, 2, 3, 4),
-         ex AS (SELECT event_type, cents,
-                       row_number() OVER (PARTITION BY event_type
-                                          ORDER BY cents) AS rn
-                FROM v)
-         SELECT est.event_type, est.p_mille, est.n, est.k, est.bin,
-                c.vmin AS v_lo, c.vmax AS v_hi, ex.cents AS exact_v,
-                CAST(CASE WHEN ex.cents BETWEEN c.vmin AND c.vmax
-                     THEN 1 ELSE 0 END AS BIGINT) AS in_bound
-         FROM est
-         JOIN c ON c.event_type = est.event_type AND c.bin = est.bin
-         JOIN ex ON ex.event_type = est.event_type AND ex.rn = est.k
-         ORDER BY est.event_type, est.p_mille""",
+    "q262_quantile_rollup" -> quantileOracleSql("'all' AS event_type"),
     // q247: the q198 registers walked to rank k = ceil(p*n) in integer
     // arithmetic; the exact k-th value via explicit row_number (NOT an
     // engine quantile function) — `//` floors like Spark's `div` on
     // positives; in_bound certifies the envelope covers the truth
-    "q247_quantile_sketch" ->
-      """WITH v AS (SELECT event_type,
-                  CAST(floor("value" * 100 + 0.5) AS BIGINT) AS cents
-               FROM events
-               WHERE CAST(floor("value" * 100 + 0.5) AS BIGINT) >= 1),
-         r AS (SELECT event_type, CAST(len(bin(cents)) AS BIGINT) AS bin,
-                      count(*) AS cnt, min(cents) AS vmin, max(cents) AS vmax
-               FROM v GROUP BY 1, 2),
-         t AS (SELECT event_type, CAST(sum(cnt) AS BIGINT) AS n
-               FROM r GROUP BY 1),
-         ks AS (SELECT event_type, n,
-                       CAST(unnest([500, 950, 990]) AS BIGINT) AS p_mille
-                FROM t),
-         kk AS (SELECT event_type, n, p_mille,
-                       (p_mille * n + 999) // 1000 AS k
-                FROM ks),
-         c AS (SELECT event_type, bin, vmin, vmax,
-                      CAST(sum(cnt) OVER (PARTITION BY event_type
-                                          ORDER BY bin) AS BIGINT) AS cum
-               FROM r),
-         est AS (SELECT kk.event_type, kk.p_mille, kk.n, kk.k,
-                        min(c.bin) AS bin
-                 FROM kk JOIN c ON c.event_type = kk.event_type
-                               AND c.cum >= kk.k
-                 GROUP BY 1, 2, 3, 4),
-         ex AS (SELECT event_type, cents,
-                       row_number() OVER (PARTITION BY event_type
-                                          ORDER BY cents) AS rn
-                FROM v)
-         SELECT est.event_type, est.p_mille, est.n, est.k, est.bin,
-                c.vmin AS v_lo, c.vmax AS v_hi, ex.cents AS exact_v,
-                CAST(CASE WHEN ex.cents BETWEEN c.vmin AND c.vmax
-                     THEN 1 ELSE 0 END AS BIGINT) AS in_bound
-         FROM est
-         JOIN c ON c.event_type = est.event_type AND c.bin = est.bin
-         JOIN ex ON ex.event_type = est.event_type AND ex.rn = est.k
-         ORDER BY est.event_type, est.p_mille""",
+    "q247_quantile_sketch" -> quantileOracleSql("event_type"),
     // q197: exact integer power sums (cents × rebased seconds), then
     // the slope combined in the same fixed-shape double expression
     "q197_value_trend" ->
@@ -1485,14 +1466,7 @@ object EventOps extends QueryPack {
     // percentiles over integer microsecond deltas (quantile_cont ≡
     // Spark percentile on integers — the q19 parity precedent)
     "q192_conversion_time" ->
-      """WITH t1 AS (SELECT user_id, min(ts) AS t FROM events
-                     WHERE event_type = 'view' GROUP BY 1),
-         t2 AS (SELECT e.user_id, min(e.ts) AS t
-                FROM events e JOIN t1 ON e.user_id = t1.user_id
-                WHERE e.event_type = 'signup' AND e.ts > t1.t GROUP BY 1),
-         t3 AS (SELECT e.user_id, min(e.ts) AS t
-                FROM events e JOIN t2 ON e.user_id = t2.user_id
-                WHERE e.event_type = 'purchase' AND e.ts > t2.t GROUP BY 1),
+      s"""WITH $funnelCtes,
          dlt AS (SELECT epoch_us(t3.t::TIMESTAMP) - epoch_us(t1.t::TIMESTAMP)
                           AS delta_us
                  FROM t3 JOIN t1 USING (user_id))
@@ -1519,14 +1493,7 @@ object EventOps extends QueryPack {
     // the ratio arithmetic is explicit-double (DuckDB BIGINT/BIGINT
     // truncates) with the same floor-to-3dp on both sides
     "q176_funnel" ->
-      """WITH t1 AS (SELECT user_id, min(ts) AS t FROM events
-                     WHERE event_type = 'view' GROUP BY 1),
-         t2 AS (SELECT e.user_id, min(e.ts) AS t
-                FROM events e JOIN t1 ON e.user_id = t1.user_id
-                WHERE e.event_type = 'signup' AND e.ts > t1.t GROUP BY 1),
-         t3 AS (SELECT e.user_id, min(e.ts) AS t
-                FROM events e JOIN t2 ON e.user_id = t2.user_id
-                WHERE e.event_type = 'purchase' AND e.ts > t2.t GROUP BY 1),
+      s"""WITH $funnelCtes,
          c AS (SELECT (SELECT count(DISTINCT user_id) FROM events) AS n0,
                       (SELECT count(*) FROM t1) AS n1,
                       (SELECT count(*) FROM t2) AS n2,

@@ -793,20 +793,9 @@ object Mining extends QueryPack {
     * (ties: cosine DESC, c_id ASC — the bounded heap's total order),
     * candidate restriction to the probed cells, top-[[hubK]] rank in
     * (c DESC, b_id), in-degree with antihub zeros. */
-  private def hubOracleSqlTrained(cents: Array[Array[Double]]): String = {
-    val rows = cents.zipWithIndex.map { case (v, i) =>
-      s"($i, [${v.map(_.toString).mkString(", ")}]::DOUBLE[])"
-    }.mkString(",\n             ")
+  private def hubOracleSqlTrained(cents: Array[Array[Double]]): String =
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        c AS (SELECT * FROM (VALUES
-             $rows) AS t(c_id, cv)),
-        sc AS (SELECT e.vec_id, c.c_id,
-                      list_cosine_similarity(e.v, c.cv) AS cc FROM e, c),
-        asg AS (SELECT vec_id, c_id AS centroid FROM (
-                  SELECT vec_id, c_id,
-                         row_number() OVER (PARTITION BY vec_id
-                           ORDER BY cc DESC, c_id DESC) AS rn FROM sc)
-                WHERE rn = 1),
+        ${Similarity.literalAssignCtes(cents)},
         pr AS (SELECT vec_id AS a_id, c_id AS centroid FROM (
                   SELECT vec_id, c_id,
                          row_number() OVER (PARTITION BY vec_id
@@ -826,7 +815,6 @@ object Mining extends QueryPack {
         SELECT e.vec_id, CAST(coalesce(d.ind, 0) AS BIGINT) AS in_degree
         FROM e LEFT JOIN d ON d.b_id = e.vec_id
         ORDER BY in_degree DESC, e.vec_id"""
-  }
 
   /** q286's oracle: BOTH trained codebooks as literals; per direction
     * the q224 probe CTEs (assignment argmax ties cc DESC / c_id DESC;
@@ -836,10 +824,6 @@ object Mining extends QueryPack {
     * over the unioned candidate set. */
   private def minedOracleSqlTrained(
       cents: (Array[Array[Double]], Array[Array[Double]])): String = {
-    def lits(cs: Array[Array[Double]]): String =
-      cs.zipWithIndex.map { case (v, i) =>
-        s"($i, [${v.map(_.toString).mkString(", ")}]::DOUBLE[])"
-      }.mkString(",\n             ")
     def direction(tag: String, qsTbl: String, corpTbl: String,
                   cbTbl: String, qc: String, cc: String): String =
       s"""asg$tag AS (SELECT vec_id, c_id AS centroid FROM (
@@ -876,9 +860,9 @@ object Mining extends QueryPack {
         a AS (SELECT vec_id, v FROM e WHERE label < 5),
         b AS (SELECT vec_id, v FROM e WHERE label >= 5),
         cbb AS (SELECT * FROM (VALUES
-             ${lits(cents._1)}) AS t(c_id, cv)),
+             ${Similarity.coarseValues(cents._1)}) AS t(c_id, cv)),
         cba AS (SELECT * FROM (VALUES
-             ${lits(cents._2)}) AS t(c_id, cv)),
+             ${Similarity.coarseValues(cents._2)}) AS t(c_id, cv)),
         ${direction("f", "a", "b", "cbb", "a_id", "b_id")},
         ${direction("w", "b", "a", "cba", "b_id", "a_id")},
         cand AS (SELECT a_id, b_id, max(c) AS c FROM (
@@ -972,21 +956,7 @@ object Mining extends QueryPack {
     // triangle u<v<w is exactly three pairs (u,v),(v,w),(u,w)) —
     // certifying the degree-ordered enumeration finds the same set
     "q246_triangles" ->
-      """WITH sh AS (
-           SELECT doc_id,
-             list_distinct(CASE WHEN len(t) >= 3 THEN
-               [t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                for i in range(1, len(t) - 1)]
-             ELSE [] END) AS shingles
-           FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-                 FROM documents)),
-         ex AS (SELECT doc_id, len(shingles) AS sz, unnest(shingles) AS s
-                FROM sh),
-         pairs AS (
-           SELECT a.doc_id AS a_id, b.doc_id AS b_id, a.sz AS asz,
-                  b.sz AS bsz, count(*) AS common
-           FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-           GROUP BY 1, 2, 3, 4),
+      s"""WITH ${TextAnalysis.shinglePairCtes("pairs")},
          pr AS (SELECT a_id, b_id FROM pairs
                 WHERE common / (asz + bsz - common) >= 0.8),
          ed AS (SELECT a_id, b_id FROM pr
@@ -1013,21 +983,7 @@ object Mining extends QueryPack {
     // threshold — q42's argument) + three chained integer PageRank
     // iterations; `//` floors on positives exactly like Spark's `div`
     "q216_pagerank" ->
-      """WITH sh AS (
-           SELECT doc_id,
-             list_distinct(CASE WHEN len(t) >= 3 THEN
-               [t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                for i in range(1, len(t) - 1)]
-             ELSE [] END) AS shingles
-           FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-                 FROM documents)),
-         ex AS (SELECT doc_id, len(shingles) AS sz, unnest(shingles) AS s
-                FROM sh),
-         pairs AS (
-           SELECT a.doc_id AS a_id, b.doc_id AS b_id, a.sz AS asz,
-                  b.sz AS bsz, count(*) AS common
-           FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-           GROUP BY 1, 2, 3, 4),
+      s"""WITH ${TextAnalysis.shinglePairCtes("pairs")},
          pr AS (SELECT a_id, b_id FROM pairs
                 WHERE common / (asz + bsz - common) >= 0.8),
          ed AS (SELECT a_id AS src, b_id AS dst FROM pr
@@ -1139,21 +1095,7 @@ object Mining extends QueryPack {
     // the q42/q35 exact inverted-index pair SQL (LSH recall 1 at 0.8)
     // plus the two label joins and the disagreement filter
     "q131_crosslang_audit" ->
-      """WITH sh AS (
-           SELECT doc_id,
-             list_distinct(CASE WHEN len(t) >= 3 THEN
-               [t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                for i in range(1, len(t) - 1)]
-             ELSE [] END) AS shingles
-           FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-                 FROM documents)),
-         ex AS (SELECT doc_id, len(shingles) AS sz, unnest(shingles) AS s
-                FROM sh),
-         pairs AS (
-           SELECT a.doc_id AS a_id, b.doc_id AS b_id, a.sz AS asz,
-                  b.sz AS bsz, count(*) AS common
-           FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-           GROUP BY 1, 2, 3, 4),
+      s"""WITH ${TextAnalysis.shinglePairCtes("pairs")},
          nd AS (SELECT a_id, b_id,
                        floor(common / (asz + bsz - common) * 1000) / 1000
                          AS jaccard

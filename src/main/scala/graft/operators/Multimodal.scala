@@ -531,6 +531,20 @@ object Multimodal extends QueryPack {
     "q54_media_dedup"    -> q54MediaDedup _,
   )
 
+  /** q149's md5 lattice reconstruction in DuckDB: each asset's media
+    * type `mt` and its `dim`-wide vector `v` in `fv` (exact dyadic
+    * values, so cosines match the codec bit-for-bit). */
+  private def mediaVecCtes(dim: Int): String =
+    s"""f AS (SELECT doc_id AS asset_id,
+                 ['image','audio','video'][(doc_id % 3 + 1)::INT] AS mt,
+                 text FROM documents),
+          fv AS (SELECT asset_id, mt,
+                   [CAST(CAST(('0x' || substr(md5(text || ':' || mt || ':'
+                        || CAST(j AS VARCHAR)), 1, 15)) AS BIGINT) % 1024
+                      AS DOUBLE) / 1024.0
+                    for j in range(0, $dim)] AS v
+                 FROM f)"""
+
   override val oracles: Map[String, String] = Map(
     // q257: q52's frame derivation + the same md5-scalar feature, lag
     // deltas and shot stats in window SQL
@@ -563,15 +577,7 @@ object Multimodal extends QueryPack {
     // (floored cos DESC, asset_id) ≡ the heap's order; min-rank hit,
     // integer sums, one floored division per recall
     "q232_crossmodal_recall" ->
-      s"""WITH f AS (SELECT doc_id AS asset_id,
-                 ['image','audio','video'][(doc_id % 3 + 1)::INT] AS mt,
-                 text FROM documents),
-          fv AS (SELECT asset_id,
-                   [CAST(CAST(('0x' || substr(md5(text || ':' || mt || ':'
-                        || CAST(j AS VARCHAR)), 1, 15)) AS BIGINT) % 1024
-                      AS DOUBLE) / 1024.0
-                    for j in range(0, $xmodalDim)] AS v
-                 FROM f),
+      s"""WITH ${mediaVecCtes(xmodalDim)},
           e AS (SELECT vec_id, embedding::DOUBLE[] AS tv FROM embeddings),
           p AS (SELECT e.vec_id, fv.asset_id,
                        floor(list_cosine_similarity(fv.v, e.tv) * 1000000)
@@ -603,15 +609,7 @@ object Multimodal extends QueryPack {
     // before the quantile so threshold and filter run on values both
     // engines agree on exactly
     "q203_crossmodal_audit" ->
-      s"""WITH f AS (SELECT doc_id AS asset_id,
-                 ['image','audio','video'][(doc_id % 3 + 1)::INT] AS mt,
-                 text FROM documents),
-          fv AS (SELECT asset_id, mt,
-                   [CAST(CAST(('0x' || substr(md5(text || ':' || mt || ':'
-                        || CAST(j AS VARCHAR)), 1, 15)) AS BIGINT) % 1024
-                      AS DOUBLE) / 1024.0
-                    for j in range(0, $xmodalDim)] AS v
-                 FROM f),
+      s"""WITH ${mediaVecCtes(xmodalDim)},
           e AS (SELECT vec_id, embedding::DOUBLE[] AS tv FROM embeddings),
           p AS (SELECT asset_id AS pair_id, mt AS media_type,
                        floor(list_cosine_similarity(fv.v, e.tv) * 1000000)
@@ -623,15 +621,7 @@ object Multimodal extends QueryPack {
     // embeddings reconstructed from md5 per (asset, j) — exact dyadic
     // lattice values, so cosine matches the codec bit-for-bit
     "q149_media_similar" ->
-      s"""WITH f AS (SELECT doc_id AS asset_id,
-                 ['image','audio','video'][(doc_id % 3 + 1)::INT] AS mt,
-                 text FROM documents),
-          fv AS (SELECT asset_id,
-                   [CAST(CAST(('0x' || substr(md5(text || ':' || mt || ':'
-                        || CAST(j AS VARCHAR)), 1, 15)) AS BIGINT) % 1024
-                      AS DOUBLE) / 1024.0
-                    for j in range(0, 16)] AS v
-                 FROM f),
+      s"""WITH ${mediaVecCtes(16)},
           q AS (SELECT asset_id AS q_id, v AS qv FROM fv
                 WHERE asset_id < $simNQ),
           sc AS (SELECT q.q_id, fv.asset_id AS cand_id,

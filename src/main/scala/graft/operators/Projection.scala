@@ -208,6 +208,55 @@ object Projection extends QueryPack {
   private val pcaCache =
     new java.util.concurrent.ConcurrentHashMap[String, Pca]()
 
+  /** Per query (vec_id < 10): the exact-cosine top-`k` ids of `e`
+    * (vec_id, embedding) as a heap-ranked `top` array (cos desc, id asc)
+    * — the baseline every recall harness here scores against. */
+  private def exactTopK(e: DataFrame, k: Int): DataFrame = {
+    val qo = e.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
+    e.crossJoin(broadcast(qo))
+      .filter(col("vec_id") =!= col("q_id"))
+      .withColumn("cos", NativeExprs.cosine_sim(col("embedding"), col("qv")))
+      .groupBy("q_id")
+      .agg(TopKAgg.top_k_by_score(col("cos"), col("vec_id"), k).as("top"))
+  }
+
+  /** Per query (vec_id < 10): the top-`k` ids of `sigs` (vec_id, sig) by
+    * Hamming distance as a heap-ranked `top` array (ham asc, id asc). */
+  private def hammingTopK(sigs: DataFrame, k: Int): DataFrame = {
+    val q = sigs.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("q_id"), col("sig").as("qsig"))
+    sigs.crossJoin(broadcast(q))
+      .filter(col("vec_id") =!= col("q_id"))
+      .withColumn("ham", expr("bit_count(sig ^ qsig)").cast("long"))
+      .groupBy("q_id")
+      .agg(TopKAgg.top_k_by_score((lit(64L) - col("ham")).cast("double"),
+             col("vec_id"), k).as("top"))
+  }
+
+  /** A top-k relation's `top` arrays exploded to (q_id, n_id) rows. */
+  private def topIds(top: DataFrame): DataFrame =
+    top.select(col("q_id"), explode(expr("transform(top, x -> x.id)")).as("n_id"))
+
+  /** The 64-bit sign signature Σ_j [c_j ≥ zero]·2^j of the 64-dim array
+    * column `c`; `zero` is the element type's 0 literal. */
+  private def signSig(c: String, zero: String): Column =
+    expr(s"""aggregate(sequence(0, 63), 0L, (acc, j) ->
+        acc + IF(element_at($c, j + 1) >= $zero,
+                 shiftleft(1L, j), 0L))""")
+
+  /** q135/q136's recall@5: the Hamming top-5 over `sigs` scored against
+    * the exact-cosine top-5 over `e`, one row per query. */
+  private def binaryRecall(e: DataFrame, sigs: DataFrame): DataFrame =
+    topIds(exactTopK(e, 5))
+      .join(topIds(hammingTopK(sigs, 5)).withColumn("hit", lit(1)),
+            Seq("q_id", "n_id"), "left")
+      .groupBy("q_id")
+      .agg(count("hit").as("hits"))
+      .select(col("q_id"), col("hits").cast("long").as("hits"),
+              (floor(col("hits") / 5.0 * 1000) / 1000).as("recall"))
+      .orderBy("q_id")
+
   /** PCA DIMENSION-RECALL SWEEP — q123's harness over the LEARNED
     * rotation: project every vector to kMax = 32 components (trained
     * rotation, mean-centered), score exact cosine top-5 inside each
@@ -240,15 +289,7 @@ object Projection extends QueryPack {
       .agg(TopKAgg.top_k_by_score(col("cos"), col("vec_id"), 5).as("top"))
       .select(col("k"), col("q_id"),
               explode(expr("transform(top, x -> x.id)")).as("n_id"))
-    val qo = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-    val base = e.crossJoin(broadcast(qo))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", NativeExprs.cosine_sim(col("embedding"), col("qv")))
-      .groupBy("q_id")
-      .agg(TopKAgg.top_k_by_score(col("cos"), col("vec_id"), 5).as("top"))
-      .select(col("q_id"), explode(expr("transform(top, x -> x.id)")).as("n_id"))
-    base.crossJoin(broadcast(ks))
+    topIds(exactTopK(e, 5)).crossJoin(broadcast(ks))
       .join(top.withColumn("hit", lit(1)), Seq("k", "q_id", "n_id"), "left")
       .groupBy("k", "q_id")
       .agg(count("hit").as("hits"))
@@ -260,6 +301,73 @@ object Projection extends QueryPack {
 
   private def fmt(x: Double): String = x.toString
 
+  /** The projection CTEs of a trained [[Pca]] over `e`: mean `mu` and
+    * components `p` as literals, the centered vectors `ev`, and `y`, each
+    * vector's projection as the explicit left-associated fold per
+    * component (term-for-term the `aggregate` fold [[projectExpr]]
+    * runs). */
+  private def pcaProjectionCtes(p: Pca): String = {
+    val d = p.mu.length
+    val muLit = s"[${p.mu.map(fmt).mkString(", ")}]::DOUBLE[]"
+    val rows = p.comps.zipWithIndex.map { case (v, j) =>
+      s"($j, [${v.map(fmt).mkString(", ")}]::DOUBLE[])"
+    }.mkString(",\n             ")
+    val foldTerms = (1 to d).map(i => s"p.pv[$i] * ev.vm[$i]").mkString(" + ")
+    s"""e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+        mu AS (SELECT $muLit AS m),
+        p(j, pv) AS (VALUES
+             $rows),
+        ev AS (SELECT vec_id,
+                      list_transform(range(1, ${d + 1}), i -> v[i] - m[i]) AS vm
+               FROM e, mu),
+        yj AS (SELECT ev.vec_id, p.j, $foldTerms AS yv FROM ev, p),
+        y AS (SELECT vec_id, list(yv ORDER BY j) AS y FROM yj GROUP BY vec_id)"""
+  }
+
+  /** [[signSig]] in DuckDB: `sg` (vec_id, sig) over the list column `c`
+    * of relation `rel` — an integer fold, bit 63 as the two's-complement
+    * literal (DuckDB rejects 1 << 63). */
+  private def signSigCte(c: String, rel: String): String =
+    s"""sg AS (SELECT vec_id,
+                 CAST(list_sum(list_transform(range(0, 64), j ->
+                   CASE WHEN $c[j + 1] >= 0 THEN
+                     (CASE WHEN j = 63 THEN -9223372036854775808
+                           ELSE (1::BIGINT << j) END)
+                   ELSE 0 END)) AS BIGINT) AS sig
+               FROM $rel)"""
+
+  /** [[exactTopK]] at k = 5 in DuckDB: `base` (q_id, n_id) over `e`. */
+  private val exactTop5Ctes: String =
+    """qo AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 10),
+        bsc AS (SELECT qo.q_id, e.vec_id AS n_id,
+                       list_cosine_similarity(e.v, qo.qv) AS c
+                FROM e, qo WHERE e.vec_id <> qo.q_id),
+        base AS (SELECT q_id, n_id FROM (
+                   SELECT q_id, n_id,
+                          row_number() OVER (PARTITION BY q_id
+                            ORDER BY c DESC, n_id) AS rnk FROM bsc)
+                 WHERE rnk <= 5)"""
+
+  /** [[binaryRecall]] in DuckDB over signatures `sg` and vectors `e`: the
+    * integer Hamming top-5 `tp` (id tiebreak), [[exactTop5Ctes]], and one
+    * recall division per query. */
+  private val hammingRecallSql: String =
+    s"""q AS (SELECT vec_id AS q_id, sig AS qsig FROM sg WHERE vec_id < 10),
+        sc AS (SELECT q.q_id, sg.vec_id AS n_id,
+                      bit_count(xor(sg.sig, q.qsig)) AS ham
+               FROM sg, q WHERE sg.vec_id <> q.q_id),
+        tp AS (SELECT q_id, n_id FROM (
+                 SELECT q_id, n_id,
+                        row_number() OVER (PARTITION BY q_id
+                          ORDER BY ham ASC, n_id) AS rnk FROM sc)
+               WHERE rnk <= 5),
+        $exactTop5Ctes
+        SELECT base.q_id, CAST(count(tp.n_id) AS BIGINT) AS hits,
+               floor(count(tp.n_id) / 5.0 * 1000) / 1000 AS recall
+        FROM base LEFT JOIN tp ON tp.q_id = base.q_id
+                              AND tp.n_id = base.n_id
+        GROUP BY base.q_id ORDER BY base.q_id"""
+
   /** q125's oracle: trained mean + components embedded as DOUBLE[]
     * literals; the projection is the explicit left-associated 64-term
     * fold per component (term-for-term the `aggregate` fold
@@ -268,22 +376,8 @@ object Projection extends QueryPack {
     * slices + list_cosine_similarity replicate the q123 scoring; the
     * baseline half is q40's exact-cosine SQL shape over the original
     * vectors. */
-  private def pcaOracleSqlTrained(p: Pca): String = {
-    val d = p.mu.length
-    val muLit = s"[${p.mu.map(fmt).mkString(", ")}]::DOUBLE[]"
-    val rows = p.comps.zipWithIndex.map { case (v, j) =>
-      s"($j, [${v.map(fmt).mkString(", ")}]::DOUBLE[])"
-    }.mkString(",\n             ")
-    val foldTerms = (1 to d).map(i => s"p.pv[$i] * ev.vm[$i]").mkString(" + ")
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        mu AS (SELECT $muLit AS m),
-        p(j, pv) AS (VALUES
-             $rows),
-        ev AS (SELECT vec_id,
-                      list_transform(range(1, ${d + 1}), i -> v[i] - m[i]) AS vm
-               FROM e, mu),
-        yj AS (SELECT ev.vec_id, p.j, $foldTerms AS yv FROM ev, p),
-        y AS (SELECT vec_id, list(yv ORDER BY j) AS y FROM yj GROUP BY vec_id),
+  private def pcaOracleSqlTrained(p: Pca): String =
+    s"""WITH ${pcaProjectionCtes(p)},
         q AS (SELECT vec_id AS q_id, y AS qy FROM y WHERE vec_id < 10),
         ks(k) AS (VALUES ${kSweep.map(x => s"($x)").mkString(", ")}),
         sc AS (SELECT ks.k, q.q_id, y.vec_id AS n_id,
@@ -294,15 +388,7 @@ object Projection extends QueryPack {
                         row_number() OVER (PARTITION BY k, q_id
                           ORDER BY c DESC, n_id) AS rnk
                  FROM sc) WHERE rnk <= 5),
-        qo AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 10),
-        bsc AS (SELECT qo.q_id, e.vec_id AS n_id,
-                       list_cosine_similarity(e.v, qo.qv) AS c
-                FROM e, qo WHERE e.vec_id <> qo.q_id),
-        base AS (SELECT q_id, n_id FROM (
-                   SELECT q_id, n_id,
-                          row_number() OVER (PARTITION BY q_id
-                            ORDER BY c DESC, n_id) AS rnk
-                   FROM bsc) WHERE rnk <= 5),
+        $exactTop5Ctes,
         xp AS (SELECT ks.k, base.q_id, base.n_id FROM base, ks)
         SELECT CAST(xp.k AS BIGINT) AS k, xp.q_id AS q_id,
                CAST(count(tp.n_id) AS BIGINT) AS hits,
@@ -310,7 +396,6 @@ object Projection extends QueryPack {
         FROM xp LEFT JOIN tp ON tp.k = xp.k AND tp.q_id = xp.q_id
                             AND tp.n_id = xp.n_id
         GROUP BY xp.k, xp.q_id ORDER BY k, q_id"""
-  }
 
   /** q135: 1-BIT (SIGN) EMBEDDING QUANTIZATION + HAMMING RETRIEVAL —
     * the most aggressive rung of the compression ladder the engine now
@@ -331,33 +416,7 @@ object Projection extends QueryPack {
     * 8 B/vector, SIMD-friendly scans, vectors themselves stay cold. */
   private def q135BinaryAnn(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val sigs = e.select(col("vec_id"),
-      expr("""aggregate(sequence(0, 63), 0L, (acc, j) ->
-        acc + IF(element_at(embedding, j + 1) >= 0.0F,
-                 shiftleft(1L, j), 0L))""").as("sig"))
-    val q = sigs.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("sig").as("qsig"))
-    val top = sigs.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("ham", expr("bit_count(sig ^ qsig)").cast("long"))
-      .groupBy("q_id")
-      .agg(TopKAgg.top_k_by_score((lit(64L) - col("ham")).cast("double"),
-             col("vec_id"), 5).as("top"))
-      .select(col("q_id"), explode(expr("transform(top, x -> x.id)")).as("n_id"))
-    val qo = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-    val base = e.crossJoin(broadcast(qo))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", NativeExprs.cosine_sim(col("embedding"), col("qv")))
-      .groupBy("q_id")
-      .agg(TopKAgg.top_k_by_score(col("cos"), col("vec_id"), 5).as("top"))
-      .select(col("q_id"), explode(expr("transform(top, x -> x.id)")).as("n_id"))
-    base.join(top.withColumn("hit", lit(1)), Seq("q_id", "n_id"), "left")
-      .groupBy("q_id")
-      .agg(count("hit").as("hits"))
-      .select(col("q_id"), col("hits").cast("long").as("hits"),
-              (floor(col("hits") / 5.0 * 1000) / 1000).as("recall"))
-      .orderBy("q_id")
+    binaryRecall(e, e.select(col("vec_id"), signSig("embedding", "0.0F").as("sig")))
   }
 
   /** Full-rank projections trained by q136, keyed by dataset dir
@@ -387,85 +446,17 @@ object Projection extends QueryPack {
     val p = pca64Cache.computeIfAbsent(d, _ => trainPca(e, 64))
     val sigs = e.select(col("vec_id"),
         projectExpr(p, col("embedding")).as("y"))
-      .select(col("vec_id"),
-        expr("""aggregate(sequence(0, 63), 0L, (acc, j) ->
-          acc + IF(element_at(y, j + 1) >= 0.0D,
-                   shiftleft(1L, j), 0L))""").as("sig"))
-    val q = sigs.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("sig").as("qsig"))
-    val top = sigs.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("ham", expr("bit_count(sig ^ qsig)").cast("long"))
-      .groupBy("q_id")
-      .agg(TopKAgg.top_k_by_score((lit(64L) - col("ham")).cast("double"),
-             col("vec_id"), 5).as("top"))
-      .select(col("q_id"), explode(expr("transform(top, x -> x.id)")).as("n_id"))
-    val qo = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-    val base = e.crossJoin(broadcast(qo))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", NativeExprs.cosine_sim(col("embedding"), col("qv")))
-      .groupBy("q_id")
-      .agg(TopKAgg.top_k_by_score(col("cos"), col("vec_id"), 5).as("top"))
-      .select(col("q_id"), explode(expr("transform(top, x -> x.id)")).as("n_id"))
-    base.join(top.withColumn("hit", lit(1)), Seq("q_id", "n_id"), "left")
-      .groupBy("q_id")
-      .agg(count("hit").as("hits"))
-      .select(col("q_id"), col("hits").cast("long").as("hits"),
-              (floor(col("hits") / 5.0 * 1000) / 1000).as("recall"))
-      .orderBy("q_id")
+      .select(col("vec_id"), signSig("y", "0.0D").as("sig"))
+    binaryRecall(e, sigs)
   }
 
   /** q136's generated oracle: the q125 projection CTEs (mean +
     * components as literals, explicit left fold) feeding the q135
     * integer signature/Hamming machinery. */
-  private def pcaBinaryOracleSql(p: Pca): String = {
-    val d = p.mu.length
-    val muLit = s"[${p.mu.map(fmt).mkString(", ")}]::DOUBLE[]"
-    val rows = p.comps.zipWithIndex.map { case (v, j) =>
-      s"($j, [${v.map(fmt).mkString(", ")}]::DOUBLE[])"
-    }.mkString(",\n             ")
-    val foldTerms = (1 to d).map(i => s"p.pv[$i] * ev.vm[$i]").mkString(" + ")
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        mu AS (SELECT $muLit AS m),
-        p(j, pv) AS (VALUES
-             $rows),
-        ev AS (SELECT vec_id,
-                      list_transform(range(1, ${d + 1}), i -> v[i] - m[i]) AS vm
-               FROM e, mu),
-        yj AS (SELECT ev.vec_id, p.j, $foldTerms AS yv FROM ev, p),
-        y AS (SELECT vec_id, list(yv ORDER BY j) AS y FROM yj GROUP BY vec_id),
-        sg AS (SELECT vec_id,
-                 CAST(list_sum(list_transform(range(0, 64), j ->
-                   CASE WHEN y[j + 1] >= 0 THEN
-                     (CASE WHEN j = 63 THEN -9223372036854775808
-                           ELSE (1::BIGINT << j) END)
-                   ELSE 0 END)) AS BIGINT) AS sig
-               FROM y),
-        q AS (SELECT vec_id AS q_id, sig AS qsig FROM sg WHERE vec_id < 10),
-        sc AS (SELECT q.q_id, sg.vec_id AS n_id,
-                      bit_count(xor(sg.sig, q.qsig)) AS ham
-               FROM sg, q WHERE sg.vec_id <> q.q_id),
-        tp AS (SELECT q_id, n_id FROM (
-                 SELECT q_id, n_id,
-                        row_number() OVER (PARTITION BY q_id
-                          ORDER BY ham ASC, n_id) AS rnk FROM sc)
-               WHERE rnk <= 5),
-        qo AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 10),
-        bsc AS (SELECT qo.q_id, e.vec_id AS n_id,
-                       list_cosine_similarity(e.v, qo.qv) AS c
-                FROM e, qo WHERE e.vec_id <> qo.q_id),
-        base AS (SELECT q_id, n_id FROM (
-                   SELECT q_id, n_id,
-                          row_number() OVER (PARTITION BY q_id
-                            ORDER BY c DESC, n_id) AS rnk FROM bsc)
-                 WHERE rnk <= 5)
-        SELECT base.q_id, CAST(count(tp.n_id) AS BIGINT) AS hits,
-               floor(count(tp.n_id) / 5.0 * 1000) / 1000 AS recall
-        FROM base LEFT JOIN tp ON tp.q_id = base.q_id
-                              AND tp.n_id = base.n_id
-        GROUP BY base.q_id ORDER BY base.q_id"""
-  }
+  private def pcaBinaryOracleSql(p: Pca): String =
+    s"""WITH ${pcaProjectionCtes(p)},
+        ${signSigCte("y", "y")},
+        $hammingRecallSql"""
 
   /** Truncated-RBO parameters for q153: persistence p and eval depth. */
   private val rboP = 0.9
@@ -499,28 +490,11 @@ object Projection extends QueryPack {
     * in written order on both engines. */
   private def q153RboEval(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val sigs = e.select(col("vec_id"),
-      expr("""aggregate(sequence(0, 63), 0L, (acc, j) ->
-        acc + IF(element_at(embedding, j + 1) >= 0.0F,
-                 shiftleft(1L, j), 0L))""").as("sig"))
-    val q = sigs.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("sig").as("qsig"))
-    val binRank = sigs.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("ham", expr("bit_count(sig ^ qsig)").cast("long"))
-      .groupBy("q_id")
-      .agg(TopKAgg.top_k_by_score((lit(64L) - col("ham")).cast("double"),
-             col("vec_id"), rboDepth).as("top"))
+    val sigs = e.select(col("vec_id"), signSig("embedding", "0.0F").as("sig"))
+    val binRank = hammingTopK(sigs, rboDepth)
       .select(col("q_id"), posexplode(col("top")))
       .select(col("q_id"), col("col.id").as("n_id"), (col("pos") + 1).as("br"))
-    val qo = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-    val exRank = e.crossJoin(broadcast(qo))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", NativeExprs.cosine_sim(col("embedding"), col("qv")))
-      .groupBy("q_id")
-      .agg(TopKAgg.top_k_by_score(col("cos"), col("vec_id"), rboDepth)
-             .as("top"))
+    val exRank = exactTopK(e, rboDepth)
       .select(col("q_id"), posexplode(col("top")))
       .select(col("q_id"), col("col.id").as("n_id"), (col("pos") + 1).as("ar"))
     val histAggs = (1 to rboDepth).map(k =>
@@ -532,7 +506,8 @@ object Projection extends QueryPack {
     val overlap = (1 to rboDepth).map(k => col(s"h$k")).reduce(_ + _)
     val rbo = (1 to rboDepth).map(k => col(s"h$k") * lit(rboCoefs(k - 1)))
       .reduce(_ + _)
-    qo.select("q_id").join(hs, Seq("q_id"), "left")
+    e.filter(col("vec_id") < 10).select(col("vec_id").as("q_id"))
+      .join(hs, Seq("q_id"), "left")
       .na.fill(0, (1 to rboDepth).map(k => s"h$k"))
       .select(col("q_id"), overlap.as("overlap"),
               (floor(rbo * 1000000) / 1000000).as("rbo"))
@@ -844,8 +819,6 @@ object Projection extends QueryPack {
       ("q136_pca_binary" -> Option(pca64Cache.get(dir)).map(pcaBinaryOracleSql)
         .getOrElse("SELECT 1 AS q136_not_built_for_this_dataset"))
 
-  // dir-agnostic fallback, usable only when exactly one projection was
-  // trained this process (the Similarity codebook contract)
   /** q153's oracle: both rankings replicated with their rank positions
     * kept, the worse-rank histogram, and the [[rboCoefs]] literals in
     * the same written fold order as the Spark column expression. */
@@ -862,13 +835,7 @@ object Projection extends QueryPack {
       .map(k => s"CAST(coalesce(h$k, 0) AS DOUBLE) * ${rboCoefs(k - 1)}")
       .mkString(" + ")
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        sg AS (SELECT vec_id,
-                 CAST(list_sum(list_transform(range(0, 64), j ->
-                   CASE WHEN v[j + 1] >= 0 THEN
-                     (CASE WHEN j = 63 THEN -9223372036854775808
-                           ELSE (1::BIGINT << j) END)
-                   ELSE 0 END)) AS BIGINT) AS sig
-               FROM e),
+        ${signSigCte("v", "e")},
         q AS (SELECT vec_id AS q_id, sig AS qsig FROM sg WHERE vec_id < 10),
         sc AS (SELECT q.q_id, sg.vec_id AS n_id,
                       bit_count(xor(sg.sig, q.qsig)) AS ham
@@ -898,6 +865,40 @@ object Projection extends QueryPack {
         FROM ql LEFT JOIN hh USING (q_id) ORDER BY ql.q_id"""
   }
 
+  /** q178's co-unnest: embeddings quantized to 1e-6 integers, one `d`
+    * row (label, dim, v) per element. */
+  private val labelDimCtes: String =
+    """q AS (SELECT CAST(label AS BIGINT) AS label,
+                  [CAST(floor(CAST(x AS DOUBLE) * 1e6) AS BIGINT)
+                   for x in embedding] AS qv
+           FROM embeddings),
+         d AS (SELECT label, unnest(range(1, len(qv) + 1)) AS dim,
+                      unnest(qv) AS v FROM q)"""
+
+  /** q166's per-dim stats: embeddings quantized to 1e-6 integers `qv`
+    * (with vec_id and the raw embedding), and `st`, the lists of
+    * per-dim mean `mu` and population sd `sd` in dim order, each from
+    * exact integer sums. */
+  private val dimStatsCtes: String =
+    """q AS (SELECT vec_id, embedding,
+                  [CAST(floor(CAST(x AS DOUBLE) * 1e6) AS BIGINT)
+                   for x in embedding] AS qv
+           FROM embeddings),
+         d AS (SELECT unnest(range(1, len(qv) + 1)) AS dim,
+                      unnest(qv) AS v FROM q),
+         a AS (SELECT dim, count(*) AS n, CAST(sum(v) AS BIGINT) AS sum_q,
+                      CAST(sum(v * v) AS BIGINT) AS sumsq_q
+               FROM d GROUP BY dim),
+         st AS (SELECT list(CAST(sum_q AS DOUBLE) / n / 1e6 ORDER BY dim) AS mu,
+                       list(sqrt(greatest(CAST(0 AS DOUBLE),
+                              CAST(sumsq_q AS DOUBLE) / n
+                              - (CAST(sum_q AS DOUBLE) / n)
+                                * (CAST(sum_q AS DOUBLE) / n))) / 1e6
+                            ORDER BY dim) AS sd
+                FROM a)"""
+
+  // dir-agnostic fallback, usable only when exactly one projection was
+  // trained this process (the Similarity codebook contract)
   override def oracles: Map[String, String] = Map(
     // q163: the zipped co-unnest + GROUP BY(dim) form over the SAME
     // integer quantization; divisions cast explicitly (DuckDB BIGINT /
@@ -922,22 +923,7 @@ object Projection extends QueryPack {
     // q166: per-dim stats from the same integer quantization, listed in
     // dim order, then the per-element (x − μ)/σ in 1e-4 integer units
     "q166_standardize" ->
-      """WITH q AS (SELECT vec_id, embedding,
-                  [CAST(floor(CAST(x AS DOUBLE) * 1e6) AS BIGINT)
-                   for x in embedding] AS qv
-           FROM embeddings),
-         d AS (SELECT unnest(range(1, len(qv) + 1)) AS dim,
-                      unnest(qv) AS v FROM q),
-         a AS (SELECT dim, count(*) AS n, CAST(sum(v) AS BIGINT) AS sum_q,
-                      CAST(sum(v * v) AS BIGINT) AS sumsq_q
-               FROM d GROUP BY dim),
-         st AS (SELECT list(CAST(sum_q AS DOUBLE) / n / 1e6 ORDER BY dim) AS mu,
-                       list(sqrt(greatest(CAST(0 AS DOUBLE),
-                              CAST(sumsq_q AS DOUBLE) / n
-                              - (CAST(sum_q AS DOUBLE) / n)
-                                * (CAST(sum_q AS DOUBLE) / n))) / 1e6
-                            ORDER BY dim) AS sd
-                FROM a)
+      s"""WITH $dimStatsCtes
          SELECT vec_id,
                 array_to_string(
                   [CASE WHEN st.sd[i] = 0 THEN 0
@@ -1015,12 +1001,7 @@ object Projection extends QueryPack {
          ORDER BY nr.vec_id""",
     // q178: q163's co-unnest + GROUP BY, conditioned on label
     "q178_label_audit" ->
-      """WITH q AS (SELECT CAST(label AS BIGINT) AS label,
-                  [CAST(floor(CAST(x AS DOUBLE) * 1e6) AS BIGINT)
-                   for x in embedding] AS qv
-           FROM embeddings),
-         d AS (SELECT label, unnest(range(1, len(qv) + 1)) AS dim,
-                      unnest(qv) AS v FROM q),
+      s"""WITH $labelDimCtes,
          a AS (SELECT label, dim, count(*) AS n,
                       CAST(sum(v) AS BIGINT) AS sum_q,
                       CAST(sum(v * v) AS BIGINT) AS sumsq_q,
@@ -1039,12 +1020,7 @@ object Projection extends QueryPack {
     // Spark's aggregate starts at 0.0 — x + 0.0 = x in IEEE, so the
     // folds are bit-identical); all other arithmetic is integer sums
     "q179_separability" ->
-      """WITH q AS (SELECT CAST(label AS BIGINT) AS label,
-                  [CAST(floor(CAST(x AS DOUBLE) * 1e6) AS BIGINT)
-                   for x in embedding] AS qv
-           FROM embeddings),
-         d AS (SELECT label, unnest(range(1, len(qv) + 1)) AS dim,
-                      unnest(qv) AS v FROM q),
+      s"""WITH $labelDimCtes,
          a AS (SELECT label, dim, count(*) AS n,
                       CAST(sum(v) AS BIGINT) AS s,
                       CAST(sum(v * v) AS BIGINT) AS sq
@@ -1068,22 +1044,7 @@ object Projection extends QueryPack {
     // comparisons run on the identical single-rounded doubles both
     // engines compute from the integer-derived mu/sd
     "q175_outlier_audit" ->
-      """WITH q AS (SELECT vec_id, embedding,
-                  [CAST(floor(CAST(x AS DOUBLE) * 1e6) AS BIGINT)
-                   for x in embedding] AS qv
-           FROM embeddings),
-         d AS (SELECT unnest(range(1, len(qv) + 1)) AS dim,
-                      unnest(qv) AS v FROM q),
-         a AS (SELECT dim, count(*) AS n, CAST(sum(v) AS BIGINT) AS sum_q,
-                      CAST(sum(v * v) AS BIGINT) AS sumsq_q
-               FROM d GROUP BY dim),
-         st AS (SELECT list(CAST(sum_q AS DOUBLE) / n / 1e6 ORDER BY dim) AS mu,
-                       list(sqrt(greatest(CAST(0 AS DOUBLE),
-                              CAST(sumsq_q AS DOUBLE) / n
-                              - (CAST(sum_q AS DOUBLE) / n)
-                                * (CAST(sum_q AS DOUBLE) / n))) / 1e6
-                            ORDER BY dim) AS sd
-                FROM a),
+      s"""WITH $dimStatsCtes,
          z AS (SELECT vec_id,
                       [CASE WHEN st.sd[i] = 0 THEN CAST(0 AS DOUBLE)
                             ELSE abs((CAST(embedding[i] AS DOUBLE) - st.mu[i])
@@ -1103,40 +1064,11 @@ object Projection extends QueryPack {
     "q136_pca_binary" -> (if (pca64Cache.size == 1)
         pcaBinaryOracleSql(pca64Cache.values.iterator.next())
       else "SELECT 1 AS q136_not_built_unambiguously_this_process"),
-    // integer signature fold (bit 63 = the two's-complement literal —
-    // DuckDB rejects 1 << 63), integer Hamming ranking with id
-    // tiebreak, one recall division per output row
+    // integer signature fold, integer Hamming ranking with id tiebreak,
+    // one recall division per output row
     "q135_binary_ann" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         sg AS (SELECT vec_id,
-                  CAST(list_sum(list_transform(range(0, 64), j ->
-                    CASE WHEN v[j + 1] >= 0 THEN
-                      (CASE WHEN j = 63 THEN -9223372036854775808
-                            ELSE (1::BIGINT << j) END)
-                    ELSE 0 END)) AS BIGINT) AS sig
-                FROM e),
-         q AS (SELECT vec_id AS q_id, sig AS qsig FROM sg WHERE vec_id < 10),
-         sc AS (SELECT q.q_id, sg.vec_id AS n_id,
-                       bit_count(xor(sg.sig, q.qsig)) AS ham
-                FROM sg, q WHERE sg.vec_id <> q.q_id),
-         tp AS (SELECT q_id, n_id FROM (
-                  SELECT q_id, n_id,
-                         row_number() OVER (PARTITION BY q_id
-                           ORDER BY ham ASC, n_id) AS rnk FROM sc)
-                WHERE rnk <= 5),
-         qo AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 10),
-         bsc AS (SELECT qo.q_id, e.vec_id AS n_id,
-                        list_cosine_similarity(e.v, qo.qv) AS c
-                 FROM e, qo WHERE e.vec_id <> qo.q_id),
-         base AS (SELECT q_id, n_id FROM (
-                    SELECT q_id, n_id,
-                           row_number() OVER (PARTITION BY q_id
-                             ORDER BY c DESC, n_id) AS rnk FROM bsc)
-                  WHERE rnk <= 5)
-         SELECT base.q_id, CAST(count(tp.n_id) AS BIGINT) AS hits,
-                floor(count(tp.n_id) / 5.0 * 1000) / 1000 AS recall
-         FROM base LEFT JOIN tp ON tp.q_id = base.q_id
-                               AND tp.n_id = base.n_id
-         GROUP BY base.q_id ORDER BY base.q_id""",
+      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+         ${signSigCte("v", "e")},
+         $hammingRecallSql""",
   )
 }

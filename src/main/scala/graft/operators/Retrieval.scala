@@ -301,15 +301,14 @@ object Retrieval extends QueryPack {
       .orderBy("vec_id")
   }
 
-  /** q285's oracle: q103's literal-codebook assignment CTEs, the same
-    * benchmark-membership predicate, the in-cell flag join. */
-  private def contaminationOracleSql(cents: Array[Array[Double]]): String = {
-    val rows = cents.zipWithIndex.map { case (v, i) =>
-      s"($i, [${v.map(_.toString).mkString(", ")}]::DOUBLE[])"
-    }.mkString(",\n             ")
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+  /** q103/q285's oracle cell assignment: the trained codebook as
+    * literals `c`, q45's argmax `asg` (ties: highest cosine, then highest
+    * centroid id — matching max(struct)) and `ae`, each vector with its
+    * BIGINT `cell`. */
+  private def cellCtes(cents: Array[Array[Double]]): String =
+    s"""e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         c AS (SELECT * FROM (VALUES
-             $rows) AS t(c_id, cv)),
+             ${Similarity.coarseValues(cents)}) AS t(c_id, cv)),
         sc AS (SELECT e.vec_id, c.c_id,
                       list_cosine_similarity(e.v, c.cv) AS cc FROM e, c),
         asg AS (SELECT vec_id, CAST(c_id AS BIGINT) AS cell FROM (
@@ -317,7 +316,12 @@ object Retrieval extends QueryPack {
                          row_number() OVER (PARTITION BY vec_id
                            ORDER BY cc DESC, c_id DESC) AS rn FROM sc)
                 WHERE rn = 1),
-        ae AS (SELECT asg.vec_id, asg.cell, e.v FROM asg JOIN e USING (vec_id)),
+        ae AS (SELECT asg.vec_id, asg.cell, e.v FROM asg JOIN e USING (vec_id))"""
+
+  /** q285's oracle: q103's literal-codebook assignment CTEs, the same
+    * benchmark-membership predicate, the in-cell flag join. */
+  private def contaminationOracleSql(cents: Array[Array[Double]]): String =
+    s"""WITH ${cellCtes(cents)},
         bench AS (SELECT * FROM ae WHERE vec_id % $benchMod = $benchRem
                                      AND vec_id < ${benchMod * benchCap}),
         corp AS (SELECT * FROM ae WHERE NOT (vec_id % $benchMod = $benchRem
@@ -333,7 +337,6 @@ object Retrieval extends QueryPack {
                coalesce(f.flagged_by, -1) AS flagged_by
         FROM corp LEFT JOIN flags f USING (vec_id)
         ORDER BY corp.vec_id"""
-  }
 
   override val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q102_hybrid_search" -> q102HybridSearch _,
@@ -342,14 +345,12 @@ object Retrieval extends QueryPack {
     "q285_semantic_contamination" -> q285SemanticContamination _,
   )
 
-  /** q102's oracle: the lexical CTE is q97's oracle scoped per query
-    * term, the vector CTE is q98's sans metadata filter, and the fusion
-    * is a FULL JOIN USING (q_id, doc_id) + the identical two-term RRF
-    * sum over integer ranks. */
-  private val hybridOracleSql: String = {
+  /** q102/q110's lexical half: q97's BM25 oracle scoped per query term,
+    * one `sc` row (q_id, doc_id, score `s`) per matching (query, doc). */
+  private val lexScoreCtes: String = {
     val qtRows = queryTerms
       .map { case (q, t) => s"($q, '$t')" }.mkString(", ")
-    s"""WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
+    s"""t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
                    FROM documents),
         stats AS (SELECT count(*) AS n, sum(len(w)) AS sl FROM t),
         tf AS (SELECT doc_id, len, term, count(*) AS tf
@@ -362,17 +363,31 @@ object Retrieval extends QueryPack {
                 ((CAST(n AS DOUBLE) - df + 0.5e0) / (df + 0.5e0))
                 * (tf * 2.2e0)
                 / (tf + 1.2e0 * (0.25e0 + 0.75e0 * (len / (sl / CAST(n AS DOUBLE))))) AS s
-               FROM tf JOIN dfr USING (term) JOIN qt USING (term), stats),
+               FROM tf JOIN dfr USING (term) JOIN qt USING (term), stats)"""
+  }
+
+  /** q102/q110's vector half: q98's exact cosine `vsc` of every doc
+    * against each query vector (vec_id < |queries|), sans metadata
+    * filter. */
+  private val vecScoreCtes: String =
+    s"""e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+        q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < ${queryTerms.size}),
+        vsc AS (SELECT q.q_id, e.vec_id AS doc_id,
+                       list_cosine_similarity(e.v, q.qv) AS cos
+                FROM e, q WHERE e.vec_id <> q.q_id)"""
+
+  /** q102's oracle: the lexical CTE is q97's oracle scoped per query
+    * term, the vector CTE is q98's sans metadata filter, and the fusion
+    * is a FULL JOIN USING (q_id, doc_id) + the identical two-term RRF
+    * sum over integer ranks. */
+  private val hybridOracleSql: String =
+    s"""WITH $lexScoreCtes,
         lex AS (SELECT q_id, doc_id,
                        row_number() OVER (PARTITION BY q_id
                          ORDER BY s DESC, doc_id) AS lex_rnk
                 FROM sc),
         lexk AS (SELECT q_id, doc_id, lex_rnk FROM lex WHERE lex_rnk <= $topK),
-        e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < ${queryTerms.size}),
-        vsc AS (SELECT q.q_id, e.vec_id AS doc_id,
-                       list_cosine_similarity(e.v, q.qv) AS cos
-                FROM e, q WHERE e.vec_id <> q.q_id),
+        $vecScoreCtes,
         vec AS (SELECT q_id, doc_id,
                        row_number() OVER (PARTITION BY q_id
                          ORDER BY cos DESC, doc_id) AS vec_rnk
@@ -391,27 +406,13 @@ object Retrieval extends QueryPack {
         SELECT q_id, rnk, doc_id, floor(rrf * 1000000) / 1000000 AS rrf_score,
                lex_rnk, vec_rnk
         FROM r WHERE rnk <= $topK ORDER BY q_id, rnk"""
-  }
 
   /** q103's oracle: the trained codebook as literals + q45's argmax
     * assignment CTE (ties: highest cosine, then highest centroid id —
     * matching max(struct)), then the in-cell pair filter and the
     * min-smaller-neighbor drop rule. */
-  private def semanticDedupOracleSql(cents: Array[Array[Double]]): String = {
-    val rows = cents.zipWithIndex.map { case (v, i) =>
-      s"($i, [${v.map(_.toString).mkString(", ")}]::DOUBLE[])"
-    }.mkString(",\n             ")
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        c AS (SELECT * FROM (VALUES
-             $rows) AS t(c_id, cv)),
-        sc AS (SELECT e.vec_id, c.c_id,
-                      list_cosine_similarity(e.v, c.cv) AS cc FROM e, c),
-        asg AS (SELECT vec_id, CAST(c_id AS BIGINT) AS cell FROM (
-                  SELECT vec_id, c_id,
-                         row_number() OVER (PARTITION BY vec_id
-                           ORDER BY cc DESC, c_id DESC) AS rn FROM sc)
-                WHERE rn = 1),
-        ae AS (SELECT asg.vec_id, asg.cell, e.v FROM asg JOIN e USING (vec_id)),
+  private def semanticDedupOracleSql(cents: Array[Array[Double]]): String =
+    s"""WITH ${cellCtes(cents)},
         drops AS (SELECT b.vec_id, min(a.vec_id) AS dropped_by
                   FROM ae a JOIN ae b
                     ON a.cell = b.cell AND a.vec_id < b.vec_id
@@ -422,28 +423,12 @@ object Retrieval extends QueryPack {
                coalesce(d.dropped_by, -1) AS dropped_by
         FROM ae LEFT JOIN drops d ON ae.vec_id = d.vec_id
         ORDER BY ae.vec_id"""
-  }
 
   /** q110's oracle: q102's two ranked CTEs keeping raw scores, per-list
     * min-max bounds over the top-k rows, the same 0.5 degenerate branch,
     * and the fixed-order weighted sum. */
-  private val hybridWeightedOracleSql: String = {
-    val qtRows = queryTerms
-      .map { case (q, t) => s"($q, '$t')" }.mkString(", ")
-    s"""WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
-                   FROM documents),
-        stats AS (SELECT count(*) AS n, sum(len(w)) AS sl FROM t),
-        tf AS (SELECT doc_id, len, term, count(*) AS tf
-               FROM (SELECT doc_id, len(w) AS len, unnest(w) AS term FROM t)
-               WHERE term IN (${queryTerms.map(t => s"'${t._2}'").mkString(", ")})
-               GROUP BY doc_id, len, term),
-        dfr AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-        qt(q_id, term) AS (VALUES $qtRows),
-        sc AS (SELECT qt.q_id, tf.doc_id,
-                ((CAST(n AS DOUBLE) - df + 0.5e0) / (df + 0.5e0))
-                * (tf * 2.2e0)
-                / (tf + 1.2e0 * (0.25e0 + 0.75e0 * (len / (sl / CAST(n AS DOUBLE))))) AS s
-               FROM tf JOIN dfr USING (term) JOIN qt USING (term), stats),
+  private val hybridWeightedOracleSql: String =
+    s"""WITH $lexScoreCtes,
         lexk AS (SELECT q_id, doc_id, s FROM (
                    SELECT q_id, doc_id, s,
                           row_number() OVER (PARTITION BY q_id
@@ -454,11 +439,7 @@ object Retrieval extends QueryPack {
                         CASE WHEN hi = lo THEN 0.5e0
                              ELSE (s - lo) / (hi - lo) END AS lex_norm
                  FROM lexk JOIN lexb USING (q_id)),
-        e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < ${queryTerms.size}),
-        vsc AS (SELECT q.q_id, e.vec_id AS doc_id,
-                       list_cosine_similarity(e.v, q.qv) AS cos
-                FROM e, q WHERE e.vec_id <> q.q_id),
+        $vecScoreCtes,
         veck AS (SELECT q_id, doc_id, cos FROM (
                    SELECT q_id, doc_id, cos,
                           row_number() OVER (PARTITION BY q_id
@@ -479,7 +460,6 @@ object Retrieval extends QueryPack {
               FROM fused)
         SELECT q_id, rnk, doc_id, floor(wscore * 1000000) / 1000000 AS wscore
         FROM r WHERE rnk <= $topK ORDER BY q_id, rnk"""
-  }
 
   override val oracles: Map[String, String] = Map(
     "q102_hybrid_search" -> hybridOracleSql,

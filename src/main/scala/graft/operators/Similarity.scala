@@ -267,6 +267,16 @@ object Similarity extends QueryPack {
       .map { case (v, i) => (i.toLong, v.toSeq) }.toDF("c_id", "cv")
   }
 
+  /** `assigned` (embedding + its `centroid`) with `enc`, the residual
+    * embedding − centroid that residual PQ encodes — the Spark side of
+    * [[ivfPqEncodeCtes]]' residual fold. */
+  private def withResidual(s: SparkSession, assigned: DataFrame,
+                           coarse: Array[Array[Double]]): DataFrame =
+    assigned
+      .join(broadcast(codebookDf(s, coarse)), col("centroid") === col("c_id"))
+      .withColumn("enc", expr(
+        "zip_with(transform(embedding, x -> cast(x as double)), cv, (a, b) -> a - b)"))
+
   /** Assign every vector to its best codebook centroid (nprobe=1 cell):
     * broadcast k rows, map-side argmax folded into a partial-aggregatable
     * max(struct) — the same plan shape as `ivfAssign`, quantizer quality
@@ -672,10 +682,7 @@ object Similarity extends QueryPack {
     val assigned = ivfAssignCodebook(s, e, cb)
     val toEncode =
       if (residual)
-        assigned
-          .join(broadcast(codebookDf(s, cb)), col("centroid") === col("c_id"))
-          .withColumn("enc", expr(
-            "zip_with(transform(embedding, x -> cast(x as double)), cv, (a, b) -> a - b)"))
+        withResidual(s, assigned, cb)
       else assigned.withColumn("enc", col("embedding"))
     toEncode
       .select(col("vec_id"), col("centroid"),
@@ -708,10 +715,7 @@ object Similarity extends QueryPack {
     val assigned = ivfAssignCodebook(s, fresh, h.coarse)
     val toEncode =
       if (h.residual)
-        assigned
-          .join(broadcast(codebookDf(s, h.coarse)), col("centroid") === col("c_id"))
-          .withColumn("enc", expr(
-            "zip_with(transform(embedding, x -> cast(x as double)), cv, (a, b) -> a - b)"))
+        withResidual(s, assigned, h.coarse)
       else assigned.withColumn("enc", col("embedding"))
     toEncode
       .select(col("vec_id"), col("centroid"),
@@ -832,10 +836,7 @@ object Similarity extends QueryPack {
     val coarse = trainCentroids(e, ivfK)
     val pq = trainPqResidual(e, coarse)
     ivfPqCodebooks.put(d, (coarse, pq))
-    val withRes = ivfAssignCodebook(s, e, coarse)
-      .join(broadcast(codebookDf(s, coarse)), col("centroid") === col("c_id"))
-      .withColumn("enc", expr(
-        "zip_with(transform(embedding, x -> cast(x as double)), cv, (a, b) -> a - b)"))
+    val withRes = withResidual(s, ivfAssignCodebook(s, e, coarse), coarse)
     val codes = withRes.select(col("vec_id"), col("centroid"),
       NativeExprs.pq_encode(col("enc"), pq).as("codes"))
     val qs = withRes.filter(col("vec_id") < 10)
@@ -1355,23 +1356,15 @@ object Similarity extends QueryPack {
   /** q159's oracle: assignment argmax (cs desc, c_id desc — the
     * max(struct) tie rule) from the coarse codebook literals, grouped
     * per cell with the corpus-share arithmetic replicated. */
-  private def indexStatsOracleSql(coarse: Array[Array[Double]]): String = {
-    val coarseRows = coarse.zipWithIndex.map { case (v, i) =>
-      s"($i, [${v.map(fmt).mkString(", ")}]::DOUBLE[])"
-    }.mkString(",\n             ")
+  private def indexStatsOracleSql(coarse: Array[Array[Double]]): String =
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         cc(c_id, cv) AS (VALUES
-             $coarseRows),
-        sc0 AS (SELECT e.vec_id, cc.c_id,
-                       list_cosine_similarity(e.v, cc.cv) AS cs FROM e, cc),
-        asg AS (SELECT vec_id, c_id AS centroid FROM (
-                  SELECT vec_id, c_id, row_number() OVER (PARTITION BY vec_id
-                    ORDER BY cs DESC, c_id DESC) AS rn FROM sc0) WHERE rn = 1)
+             ${coarseValues(coarse)}),
+        $assignCtes
         SELECT CAST(centroid AS BIGINT) AS cell_id,
                CAST(count(*) AS BIGINT) AS n_vecs,
                floor(count(*) * 1000.0 / (SELECT count(*) FROM e)) / 1000 AS pct
         FROM asg GROUP BY centroid ORDER BY cell_id"""
-  }
 
   /** q156's oracle: the q86 encode CTEs, the q115 multi-probe centroid
     * ranking at nprobe = [[rerankNprobe]], the ADC candidate pool
@@ -1390,51 +1383,9 @@ object Similarity extends QueryPack {
                                  candPred: String = "",
                                  corpusCte: String =
                                    "SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings"): String = {
-    val m = pq.length
-    val sub = pq(0)(0).length
-    val dim = m * sub
-    val coarseRows = coarse.zipWithIndex.map { case (v, i) =>
-      s"($i, [${v.map(fmt).mkString(", ")}]::DOUBLE[])"
-    }.mkString(",\n             ")
-    val cbRows = (for (mi <- 0 until m; c <- pq(mi).indices) yield
-      s"($mi, $c, [${pq(mi)(c).map(fmt).mkString(", ")}]::DOUBLE[])"
-    ).mkString(",\n             ")
-    val subDist = (1 to sub).map { j =>
-      val t = s"(e.v[cb.m*$sub+$j]-cc.cv[cb.m*$sub+$j]-cb.cv[$j])"
-      s"$t*$t"
-    }.mkString(" + ")
-    val adcDist = (1 to dim)
-      .map(i => s"(qr.qres[$i]-recon.r[$i])*(qr.qres[$i]-recon.r[$i])")
-      .mkString(" + ")
-    s"""WITH e AS ($corpusCte),
-        cc(c_id, cv) AS (VALUES
-             $coarseRows),
-        cb(m, code, cv) AS (VALUES
-             $cbRows),
-        sc0 AS (SELECT e.vec_id, cc.c_id,
-                       list_cosine_similarity(e.v, cc.cv) AS cs FROM e, cc),
-        asg AS (SELECT vec_id, c_id AS centroid FROM (
-                  SELECT vec_id, c_id, row_number() OVER (PARTITION BY vec_id
-                    ORDER BY cs DESC, c_id DESC) AS rn FROM sc0) WHERE rn = 1),
-        sc AS (SELECT e.vec_id, asg.centroid, cb.m, cb.code,
-                      $subDist AS d
-               FROM e JOIN asg USING (vec_id)
-               JOIN cc ON cc.c_id = asg.centroid, cb),
-        codes AS (SELECT vec_id, centroid, m, code FROM (
-                    SELECT vec_id, centroid, m, code,
-                           row_number() OVER (PARTITION BY vec_id, m
-                             ORDER BY d ASC, code ASC) AS rn FROM sc)
-                  WHERE rn = 1),
-        recon AS (SELECT c.vec_id, any_value(c.centroid) AS centroid,
-                         flatten(list(cb.cv ORDER BY c.m)) AS r
-                  FROM codes c JOIN cb ON cb.m = c.m AND cb.code = c.code
-                  GROUP BY c.vec_id),
-        q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 10),
-        crank AS (SELECT q.q_id, cc.c_id AS cell,
-                         row_number() OVER (PARTITION BY q.q_id
-                           ORDER BY list_cosine_similarity(q.qv, cc.cv) DESC,
-                                    cc.c_id ASC) AS crnk
-                  FROM q, cc),
+    val dim = pq.length * pq(0)(0).length
+    s"""WITH ${ivfPqEncodeCtes(coarse, pq, corpusCte)},
+        $probeRankCtes,
         qr AS (SELECT p.q_id, p.cell,
                       [q.qv[i] - cc.cv[i] for i in range(1, ${dim + 1})] AS qres
                FROM (SELECT q_id, cell FROM crank
@@ -1442,7 +1393,7 @@ object Similarity extends QueryPack {
                JOIN q ON q.q_id = p.q_id
                JOIN cc ON cc.c_id = p.cell),
         s2 AS (SELECT qr.q_id, recon.vec_id AS n_id,
-                      $adcDist AS adist
+                      ${adcDistSql("qr.qres", dim)} AS adist
                FROM recon JOIN qr ON recon.centroid = qr.cell
                WHERE recon.vec_id <> qr.q_id $candPred),
         cand AS (SELECT q_id, n_id FROM (
@@ -1488,10 +1439,7 @@ object Similarity extends QueryPack {
     val coarse = trainCentroids(e, ivfK)
     val pq = trainPqResidual(e, coarse)
     sweepCodebooks.put(d, (coarse, pq))
-    val withRes = ivfAssignCodebook(s, e, coarse)
-      .join(broadcast(codebookDf(s, coarse)), col("centroid") === col("c_id"))
-      .withColumn("enc", expr(
-        "zip_with(transform(embedding, x -> cast(x as double)), cv, (a, b) -> a - b)"))
+    val withRes = withResidual(s, ivfAssignCodebook(s, e, coarse), coarse)
     val codes = withRes.select(col("vec_id"), col("centroid"),
       NativeExprs.pq_encode(col("enc"), pq).as("codes"))
     val qs = e.filter(col("vec_id") < 10)
@@ -1550,52 +1498,10 @@ object Similarity extends QueryPack {
     * and the same exact-baseline intersection count as q109. */
   private def recallSweepOracleSql(coarse: Array[Array[Double]],
                                    pq: Array[Array[Array[Double]]]): String = {
-    val m = pq.length
-    val sub = pq(0)(0).length
-    val dim = m * sub
-    val coarseRows = coarse.zipWithIndex.map { case (v, i) =>
-      s"($i, [${v.map(fmt).mkString(", ")}]::DOUBLE[])"
-    }.mkString(",\n             ")
-    val cbRows = (for (mi <- 0 until m; c <- pq(mi).indices) yield
-      s"($mi, $c, [${pq(mi)(c).map(fmt).mkString(", ")}]::DOUBLE[])"
-    ).mkString(",\n             ")
-    val subDist = (1 to sub).map { j =>
-      val t = s"(e.v[cb.m*$sub+$j]-cc.cv[cb.m*$sub+$j]-cb.cv[$j])"
-      s"$t*$t"
-    }.mkString(" + ")
-    val adcDist = (1 to dim)
-      .map(i => s"(qr.qres[$i]-recon.r[$i])*(qr.qres[$i]-recon.r[$i])")
-      .mkString(" + ")
+    val dim = pq.length * pq(0)(0).length
     val npRows = sweepNprobes.map(p => s"($p)").mkString(", ")
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        cc(c_id, cv) AS (VALUES
-             $coarseRows),
-        cb(m, code, cv) AS (VALUES
-             $cbRows),
-        sc0 AS (SELECT e.vec_id, cc.c_id,
-                       list_cosine_similarity(e.v, cc.cv) AS cs FROM e, cc),
-        asg AS (SELECT vec_id, c_id AS centroid FROM (
-                  SELECT vec_id, c_id, row_number() OVER (PARTITION BY vec_id
-                    ORDER BY cs DESC, c_id DESC) AS rn FROM sc0) WHERE rn = 1),
-        sc AS (SELECT e.vec_id, asg.centroid, cb.m, cb.code,
-                      $subDist AS d
-               FROM e JOIN asg USING (vec_id)
-               JOIN cc ON cc.c_id = asg.centroid, cb),
-        codes AS (SELECT vec_id, centroid, m, code FROM (
-                    SELECT vec_id, centroid, m, code,
-                           row_number() OVER (PARTITION BY vec_id, m
-                             ORDER BY d ASC, code ASC) AS rn FROM sc)
-                  WHERE rn = 1),
-        recon AS (SELECT c.vec_id, any_value(c.centroid) AS centroid,
-                         flatten(list(cb.cv ORDER BY c.m)) AS r
-                  FROM codes c JOIN cb ON cb.m = c.m AND cb.code = c.code
-                  GROUP BY c.vec_id),
-        q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 10),
-        crank AS (SELECT q.q_id, cc.c_id AS cell,
-                         row_number() OVER (PARTITION BY q.q_id
-                           ORDER BY list_cosine_similarity(q.qv, cc.cv) DESC,
-                                    cc.c_id ASC) AS crnk
-                  FROM q, cc),
+    s"""WITH ${ivfPqEncodeCtes(coarse, pq)},
+        $probeRankCtes,
         np(nprobe) AS (VALUES $npRows),
         probe AS (SELECT np.nprobe, crank.q_id, crank.cell
                   FROM crank, np WHERE crank.crnk <= np.nprobe),
@@ -1604,7 +1510,7 @@ object Similarity extends QueryPack {
                FROM probe p JOIN q ON q.q_id = p.q_id
                JOIN cc ON cc.c_id = p.cell),
         s2 AS (SELECT qr.nprobe, qr.q_id, recon.vec_id AS n_id,
-                      $adcDist AS adist
+                      ${adcDistSql("qr.qres", dim)} AS adist
                FROM recon JOIN qr ON recon.centroid = qr.cell
                WHERE recon.vec_id <> qr.q_id),
         ivf AS (SELECT nprobe, q_id, n_id FROM (
@@ -1678,12 +1584,7 @@ object Similarity extends QueryPack {
     * CTE; cluster id = component minimum. */
   private def embeddingClustersOracleSql(nBands: Int, bits: Int): String =
     s"""WITH RECURSIVE pairs AS (SELECT a_id, b_id FROM (${lshOracleSql(nBands, bits)})),
-       edges AS (SELECT a_id AS src, b_id AS dst FROM pairs
-                 UNION ALL SELECT b_id, a_id FROM pairs),
-       reach AS (
-         SELECT vec_id AS id, vec_id AS r FROM embeddings
-         UNION
-         SELECT e.dst AS id, reach.r FROM reach JOIN edges e ON e.src = reach.id)
+       ${Dedup.closureCtes("SELECT vec_id AS id, vec_id AS r FROM embeddings")}
        SELECT id AS vec_id, min(r) AS cluster_id,
               CAST(CASE WHEN min(r) = id THEN 1 ELSE 0 END AS BIGINT) AS keep
        FROM reach GROUP BY id ORDER BY vec_id"""
@@ -1757,25 +1658,105 @@ object Similarity extends QueryPack {
          ORDER BY a_id, b_id"""
   }
 
-  /** q45's oracle: the TRAINED codebook embedded as double literals
-    * (Double.toString round-trips bit-exactly through DuckDB's parser,
-    * same as the LSH plane literals), then the identical argmax (ties:
-    * highest cosine, then highest centroid id — matching
-    * max(struct(cos, id))) + nprobe=1 in-cell top-5. */
-  private def ivfOracleSqlTrained(cents: Array[Array[Double]]): String = {
-    val rows = cents.zipWithIndex.map { case (v, i) =>
+  /** A coarse codebook as DuckDB VALUES rows `(c_id, cv)`. */
+  private[operators] def coarseValues(coarse: Array[Array[Double]]): String =
+    coarse.zipWithIndex.map { case (v, i) =>
       s"($i, [${v.map(fmt).mkString(", ")}]::DOUBLE[])"
     }.mkString(",\n             ")
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        c AS (SELECT * FROM (VALUES
-             $rows) AS t(c_id, cv)),
+
+  /** A PQ codebook as DuckDB VALUES rows `(m, code, cv)`. */
+  private def pqValues(pq: Array[Array[Array[Double]]]): String =
+    (for (mi <- pq.indices; c <- pq(mi).indices) yield
+      s"($mi, $c, [${pq(mi)(c).map(fmt).mkString(", ")}]::DOUBLE[])"
+    ).mkString(",\n             ")
+
+  /** ADC distance from the query vector `qv` to `recon.r`: the explicit
+    * left-associated `dim`-term fold [[graft.functions.PqAdc]] runs. */
+  private def adcDistSql(qv: String, dim: Int): String =
+    (1 to dim).map(i => s"($qv[$i]-recon.r[$i])*($qv[$i]-recon.r[$i])")
+      .mkString(" + ")
+
+  /** The coarse assignment over `e` and `cc`: `sc0` scores every
+    * centroid, `asg` keeps the argmax (ties: highest cos, then highest
+    * c_id — the max(struct(cos, id)) rule). */
+  private val assignCtes: String =
+    """sc0 AS (SELECT e.vec_id, cc.c_id,
+                       list_cosine_similarity(e.v, cc.cv) AS cs FROM e, cc),
+        asg AS (SELECT vec_id, c_id AS centroid FROM (
+                  SELECT vec_id, c_id, row_number() OVER (PARTITION BY vec_id
+                    ORDER BY cs DESC, c_id DESC) AS rn FROM sc0) WHERE rn = 1)"""
+
+  /** The multi-probe centroid ranking over `e` and `cc`: queries `q`
+    * (vec_id < 10) and `crank`, every cell's rank per query by cosine
+    * desc, cell id asc — TopKAgg's tie rule, NOT the assignment
+    * argmax's. */
+  private val probeRankCtes: String =
+    """q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 10),
+        crank AS (SELECT q.q_id, cc.c_id AS cell,
+                         row_number() OVER (PARTITION BY q.q_id
+                           ORDER BY list_cosine_similarity(q.qv, cc.cv) DESC,
+                                    cc.c_id ASC) AS crnk
+                  FROM q, cc)"""
+
+  /** The IVF-PQ encode CTEs every IVF-PQ oracle starts from: the corpus
+    * `e` (`corpusCte`), both codebooks as literals (`cc`, `cb`), the
+    * coarse assignment, the per-subspace residual argmin `codes` (the
+    * explicit left-associated fold ((v − coarse_cv) − pq_cv)² matching
+    * [[graft.functions.PqEncode]]; ties → lowest code) and the
+    * reconstruction `recon` (chosen centroids concatenated in subspace
+    * order, with the vector's cell). */
+  private def ivfPqEncodeCtes(coarse: Array[Array[Double]],
+                              pq: Array[Array[Array[Double]]],
+                              corpusCte: String =
+                                "SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings"): String = {
+    val sub = pq(0)(0).length
+    val subDist = (1 to sub).map { j =>
+      val t = s"(e.v[cb.m*$sub+$j]-cc.cv[cb.m*$sub+$j]-cb.cv[$j])"
+      s"$t*$t"
+    }.mkString(" + ")
+    s"""e AS ($corpusCte),
+        cc(c_id, cv) AS (VALUES
+             ${coarseValues(coarse)}),
+        cb(m, code, cv) AS (VALUES
+             ${pqValues(pq)}),
+        $assignCtes,
+        sc AS (SELECT e.vec_id, asg.centroid, cb.m, cb.code,
+                      $subDist AS d
+               FROM e JOIN asg USING (vec_id)
+               JOIN cc ON cc.c_id = asg.centroid, cb),
+        codes AS (SELECT vec_id, centroid, m, code FROM (
+                    SELECT vec_id, centroid, m, code,
+                           row_number() OVER (PARTITION BY vec_id, m
+                             ORDER BY d ASC, code ASC) AS rn FROM sc)
+                  WHERE rn = 1),
+        recon AS (SELECT c.vec_id, any_value(c.centroid) AS centroid,
+                         flatten(list(cb.cv ORDER BY c.m)) AS r
+                  FROM codes c JOIN cb ON cb.m = c.m AND cb.code = c.code
+                  GROUP BY c.vec_id)"""
+  }
+
+  /** q45's codebook assignment over `e`: the codebook as literals `c`
+    * (Double.toString round-trips bit-exactly through DuckDB's parser,
+    * same as the LSH plane literals),
+    * each vector's cosine `cc` to every centroid in `sc`, and `asg`
+    * (vec_id, centroid), the argmax (ties: highest cosine, then highest
+    * centroid id — matching max(struct(cos, id))). */
+  private[operators] def literalAssignCtes(cents: Array[Array[Double]]): String =
+    s"""c AS (SELECT * FROM (VALUES
+             ${coarseValues(cents)}) AS t(c_id, cv)),
         sc AS (SELECT e.vec_id, c.c_id,
                       list_cosine_similarity(e.v, c.cv) AS cc FROM e, c),
         asg AS (SELECT vec_id, c_id AS centroid FROM (
                   SELECT vec_id, c_id,
                          row_number() OVER (PARTITION BY vec_id
                            ORDER BY cc DESC, c_id DESC) AS rn FROM sc)
-                WHERE rn = 1),
+                WHERE rn = 1)"""
+
+  /** q45's oracle: the TRAINED codebook's [[literalAssignCtes]] +
+    * nprobe=1 in-cell top-5. */
+  private def ivfOracleSqlTrained(cents: Array[Array[Double]]): String =
+    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+        ${literalAssignCtes(cents)},
         ae AS (SELECT asg.vec_id, asg.centroid, e.v
                FROM asg JOIN e USING (vec_id)),
         q AS (SELECT vec_id AS q_id, centroid AS q_centroid, v AS qv
@@ -1789,7 +1770,6 @@ object Similarity extends QueryPack {
                        ORDER BY cos DESC, n_id) AS rnk FROM sc2)
         SELECT q_id, rnk, n_id, floor(cos * 100000) / 100000 AS cosine
         FROM r WHERE rnk <= 5 ORDER BY q_id, rnk"""
-  }
 
   /** q82's oracle: the trained PQ codebook as 128 VALUES rows (m, code,
     * 8-dim DOUBLE[] centroid); encoding = argmin over the explicit
@@ -1802,18 +1782,12 @@ object Similarity extends QueryPack {
     val m = cb.length
     val sub = cb(0)(0).length
     val dim = m * sub
-    val rows = (for (mi <- 0 until m; c <- cb(mi).indices) yield
-      s"($mi, $c, [${cb(mi)(c).map(fmt).mkString(", ")}]::DOUBLE[])"
-    ).mkString(",\n             ")
     val subDist = (1 to sub)
       .map(j => s"(e.v[cb.m*$sub+$j]-cb.cv[$j])*(e.v[cb.m*$sub+$j]-cb.cv[$j])")
       .mkString(" + ")
-    val adcDist = (1 to dim)
-      .map(i => s"(q.qv[$i]-recon.r[$i])*(q.qv[$i]-recon.r[$i])")
-      .mkString(" + ")
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         cb(m, code, cv) AS (VALUES
-             $rows),
+             ${pqValues(cb)}),
         sc AS (SELECT e.vec_id, cb.m, cb.code,
                       $subDist AS d
                FROM e, cb),
@@ -1827,7 +1801,7 @@ object Similarity extends QueryPack {
                   GROUP BY c.vec_id),
         q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 10),
         s2 AS (SELECT q.q_id, recon.vec_id AS n_id,
-                      $adcDist AS adist
+                      ${adcDistSql("q.qv", dim)} AS adist
                FROM recon, q WHERE recon.vec_id <> q.q_id),
         r2 AS (SELECT q_id, n_id, adist,
                       row_number() OVER (PARTITION BY q_id
@@ -1844,51 +1818,14 @@ object Similarity extends QueryPack {
     * 64-term fold over (query residual − reconstruction). */
   private def ivfPqOracleSqlTrained(coarse: Array[Array[Double]],
                                     pq: Array[Array[Array[Double]]]): String = {
-    val m = pq.length
-    val sub = pq(0)(0).length
-    val dim = m * sub
-    val coarseRows = coarse.zipWithIndex.map { case (v, i) =>
-      s"($i, [${v.map(fmt).mkString(", ")}]::DOUBLE[])"
-    }.mkString(",\n             ")
-    val cbRows = (for (mi <- 0 until m; c <- pq(mi).indices) yield
-      s"($mi, $c, [${pq(mi)(c).map(fmt).mkString(", ")}]::DOUBLE[])"
-    ).mkString(",\n             ")
-    val subDist = (1 to sub).map { j =>
-      val t = s"(e.v[cb.m*$sub+$j]-cc.cv[cb.m*$sub+$j]-cb.cv[$j])"
-      s"$t*$t"
-    }.mkString(" + ")
-    val adcDist = (1 to dim)
-      .map(i => s"(q.qres[$i]-recon.r[$i])*(q.qres[$i]-recon.r[$i])")
-      .mkString(" + ")
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        cc(c_id, cv) AS (VALUES
-             $coarseRows),
-        cb(m, code, cv) AS (VALUES
-             $cbRows),
-        sc0 AS (SELECT e.vec_id, cc.c_id,
-                       list_cosine_similarity(e.v, cc.cv) AS cs FROM e, cc),
-        asg AS (SELECT vec_id, c_id AS centroid FROM (
-                  SELECT vec_id, c_id, row_number() OVER (PARTITION BY vec_id
-                    ORDER BY cs DESC, c_id DESC) AS rn FROM sc0) WHERE rn = 1),
-        sc AS (SELECT e.vec_id, asg.centroid, cb.m, cb.code,
-                      $subDist AS d
-               FROM e JOIN asg USING (vec_id)
-               JOIN cc ON cc.c_id = asg.centroid, cb),
-        codes AS (SELECT vec_id, centroid, m, code FROM (
-                    SELECT vec_id, centroid, m, code,
-                           row_number() OVER (PARTITION BY vec_id, m
-                             ORDER BY d ASC, code ASC) AS rn FROM sc)
-                  WHERE rn = 1),
-        recon AS (SELECT c.vec_id, any_value(c.centroid) AS centroid,
-                         flatten(list(cb.cv ORDER BY c.m)) AS r
-                  FROM codes c JOIN cb ON cb.m = c.m AND cb.code = c.code
-                  GROUP BY c.vec_id),
+    val dim = pq.length * pq(0)(0).length
+    s"""WITH ${ivfPqEncodeCtes(coarse, pq)},
         q AS (SELECT e.vec_id AS q_id, asg.centroid AS q_centroid,
                      [e.v[i] - cc.cv[i] for i in range(1, ${dim + 1})] AS qres
               FROM e JOIN asg USING (vec_id)
               JOIN cc ON cc.c_id = asg.centroid WHERE e.vec_id < 10),
         s2 AS (SELECT q.q_id, recon.vec_id AS n_id,
-                      $adcDist AS adist
+                      ${adcDistSql("q.qres", dim)} AS adist
                FROM recon JOIN q ON recon.centroid = q.q_centroid
                WHERE recon.vec_id <> q.q_id),
         r2 AS (SELECT q_id, n_id, adist,

@@ -108,21 +108,10 @@ object Stats extends QueryPack {
     * assignment argmax (ties: highest cosine then highest c_id —
     * max(struct) order) + the contingency table + per-cell majority
     * via row_number (cnt DESC, label — the TopKAgg total order). */
-  private def cpOracleSql(cents: Array[Array[Double]]): String = {
-    val rows = cents.zipWithIndex.map { case (v, i) =>
-      s"($i, [${v.map(_.toString).mkString(", ")}]::DOUBLE[])"
-    }.mkString(",\n             ")
+  private def cpOracleSql(cents: Array[Array[Double]]): String =
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label
                    FROM embeddings),
-        c AS (SELECT * FROM (VALUES
-             $rows) AS t(c_id, cv)),
-        sc AS (SELECT e.vec_id, c.c_id,
-                      list_cosine_similarity(e.v, c.cv) AS cc FROM e, c),
-        asg AS (SELECT vec_id, c_id AS centroid FROM (
-                  SELECT vec_id, c_id,
-                         row_number() OVER (PARTITION BY vec_id
-                           ORDER BY cc DESC, c_id DESC) AS rn FROM sc)
-                WHERE rn = 1),
+        ${Similarity.literalAssignCtes(cents)},
         ct AS (SELECT asg.centroid, CAST(e.label AS BIGINT) AS label,
                       CAST(count(*) AS BIGINT) AS cnt
                FROM asg JOIN e ON e.vec_id = asg.vec_id GROUP BY 1, 2),
@@ -137,7 +126,6 @@ object Stats extends QueryPack {
                  AS purity
         FROM r JOIN sz USING (centroid)
         WHERE rn = 1 ORDER BY centroid"""
-  }
 
   /** MMR trade-off weight λ (and its complement written as an explicit
     * literal — `1.0 - 0.7` is NOT the double `0.3`, so both engines
@@ -1450,19 +1438,22 @@ object Stats extends QueryPack {
          UNION ALL SELECT 3, w1, w2, n FROM t3
          ORDER BY step"""
 
-  /** The distinct (source, 60-bit shingle hash) oracle CTE (q195's `sh`
-    * relation), shared by the HLL pair. */
-  private def hllShCte: String =
-    """sh AS (SELECT DISTINCT source,
+  /** The distinct (source, 60-bit shingle hash) oracle CTE `sh`, shared
+    * by the HLL pair and the q195/q196 sketches. */
+  private def sourceShCte: String =
+    s"""sh AS (SELECT DISTINCT source,
                 CAST(('0x' || substr(md5(sg), 1, 15)) AS BIGINT) AS h
-           FROM (SELECT source,
-                        unnest(list_distinct(CASE WHEN len(t) >= 3 THEN
-                          [t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                           for i in range(1, len(t) - 1)]
-                        ELSE [] END)) AS sg
-                 FROM (SELECT source,
-                              string_split_regex(trim(text), '\s+') AS t
-                       FROM documents)))"""
+           FROM (SELECT source, unnest(shingles) AS sg
+                 FROM (${TextExprs.duckShingleSet("source")})))"""
+
+  /** q195/q196's per-source bottom-k sketch over [[sourceShCte]]. */
+  private def sourceSketchCtes: String =
+    s"""$sourceShCte,
+         rk AS (SELECT source, h,
+                       row_number() OVER (PARTITION BY source ORDER BY h) AS rn
+                FROM sh),
+         sk AS (SELECT source, list(h ORDER BY h) AS sketch
+                FROM rk WHERE rn <= $srcSketchK GROUP BY source)"""
 
   /** HLL register CTE over `sh` — bucket h % m, rho via len(bin()). */
   private def hllRegCte: String =
@@ -1753,7 +1744,7 @@ object Stats extends QueryPack {
          FROM ex JOIN est ON ex.source = est.source
          ORDER BY col_name""",
     "q208_hll_distinct" ->
-      s"""WITH $hllShCte,
+      s"""WITH $sourceShCte,
          $hllRegCte,
          $hllEstCte,
          ex AS (SELECT source, count(*) AS exact_distinct FROM sh
@@ -1767,26 +1758,12 @@ object Stats extends QueryPack {
          FROM ex JOIN est ON ex.source = est.source
          ORDER BY ex.source""",
     "q209_hll_merge" ->
-      s"""WITH $hllShCte,
+      s"""WITH $sourceShCte,
          $hllRegCte,
          $hllEstCte
          SELECT source, hll_est FROM est ORDER BY source""",
     "q195_source_sketch" ->
-      s"""WITH sh AS (SELECT DISTINCT source,
-                CAST(('0x' || substr(md5(sg), 1, 15)) AS BIGINT) AS h
-           FROM (SELECT source,
-                        unnest(list_distinct(CASE WHEN len(t) >= 3 THEN
-                          [t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                           for i in range(1, len(t) - 1)]
-                        ELSE [] END)) AS sg
-                 FROM (SELECT source,
-                              string_split_regex(trim(text), '\\s+') AS t
-                       FROM documents))),
-         rk AS (SELECT source, h,
-                       row_number() OVER (PARTITION BY source ORDER BY h) AS rn
-                FROM sh),
-         sk AS (SELECT source, list(h ORDER BY h) AS sketch
-                FROM rk WHERE rn <= $srcSketchK GROUP BY source),
+      s"""WITH $sourceSketchCtes,
          sz AS (SELECT source, count(*) AS z FROM sh GROUP BY source),
          pr AS (SELECT a.source AS src_a, b.source AS src_b,
                        a.sketch AS sa, b.sketch AS sb
@@ -1809,21 +1786,7 @@ object Stats extends QueryPack {
     // q196: the oracle rebuilds the sketch from the FULL corpus in one
     // pass — a hash match proves the two-half merge ≡ rebuild
     "q196_sketch_merge" ->
-      s"""WITH sh AS (SELECT DISTINCT source,
-                CAST(('0x' || substr(md5(sg), 1, 15)) AS BIGINT) AS h
-           FROM (SELECT source,
-                        unnest(list_distinct(CASE WHEN len(t) >= 3 THEN
-                          [t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                           for i in range(1, len(t) - 1)]
-                        ELSE [] END)) AS sg
-                 FROM (SELECT source,
-                              string_split_regex(trim(text), '\\s+') AS t
-                       FROM documents))),
-         rk AS (SELECT source, h,
-                       row_number() OVER (PARTITION BY source ORDER BY h) AS rn
-                FROM sh),
-         sk AS (SELECT source, list(h ORDER BY h) AS sketch
-                FROM rk WHERE rn <= $srcSketchK GROUP BY source),
+      s"""WITH $sourceSketchCtes,
          pr AS (SELECT a.source AS src_a, b.source AS src_b,
                        a.sketch AS sa, b.sketch AS sb
                 FROM sk a, sk b WHERE a.source < b.source)
@@ -1911,21 +1874,7 @@ object Stats extends QueryPack {
     // q42's exact inverted-index pair SQL (the q131 shape) closed with
     // the degree/histogram aggregates and the subtraction zero row
     "q143_neardup_degree" ->
-      """WITH sh AS (
-           SELECT doc_id,
-             list_distinct(CASE WHEN len(t) >= 3 THEN
-               [t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                for i in range(1, len(t) - 1)]
-             ELSE [] END) AS shingles
-           FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-                 FROM documents)),
-         ex AS (SELECT doc_id, len(shingles) AS sz, unnest(shingles) AS s
-                FROM sh),
-         pairs AS (
-           SELECT a.doc_id AS a_id, b.doc_id AS b_id, a.sz AS asz,
-                  b.sz AS bsz, count(*) AS common
-           FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-           GROUP BY 1, 2, 3, 4),
+      s"""WITH ${TextAnalysis.shinglePairCtes("pairs")},
          nd AS (SELECT a_id, b_id FROM pairs
                 WHERE common / (asz + bsz - common) >= 0.8),
          dg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS d FROM (

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryPack, Tables}
+import graft.functions.TextExprs
 import graft.streaming.StreamOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
@@ -150,8 +151,11 @@ object StreamGate extends QueryPack {
     * beyond `max(ts) − delay` unfired. The sentinel plays that next
     * event: after the data batch the watermark jumps past every real
     * row's (window end + gap + delay) and the closing no-data
-    * micro-batch flushes all of them. Gates filter the sentinel's own
-    * key (< 0) from the sink. Staged once per (session, dataset). */
+    * micro-batch flushes all of them. Every gate drops the sentinel's
+    * own rows: most filter its key (< 0) from the sink, and q194 relies
+    * on [[EventOps.scoreHourly]]'s inner join to the corpus baseline,
+    * which has no sentinel event type. Staged once per (session,
+    * dataset). */
   private def eventsStaged(s: SparkSession, d: String): (String, org.apache.spark.sql.types.StructType) =
     graft.SessionMemo.getOrElseUpdate[(String, org.apache.spark.sql.types.StructType)](s, "stream.evStage", d)({
       import s.implicits._
@@ -495,12 +499,12 @@ object StreamGate extends QueryPack {
     * 2σ scorer, so streaming the full table against its own baseline
     * serves q191's oracle verbatim). Epoch-aligned windows make the
     * streaming hour bucket ≡ the batch `unix_micros div 3600000000`
-    * bucket by construction. */
+    * bucket by construction. The sentinel's closed hour needs no
+    * filter: the scorer's inner join to the baseline drops it. */
   private def q194AnomalyStream(s: SparkSession, d: String): DataFrame = {
     val closed = eventWindowAggs(s, d).filter(col("tag") === "q194")
       .select(col("k1").as("event_type"),
               expr("unix_micros(ws) div 3600000000").as("hr"), col("c"))
-      .filter(col("event_type") =!= "zzz_sentinel")
     EventOps.scoreHourly(closed, EventOps.hourlyStats(s, d))
   }
 
@@ -601,7 +605,11 @@ object StreamGate extends QueryPack {
     * value-ranked top-3 events once the watermark passes the window end
     * (the sentinel closes the tail windows); the oracle is the
     * window-function formulation (score desc, id asc — TopKAgg's total
-    * order, q77's precedent). */
+    * order, q77's precedent). No committed corpus has a tie in `value`
+    * within an hour's top 3 (0 tied groups at sf0.001 and sf0.01), so
+    * the oracle cannot see TopKAgg's tie order; NativeExprSpec
+    * "top_k_by_score: ties, k > group, nulls, partitioning-independent"
+    * is what pins it. */
   private def q168WindowTopkStream(s: SparkSession, d: String): DataFrame =
     eventWindowAggs(s, d).filter(col("tag") === "q168")
       .select(col("ws").as("window_start"),
@@ -1030,19 +1038,7 @@ object StreamGate extends QueryPack {
     // Both eviction directions are certified: in-horizon pairs must
     // all emit, out-of-horizon true pairs must all be evicted.
     "q293_minhash_evict" ->
-      """WITH sh AS (
-           SELECT doc_id,
-             list_distinct(CASE WHEN len(t) >= 3 THEN
-               [t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]
-             ELSE [] END) AS shingles
-           FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-                 FROM documents)),
-         ex AS (SELECT doc_id, len(shingles) AS sz, unnest(shingles) AS s FROM sh),
-         pairs AS (
-           SELECT a.doc_id AS a_id, b.doc_id AS b_id, a.sz AS asz, b.sz AS bsz,
-                  count(*) AS common
-           FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-           GROUP BY 1, 2, 3, 4)
+      s"""WITH ${TextAnalysis.shinglePairCtes("pairs")}
          SELECT a_id, b_id,
                 floor(common / (asz + bsz - common) * 1000) / 1000 AS jaccard
          FROM pairs
@@ -1162,13 +1158,7 @@ object StreamGate extends QueryPack {
     // int/int division in both engines (bit-exact), floored only for
     // output.
     "q105_contamination_stream" ->
-      """WITH sh AS (
-           SELECT doc_id,
-             list_distinct(CASE WHEN len(t) >= 3 THEN
-               [t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]
-             ELSE [] END) AS shingles
-           FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-                 FROM documents)),
+      s"""WITH sh AS (${TextExprs.duckShingleSet("doc_id")}),
          bench AS (SELECT DISTINCT unnest(shingles) AS s FROM sh WHERE doc_id < 20),
          corpus AS (SELECT doc_id, len(shingles) AS nsh FROM sh WHERE doc_id >= 20),
          hits AS (SELECT c.doc_id, count(*) AS n_hit
@@ -1186,12 +1176,7 @@ object StreamGate extends QueryPack {
     // the shared window definition (W = 8, md5 of the joined tokens)
     // replicated positionally; corpus = doc_id < 250, stream the rest
     "q118_window_stream" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
-                    FROM documents),
-         win AS (SELECT doc_id, i AS pos,
-                        md5(array_to_string(list_slice(w, i, i + 7), ' ')) AS wh
-                 FROM (SELECT doc_id, w, unnest(range(1, len(w) - 6)) AS i
-                       FROM t WHERE len(w) >= 8)),
+      s"""WITH ${WindowDedup.windowHashCtes},
          corpus AS (SELECT DISTINCT wh FROM win WHERE doc_id < 250)
          SELECT s.doc_id, CAST(s.pos AS BIGINT) AS pos,
                 CAST(CASE WHEN c.wh IS NULL THEN 0 ELSE 1 END AS BIGINT)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryPack, Tables}
+import graft.functions.TextExprs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -930,6 +931,45 @@ object TextAnalysis extends QueryPack {
       .orderBy("source")
   }
 
+  /** The exact 3-shingle pair relation every exact-Jaccard oracle starts
+    * from: [[TextExprs.duckShingleSet]] as `sh`, its postings `ex`, and
+    * `name` (a_id < b_id, both set sizes, shared-shingle count `common`)
+    * for every pair sharing a shingle. */
+  private[operators] def shinglePairCtes(name: String): String =
+    s"""sh AS (${TextExprs.duckShingleSet("doc_id")}),
+         ex AS (SELECT doc_id, len(shingles) AS sz, unnest(shingles) AS s FROM sh),
+         $name AS (
+           SELECT a.doc_id AS a_id, b.doc_id AS b_id, a.sz AS asz, b.sz AS bsz,
+                  count(*) AS common
+           FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
+           GROUP BY 1, 2, 3, 4)"""
+
+  /** q174's oracle over the directed pairs matching `pairPred`: the
+    * containment common / |a| >= 0.9, the divisor the contained side's
+    * set size only. */
+  private def containmentOracleSql(pairPred: String): String =
+    s"""WITH sh AS (${TextExprs.duckShingleSet("doc_id")}),
+         ex AS (SELECT doc_id, len(shingles) AS sz, unnest(shingles) AS s FROM sh),
+         pairs AS (
+           SELECT a.doc_id AS a_id, b.doc_id AS b_id, a.sz AS asz,
+                  count(*) AS common
+           FROM ex a JOIN ex b ON a.s = b.s AND $pairPred
+           GROUP BY 1, 2, 3)
+         SELECT a_id, b_id,
+                floor(CAST(common AS DOUBLE) / asz * 1000) / 1000 AS containment
+         FROM pairs
+         WHERE CAST(common AS DOUBLE) / asz >= 0.9
+         ORDER BY a_id, b_id"""
+
+  /** q35's oracle: the exact pairs at Jaccard >= 0.8. */
+  private val q35JaccardOracleSql: String =
+    s"""WITH ${shinglePairCtes("pairs")}
+         SELECT a_id, b_id,
+                floor(common / (asz + bsz - common) * 1000) / 1000 AS jaccard
+         FROM pairs
+         WHERE common / (asz + bsz - common) >= 0.8
+         ORDER BY a_id, b_id"""
+
   override val oracles: Map[String, String] = Map(
     // q291: the same depth fan-out (CROSS JOIN a 4-row VALUES), 1-based
     // inclusive list slice == Spark's slice(tk, 1, depth), all-integer
@@ -1140,80 +1180,20 @@ object TextAnalysis extends QueryPack {
                    t -> t IN ('the','a','of','and','in','to'))) AS n_stop
                FROM documents) ORDER BY doc_id""",
     "q34_fingerprint" ->
-      """WITH sh AS (
-           SELECT doc_id,
-             list_distinct(CASE WHEN len(t) >= 3 THEN
-               [t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]
-             ELSE [] END) AS shingles
-           FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-                 FROM documents))
+      s"""WITH sh AS (${TextExprs.duckShingleSet("doc_id")})
          SELECT doc_id, list_min([md5(x) for x in shingles]) AS fingerprint,
                 len(shingles) AS n_shingles
          FROM sh ORDER BY doc_id""",
-    "q35_ngram_jaccard" ->
-      """WITH sh AS (
-           SELECT doc_id,
-             list_distinct(CASE WHEN len(t) >= 3 THEN
-               [t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]
-             ELSE [] END) AS shingles
-           FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-                 FROM documents)),
-         ex AS (SELECT doc_id, len(shingles) AS sz, unnest(shingles) AS s FROM sh),
-         pairs AS (
-           SELECT a.doc_id AS a_id, b.doc_id AS b_id, a.sz AS asz, b.sz AS bsz,
-                  count(*) AS common
-           FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-           GROUP BY 1, 2, 3, 4)
-         SELECT a_id, b_id,
-                floor(common / (asz + bsz - common) * 1000) / 1000 AS jaccard
-         FROM pairs
-         WHERE common / (asz + bsz - common) >= 0.8
-         ORDER BY a_id, b_id""",
+    "q35_ngram_jaccard" -> q35JaccardOracleSql,
     // q244: the prefix-filtered join is certified VALUE-NEUTRAL against
     // the same exact-Jaccard relation as q35 — the oracle recomputes the
     // full inverted-index join; the Spark plan reaches the identical
     // pair set through ~20% of the postings
-    "q244_prefix_join" ->
-      """WITH sh AS (
-           SELECT doc_id,
-             list_distinct(CASE WHEN len(t) >= 3 THEN
-               [t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]
-             ELSE [] END) AS shingles
-           FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-                 FROM documents)),
-         ex AS (SELECT doc_id, len(shingles) AS sz, unnest(shingles) AS s FROM sh),
-         pairs AS (
-           SELECT a.doc_id AS a_id, b.doc_id AS b_id, a.sz AS asz, b.sz AS bsz,
-                  count(*) AS common
-           FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-           GROUP BY 1, 2, 3, 4)
-         SELECT a_id, b_id,
-                floor(common / (asz + bsz - common) * 1000) / 1000 AS jaccard
-         FROM pairs
-         WHERE common / (asz + bsz - common) >= 0.8
-         ORDER BY a_id, b_id""",
+    "q244_prefix_join" -> q35JaccardOracleSql,
     // q174: directed pairs, divisor is the contained side's set size
     // only; common/asz is an exact-integer ratio (DuckDB BIGINT/BIGINT
     // truncates, so the division is written in DOUBLE explicitly)
-    "q174_containment" ->
-      """WITH sh AS (
-           SELECT doc_id,
-             list_distinct(CASE WHEN len(t) >= 3 THEN
-               [t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]
-             ELSE [] END) AS shingles
-           FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-                 FROM documents)),
-         ex AS (SELECT doc_id, len(shingles) AS sz, unnest(shingles) AS s FROM sh),
-         pairs AS (
-           SELECT a.doc_id AS a_id, b.doc_id AS b_id, a.sz AS asz,
-                  count(*) AS common
-           FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id <> b.doc_id
-           GROUP BY 1, 2, 3)
-         SELECT a_id, b_id,
-                floor(CAST(common AS DOUBLE) / asz * 1000) / 1000 AS containment
-         FROM pairs
-         WHERE CAST(common AS DOUBLE) / asz >= 0.9
-         ORDER BY a_id, b_id""",
+    "q174_containment" -> containmentOracleSql("a.doc_id <> b.doc_id"),
     // q201: deterministic (count DESC, token ASC) top-V vocabulary cut,
     // integer OOV counts, one floored share per source
     "q201_vocab_coverage" ->
@@ -1233,24 +1213,6 @@ object TextAnalysis extends QueryPack {
     // q183: q174's SQL restricted to cross pairs — fresh (>= 250)
     // contained in corpus (< 250)
     "q183_inc_containment" ->
-      """WITH sh AS (
-           SELECT doc_id,
-             list_distinct(CASE WHEN len(t) >= 3 THEN
-               [t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]
-             ELSE [] END) AS shingles
-           FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-                 FROM documents)),
-         ex AS (SELECT doc_id, len(shingles) AS sz, unnest(shingles) AS s FROM sh),
-         pairs AS (
-           SELECT a.doc_id AS a_id, b.doc_id AS b_id, a.sz AS asz,
-                  count(*) AS common
-           FROM ex a JOIN ex b ON a.s = b.s
-                AND a.doc_id >= 250 AND b.doc_id < 250
-           GROUP BY 1, 2, 3)
-         SELECT a_id, b_id,
-                floor(CAST(common AS DOUBLE) / asz * 1000) / 1000 AS containment
-         FROM pairs
-         WHERE CAST(common AS DOUBLE) / asz >= 0.9
-         ORDER BY a_id, b_id""",
+      containmentOracleSql("a.doc_id >= 250 AND b.doc_id < 250"),
   )
 }

@@ -334,18 +334,24 @@ object WindowDedup extends QueryPack {
     "q121_span_removal" -> q121SpanRemoval _,
   )
 
+  /** The shared window definition in DuckDB: `t`, each doc's tokens
+    * `w`, and `win`, every [[W]]-token window (doc_id, 1-based start
+    * `pos`, md5 `wh` of the space-joined tokens). */
+  private[operators] val windowHashCtes: String =
+    s"""t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
+                    FROM documents),
+         win AS (SELECT doc_id, i AS pos,
+                        md5(array_to_string(list_slice(w, i, i + ${W - 1}), ' ')) AS wh
+                 FROM (SELECT doc_id, w, unnest(range(1, len(w) - ${W - 2})) AS i
+                       FROM t WHERE len(w) >= $W))"""
+
   override val oracles: Map[String, String] = Map(
     // the shared W = 8 window/hash definition (q118's oracle fragment);
     // lexicographic min-struct replicated as min(doc) then min(pos)
     // within that doc; ORDER BY + LIMIT with the wh tiebreak is a total
     // order
     "q133_top_spans" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w
-                    FROM documents),
-         win AS (SELECT doc_id, i AS pos,
-                        md5(array_to_string(list_slice(w, i, i + 7), ' ')) AS wh
-                 FROM (SELECT doc_id, w, unnest(range(1, len(w) - 6)) AS i
-                       FROM t WHERE len(w) >= 8)),
+      s"""WITH $windowHashCtes,
          agg AS (SELECT wh, count(DISTINCT doc_id) AS n_docs,
                         count(*) AS n_occ
                  FROM win GROUP BY wh HAVING count(DISTINCT doc_id) >= 2),
@@ -363,12 +369,7 @@ object WindowDedup extends QueryPack {
     // bit-for-bit. dup_frac is one double division + the floor-truncate
     // convention.
     "q111_window_dedup" ->
-      s"""WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
-                     FROM documents),
-          win AS (SELECT doc_id,
-                         md5(array_to_string(list_slice(w, i, i + ${W - 1}), ' ')) AS wh
-                  FROM (SELECT doc_id, w, unnest(range(1, len(w) - ${W - 2})) AS i
-                        FROM t WHERE len(w) >= $W)),
+      s"""WITH $windowHashCtes,
           pd AS (SELECT wh, doc_id, count(*) AS occ FROM win GROUP BY wh, doc_id),
           dup AS (SELECT wh FROM pd GROUP BY wh HAVING count(*) > 1),
           dd AS (SELECT doc_id, sum(occ) AS dup_windows
@@ -383,12 +384,7 @@ object WindowDedup extends QueryPack {
                  END AS dup_frac
           FROM base b LEFT JOIN dd USING (doc_id) ORDER BY doc_id""",
     "q113_window_novelty" ->
-      s"""WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
-                     FROM documents),
-          win AS (SELECT doc_id,
-                         md5(array_to_string(list_slice(w, i, i + ${W - 1}), ' ')) AS wh
-                  FROM (SELECT doc_id, w, unnest(range(1, len(w) - ${W - 2})) AS i
-                        FROM t WHERE len(w) >= $W)),
+      s"""WITH $windowHashCtes,
           pd AS (SELECT wh, doc_id FROM win GROUP BY wh, doc_id),
           fo AS (SELECT wh, min(doc_id) AS first_doc FROM pd GROUP BY wh),
           nv AS (SELECT pd.doc_id, count(*) AS n_distinct,
@@ -414,12 +410,7 @@ object WindowDedup extends QueryPack {
           FROM ws a JOIN ws b ON a.wh = b.wh AND a.source <= b.source
           GROUP BY a.source, b.source ORDER BY source_a, source_b""",
     "q117_window_pairs" ->
-      s"""WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
-                     FROM documents),
-          win AS (SELECT doc_id,
-                         md5(array_to_string(list_slice(w, i, i + ${W - 1}), ' ')) AS wh
-                  FROM (SELECT doc_id, w, unnest(range(1, len(w) - ${W - 2})) AS i
-                        FROM t WHERE len(w) >= $W)),
+      s"""WITH $windowHashCtes,
           pd AS (SELECT DISTINCT wh, doc_id FROM win)
           SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS shared_windows
           FROM pd a JOIN pd b ON a.wh = b.wh AND a.doc_id < b.doc_id
@@ -430,12 +421,7 @@ object WindowDedup extends QueryPack {
     // the rebuild is the identical index-filtered comprehension, and the
     // rebuilt text compares under md5 (the q90 content convention)
     "q121_span_removal" ->
-      s"""WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
-                     FROM documents),
-          win AS (SELECT doc_id, i AS pos,
-                         md5(array_to_string(list_slice(w, i, i + ${W - 1}), ' ')) AS wh
-                  FROM (SELECT doc_id, w, unnest(range(1, len(w) - ${W - 2})) AS i
-                        FROM t WHERE len(w) >= $W)),
+      s"""WITH $windowHashCtes,
           pd AS (SELECT wh, doc_id, list(pos) AS ps FROM win GROUP BY wh, doc_id),
           dup AS (SELECT wh FROM pd GROUP BY wh HAVING count(*) > 1),
           ds AS (SELECT doc_id, list_sort(list_distinct(flatten(list(ps)))) AS dps

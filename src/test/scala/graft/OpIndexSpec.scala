@@ -11,8 +11,9 @@ import scala.jdk.CollectionConverters._
   * declared row count — not the `registered at` file:line column, which
   * legitimately shifts with any edit above a registration site and is
   * refreshed by re-running the generator at round close. It also holds
-  * the one source-against-docs check scalac lacks: no doc comment in
-  * `src/main` is stacked on another.
+  * two source checks scalac lacks: no doc comment in `src/main` is
+  * stacked on another, and each shared DuckDB oracle fragment is written
+  * once.
   */
 class OpIndexSpec extends AnyFunSuite {
 
@@ -62,15 +63,17 @@ class OpIndexSpec extends AnyFunSuite {
     assert(dups.isEmpty, s"duplicate query keys across packs: $dups")
   }
 
+  private def mainSources(): Vector[java.nio.file.Path] = {
+    val w = Files.walk(Paths.get("src/main"))
+    try w.iterator.asScala.filter(_.toString.endsWith(".scala")).toVector.sorted
+    finally w.close()
+  }
+
   test("no src/main doc comment is directly followed by another doc comment") {
     // scaladoc attaches only the LAST of two stacked /** */ blocks to the
     // definition below them; the first documents nothing, and scalac has
     // no warning for it
-    val files = {
-      val w = Files.walk(Paths.get("src/main"))
-      try w.iterator.asScala.filter(_.toString.endsWith(".scala")).toVector.sorted
-      finally w.close()
-    }
+    val files = mainSources()
     val stacked = for {
       f <- files
       lines = Files.readAllLines(f).asScala.toVector
@@ -82,5 +85,27 @@ class OpIndexSpec extends AnyFunSuite {
     assert(stacked.isEmpty,
       s"doc comments that document nothing (${stacked.size}): " +
         stacked.mkString(", "))
+  }
+
+  test("each shared oracle fragment is written once in src/main") {
+    // one marker line per hoisted DuckDB fragment; a second copy means an
+    // oracle re-inlined what it should compose
+    val markers = Seq(
+      // TextExprs.duckShingleSet
+      "list_distinct(CASE WHEN len(t) >= 3 THEN",
+      // Curation.flagBlockCtes and takedownCtes
+      "flagged AS (SELECT doc_id, 1 AS fl",
+      "takedown AS (SELECT fam.doc_id FROM fam JOIN fh USING (cluster_id)",
+      // Similarity.ivfPqEncodeCtes
+      "recon AS (SELECT c.vec_id, any_value(c.centroid) AS centroid,",
+      // Dedup.reachCtes
+      "SELECT e.dst AS id, reach.r FROM reach JOIN edges e ON e.src = reach.id")
+    val lines = mainSources().flatMap { f =>
+      Files.readAllLines(f).asScala.zipWithIndex.map { case (l, i) => (s"$f:${i + 1}", l) }
+    }
+    val counts = markers.map(m => m -> lines.collect { case (at, l) if l.contains(m) => at })
+    val bad = counts.filter(_._2.size != 1)
+    assert(bad.isEmpty, bad.map { case (m, at) =>
+      s"'$m' written ${at.size} times${at.mkString(": ", ", ", "")}" }.mkString("; "))
   }
 }
