@@ -47,11 +47,8 @@ object SparkEntry {
     packs.flatMap(_.queries).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    packs.flatMap(_.oracles).toMap
-
-  /** Oracles for a specific dataset dir — generated oracles (q45's
+    * the same parquet tables (non-SQL-expressible ops are omitted), for a
+    * specific dataset dir — generated oracles (q45's
     * trained-codebook literals) resolve to the codebook captured for THAT
     * dir's run. Verify dumps through this. */
   def oracleSqlFor(dir: String): Map[String, String] =

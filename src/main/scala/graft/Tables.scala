@@ -66,10 +66,10 @@ object Tables {
     * parameters that must be concrete numbers before the plan exists
     * (LSH bits-per-band sizing). Parquet metadata-only (a count over a
     * parquet scan reads footers, not data) and paid once per dataset per
-    * session, not once per query build. Caps/df-cuts that merely FEED A
-    * FILTER do not use this — they take the lazy broadcast one-row-agg
-    * form (see Dedup.capBuckets) so query construction schedules no job
-    * at all (PlanSpec asserts it). */
+    * session, not once per query build. A corpus size that merely FEEDS
+    * A FILTER does not use this — it takes the lazy broadcast one-row-agg
+    * form (q39's corpus N) so query construction schedules no job at all
+    * (PlanSpec asserts it). */
   def rowCount(s: SparkSession, d: String, name: String): Long =
     SessionMemo.getOrElseUpdate[Long](s, "tables.rowcount", s"$d/$name")(
       load(s, d, name).count())

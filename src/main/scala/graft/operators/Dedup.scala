@@ -25,10 +25,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes: both are linear scans + one shuffle on short keys
   * (band hash / signature). The shingle→minhash work is per-row map-side
-  * compute inside codegen (native expressions, no UDF). Hot-band skew is
-  * bounded IN the plan by `capBuckets` (default cap = corpus size, so
-  * test-scale output is exact), and the candidate-verification broadcast
-  * degrades to a shuffle join past `verifyJoin`'s size guard.
+  * compute inside codegen (native expressions, no UDF). The
+  * candidate-verification broadcast degrades to a shuffle join past
+  * `verifyJoin`'s size guard.
   */
 object Dedup extends QueryPack {
 
@@ -62,13 +61,11 @@ object Dedup extends QueryPack {
       shingled(s, d).localCheckpoint(eager = false))
 
   /** Drop postings whose bucket (the `keys` combination) holds more than
-    * `maxBucket` entries — the df-cut trick applied to LSH band buckets.
+    * `maxBucket` entries — the df-cut trick applied to posting buckets.
     * A boilerplate-heavy corpus can funnel millions of docs into one
-    * (band, bucket): in-bucket pairing there is quadratic, and one such
-    * bucket dominates the whole candidate join. Capping bounds candidate
-    * work at Σ min(bucket, maxBucket)²; with maxBucket >= corpus size
-    * (the default both q41/q42 use) no bucket can exceed the cap and the
-    * output is unchanged — the bound lives in the plan, ready to tighten.
+    * bucket: in-bucket pairing there is quadratic, and one such bucket
+    * dominates the whole candidate join. Capping bounds candidate work at
+    * Σ min(bucket, maxBucket)²; q79 applies it at [[q79DfCap]].
     * Implemented as a count-over-partition window, ONE shuffle keyed by
     * the bucket — and since the candidate self-join that follows joins on
     * the same keys, that exchange is reused rather than repeated (a
@@ -83,29 +80,9 @@ object Dedup extends QueryPack {
       .drop("__bsz")
   }
 
-  /** [[capBuckets]] with the default corpus-size cap expressed LAZILY:
-    * an explicit `maxBucket > 0` filters against the literal; otherwise
-    * the cap is `capSrc`'s row count as a broadcast one-row aggregate
-    * cross-joined into the postings (q39's corpus-N pattern) — the cap
-    * stays value-neutral (no bucket can hold more rows than the corpus)
-    * while QUERY CONSTRUCTION schedules no driver job (a plan-build
-    * `count()` serialized an extra job per build and broke lazy
-    * composition; PlanSpec now asserts build-time job silence). The
-    * 1-row broadcast adds no shuffle, so the window exchange on `keys`
-    * is still the one the candidate self-join reuses.
-    */
-  private[graft] def capBucketsLazy(postings: DataFrame, keys: Seq[String],
-                                    maxBucket: Long, capSrc: DataFrame): DataFrame =
-    if (maxBucket > 0) capBuckets(postings, keys, maxBucket)
-    else {
-      val cap = capSrc.agg(count(lit(1)).as("__cap"))
-      val w = org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)
-      postings
-        .withColumn("__bsz", count(lit(1)).over(w))
-        .crossJoin(broadcast(cap))
-        .filter(col("__bsz") <= col("__cap"))
-        .drop("__bsz", "__cap")
-    }
+  /** The candidate-count limit below which [[verifyJoin]] broadcasts the
+    * candidate ids; every production call site passes it. */
+  private[graft] val verifyBroadcastLimit = 4000000L
 
   /** Exact-verification join of a candidate pair set against per-doc
     * payloads. Only BARE ids ever ride a broadcast: when the candidate
@@ -156,24 +133,6 @@ object Dedup extends QueryPack {
       c.join(aSide, aKey).join(bSide, bKey)
   }
 
-  // MinHash + banded LSH near-dup, exact-Jaccard verified. The 64-minhash
-  // → 16-band-key computation is a single native expression (tight loop;
-  // the declarative nested-transform form dominated BENCH at 12.9s).
-  //
-  // Candidate generation: equi-self-join on the exploded (band, bkey)
-  // postings — band keys are near-unique for non-dups, so the join output
-  // is ≈ self-matches + true collisions. Hot buckets are bounded by
-  // `capBuckets` (default cap = corpus size: value-neutral, bound in the
-  // plan); the verification join degrades from broadcast to shuffle via
-  // `verifyJoin` if the candidate set is pathologically large.
-  private[graft] def minhashLshPairs(s: SparkSession, d: String,
-                                     maxBucket: Long = -1L,
-                                     broadcastCandLimit: Long = 4000000L): DataFrame =
-    minhashLshPairsCore(s, d, maxBucket, broadcastCandLimit)
-      .orderBy("a_id", "b_id")
-
-
-
   /** Session-scoped memo of the 64-component md5-family minhash
     * SIGNATURE relation (doc_id, sh, mh) — the production signature
     * store both sketch evals read (a deployment persists signatures
@@ -212,37 +171,27 @@ object Dedup extends QueryPack {
                   .as(Seq("band", "bkey")))
         .localCheckpoint(eager = false))
 
-  /** [[minhashLshPairs]] WITHOUT the output sort — the form the CC
+  /** The q42 pair relation WITHOUT the output sort — the form the CC
     * consumers build edges from (an edge list has no order; inheriting
     * the declared query's global sort made every edge materialization
     * pay a range-partition + sort for nothing).
     *
-    * The DEFAULT-parameter pair relation is memoized per (session,
-    * dataset) behind a lazy localCheckpoint: seven declared queries
+    * The pair relation is memoized per (session, dataset) behind a lazy
+    * localCheckpoint: seven declared queries
     * (q42/q73-family/q114/q122/q131/q143/q207) consume the identical
     * deterministic pair table, and a production dedup pipeline
     * materializes it exactly once before fanning out its reports —
-    * recomputing the posting join per report is the anti-pattern.
-    * Non-default parameters (the capped/sweep variants) bypass the
-    * memo. */
-  private[graft] def minhashLshPairsCore(s: SparkSession, d: String,
-                                         maxBucket: Long = -1L,
-                                         broadcastCandLimit: Long = 4000000L): DataFrame =
-    if (maxBucket == -1L && broadcastCandLimit == 4000000L)
-      graft.SessionMemo.getOrElseUpdate[DataFrame](s, "dedup.lshPairs", d)(
-        minhashLshPairsCompute(s, d, maxBucket, broadcastCandLimit)
-          .localCheckpoint(eager = false))
-    else minhashLshPairsCompute(s, d, maxBucket, broadcastCandLimit)
+    * recomputing the posting join per report is the anti-pattern. */
+  private[graft] def minhashLshPairsCore(s: SparkSession, d: String): DataFrame =
+    graft.SessionMemo.getOrElseUpdate[DataFrame](s, "dedup.lshPairs", d)(
+      minhashLshPairsCompute(s, d).localCheckpoint(eager = false))
 
-  private def minhashLshPairsCompute(s: SparkSession, d: String,
-                                     maxBucket: Long,
-                                     broadcastCandLimit: Long): DataFrame = {
+  private def minhashLshPairsCompute(s: SparkSession, d: String): DataFrame = {
     val sh = shingledCore(s, d)
     // band postings come from the shared session store (one xxh64
-    // banding pass per session, not per consumer)
-    val banded = capBucketsLazy(
-      bandPostingsCore(s, d),
-      Seq("band", "bkey"), maxBucket, Tables.documents(s, d))
+    // banding pass per session, not per consumer), shuffled once on the
+    // join keys for both self-join branches
+    val banded = bandPostingsCore(s, d).repartition(col("band"), col("bkey"))
     val cand = banded.select(col("band"), col("bkey"), col("doc_id").as("a_id"))
       .join(banded.select(col("band"), col("bkey"), col("doc_id").as("b_id")),
             Seq("band", "bkey"))
@@ -250,7 +199,7 @@ object Dedup extends QueryPack {
       .select("a_id", "b_id").distinct()
     val aSh = sh.select(col("doc_id").as("a_id"), col("sh").as("ash"))
     val bSh = sh.select(col("doc_id").as("b_id"), col("sh").as("bsh"))
-    verifyJoin(cand, aSh, bSh, "a_id", "b_id", broadcastCandLimit)
+    verifyJoin(cand, aSh, bSh, "a_id", "b_id", verifyBroadcastLimit)
       .withColumn("common", size(array_intersect(col("ash"), col("bsh"))))
       .withColumn("jac_raw",
         col("common") / (size(col("ash")) + size(col("bsh")) - col("common")))
@@ -259,8 +208,17 @@ object Dedup extends QueryPack {
       .select("a_id", "b_id", "jaccard")
   }
 
+  // MinHash + banded LSH near-dup, exact-Jaccard verified. The 64-minhash
+  // → 16-band-key computation is a single native expression (tight loop;
+  // the declarative nested-transform form dominated BENCH at 12.9s).
+  //
+  // Candidate generation: equi-self-join on the exploded (band, bkey)
+  // postings — band keys are near-unique for non-dups, so the join output
+  // is ≈ self-matches + true collisions; the verification join degrades
+  // from broadcast to shuffle via `verifyJoin` if the candidate set is
+  // pathologically large.
   private def q42MinhashLsh(s: SparkSession, d: String): DataFrame =
-    minhashLshPairs(s, d)
+    minhashLshPairsCore(s, d).orderBy("a_id", "b_id")
 
   /** The (1 − t⁴)¹⁶ banding S-curve as a FIXED expression tree shared
     * verbatim by the Spark plan and the DuckDB oracle — repeated
@@ -403,18 +361,15 @@ object Dedup extends QueryPack {
     * cross-side inverted-index SQL (q35's shape restricted to
     * corpus×batch pairs).
     */
-  private[graft] def incrementalNearDup(s: SparkSession, d: String,
-                                        maxBucket: Long = -1L): DataFrame = {
+  private[graft] def incrementalNearDup(s: SparkSession, d: String): DataFrame = {
     val sh = shingledCore(s, d)
     // both sides' band postings are split-filters over the ONE shared
     // banding pass (banding is per-doc, so filter-after-band ≡
-    // band-after-filter); each side keeps its own bucket cap
-    def banded(pred: org.apache.spark.sql.Column): DataFrame = capBucketsLazy(
-      bandPostingsCore(s, d).filter(pred),
-      Seq("band", "bkey"), maxBucket, Tables.documents(s, d))
-    val cand = banded(col("doc_id") < 250)
+    // band-after-filter)
+    val banded = bandPostingsCore(s, d)
+    val cand = banded.filter(col("doc_id") < 250)
         .select(col("band"), col("bkey"), col("doc_id").as("a_id"))
-      .join(banded(col("doc_id") >= 250)
+      .join(banded.filter(col("doc_id") >= 250)
         .select(col("band"), col("bkey"), col("doc_id").as("b_id")),
             Seq("band", "bkey"))
       .select("a_id", "b_id").distinct()
@@ -422,7 +377,7 @@ object Dedup extends QueryPack {
       .select(col("doc_id").as("a_id"), col("sh").as("ash"))
     val bSh = sh.filter(col("doc_id") >= 250)
       .select(col("doc_id").as("b_id"), col("sh").as("bsh"))
-    verifyJoin(cand, aSh, bSh, "a_id", "b_id", 4000000L,
+    verifyJoin(cand, aSh, bSh, "a_id", "b_id", verifyBroadcastLimit,
                guardMemoNs = Some("dedup.q100guard"), guardMemoDs = d)
       .withColumn("common", size(array_intersect(col("ash"), col("bsh"))))
       .withColumn("jac_raw",
@@ -497,7 +452,7 @@ object Dedup extends QueryPack {
       .select(col("doc_id").as("a_id"), col("sh").as("ash"))
     verifyJoin(cand, aSh,
                bSh.select(col("doc_id").as("b_id"), col("sh").as("bsh")),
-               "a_id", "b_id", 4000000L,
+               "a_id", "b_id", verifyBroadcastLimit,
                guardMemoNs = Some("dedup.q108guard"), guardMemoDs = path)
       .withColumn("common", size(array_intersect(col("ash"), col("bsh"))))
       .withColumn("jac_raw",
@@ -547,13 +502,21 @@ object Dedup extends QueryPack {
       .select(col("doc_id"), NativeExprs.simhash_sig(col("text")).as("simhash"))
       .orderBy("doc_id")
 
+  /** SimHash banding: the 60-bit signature splits into
+    * [[simhashBands]] bands of [[simhashBandBits]] bits, and a pair is a
+    * near-dup at Hamming distance ≤ [[simhashMaxHamming]]. Shared by the
+    * batch pairs, their DuckDB oracle and the streaming twin
+    * (`StreamOps.simhashNearDupStream`). */
+  private[graft] val simhashBands = 4
+  private[graft] val simhashBandBits = 15
+  private[graft] val simhashMaxHamming = 3
+
   /** Banded-SimHash NEAR-DUP PAIRS — the retrieval step q43's signatures
-    * exist for. The 60-bit signature splits into `nBands` = 4 bands of
-    * `bitsPerBand` = 15 bits; docs sharing any band key are candidates
-    * (one equi-join on (band, bkey) — never all-pairs), verified by exact
-    * Hamming distance `bit_count(asig ^ bsig) <= maxHamming`.
+    * exist for. Docs sharing any band key are candidates (one equi-join
+    * on (band, bkey) — never all-pairs), verified by exact Hamming
+    * distance `bit_count(asig ^ bsig) <= simhashMaxHamming`.
     *
-    * RECALL IS EXACTLY 1 at the default threshold, not probabilistic:
+    * RECALL IS EXACTLY 1, not probabilistic:
     * a pair within Hamming distance 3 differs in at most 3 of the 4
     * bands, so by pigeonhole at least one band key matches — banded
     * retrieval provably finds every qualifying pair (the classic
@@ -561,26 +524,24 @@ object Dedup extends QueryPack {
     * <= d). Contrast q42's MinHash bands, where recall is 1 − (1−s^r)^b.
     *
     * Scale shape is q42's: the posting shuffle carries (band, bkey,
-    * doc_id, sig) — 4 rows × ~28 bytes per doc, no text or shingles; hot
-    * buckets (e.g. the all-zeros signature of boilerplate) are bounded in
-    * the plan by [[capBuckets]]; verification is a 1-word XOR+popcount,
-    * so no payload re-join is needed at all (the sig rides the posting).
+    * doc_id, sig) — 4 rows × ~28 bytes per doc, no text or shingles;
+    * verification is a 1-word XOR+popcount, so no payload re-join is
+    * needed at all (the sig rides the posting).
     */
-  private[graft] def simhashNearDupPairs(s: SparkSession, d: String,
-                                         maxHamming: Int = 3,
-                                         nBands: Int = 4, bitsPerBand: Int = 15,
-                                         maxBucket: Long = -1L): DataFrame = {
-    require(maxHamming < nBands, "recall-1 guarantee needs maxHamming < nBands")
+  private def simhashNearDupPairs(s: SparkSession, d: String): DataFrame = {
     val sig = Tables.documents(s, d)
       .select(col("doc_id"), NativeExprs.simhash_sig(col("text")).as("simhash"))
-    val mask = (1L << bitsPerBand) - 1
-    val posting = capBucketsLazy(
-      sig.select(col("doc_id"), col("simhash"),
-          explode(expr(s"transform(sequence(0, ${nBands - 1}), b -> " +
-            s"named_struct('band', b, 'bkey', shiftright(simhash, b * $bitsPerBand) & $mask))")).as("bb"))
-        .select(col("doc_id"), col("simhash"),
-                col("bb.band").as("band"), col("bb.bkey").as("bkey")),
-      Seq("band", "bkey"), maxBucket, Tables.documents(s, d))
+    val mask = (1L << simhashBandBits) - 1
+    val posting = sig
+      .select(col("doc_id"), col("simhash"),
+        explode(expr(s"transform(sequence(0, ${simhashBands - 1}), b -> " +
+          s"named_struct('band', b, 'bkey', shiftright(simhash, b * $simhashBandBits) & $mask))")).as("bb"))
+      .select(col("doc_id"), col("simhash"),
+              col("bb.band").as("band"), col("bb.bkey").as("bkey"))
+      // one shuffle on the join keys BEFORE the self-join aliases, so both
+      // branches read the same exchange and the signature pass runs once
+      // (the lshRecallFlagged pattern; PlanSpec pins the ReusedExchange)
+      .repartition(col("band"), col("bkey"))
     posting.select(col("band"), col("bkey"),
                    col("doc_id").as("a_id"), col("simhash").as("asig"))
       .join(posting.select(col("band"), col("bkey"),
@@ -589,7 +550,7 @@ object Dedup extends QueryPack {
       .filter(col("a_id") < col("b_id"))
       .select("a_id", "b_id", "asig", "bsig").distinct()
       .withColumn("hamming", expr("cast(bit_count(asig ^ bsig) as bigint)"))
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= simhashMaxHamming)
       .select("a_id", "b_id", "hamming")
       .orderBy("a_id", "b_id")
   }
@@ -759,26 +720,10 @@ object Dedup extends QueryPack {
       .orderBy("a_id", "b_id")
   }
 
-  /** Fuzzy KEY join (SymSpell-style deletion neighborhoods) — the short-
-    * string twin of document near-dup: find all pairs within Levenshtein
-    * distance 1 without an all-pairs scan. Candidates are pairs sharing a
-    * DELETION VARIANT (the string itself or any single-character
-    * deletion); recall is EXACTLY 1 for distance <= 1 — a substitution at
-    * position i means deleting i from both sides collides, an insertion/
-    * deletion means the shorter string IS a deletion variant of the
-    * longer — then exact `levenshtein` verifies. The posting shuffle
-    * carries (variant, id, name): O(N·L) short rows, never O(N²); hot
-    * variants (shared prefixes at corpus scale) are bounded in the plan
-    * by [[capBuckets]]. Generalizes to distance d with d-deletion
-    * neighborhoods (O(N·L^d) postings — the standard SymSpell tradeoff).
-    */
-  private[graft] def fuzzyJoinPairs(s: SparkSession, d: String,
-                                    maxBucket: Long = -1L): DataFrame =
-    fuzzyJoinPairsCore(s, d, maxBucket).orderBy("a_id", "b_id")
-
-  /** [[fuzzyJoinPairs]] without the output sort (edge-builder form).
+  /** q88's fuzzy pair relation without the output sort (edge-builder
+    * form).
     *
-    * Session-scoped memo of the DEFAULT-parameter fuzzy pair relation —
+    * Session-scoped memo of the fuzzy pair relation —
     * the [[minhashLshPairsCore]] discipline applied to the fuzzy-key
     * family: q88 (the declared pair report) and q89 (the CC closure over
     * the same pairs) consume one deterministic relation, and a
@@ -787,35 +732,27 @@ object Dedup extends QueryPack {
     * deletion-neighborhood postings + Levenshtein verify per consumer
     * was the q89 top-slot cost for five rounds. Lazy localCheckpoint:
     * whichever consumer acts first materializes; the other reads cached
-    * blocks. Non-default caps (the spec's planted-hot-bucket runs)
-    * bypass the memo. */
-  private[graft] def fuzzyJoinPairsCore(s: SparkSession, d: String,
-                                        maxBucket: Long = -1L): DataFrame =
-    if (maxBucket == -1L)
-      graft.SessionMemo.getOrElseUpdate[DataFrame](s, "dedup.fuzzyPairs", d)(
-        fuzzyJoinPairsCompute(s, d, maxBucket).localCheckpoint(eager = false))
-    else fuzzyJoinPairsCompute(s, d, maxBucket)
+    * blocks. */
+  private def fuzzyJoinPairsCore(s: SparkSession, d: String): DataFrame =
+    graft.SessionMemo.getOrElseUpdate[DataFrame](s, "dedup.fuzzyPairs", d)(
+      fuzzyJoinPairsCompute(s, d).localCheckpoint(eager = false))
 
-  private def fuzzyJoinPairsCompute(s: SparkSession, d: String,
-                                    maxBucket: Long): DataFrame = {
+  private def fuzzyJoinPairsCompute(s: SparkSession, d: String): DataFrame = {
     val c = Tables.customer(s, d)
       .select(col("c_custkey").as("id"), col("c_name").as("name"))
     // array_distinct dedupes variants MAP-SIDE within each name (deleting
-    // either of two adjacent equal characters yields the same string):
-    // without it one id could post the same variant several times, a hot
-    // bucket could exceed cap = N rows even with ≤ N distinct ids, and
-    // capBuckets would drop the whole bucket — silently voiding the
-    // recall-1 guarantee. With per-id-distinct postings, bucket size ≤
-    // distinct ids ≤ corpus, so the default cap is provably value-neutral.
-    val variants = capBucketsLazy(
-      c.select(col("id"), col("name"),
+    // either of two adjacent equal characters yields the same string),
+    // so one id posts each variant once and the self-join pairs it once;
+    // both self-join branches read one shuffle on the variant
+    val variants = c
+      .select(col("id"), col("name"),
         explode(expr(
           """array_distinct(array_append(
                transform(sequence(1, length(name)),
                          i -> concat(substring(name, 1, i - 1),
                                      substring(name, i + 1, length(name)))),
-               name))""")).as("variant")),
-      Seq("variant"), maxBucket, c)
+               name))""")).as("variant"))
+      .repartition(col("variant"))
     variants.select(col("variant"), col("id").as("a_id"), col("name").as("a_name"))
       .join(variants.select(col("variant"), col("id").as("b_id"), col("name").as("b_name")),
             Seq("variant"))
@@ -826,8 +763,20 @@ object Dedup extends QueryPack {
       .select("a_id", "b_id", "dist")
   }
 
+  /** Fuzzy KEY join (SymSpell-style deletion neighborhoods) — the short-
+    * string twin of document near-dup: find all pairs within Levenshtein
+    * distance 1 without an all-pairs scan. Candidates are pairs sharing a
+    * DELETION VARIANT (the string itself or any single-character
+    * deletion); recall is EXACTLY 1 for distance <= 1 — a substitution at
+    * position i means deleting i from both sides collides, an insertion/
+    * deletion means the shorter string IS a deletion variant of the
+    * longer — then exact `levenshtein` verifies. The posting shuffle
+    * carries (variant, id, name): O(N·L) short rows, never O(N²).
+    * Generalizes to distance d with d-deletion neighborhoods (O(N·L^d)
+    * postings — the standard SymSpell tradeoff).
+    */
   private def q88FuzzyJoin(s: SparkSession, d: String): DataFrame =
-    fuzzyJoinPairs(s, d)
+    fuzzyJoinPairsCore(s, d).orderBy("a_id", "b_id")
 
   /** ENTITY RESOLUTION — the step after fuzzy matching: group the
     * Levenshtein-≤1 pairs (q88) into connected components via the same
@@ -1204,7 +1153,7 @@ object Dedup extends QueryPack {
     * q235 197 s at ×10); the scaled count is the fix, stated as the
     * declared statistic: the sample is drawn from ~300-candidate
     * buckets, not from a fixed sixteenth of the corpus. B is the lazy
-    * one-row broadcast (the capBucketsLazy corpus-N pattern — no job
+    * one-row broadcast (q39's corpus-N pattern — no job
     * at query construction); the oracle computes the identical B as a
     * scalar subquery. At the committed sfs B = 16 exactly (500 and
     * 5,000 docs both floor to ≤ 16), so the committed samples — and
@@ -1424,6 +1373,9 @@ object Dedup extends QueryPack {
     * warm path runs the subgraph pass and nothing else). */
   private[graft] val ccInvocations = new java.util.concurrent.atomic.AtomicInteger()
 
+  /** Iteration cap of [[connectedComponents]]' label propagation. */
+  private val ccMaxIters = 50
+
   /** Min-label connected components over a bidirectional edge list.
     * Each iteration does one neighbor-min propagation (co-partitioned
     * edge join + min reduce — one hop of new information) AND one
@@ -1462,10 +1414,11 @@ object Dedup extends QueryPack {
     * near-dup edge is its own singleton component by definition and is
     * unioned in unchanged at the end — so per-iteration state is
     * proportional to DUPLICATE-FAMILY MEMBERSHIP (typically a few
-    * percent of a deduped corpus), not corpus size. Returns
+    * percent of a deduped corpus), not corpus size. Stops after
+    * [[ccMaxIters]] iterations at the latest. Returns
     * (labels, iterations-used). */
-  private[graft] def connectedComponents(nodes: DataFrame, edges: DataFrame,
-                                         maxIters: Int = 50): (DataFrame, Int) = {
+  private[graft] def connectedComponents(nodes: DataFrame,
+                                         edges: DataFrame): (DataFrame, Int) = {
     import org.apache.spark.HashPartitioner
     import org.apache.spark.rdd.RDD
     ccInvocations.incrementAndGet()
@@ -1493,7 +1446,7 @@ object Dedup extends QueryPack {
     var prevSum = labelSum(labels)
     var converged = false
     var iter = 0
-    while (!converged && iter < maxIters) {
+    while (!converged && iter < ccMaxIters) {
       // one hop: min label over my neighbors (co-partitioned narrow join,
       // then the iteration's first (Long, Long) shuffle)
       val nbrMin = edgesR.join(labels, part)
@@ -1684,9 +1637,9 @@ object Dedup extends QueryPack {
     * oracle can reuse it verbatim (and q106's stream gate references it
     * through the map as before). */
   private val simhashNearDupOracleSql: String =
-    """WITH t AS (SELECT doc_id,
+    s"""WITH t AS (SELECT doc_id,
            [CAST(('0x' || substr(md5(tok), 1, 15)) AS BIGINT)
-            for tok in string_split_regex(trim(text), '\s+')] AS th
+            for tok in string_split_regex(trim(text), '\\s+')] AS th
          FROM documents),
        sig AS (SELECT doc_id,
          CAST(list_sum(
@@ -1695,14 +1648,14 @@ object Dedup extends QueryPack {
                  THEN (CAST(1 AS BIGINT) << i) ELSE 0 END
             for i in range(0, 60)]) AS BIGINT) AS simhash
        FROM t),
-       p AS (SELECT band, (simhash >> (band * 15)) & 32767 AS bkey, doc_id, simhash
-             FROM sig, range(0, 4) r(band)),
+       p AS (SELECT band, (simhash >> (band * $simhashBandBits)) & ${(1L << simhashBandBits) - 1} AS bkey, doc_id, simhash
+             FROM sig, range(0, $simhashBands) r(band)),
        cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id,
                        a.simhash AS asig, b.simhash AS bsig
                 FROM p a JOIN p b ON a.band = b.band AND a.bkey = b.bkey
                                  AND a.doc_id < b.doc_id)
        SELECT a_id, b_id, CAST(bit_count(xor(asig, bsig)) AS BIGINT) AS hamming
-       FROM cand WHERE bit_count(xor(asig, bsig)) <= 3
+       FROM cand WHERE bit_count(xor(asig, bsig)) <= $simhashMaxHamming
        ORDER BY a_id, b_id"""
 
   // q42's oracle is the EXACT pair set (LSH + exact verification ≡ exact

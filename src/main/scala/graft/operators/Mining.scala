@@ -763,14 +763,14 @@ object Mining extends QueryPack {
     * operator. Fires on planted one-side drift and stays quiet on
     * balanced appends at any corpus size (MiningSpec pins both
     * directions plus the untouched append ≡ rebuild certificate). */
-  def mineIndexStale(s: SparkSession, dirA: String, dirB: String,
-                     skewRatio: Double = Similarity.retrainSkew)
-      : (Boolean, Boolean) =
-    // strict >, matching [[Similarity.ivfPqRetrain]]'s rebuild test
-    // exactly: "monitor fires" must imply "retrain rebuilds" at every
-    // ratio, including exact threshold equality (ADVICE r14)
-    (Similarity.indexSkew(s, dirA) > skewRatio,
-     Similarity.indexSkew(s, dirB) > skewRatio)
+  def mineIndexStale(s: SparkSession, dirA: String,
+                     dirB: String): (Boolean, Boolean) =
+    // strict > against the same [[Similarity.retrainSkew]], matching
+    // [[Similarity.ivfPqRetrain]]'s rebuild test exactly: "monitor
+    // fires" must imply "retrain rebuilds", including at exact
+    // threshold equality (ADVICE r14)
+    (Similarity.indexSkew(s, dirA) > Similarity.retrainSkew,
+     Similarity.indexSkew(s, dirB) > Similarity.retrainSkew)
 
   override val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q246_triangles" -> q246Triangles _,

@@ -69,7 +69,7 @@ object Multimodal extends QueryPack {
     * DuckDB-oracle-checked end-to-end). Real deployments replace this
     * class with an actual image/audio decoder + model.
     */
-  final class StubMediaCodec(val dim: Int = 16) extends MediaCodec {
+  final class StubMediaCodec(val dim: Int) extends MediaCodec {
     override def decodeAndEmbed(mediaType: String, content: Array[Byte]): Array[Float] = {
       val out = new Array[Float](dim)
       var j = 0
@@ -332,7 +332,7 @@ object Multimodal extends QueryPack {
     * frame-sig index — the shuffle carries (sig, id) only, payloads
     * never move, and pair generation is the bounded equi-join (a hot
     * intro-frame sig at corpus scale composes with capBuckets exactly
-    * like q42's shingle buckets). */
+    * like q79's shingle postings). */
   private def q165VideoNeardup(s: SparkSession, d: String): DataFrame = {
     val vids = assets(s, d).filter(col("media_type") === "video")
       .select(col("asset_id"), col("content"),

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryPack, Tables}
-import graft.functions.{NativeExprs, TopKAgg, VectorExprs}
+import graft.functions.{NativeExprs, TopKAgg}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -58,16 +58,16 @@ object Projection extends QueryPack {
     * oracle depends on). Returns (eigenvalues, eigenvectors as rows),
     * unsorted. d = 64 here: Jacobi converges in ~8 sweeps and costs
     * milliseconds — driver-side math on a constant-size matrix, same
-    * budget class as Lloyd iterations on a 256-row sample. */
-  private def jacobiEigen(m: Array[Array[Double]],
-                          maxSweeps: Int = 30): (Array[Double], Array[Array[Double]]) = {
+    * budget class as Lloyd iterations on a 256-row sample. At most 30
+    * sweeps run. */
+  private def jacobiEigen(m: Array[Array[Double]]): (Array[Double], Array[Array[Double]]) = {
     val n = m.length
     val a = m.map(_.clone())
     // eigenvector accumulator, COLUMNS are eigenvectors while iterating
     val v = Array.tabulate(n, n)((i, j) => if (i == j) 1.0 else 0.0)
     var sweep = 0
     var done = false
-    while (sweep < maxSweeps && !done) {
+    while (sweep < 30 && !done) {
       var off = 0.0
       var i = 0
       while (i < n) {
@@ -123,19 +123,15 @@ object Projection extends QueryPack {
     (eig, rows)
   }
 
-  /** Deterministic sampled PCA: sample = the `sampleN` lowest vec_ids
+  /** Deterministic sampled PCA: sample = the 256 lowest vec_ids
     * sorted ascending (the [[Similarity.trainCentroids]] sample
     * contract), mean + covariance accumulated in that fixed order,
     * Jacobi on the covariance, eigenpairs sorted (eigenvalue desc,
     * original index asc), each component sign-normalized so its
     * largest-|coefficient| entry is positive (eigenvectors are only
     * defined up to sign; fixing it makes the literals reproducible). */
-  private[graft] def trainPca(e: DataFrame, kMax: Int,
-                              sampleN: Int = 256): Pca = {
-    val sample: Array[Array[Double]] = e.filter(col("vec_id") < sampleN)
-      .select(col("vec_id"), VectorExprs.asDouble("embedding").as("v"))
-      .orderBy("vec_id").collect()
-      .map(_.getSeq[Double](1).toArray)
+  private[graft] def trainPca(e: DataFrame, kMax: Int): Pca = {
+    val sample = Similarity.collectSample(e, Similarity.trainSampleN)
     require(sample.length > 1, s"need > 1 sample vectors, got ${sample.length}")
     val n = sample.length
     val d = sample(0).length

@@ -52,13 +52,14 @@ object Retrieval extends QueryPack {
 
   private val rrfK = 60
   private val topK = 10
+  private val wLex = 0.6
 
   /** Reciprocal-rank fusion of two (q_id, doc_id, rnk) rankings — the
     * generic operator: full-outer rank join on (q_id, doc_id), fused
     * score Σ 1/(rrfK + rank) with absent ranks contributing 0, re-ranked
     * per query. Inputs are top-k lists, so the fused set is ≤ 2k rows
     * per query and the rank window is bounded by construction. */
-  def rrfFuse(lex: DataFrame, vec: DataFrame, k: Int = topK): DataFrame = {
+  def rrfFuse(lex: DataFrame, vec: DataFrame): DataFrame = {
     val fused = lex.withColumnRenamed("rnk", "lex_rnk")
       .join(vec.withColumnRenamed("rnk", "vec_rnk"),
             Seq("q_id", "doc_id"), "full_outer")
@@ -68,7 +69,7 @@ object Retrieval extends QueryPack {
     val w = Window.partitionBy("q_id").orderBy(col("rrf").desc, col("doc_id"))
     fused
       .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+      .filter(col("rnk") <= topK)
       .select(col("q_id"), col("rnk").cast("long").as("rnk"), col("doc_id"),
               (floor(col("rrf") * 1e6) / 1e6).as("rrf_score"),
               coalesce(col("lex_rnk"), lit(0L)).as("lex_rnk"),
@@ -152,8 +153,7 @@ object Retrieval extends QueryPack {
     * All arithmetic is the same IEEE ops in the same order on scores
     * already proven bit-identical cross-engine (q97/q98), so the fused
     * ordering needs no float tolerance. */
-  def weightedFuse(lex: DataFrame, vec: DataFrame, wLex: Double = 0.6,
-                   k: Int = topK): DataFrame = {
+  def weightedFuse(lex: DataFrame, vec: DataFrame): DataFrame = {
     def normalized(list: DataFrame, out: String): DataFrame = {
       val bounds = list.groupBy(col("q_id").as("b_q_id"))
         .agg(min("score").as("lo"), max("score").as("hi"))
@@ -171,7 +171,7 @@ object Retrieval extends QueryPack {
     val w = Window.partitionBy("q_id").orderBy(col("wscore").desc, col("doc_id"))
     fused
       .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+      .filter(col("rnk") <= topK)
       .select(col("q_id"), col("rnk").cast("long").as("rnk"), col("doc_id"),
               (floor(col("wscore") * 1e6) / 1e6).as("wscore"))
       .orderBy("q_id", "rnk")

@@ -26,10 +26,10 @@ import org.apache.spark.sql.functions._
   *  - q45 is IVF with a CONSTANT-size coarse quantizer (k independent of
   *    N): assignment is one broadcast of k centroid rows + a map-side
   *    argmax folded into a partial-aggregatable max(struct) — O(N·k)
-  *    compute, one shuffle of N rows. `ivfIndex`/`ivfSearch` make the
+  *    compute, one shuffle of N rows. `ivfPqIndex`/`ivfPqSearch` make the
   *    "corpus partitioned by centroid id" layout real: the index is
   *    written `partitionBy(centroid)` and a probe reads only its cells'
-  *    partitions (partition pruning, asserted in ScaleSpec).
+  *    partitions (partition pruning, asserted in SimilaritySpec).
   *  - q44 does exact all-pairs — DELIBERATE oracle-grade baseline, not a
   *    production path (quadratic; its scale paths ARE q41/q45). Kept so
   *    the DuckDB oracle can verify the exact pair set; production callers
@@ -74,39 +74,25 @@ object Similarity extends QueryPack {
     Tables.embeddings(s, d)
       .select(col("vec_id"), VectorExprs.asDouble("embedding").as("v"))
 
-  /** Deterministic random hyperplanes: `nPlanes` × 64 gaussians, fixed seed. */
-  private[graft] def hyperplanes(nPlanes: Int, dim: Int = 64, seed: Long = 42L): Seq[Seq[Double]] = {
-    val rnd = new java.util.Random(seed)
-    Seq.fill(nPlanes)(Seq.fill(dim)(rnd.nextGaussian()))
+  /** Deterministic random hyperplanes: `nPlanes` × 64 gaussians, seed 42. */
+  private[graft] def hyperplanes(nPlanes: Int): Seq[Seq[Double]] = {
+    val rnd = new java.util.Random(42L)
+    Seq.fill(nPlanes)(Seq.fill(64)(rnd.nextGaussian()))
   }
 
-  /** Bits per band sized to the corpus: target expected bucket size
-    * `targetBucket`, floor 8 (bucket quality at tiny N), cap 20 (signature
-    * comfortably in a long; at N beyond 2^20·target the bucket size grows
-    * linearly again and band COUNT is the next knob). This is what keeps
-    * in-bucket pairing O(N·targetBucket) instead of O(N²/2^const).
+  /** Bits per band sized to the corpus: target expected bucket size 32,
+    * floor 8 (bucket quality at tiny N), cap 20 (signature comfortably in
+    * a long; at N beyond 2^20·32 the bucket size grows linearly again and
+    * band COUNT is the next knob). This is what keeps in-bucket pairing
+    * O(N·32) instead of O(N²/2^const).
     */
-  private[graft] def bitsFor(n: Long, targetBucket: Int = 32): Int = {
-    val needed = math.ceil(math.log(math.max(1.0, n.toDouble / targetBucket)) /
+  private[graft] def bitsFor(n: Long): Int = {
+    val needed = math.ceil(math.log(math.max(1.0, n.toDouble / 32)) /
       math.log(2.0)).toInt
     math.min(20, math.max(8, needed))
   }
 
   private val lshBands = 2
-
-  /** Add `nBands` signature columns (sig_0 …), each an `bitsPerBand`-bit
-    * sign-pattern of dots against fixed hyperplanes (SimHash for cosine).
-    * One native-expression pass computes all bands (the interpreted
-    * nested-aggregate form allocated a zip_with array per bit per row and
-    * dominated this query's bench time). */
-  private[graft] def withSignatures(df: DataFrame, nBands: Int, bitsPerBand: Int): DataFrame = {
-    val planes = hyperplanes(nBands * bitsPerBand)
-    val withArr = df.withColumn("sigs",
-      NativeExprs.hyperplane_sigs(col("v"), planes, nBands, bitsPerBand))
-    (0 until nBands).foldLeft(withArr) { (acc, b) =>
-      acc.withColumn(s"sig_$b", col("sigs").getItem(b))
-    }.drop("sigs")
-  }
 
   // LSH-bucketed ANN: candidates share at least one band bucket; verified
   // by exact cosine >= 0.2. Bits/band come from `bitsFor` (corpus-sized);
@@ -118,44 +104,25 @@ object Similarity extends QueryPack {
   // is never shuffled. Oracle: the SAME hyperplane LSH replicated in
   // DuckDB SQL (generated plane literals, identical left-to-right IEEE
   // dot folds) — a true cross-engine check of the ANN semantics, not just
-  // a rows count.
+  // a rows count. The verification broadcast degrades to shuffle joins
+  // above `Dedup.verifyBroadcastLimit` candidates.
   private def q41AnnLsh(s: SparkSession, d: String): DataFrame =
-    annLshPairs(s, d)
+    annLshPairsCore(s, d).orderBy("a_id", "b_id")
 
-  /** q41 with the scale knobs exposed: `maxBucket` caps (band, bucket)
-    * posting-list sizes (default = corpus size — value-neutral, bound in
-    * the plan; see [[Dedup.capBuckets]]), `broadcastCandLimit` guards the
-    * verification broadcast (degrades to shuffle joins above it). */
-  private[graft] def annLshPairs(s: SparkSession, d: String,
-                                 maxBucket: Long = -1L,
-                                 broadcastCandLimit: Long = 4000000L): DataFrame =
-    annLshPairsCore(s, d, maxBucket, broadcastCandLimit)
-      .orderBy("a_id", "b_id")
-
-
-  /** [[annLshPairs]] without the output sort (edge-builder form — q80's
-    * CC consumer builds an unordered edge list, so inheriting the
+  /** The q41 pair relation without the output sort (edge-builder form —
+    * q80's CC consumer builds an unordered edge list, so inheriting the
     * declared query's global sort was pure waste).
     *
-    * The DEFAULT-parameter pair relation is memoized per (session,
-    * dataset) behind a lazy localCheckpoint (the q42
-    * `minhashLshPairsCore` discipline): q41 declares the pair report
-    * and q80 builds its CC edge list from the identical relation — an
-    * embedding-dedup pipeline materializes its verified pair table once
-    * and fans out. Non-default parameters (the capped sweep variants)
-    * bypass the memo. */
-  private[graft] def annLshPairsCore(s: SparkSession, d: String,
-                                     maxBucket: Long = -1L,
-                                     broadcastCandLimit: Long = 4000000L): DataFrame =
-    if (maxBucket == -1L && broadcastCandLimit == 4000000L)
-      graft.SessionMemo.getOrElseUpdate[DataFrame](s, "ann.pairs", d)(
-        annLshPairsCompute(s, d, maxBucket, broadcastCandLimit)
-          .localCheckpoint(eager = false))
-    else annLshPairsCompute(s, d, maxBucket, broadcastCandLimit)
+    * The pair relation is memoized per (session, dataset) behind a lazy
+    * localCheckpoint (the q42 `minhashLshPairsCore` discipline): q41
+    * declares the pair report and q80 builds its CC edge list from the
+    * identical relation — an embedding-dedup pipeline materializes its
+    * verified pair table once and fans out. */
+  private def annLshPairsCore(s: SparkSession, d: String): DataFrame =
+    graft.SessionMemo.getOrElseUpdate[DataFrame](s, "ann.pairs", d)(
+      annLshPairsCompute(s, d).localCheckpoint(eager = false))
 
-  private def annLshPairsCompute(s: SparkSession, d: String,
-                                 maxBucket: Long,
-                                 broadcastCandLimit: Long): DataFrame = {
+  private def annLshPairsCompute(s: SparkSession, d: String): DataFrame = {
     // bitsFor needs a concrete number BEFORE the plan exists (it sizes
     // the hyperplane array) — the memoized ANALYZE-style stat, one
     // metadata-only count per (session, dataset), not per query build
@@ -164,12 +131,14 @@ object Similarity extends QueryPack {
     val planes = hyperplanes(lshBands * bits)
     // one signature pass per scan: posexplode the per-band array into
     // (band, bucket) postings (a union of per-band selects would re-run
-    // the signature kernel once per band per join side)
-    val posting = Dedup.capBucketsLazy(
-      corpus(s, d).select(col("vec_id"),
+    // the signature kernel once per band per join side); the shuffle on
+    // the join keys sits BEFORE the self-join aliases so both branches
+    // read one exchange and the kernel runs once
+    val posting = corpus(s, d)
+      .select(col("vec_id"),
         posexplode(NativeExprs.hyperplane_sigs(col("v"), planes, lshBands, bits))
-          .as(Seq("band", "bucket"))),
-      Seq("band", "bucket"), maxBucket, Tables.embeddings(s, d))
+          .as(Seq("band", "bucket")))
+      .repartition(col("band"), col("bucket"))
     val cand = posting.select(col("band"), col("bucket"), col("vec_id").as("a_id"))
       .join(posting.select(col("band"), col("bucket"), col("vec_id").as("b_id")),
             Seq("band", "bucket"))
@@ -178,7 +147,7 @@ object Similarity extends QueryPack {
     val e = corpus(s, d)
     val av = e.select(col("vec_id").as("a_id"), col("v").as("av"))
     val bv = e.select(col("vec_id").as("b_id"), col("v").as("bv"))
-    Dedup.verifyJoin(cand, av, bv, "a_id", "b_id", broadcastCandLimit)
+    Dedup.verifyJoin(cand, av, bv, "a_id", "b_id", Dedup.verifyBroadcastLimit)
       .withColumn("cos", NativeExprs.cosine_sim(col("av"), col("bv")))
       .filter(col("cos") >= 0.2)
       .select(col("a_id"), col("b_id"),
@@ -210,22 +179,25 @@ object Similarity extends QueryPack {
     * obtained). */
   private[graft] val ivfK = 16
 
+  /** Codebook training: the sample is the lowest [[trainSampleN]]
+    * vec_ids, refined by [[lloydIters]] Lloyd rounds (IVF and PQ alike;
+    * `Projection.trainPca` draws the same sample). */
+  private[operators] val trainSampleN = 256
+  private val lloydIters = 5
+
   /** Deterministic sampled k-means codebook (spherical/cosine Lloyd):
     * sample = the `sampleN` lowest vec_ids (a fixed, reproducible subset —
     * the driver-side collect is the standard IVF TRAINING step: a few
     * hundred rows, independent of corpus size), init = first k sample
-    * vectors, then `iters` Lloyd rounds of cosine-argmax assignment +
+    * vectors, then [[lloydIters]] rounds of cosine-argmax assignment +
     * arithmetic-mean update (empty cells keep their centroid). Everything
     * — sample choice, init, iteration order — is deterministic, so the
     * trained codebook can be embedded as literals in the DuckDB oracle
     * exactly like the LSH plane coefficients (`lshOracleSql`).
     */
-  private[graft] def trainCentroids(e: DataFrame, k: Int, sampleN: Int = 256,
-                                    iters: Int = 5): Array[Array[Double]] = {
-    val sample: Array[Array[Double]] = e.filter(col("vec_id") < sampleN)
-      .select(col("vec_id"), VectorExprs.asDouble("embedding").as("v"))
-      .orderBy("vec_id").collect()
-      .map(_.getSeq[Double](1).toArray)
+  private[graft] def trainCentroids(e: DataFrame, k: Int,
+                                    sampleN: Int = trainSampleN): Array[Array[Double]] = {
+    val sample = collectSample(e, sampleN)
     require(sample.length >= k, s"need >= $k sample vectors, got ${sample.length}")
     val dim = sample(0).length
     def cos(a: Array[Double], b: Array[Double]): Double = {
@@ -236,7 +208,7 @@ object Similarity extends QueryPack {
     }
     var cents = Array.tabulate(k)(i => sample(i).clone())
     var it = 0
-    while (it < iters) {
+    while (it < lloydIters) {
       val sums = Array.fill(k)(new Array[Double](dim))
       val counts = new Array[Long](k)
       sample.foreach { v =>
@@ -279,8 +251,9 @@ object Similarity extends QueryPack {
 
   /** Assign every vector to its best codebook centroid (nprobe=1 cell):
     * broadcast k rows, map-side argmax folded into a partial-aggregatable
-    * max(struct) — the same plan shape as `ivfAssign`, quantizer quality
-    * aside. */
+    * max(struct) — the ×k score expansion collapses map-side, so the only
+    * shuffle is N rows keyed by vec_id. Output: vec_id, centroid,
+    * embedding. */
   private[graft] def ivfAssignCodebook(s: SparkSession, e: DataFrame,
                                        cents: Array[Array[Double]]): DataFrame =
     e.crossJoin(broadcast(codebookDf(s, cents)))
@@ -289,83 +262,6 @@ object Similarity extends QueryPack {
       .agg(max(struct(col("cos_c"), col("c_id"))).as("best"),
            first(col("embedding")).as("embedding"))
       .select(col("vec_id"), col("best.c_id").as("centroid"), col("embedding"))
-
-  /** Assign every vector to its best centroid (nprobe=1 cell).
-    * One broadcast of k centroid rows; the ×k score expansion collapses
-    * map-side (max(struct) and first() are partial-aggregatable), so the
-    * only shuffle is N rows keyed by vec_id. Output: vec_id, centroid,
-    * embedding. */
-  private[graft] def ivfAssign(e: DataFrame, k: Int): DataFrame = {
-    val cents = e.filter(col("vec_id") < k)
-      .select(col("vec_id").as("c_id"), col("embedding").as("cv"))
-    e.crossJoin(broadcast(cents))
-      .withColumn("cos_c", NativeExprs.cosine_sim(col("embedding"), col("cv")))
-      .groupBy("vec_id")
-      .agg(max(struct(col("cos_c"), col("c_id"))).as("best"),
-           first(col("embedding")).as("embedding"))
-      .select(col("vec_id"), col("best.c_id").as("centroid"), col("embedding"))
-  }
-
-  /** Materialize the IVF layout: train the codebook (sampled k-means),
-    * write the corpus PARTITIONED BY centroid id — the standard IVF file
-    * layout, for real — and store the codebook alongside under
-    * `_codebook/` (the underscore prefix keeps it invisible to the main
-    * `read.parquet(path)` listing, the same convention as `_metadata`).
-    * A probe of `nprobe` cells then reads only those cells' partitions
-    * (partition pruning, asserted in ScaleSpec). */
-  def ivfIndex(e: DataFrame, k: Int, path: String): Unit = {
-    val s = e.sparkSession
-    val cents = trainCentroids(e, k)
-    ivfAssignCodebook(s, e, cents).write.mode("overwrite")
-      .partitionBy("centroid").parquet(path)
-    codebookDf(s, cents).write.mode("overwrite").parquet(s"$path/_codebook")
-  }
-
-  /** Load the codebook persisted by [[ivfIndex]]. */
-  private def loadCodebook(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(s"$path/_codebook")
-
-  /** Search a materialized IVF index: per query, scan only the probed
-    * cells' partitions and rank by exact cosine. Passing the probe list
-    * (known driver-side per query batch — it IS the nprobe decision)
-    * prunes partitions statically at the parquet scan; without it the
-    * broadcast equi-join still prunes dynamically via DPP. */
-  def ivfSearch(s: SparkSession, path: String, queries: DataFrame, topK: Int,
-                probes: Seq[Long] = Nil): DataFrame = {
-    val all = s.read.parquet(path)
-    val idx = if (probes.nonEmpty) all.filter(col("centroid").isin(probes: _*)) else all
-    rankTopK(
-      idx.join(broadcast(queries), col("centroid") === col("q_centroid"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos", NativeExprs.cosine_sim(col("embedding"), col("qv"))),
-      topK)
-  }
-
-  /** Multi-probe IVF search over a materialized index: each query ranks
-    * the k centroids (broadcast, O(|Q|·k) work — TopKAgg again) and scans
-    * its top-`nprobe` cells instead of one, the standard IVF recall knob.
-    * The probe join broadcasts the (tiny) query+probe-list side against
-    * the index scan; per-query ranking is the heap aggregate. Recall
-    * rises monotonically with nprobe (asserted in SimilaritySpec).
-    */
-  def ivfSearchNProbe(s: SparkSession, path: String, queries: DataFrame,
-                      topK: Int, nprobe: Int): DataFrame = {
-    val idx = s.read.parquet(path)
-    val cents = loadCodebook(s, path)
-    val probes = queries.crossJoin(broadcast(cents))
-      .withColumn("cos_c", NativeExprs.cosine_sim(col("qv"), col("cv")))
-      .groupBy("q_id")
-      .agg(first("qv").as("qv"),
-           graft.functions.TopKAgg
-             .top_k_by_score(col("cos_c"), col("c_id"), nprobe).as("cells"))
-      .select(col("q_id"), col("qv"),
-              expr("transform(cells, x -> x.id)").as("probe_ids"))
-    rankTopK(
-      idx.join(broadcast(probes), array_contains(col("probe_ids"), col("centroid")))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos", NativeExprs.cosine_sim(col("embedding"), col("qv"))),
-      topK)
-  }
 
   /** IVF-style ANN (the scale path alongside q41's LSH): TRAINED fixed-k
     * coarse quantizer (deterministic sampled k-means, `trainCentroids`;
@@ -412,20 +308,19 @@ object Similarity extends QueryPack {
 
   /** Deterministic per-subspace L2 k-means (classic PQ training,
     * Jégou et al., TPAMI 2011): the same fixed sample as
-    * [[trainCentroids]] (lowest `sampleN` vec_ids — a driver-side
-    * collect of a few hundred rows, independent of corpus size), split
-    * into `m` contiguous subvectors; per subspace, init = first `ks`
-    * sample subvectors, then `iters` Lloyd rounds of argmin-L2
-    * assignment (strictly-closer wins → lowest code on ties) +
+    * [[trainCentroids]] (lowest [[trainSampleN]] vec_ids — a collect()
+    * of a few hundred rows, independent of corpus size), split
+    * into [[pqM]] contiguous subvectors; per subspace, init = first
+    * [[pqKs]] sample subvectors, then [[lloydIters]] Lloyd rounds of
+    * argmin-L2 assignment (strictly-closer wins → lowest code on ties) +
     * arithmetic-mean update (empty cells keep their centroid). Fully
     * deterministic, so the codebook embeds as DuckDB oracle literals
     * exactly like the LSH planes and the IVF codebook. */
-  private[graft] def trainPq(e: DataFrame, m: Int = pqM, ks: Int = pqKs,
-                             sampleN: Int = 256, iters: Int = 5): Array[Array[Array[Double]]] =
-    trainPqOnSample(collectSample(e, sampleN), m, ks, iters)
+  private[graft] def trainPq(e: DataFrame): Array[Array[Array[Double]]] =
+    trainPqOnSample(collectSample(e, trainSampleN))
 
   /** The fixed deterministic training sample (lowest `sampleN` vec_ids). */
-  private def collectSample(e: DataFrame, sampleN: Int): Array[Array[Double]] =
+  private[operators] def collectSample(e: DataFrame, sampleN: Int): Array[Array[Double]] =
     e.filter(col("vec_id") < sampleN)
       .select(col("vec_id"), VectorExprs.asDouble("embedding").as("v"))
       .orderBy("vec_id").collect()
@@ -437,10 +332,9 @@ object Similarity extends QueryPack {
     * reconstruct tighter (asserted quantitatively in SimilaritySpec).
     * Sample assignment replicates [[ivfAssignCodebook]]'s argmax exactly
     * (max cosine, ties → highest centroid id). */
-  private[graft] def trainPqResidual(e: DataFrame, coarse: Array[Array[Double]],
-                                     m: Int = pqM, ks: Int = pqKs,
-                                     sampleN: Int = 256, iters: Int = 5): Array[Array[Array[Double]]] = {
-    val sample = collectSample(e, sampleN)
+  private[graft] def trainPqResidual(e: DataFrame,
+                                     coarse: Array[Array[Double]]): Array[Array[Array[Double]]] = {
+    val sample = collectSample(e, trainSampleN)
     def cos(a: Array[Double], b: Array[Double]): Double = {
       var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
       val n = math.min(a.length, b.length)
@@ -458,32 +352,31 @@ object Similarity extends QueryPack {
       val cv = coarse(best)
       Array.tabulate(v.length)(i => v(i) - cv(i))
     }
-    trainPqOnSample(residuals, m, ks, iters)
+    trainPqOnSample(residuals)
   }
 
-  private def trainPqOnSample(sample: Array[Array[Double]], m: Int, ks: Int,
-                              iters: Int): Array[Array[Array[Double]]] = {
-    require(sample.length >= ks, s"need >= $ks sample vectors, got ${sample.length}")
+  private def trainPqOnSample(sample: Array[Array[Double]]): Array[Array[Array[Double]]] = {
+    require(sample.length >= pqKs, s"need >= $pqKs sample vectors, got ${sample.length}")
     val dim = sample(0).length
-    require(dim % m == 0, s"dim $dim must divide into $m subspaces")
-    val sub = dim / m
+    require(dim % pqM == 0, s"dim $dim must divide into $pqM subspaces")
+    val sub = dim / pqM
     def l2(a: Array[Double], b: Array[Double]): Double = {
       var d = 0.0; var j = 0
       while (j < sub) { val t = a(j) - b(j); d += t * t; j += 1 }
       d
     }
-    Array.tabulate(m) { mi =>
+    Array.tabulate(pqM) { mi =>
       val subs: Array[Array[Double]] =
         sample.map(v => java.util.Arrays.copyOfRange(v, mi * sub, (mi + 1) * sub))
-      var cents = Array.tabulate(ks)(i => subs(i).clone())
+      var cents = Array.tabulate(pqKs)(i => subs(i).clone())
       var it = 0
-      while (it < iters) {
-        val sums = Array.fill(ks)(new Array[Double](sub))
-        val counts = new Array[Long](ks)
+      while (it < lloydIters) {
+        val sums = Array.fill(pqKs)(new Array[Double](sub))
+        val counts = new Array[Long](pqKs)
         subs.foreach { v =>
           var best = 0; var bestD = l2(v, cents(0))
           var c = 1
-          while (c < ks) {
+          while (c < pqKs) {
             val dd = l2(v, cents(c))
             if (dd < bestD) { best = c; bestD = dd }
             c += 1
@@ -492,7 +385,7 @@ object Similarity extends QueryPack {
           while (j < sub) { acc(j) += v(j); j += 1 }
           counts(best) += 1
         }
-        cents = Array.tabulate(ks) { c =>
+        cents = Array.tabulate(pqKs) { c =>
           if (counts(c) == 0) cents(c) else sums(c).map(_ / counts(c))
         }
         it += 1
@@ -516,8 +409,8 @@ object Similarity extends QueryPack {
     * corpus reads ~8 bytes/vector instead of 256; queries (tiny) are
     * broadcast; ranking is the bounded-heap aggregate with score =
     * −distance, so the shuffle carries ≤ k rows per query per task.
-    * Compose with [[ivfIndex]] partition layout for cell-pruned PQ scans
-    * (IVF-PQ — see SimilaritySpec's ivfPq test).
+    * Compose with the IVF partition layout for cell-pruned PQ scans
+    * (IVF-PQ, [[ivfPqIndex]] — see SimilaritySpec's ivfPq test).
     *
     * Oracle: the trained codebook embedded as literals; encoding (argmin
     * of an explicit left-associated 8-term sum, ties → lowest code),
@@ -691,6 +584,10 @@ object Similarity extends QueryPack {
     codebookDf(s, cb).write.mode("overwrite").parquet(s"$path/_codebook")
     pqCodebookDf(s, pq, residual).write.mode("overwrite").parquet(s"$path/_pq_codebook")
   }
+
+  /** Load the coarse codebook persisted by [[ivfPqIndex]]. */
+  private def loadCodebook(s: SparkSession, path: String): DataFrame =
+    s.read.parquet(s"$path/_codebook")
 
   /** Load the persisted coarse codebook back into driver-side array form
     * (k rows — constant, the same shape the training functions emit). */

@@ -534,8 +534,8 @@ object Stats extends QueryPack {
     * floor. That density factor IS the scale lever: at 100 TB the
     * fingerprint postings (8-byte hash, doc_id) are w× smaller than
     * q111's, the self-join work shrinks quadratically in it, and the
-    * df-cut/capBuckets bound composes on the fingerprint grain exactly
-    * as in q35/q42. Selection is per-row HOF arithmetic (no UDF, no
+    * df-cut bound (`Dedup.capBuckets`, as q79 applies it) composes on
+    * the fingerprint grain. Selection is per-row HOF arithmetic (no UDF, no
     * shuffle until the id-only postings); everything is md5-derived
     * integers — bit-exact cross-engine by construction. */
   private def q151Winnowing(s: SparkSession, d: String): DataFrame = {

@@ -289,7 +289,6 @@ object StreamGate extends QueryPack {
     val stream = docStream(s, d)
       .withColumn("ts", timestamp_seconds(lit(1704067200L))) // 2024-01-01
     val out = StreamOps.simhashNearDupStream(stream, "ts", "1 hour",
-      delayMs = 3600000L, maxHamming = 3, nBands = 4, bitsPerBand = 15,
       maxResidents = 1000000)
     runToBatch(s, out)
       .select(col("a_id"), col("b_id"), col("hamming"))
@@ -306,7 +305,7 @@ object StreamGate extends QueryPack {
     val stream = docStream(s, d)
       .withColumn("ts", timestamp_seconds(lit(1704067200L))) // 2024-01-01
     val out = StreamOps.nearDupPairsStream(stream, "ts", "1 hour",
-      delayMs = 3600000L, threshold = 0.8, maxResidents = 1000000)
+      maxResidents = 1000000)
     runToBatch(s, out)
       .select(col("a_id"), col("b_id"), col("jaccard"))
       .orderBy("a_id", "b_id")
@@ -400,7 +399,7 @@ object StreamGate extends QueryPack {
       .option("maxFilesPerTrigger", 1)
       .parquet(staged)
     val out = StreamOps.nearDupPairsStream(stream, "ts", "1 hour",
-      delayMs = 3600000L, threshold = 0.8, maxResidents = maxResidents)
+      maxResidents = maxResidents)
     runToBatch(s, out, fileSink = Some("evict"))
       .select(col("a_id"), col("b_id"), col("jaccard"))
   }
@@ -632,7 +631,7 @@ object StreamGate extends QueryPack {
   private def q169QuotaStream(s: SparkSession, d: String): DataFrame = {
     implicit val sp: SparkSession = s
     val out = graft.streaming.StreamOps.quotaPerKeyStream(
-      eventStream(s, d), "ts", delay = "1 minute", delayMs = 60000L,
+      eventStream(s, d), "ts", delay = "1 minute",
       windowMs = 3600000L, keyCol = "event_type", idCol = "event_id", cap = 5)
     runToBatch(s, out)
       .filter(col("doc_id") >= 0)

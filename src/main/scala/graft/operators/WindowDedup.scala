@@ -226,9 +226,7 @@ object WindowDedup extends QueryPack {
     * with exact counted span overlap. Candidate work is the inverted
     * index's Σ df² over the window-hash vocabulary — at corpus scale the
     * df distribution is the q111 dup table (HAVING count > 1 already
-    * discards the unique-hash mass, which is almost all of it), and the
-    * hot-hash tail composes with the capBuckets df-cut exactly as
-    * q35/q42 document. */
+    * discards the unique-hash mass, which is almost all of it). */
   private val minShared = 3
 
   private def q117WindowPairs(s: SparkSession, d: String): DataFrame = {
@@ -239,22 +237,18 @@ object WindowDedup extends QueryPack {
     // collision odds as q116/q79; the oracle hash-gates it)
     val win = windowPostingsCore(s, d)
       .select(xxhash64(col("wh")).as("wh"), col("doc_id"))
-    // hot-hash bound IN the plan (q35/q42's capBucketsLazy contract):
-    // default cap = corpus size, value-neutral, and the window exchange
-    // on wh is the one the candidate self-join reuses. The SAME bucket
-    // count also drops df = 1 hashes before the self-join — provably
-    // value-neutral (a window hash held by one doc generates no a < b
-    // pair) and it removes almost the whole posting mass from both join
-    // sides: window vocabulary is dominated by unique hashes (the q111
-    // dup table is Zipf-small). Guide §2.3/§3.2 — shrink the join input
-    // with what the optimizer cannot know.
+    // the per-hash doc count drops df = 1 hashes before the self-join —
+    // provably value-neutral (a window hash held by one doc generates no
+    // a < b pair) and it removes almost the whole posting mass from both
+    // join sides: window vocabulary is dominated by unique hashes (the
+    // q111 dup table is Zipf-small). The window exchange on wh is the one
+    // the candidate self-join reuses. Guide §2.3/§3.2 — shrink the join
+    // input with what the optimizer cannot know.
     val w = org.apache.spark.sql.expressions.Window.partitionBy("wh")
-    val cap = Tables.documents(s, d).agg(count(lit(1)).as("__cap"))
     val pd = win.select("wh", "doc_id").distinct()
       .withColumn("__bsz", count(lit(1)).over(w))
-      .crossJoin(broadcast(cap))
-      .filter(col("__bsz") <= col("__cap") && col("__bsz") >= 2)
-      .drop("__bsz", "__cap")
+      .filter(col("__bsz") >= 2)
+      .drop("__bsz")
     pd.select(col("wh"), col("doc_id").as("a_id"))
       .join(pd.select(col("wh"), col("doc_id").as("b_id")), Seq("wh"))
       .filter(col("a_id") < col("b_id"))

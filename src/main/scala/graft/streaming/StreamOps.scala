@@ -1,6 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
+import org.apache.spark.sql.catalyst.util.IntervalUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -25,34 +27,40 @@ object StreamOps extends Serializable {
     df.withWatermark(tsCol, delay)
       .dropDuplicatesWithinWatermark(keys)
 
+  /** A watermark delay string ("1 hour") in millis, parsed exactly as
+    * `withWatermark` parses it — the state processors' eviction and
+    * timer arithmetic runs in millis. */
+  private def delayMillis(delay: String): Long =
+    EventTimeWatermark.getDelayMs(IntervalUtils.fromIntervalString(delay))
+
   /** Streaming incremental exact dedup against a STATIC existing corpus —
     * the streaming twin of the batch q76 (today's crawl stream checked
     * against yesterday's indexed corpus). A stream-static left_anti join
     * is stateless on the stream side (each micro-batch joins the static
     * relation; no streaming state at all), so this composes with the
     * watermarked in-stream dedup above for the full "new vs corpus AND
-    * new within stream" contract. With `bloomExpected > 0` a bloom
+    * new within stream" contract; both sides carry the digest in a `sig`
+    * column. With `bloomExpected > 0` a bloom
     * filter over the existing digests splits each micro-batch MAP-SIDE
     * first (the `Dedup.incrementalDedupBloom` plan): definitive
     * negatives skip the join entirely, so per-batch join input shrinks
     * to dup-rate + fpp of the batch.
     */
   def incrementalDedupStream(fresh: DataFrame, existing: DataFrame,
-                             sigCol: String = "sig",
                              bloomExpected: Long = 0L,
                              fpp: Double = 0.01): DataFrame = {
-    val ex = existing.select(col(sigCol)).distinct()
+    val ex = existing.select(col("sig")).distinct()
     if (bloomExpected <= 0L) {
-      fresh.join(ex, Seq(sigCol), "left_anti")
+      fresh.join(ex, Seq("sig"), "left_anti")
     } else {
-      val bloom = ex.select(xxhash64(col(sigCol)).as("h"))
+      val bloom = ex.select(xxhash64(col("sig")).as("h"))
         .stat.bloomFilter("h", bloomExpected, fpp)
       val out = new java.io.ByteArrayOutputStream()
       bloom.writeTo(out)
       val hit = graft.functions.NativeExprs
-        .bloom_contains(xxhash64(col(sigCol)), out.toByteArray)
+        .bloom_contains(xxhash64(col("sig")), out.toByteArray)
       val clean = fresh.filter(!hit)
-      val verified = fresh.filter(hit).join(ex, Seq(sigCol), "left_anti")
+      val verified = fresh.filter(hit).join(ex, Seq("sig"), "left_anti")
       clean.unionByName(verified.select(fresh.columns.map(col).toIndexedSeq: _*))
     }
   }
@@ -262,8 +270,7 @@ object StreamOps extends Serializable {
     * in the same compared pair collide in 64 bits (probability ~n²/2⁶⁴
     * per pair — vanishing; the batch/stream equivalence gate q107 would
     * surface it as a hash mismatch). */
-  private final class NearDupBucketProcessor(delayMs: Long, threshold: Double,
-                                             maxResidents: Int)
+  private final class NearDupBucketProcessor(delayMs: Long, maxResidents: Int)
       extends BucketPairProcessor[BucketDoc, BucketEntry, NearDupPair](delayMs, maxResidents) {
     protected type Prepared = Array[Long]
     protected def entryEncoder = org.apache.spark.sql.Encoders.product[BucketEntry]
@@ -287,7 +294,7 @@ object StreamOps extends Serializable {
       if (e.doc_id == d.doc_id) return None
       val common = intersectSorted(e.sh, dsh)
       val jac = common.toDouble / (e.sh.length + dsh.length - common)
-      if (jac < threshold) None
+      if (jac < 0.8) None
       else {
         val (a, b) = if (e.doc_id < d.doc_id) (e.doc_id, d.doc_id)
                      else (d.doc_id, e.doc_id)
@@ -314,12 +321,11 @@ object StreamOps extends Serializable {
     * the output event-time column (the arriving doc's timestamp, never
     * behind the watermark).
     *
-    * `delayMs` must agree with `delay` (Spark wants the SQL interval
-    * string; the state arithmetic wants millis). `maxResidents` caps
-    * per-bucket state/work (see [[NearDupBucketProcessor]]).
+    * Pairs at Jaccard ≥ 0.8 are emitted (batch q42's threshold).
+    * `maxResidents` caps per-bucket state/work (see
+    * [[NearDupBucketProcessor]]).
     */
   def nearDupPairsStream(docs: DataFrame, tsCol: String, delay: String,
-                         delayMs: Long, threshold: Double = 0.8,
                          maxResidents: Int = 256)
                         (implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
@@ -342,7 +348,7 @@ object StreamOps extends Serializable {
 
     banded
       .groupByKey(_.bucket)
-      .transformWithState(new NearDupBucketProcessor(delayMs, threshold, maxResidents),
+      .transformWithState(new NearDupBucketProcessor(delayMillis(delay), maxResidents),
         "ts", OutputMode.Append())
       .dropDuplicatesWithinWatermark("a_id", "b_id")
       .toDF()
@@ -360,9 +366,10 @@ object StreamOps extends Serializable {
     * one-instruction verify (XOR + popcount) instead of a set
     * intersection. The state-cheap streaming near-dup: per-bucket memory
     * is residents × 24 B regardless of document size. */
-  private final class SimhashBucketProcessor(delayMs: Long, maxHamming: Int,
-                                             maxResidents: Int)
+  private final class SimhashBucketProcessor(delayMs: Long, maxResidents: Int)
       extends BucketPairProcessor[SigBucketDoc, SigEntry, HammingPair](delayMs, maxResidents) {
+    // read once when the processor is built; tasks receive the value
+    private val maxHamming = graft.operators.Dedup.simhashMaxHamming
     protected type Prepared = Unit
     protected def entryEncoder = org.apache.spark.sql.Encoders.product[SigEntry]
     protected def entryClassTag = scala.reflect.classTag[SigEntry]
@@ -387,32 +394,31 @@ object StreamOps extends Serializable {
     * [[nearDupPairsStream]]: a resident is (doc_id, ts, 60-bit sig) — 24
     * bytes regardless of document length — and verification is one
     * XOR+popcount. The signature is banded exactly like batch q81
-    * (nBands × bitsPerBand; band index folded into the bucket key), so
-    * within the watermark the recall guarantee carries over: a pair at
-    * Hamming ≤ maxHamming < nBands shares at least one band bucket by
+    * (`Dedup.simhashBands` × `Dedup.simhashBandBits`; band index folded
+    * into the bucket key), so within the watermark the recall guarantee
+    * carries over: a pair at Hamming ≤ `Dedup.simhashMaxHamming` <
+    * `Dedup.simhashBands` shares at least one band bucket by
     * pigeonhole. Emitted once per pair via
     * `dropDuplicatesWithinWatermark` (same stateful→stateful chain as
     * the MinHash form). */
   def simhashNearDupStream(docs: DataFrame, tsCol: String, delay: String,
-                           delayMs: Long, maxHamming: Int = 3,
-                           nBands: Int = 4, bitsPerBand: Int = 15,
                            maxResidents: Int = 4096)
                           (implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    require(maxHamming < nBands, "recall guarantee needs maxHamming < nBands")
-    val mask = (1L << bitsPerBand) - 1
+    import graft.operators.Dedup.{simhashBands, simhashBandBits}
+    val mask = (1L << simhashBandBits) - 1
     val banded = docs
       .select(col("doc_id"), col(tsCol).as("ts"),
               graft.functions.NativeExprs.simhash_sig(col("text")).as("sig"))
-      .select(explode(expr(s"transform(sequence(0, ${nBands - 1}), b -> " +
-          s"shiftleft(cast(b as bigint), $bitsPerBand) | (shiftright(sig, b * $bitsPerBand) & $mask))"))
+      .select(explode(expr(s"transform(sequence(0, ${simhashBands - 1}), b -> " +
+          s"shiftleft(cast(b as bigint), $simhashBandBits) | (shiftright(sig, b * $simhashBandBits) & $mask))"))
           .as("bucket"),
         col("doc_id"), col("ts"), col("sig"))
       .withWatermark("ts", delay)
       .as[SigBucketDoc]
     banded
       .groupByKey(_.bucket)
-      .transformWithState(new SimhashBucketProcessor(delayMs, maxHamming, maxResidents),
+      .transformWithState(new SimhashBucketProcessor(delayMillis(delay), maxResidents),
         "ts", OutputMode.Append())
       .dropDuplicatesWithinWatermark("a_id", "b_id")
       .toDF()
@@ -730,7 +736,7 @@ object StreamOps extends Serializable {
     * stages remain legal.
     */
   def quotaPerKeyStream(df: DataFrame, tsCol: String, delay: String,
-                        delayMs: Long, windowMs: Long, keyCol: String,
+                        windowMs: Long, keyCol: String,
                         idCol: String, cap: Int)
                        (implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
@@ -740,7 +746,7 @@ object StreamOps extends Serializable {
       .withWatermark("ts", delay)
       .as[QuotaDoc]
       .groupByKey(d => (d.key, d.ts.getTime / windowMs))
-      .transformWithState(new QuotaProcessor(cap, windowMs, delayMs),
+      .transformWithState(new QuotaProcessor(cap, windowMs, delayMillis(delay)),
         "ts", OutputMode.Append())
       .toDF()
   }

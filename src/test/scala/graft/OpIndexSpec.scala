@@ -12,8 +12,8 @@ import scala.jdk.CollectionConverters._
   * legitimately shifts with any edit above a registration site and is
   * refreshed by re-running the generator at round close. It also holds
   * two source checks scalac lacks: no doc comment in `src/main` is
-  * stacked on another, and each shared DuckDB oracle fragment is written
-  * once.
+  * stacked on another, each shared DuckDB oracle fragment is written
+  * once, and every operator definition has a caller.
   */
 class OpIndexSpec extends AnyFunSuite {
 
@@ -107,5 +107,50 @@ class OpIndexSpec extends AnyFunSuite {
     val bad = counts.filter(_._2.size != 1)
     assert(bad.isEmpty, bad.map { case (m, at) =>
       s"'$m' written ${at.size} times${at.mkString(": ", ", ", "")}" }.mkString("; "))
+  }
+
+  test("every non-private operator definition has a src/main caller or is a named test reference") {
+    // a member def/val of an operator object that nothing in src/main
+    // reads is either a reference implementation a spec compares against
+    // (named below, with the spec) or dead code
+    val references = Map(
+      "q35NgramJaccard"       -> "ScaleSpec: exact q35 for the prefix join",
+      "containmentReference"  -> "ScaleSpec: the q174 reference join",
+      "lshRecallCore"         -> "SimilaritySpec/PlanSpec: q242 over planted relations",
+      "bpeMergeChainCompute"  -> "PlanSpec: q186's un-memoized chain",
+      "hubAuditBrute"         -> "MiningSpec: brute-force q224 reference",
+      "boilerplateHashed"     -> "Curation2Spec: the hashed q91 scale form",
+      "windowProfileHashed"   -> "WindowSpec: the hashed q111 scale form",
+      "winnowExpr"            -> "StatsSpec: winnowing on planted spans",
+      "whitenExpr"            -> "ProjectionSpec: whitened unit variance",
+      "mineIndexStale"        -> "MiningSpec: the index staleness monitor",
+      "incrementalDedupBloom" -> "ScaleSpec: single-filter reference for the sharded bloom",
+      "ivfPqSearch"           -> "SimilaritySpec: the ADC pool and partition-pruning pins",
+      "expirePartitions"      -> "product API (retention), IngestSpec")
+    val defRe = """^  (?:private\[\w+\] |protected )?(?:final )?(?:def|val|lazy val) ([A-Za-z_]\w*)""".r
+    def isComment(l: String) = {
+      val t = l.trim
+      t.startsWith("*") || t.startsWith("//") || t.startsWith("/*")
+    }
+    val lines = mainSources().map(f => f -> Files.readAllLines(f).asScala.toVector)
+    val uncalled = for {
+      (f, ls) <- lines if f.toString.contains("/operators/")
+      (l, i) <- ls.zipWithIndex
+      name <- defRe.findFirstMatchIn(l).map(_.group(1)).toSeq
+      word = ("\\b" + java.util.regex.Pattern.quote(name) + "\\b").r
+      if !lines.exists { case (g, gs) =>
+        gs.zipWithIndex.exists { case (l2, j) =>
+          !(g == f && j == i) && l2.contains(name) && !isComment(l2) &&
+            word.findFirstIn(l2).isDefined }
+      }
+    } yield name -> s"$f:${i + 1}"
+    val stale = references.keySet -- uncalled.map(_._1)
+    val dead = uncalled.filterNot(u => references.contains(u._1))
+    assert(dead.isEmpty,
+      s"operator definitions nothing in src/main calls (delete them, or name the " +
+        s"spec that compares against them): ${dead.map(_._2).mkString(", ")}")
+    assert(stale.isEmpty,
+      "allowlisted references that src/main now calls or that no longer exist: " +
+        stale.mkString(", "))
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import graft.operators.{Similarity, Skew}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -63,29 +63,6 @@ class ScaleSpec extends SparkTestBase {
     // only the single-row count aggregation may exchange
     assert(shuffles.forall(_.outputPartitioning.numPartitions == 1),
       s"join-side shuffle found: ${shuffles.map(_.outputPartitioning)}")
-  }
-
-  test("df-cut near-dup index: exact at maxDf=corpus, bounded + subset below") {
-    import graft.operators.TextAnalysis
-    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = pairs(TextAnalysis.q35NgramJaccard(spark, sfDir))
-    val uncut = pairs(TextAnalysis.ngramJaccardDfCut(spark, sfDir, maxDf = 1000000L))
-    assert(uncut == exact, "with no effective cut the result must equal exact q35")
-    // the DECLARED q35 is the df-cut plan at maxDf = corpus size — must
-    // be value-identical to the unbounded reference implementation
-    val declared = pairs(TextAnalysis.queries("q35_ngram_jaccard")(spark, sfDir))
-    assert(declared == exact, "declared q35 (df-cut @ corpus size) must equal exact")
-    val cut = pairs(TextAnalysis.ngramJaccardDfCut(spark, sfDir, maxDf = 2L))
-    assert(cut.subsetOf(exact),
-      "df-cut jaccard is a lower bound, so pairs can only be lost, never invented")
-    // the cut actually prunes the index: postings for hot shingles drop out
-    val ex = Tables.documents(spark, sfDir)
-      .select(explode(graft.functions.NativeExprs.word_shingles(col("text"))).as("s"))
-    val total = ex.count()
-    val kept = ex.groupBy("s").count().filter(col("count") <= 2)
-      .agg(sum("count")).collect().head.getLong(0)
-    assert(kept < total, "testdata has shingles above the cut, so work shrinks")
   }
 
   test("prefix-filtered Jaccard join: lossless vs exact q35, prefix postings shrink") {
@@ -163,40 +140,19 @@ class ScaleSpec extends SparkTestBase {
     assert(zRows >= zMatch && linRows >= linMatch)
   }
 
-  test("containment df-cut: subset below the cap, value-neutral at corpus size") {
+  test("containment reference: declared q174 equals the inverted-index containment join") {
     import graft.operators.TextAnalysis
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // the declared plan is the asymmetric prefix join; the reference
+    // probes the full inverted index
     val declared = pairs(TextAnalysis.queries("q174_containment")(spark, sfDir))
-    val uncut = pairs(TextAnalysis.containmentDfCut(spark, sfDir,
-                                                    maxDf = 1000000L))
-    assert(uncut == declared,
-      "declared q174 (lazy corpus-size cap) must equal the explicit no-cut run")
-    // a real cut only LOSES directed pairs (the containment numerator can
-    // only shrink when hot shingles leave the index) — never invents them
-    val cut = pairs(TextAnalysis.containmentDfCut(spark, sfDir, maxDf = 2L))
-    assert(cut.subsetOf(declared),
-      "df-cut containment must be a subset of the uncut pair set")
-    // and the incremental form inherits the same bound
-    val incCut = pairs(TextAnalysis.incrementalContainment(spark, sfDir,
-                                                           maxDf = 2L))
-    val incFull = pairs(TextAnalysis.queries("q183_inc_containment")(spark, sfDir))
-    assert(incCut.subsetOf(incFull),
-      "df-cut incremental containment must be a subset of the uncut form")
-    // the PREFIX plan's full-index df cap (fullMaxDf — the hot-shingle
-    // bound that lives in the plan, capBuckets-style): a cap only LOSES
-    // pairs whose every shared prefix shingle is hotter than it; at this
-    // corpus a rarest-first prefix always shares a sub-cap shingle, so
-    // the capped run is value-identical (measured at sf0.1 too — the r15
-    // cap sweep: 0 diff at caps 16/32/64/128, and SLOWER, which is
-    // why the declared gate stays uncapped)
-    val prefCapped = pairs(TextAnalysis.prefixContainmentJoin(spark, sfDir,
-                                                              fullMaxDf = 16L))
-    assert(prefCapped == declared,
-      "fullMaxDf=16 must be value-neutral on this corpus")
+    val reference = pairs(TextAnalysis.containmentReference(spark, sfDir))
+    assert(declared == reference,
+      "declared q174 (prefix containment join) must equal the reference join")
   }
 
-  test("IVF: constant-k quantizer, broadcast assignment, pruned probe scan") {
+  test("IVF: constant-k quantizer, broadcast assignment") {
     import spark.implicits._
     val rnd = new scala.util.Random(11)
     def corpus(n: Int) = (0 until n)
@@ -205,59 +161,20 @@ class ScaleSpec extends SparkTestBase {
 
     // quantizer size is ivfK regardless of corpus size → assignment work
     // is O(N·k), the broadcast never grows with the corpus
-    val small = Similarity.ivfAssign(corpus(200), Similarity.ivfK)
-    val large = Similarity.ivfAssign(corpus(800), Similarity.ivfK)
+    def assigned(n: Int) = {
+      val e = corpus(n)
+      val cents = Similarity.trainCentroids(e, Similarity.ivfK)
+      assert(cents.length == Similarity.ivfK)
+      Similarity.ivfAssignCodebook(spark, e, cents)
+    }
+    val small = assigned(200)
+    val large = assigned(800)
     assert(small.select("centroid").distinct().count() <= Similarity.ivfK)
     assert(large.select("centroid").distinct().count() <= Similarity.ivfK)
-    large.collect()
+    assert(large.collect().length == 800, "every vector gets exactly one cell")
     val assignJoins = collectAll(large.queryExecution.executedPlan)
       .collect { case b: BroadcastNestedLoopJoinExec => b }
     assert(assignJoins.nonEmpty, "centroid scoring must broadcast the k centroids")
-
-    // the index layout is real: written partitioned by centroid, and a
-    // probe reads only its cells' partitions (static partition pruning)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
-    Similarity.ivfIndex(corpus(400), Similarity.ivfK, dir)
-    val parts = new java.io.File(dir).listFiles().filter(_.getName.startsWith("centroid="))
-    assert(parts.nonEmpty, "index directory must be partitioned by centroid")
-
-    val idx = spark.read.parquet(dir)
-    val queries = idx.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("q_id"), col("centroid").as("q_centroid"),
-              col("embedding").as("qv"))
-    val probeIds = queries.select("q_centroid").distinct().collect()
-      .map(r => r.get(0).toString.toLong).toSeq
-    val res = Similarity.ivfSearch(spark, dir, queries, topK = 5, probes = probeIds)
-    val rows = res.collect()
-    assert(rows.nonEmpty)
-    val scans = collectAll(res.queryExecution.executedPlan)
-      .collect { case f: FileSourceScanExec => f }
-    assert(scans.exists(_.partitionFilters.nonEmpty),
-      "probe scan must carry partition filters (pruned read)")
-
-    // multi-probe: recall vs brute force rises monotonically with nprobe
-    val qs = idx.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-    def hits(nprobe: Int): Set[(Long, Long)] =
-      Similarity.ivfSearchNProbe(spark, dir, qs, topK = 5, nprobe = nprobe)
-        .select("q_id", "n_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val brute = {
-      val e = idx.select(col("vec_id"), col("embedding"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-      e.crossJoin(broadcast(qs.withColumnRenamed("qv", "bqv")))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos", graft.functions.NativeExprs.cosine_sim(col("embedding"), col("bqv")))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
-        .select("q_id", "vec_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    }
-    val r1 = hits(1).intersect(brute).size
-    val r8 = hits(8).intersect(brute).size
-    assert(r8 >= r1, s"recall must not drop with more probes ($r1 -> $r8)")
-    assert(hits(Similarity.ivfK).intersect(brute).size == brute.size,
-      "probing every cell must reach exact recall")
   }
 
   test("q41 LSH: bucket space sized to corpus; no shuffle moves vectors") {
@@ -298,27 +215,40 @@ class ScaleSpec extends SparkTestBase {
             Seq("band", "bkey"))
       .filter(col("a_id") < col("b_id"))
     assert(cand.count() == 5 * 4 * 3 / 2) // 5 buckets of 4: C(4,2) each
-
-    // end-to-end: a tight cap only LOSES pairs (subset), never invents;
-    // the default (corpus-size) cap is value-neutral vs the exact set
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val default = pairs(Dedup.queries("q42_minhash_lsh")(spark, sfDir))
-    val tight = pairs(Dedup.minhashLshPairs(spark, sfDir, maxBucket = 1L))
-    assert(tight.subsetOf(default))
   }
 
   test("verification-join guard: shuffle fallback equals the broadcast path") {
-    import graft.operators.{Dedup, Similarity}
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    // limit 0 forces every candidate set over the guard → shuffle joins
-    val q42b = pairs(Dedup.queries("q42_minhash_lsh")(spark, sfDir))
-    val q42s = pairs(Dedup.minhashLshPairs(spark, sfDir, broadcastCandLimit = 0L))
-    assert(q42s == q42b, "q42 shuffle fallback must be value-identical")
-    val q41b = pairs(Similarity.queries("q41_ann_lsh")(spark, sfDir))
-    val q41s = pairs(Similarity.annLshPairs(spark, sfDir, broadcastCandLimit = 0L))
-    assert(q41s == q41b, "q41 shuffle fallback must be value-identical")
+    import graft.operators.Dedup
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val sh = Tables.documents(spark, sfDir)
+      .select(col("doc_id"), graft.functions.NativeExprs.word_shingles(col("text")).as("sh"))
+    val cand = spark.range(0, 60)
+      .select(col("id").as("a_id"), (col("id") * 3 + 1).as("b_id"))
+    val aSide = sh.select(col("doc_id").as("a_id"), col("sh").as("ash"))
+    val bSide = sh.select(col("doc_id").as("b_id"), col("sh").as("bsh"))
+    def run(limit: Long) = Dedup.verifyJoin(cand, aSide, bSide, "a_id", "b_id", limit)
+      .select(col("a_id"), col("b_id"), size(col("ash")).as("na"), size(col("bsh")).as("nb"))
+    def broadcastJoins(df: org.apache.spark.sql.DataFrame) =
+      collectAll(df.queryExecution.executedPlan).count(_.isInstanceOf[BroadcastHashJoinExec])
+    // size-based broadcasts off: the only broadcast joins left are the
+    // guard's explicit hints
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      val under = run(Dedup.verifyBroadcastLimit)
+      val over = run(0L) // limit 0 forces the candidate set over the guard
+      val underRows = under.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3)))
+      val overRows = over.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3)))
+      assert(underRows.nonEmpty)
+      assert(overRows.toSet == underRows.toSet && overRows.length == underRows.length,
+        "the shuffle fallback must be value-identical to the broadcast path")
+      assert(broadcastJoins(under) > 0, "under the limit the candidate ids ride a broadcast")
+      assert(broadcastJoins(over) == 0, "over the limit every join is a shuffle join")
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
   }
 
   test("indexed incremental near-dup equals the direct cross-side join") {
@@ -349,24 +279,6 @@ class ScaleSpec extends SparkTestBase {
         expectedItems = 1000L, fpp = 0.03)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(bloomed == exact)
-  }
-
-  test("capBucketsLazy: lazy corpus-size default equals the explicit literal cap") {
-    import spark.implicits._
-    import graft.operators.Dedup
-    val postings = Seq(
-      (1L, "hot"), (2L, "hot"), (3L, "hot"), (4L, "hot"),
-      (5L, "warm"), (6L, "warm"), (7L, "cold")).toDF("doc_id", "k")
-    val capSrc = (1L to 7L).toDF("doc_id")
-    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, String)] =
-      df.collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    // default (-1): cap = |capSrc| as a broadcast scalar — value-neutral
-    val lazyDefault = rows(Dedup.capBucketsLazy(postings, Seq("k"), -1L, capSrc))
-    val literal = rows(Dedup.capBuckets(postings, Seq("k"), 7L))
-    assert(lazyDefault == literal && lazyDefault == rows(postings))
-    // explicit cap still prunes hot buckets through the same entry point
-    val capped = rows(Dedup.capBucketsLazy(postings, Seq("k"), 3L, capSrc))
-    assert(capped == Set((5L, "warm"), (6L, "warm"), (7L, "cold")))
   }
 
   test("connected components: planted chain converges in O(log N) iterations") {

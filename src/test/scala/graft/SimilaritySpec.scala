@@ -30,9 +30,15 @@ class SimilaritySpec extends SparkTestBase {
     val df = vecs.toDF("vec_id", "embedding")
       .select(col("vec_id"), graft.functions.VectorExprs.asDouble("embedding").as("v"))
       .withColumn("nrm", graft.functions.VectorExprs.norm("v"))
-    val sig = Similarity.withSignatures(df, nBands = 2, bitsPerBand = 8)
-      .select("vec_id", "sig_0", "sig_1").collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    // 2 bands × 8 bits of hyperplane signs, the q41 kernel
+    val sig = df
+      .select(col("vec_id"), graft.functions.NativeExprs
+        .hyperplane_sigs(col("v"), Similarity.hyperplanes(16), 2, 8).as("sigs"))
+      .collect()
+      .map(r => r.getLong(0) -> {
+        val bands = r.getSeq[Long](1)
+        (bands(0), bands(1))
+      }).toMap
     // every intra-cluster pair must share at least one band bucket
     val missed = for {
       ci <- 0 until 20; i <- 0 until 5; j <- (i + 1) until 5

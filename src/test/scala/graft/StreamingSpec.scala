@@ -314,7 +314,7 @@ class StreamingSpec extends SparkTestBase {
     try {
       val mem = MemoryStream[(Long, Timestamp, String)]
       val df = mem.toDF().toDF("doc_id", "ts", "text")
-      val q = StreamOps.nearDupPairsStream(df, "ts", "10 minutes", 600000L)
+      val q = StreamOps.nearDupPairsStream(df, "ts", "10 minutes")
         .writeStream.format("memory").queryName("neardup_out").outputMode("append").start()
       mem.addData(inWindow)
       q.processAllAvailable()
@@ -368,7 +368,7 @@ class StreamingSpec extends SparkTestBase {
     try {
       val mem = MemoryStream[(Long, Timestamp, String)]
       val df = mem.toDF().toDF("doc_id", "ts", "text")
-      val q = StreamOps.simhashNearDupStream(df, "ts", "10 minutes", 600000L)
+      val q = StreamOps.simhashNearDupStream(df, "ts", "10 minutes")
         .writeStream.format("memory").queryName("simhash_stream_out")
         .outputMode("append").start()
       mem.addData(inWindow)
@@ -406,7 +406,7 @@ class StreamingSpec extends SparkTestBase {
     try {
       val mem = MemoryStream[(Long, Timestamp, String)]
       val df = mem.toDF().toDF("doc_id", "ts", "text")
-      val q = StreamOps.nearDupPairsStream(df, "ts", "10 minutes", 600000L,
+      val q = StreamOps.nearDupPairsStream(df, "ts", "10 minutes",
           maxResidents = 3)
         .writeStream.format("memory").queryName("neardup_cap_out")
         .outputMode("append").start()
@@ -551,7 +551,7 @@ class StreamingSpec extends SparkTestBase {
       val df = mem.toDF().toDF("source", "doc_id", "ts")
       val t0 = Timestamp.valueOf("2024-01-01 00:00:00")
       def ts(min: Int) = new Timestamp(t0.getTime + min * 60000L)
-      val q = StreamOps.quotaPerKeyStream(df, "ts", "10 minutes", 600000L,
+      val q = StreamOps.quotaPerKeyStream(df, "ts", "10 minutes",
           windowMs = 3600000L, keyCol = "source", idCol = "doc_id", cap = 2)
         .writeStream.format("memory").queryName("quota_out").outputMode("append").start()
       // window 0: srcA sends 3 (two admitted — smallest ts), srcB sends 1
